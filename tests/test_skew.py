@@ -1,13 +1,10 @@
 """Hot-key skew: a single doc_id carrying most of a batch's events must
 reduce correctly and cheaply.
 
-Two mechanisms (SURVEY.md §4 'custom needed'):
-- the MERGE's groupBy plans a map-side partial aggregation, so a hot key
-  reaches the reducer as ≤ one candidate per input partition (salting
-  derived from the input partitioning);
-- ``reduce_batch_lww`` is the explicit salted two-stage pre-reduce for
-  feeds so skewed that even per-partition candidates are worth spreading.
-Both must pick the same winner the one-pass oracle picks.
+The MERGE's groupBy plans a map-side partial aggregation, so a hot key
+reaches the reducer as ≤ one candidate per input partition (salting
+derived from the input partitioning, SURVEY.md §4 'custom needed').  It
+must pick the same winner the one-pass oracle picks.
 """
 
 import pytest
@@ -19,7 +16,6 @@ from ton_etl_spark.cdc.apply import (
     make_sequences_table,
     read_state,
 )
-from ton_etl_spark.lake.merge import reduce_batch_lww
 
 
 @pytest.fixture(scope="module")
@@ -51,19 +47,6 @@ def hot_batch(spark):
         .withColumn("source", F.lit("web"))
     )
     return df.select("doc_id", "op", "lsn", "ts_ms", "tokens", "n_tok", "source")
-
-
-def test_salted_prereduce_one_winner_per_key(spark, hot_batch):
-    reduced = reduce_batch_lww(hot_batch, ["doc_id"], n_salts=8)
-    rows = reduced.collect()
-    assert len(rows) == reduced.select("doc_id").distinct().count()
-    winner = {r["doc_id"]: r["lsn"] for r in rows}
-    oracle = {
-        r["doc_id"]: r["lsn"]
-        for r in hot_batch.groupBy("doc_id").agg(F.max("lsn").alias("lsn")).collect()
-    }
-    # lsn is unique here, so the LWW winner is simply max(lsn)
-    assert winner == oracle
 
 
 def test_merge_hot_key_matches_oracle(spark, hot_batch, tmp_path):

@@ -157,10 +157,12 @@ def test_timestamp_stats_skip_and_exactness(spark, tmp_path):
 
 
 def test_timestamp_skip_correct_in_non_utc_session(spark, tmp_path):
-    """A naive datetime bound means SESSION-LOCAL time to the residual
-    filter; the skip comparison must agree with that, not compare
-    wall-clock strings against the stored UTC bounds (which would silently
-    skip matching files in any non-UTC session)."""
+    """A naive datetime bound means PROCESS-LOCAL time to the residual
+    filter (PySpark converts naive literals with ``time.mktime``, whatever
+    the session time zone); the skip comparison must agree with that, not
+    compare wall-clock strings against the stored UTC bounds.
+    ``tests/test_scan_plan.py`` covers the session zone west of UTC, where
+    pinning to the session zone instead skipped matching files."""
     import datetime as dt
 
     schema = spark.createDataFrame([], "k string, ts timestamp").schema

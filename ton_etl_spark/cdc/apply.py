@@ -26,7 +26,7 @@ from ton_etl_spark.cdc.schema import (
 )
 from ton_etl_spark.functions.tokens import with_token_validation
 from ton_etl_spark.lake.table import LakeTable
-from ton_etl_spark.lake.merge import merge_lww, reduce_batch_lww
+from ton_etl_spark.lake.merge import merge_lww
 
 
 def final_state_oracle(events: DataFrame) -> DataFrame:
@@ -149,11 +149,7 @@ def apply_cdc_batch(
     # bucket probe on the RAW batch: a column-pruned scan of the key only
     # (the validation mapInArrow below would otherwise run twice — once for
     # the probe, once for the merge; measured ~2× epoch cost)
-    snap = table.current()
-    from ton_etl_spark.lake.table import bucket_of
-
-    bexpr = bucket_of(snap.key_cols, snap.n_buckets)
-    buckets = [r["__b"] for r in batch.select(bexpr.alias("__b")).distinct().collect()]
+    buckets = table.buckets_of(batch, table.current())
 
     # Lineage is computed on the RAW batch, before validation: (a) the audit
     # record should describe what was DELIVERED, not what survived repair —

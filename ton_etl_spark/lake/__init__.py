@@ -1,4 +1,4 @@
 from ton_etl_spark.lake.table import LakeTable, Snapshot
-from ton_etl_spark.lake.merge import merge_lww, reduce_batch_lww
+from ton_etl_spark.lake.merge import merge_lww
 
-__all__ = ["LakeTable", "Snapshot", "merge_lww", "reduce_batch_lww"]
+__all__ = ["LakeTable", "Snapshot", "merge_lww"]

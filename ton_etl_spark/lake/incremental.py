@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ton_etl_spark.cdc.schema import OP_COL
-from ton_etl_spark.lake.table import LakeTable, bucket_of
+from ton_etl_spark.lake.table import LakeTable
 
 MART_SCHEMA_SUFFIX = [
     T.StructField("n_docs", T.LongType(), True),
@@ -170,8 +170,7 @@ def refresh_agg_mart(
     # bucket probe documents in cdc/apply.py)
     delta = delta.persist()
     try:
-        bexpr = bucket_of(group_cols, msnap.n_buckets)
-        buckets = [r["__b"] for r in delta.select(bexpr.alias("__b")).distinct().collect()]
+        buckets = mart.buckets_of(delta, msnap)
         if not buckets:
             # nothing changed (or a pure compaction): still record the interval
             mart.append(mart.spark.createDataFrame([], msnap.schema), commit_key=commit_key)

@@ -193,28 +193,21 @@ def colocated_join(
         + [T.StructField(c, ltypes[c], True) for c in lcols]
         + [T.StructField(c, rtypes[c], True) for c in rcols]
     )
-    from ton_etl_spark.lake.table import (
-        _conform_where_bounds,
-        _file_may_match,
-        _stats_encode,
-    )
 
-    def prep_where(table, snap, where, side):
-        """Conform + tz-attach the bounds once; returns (filter_list for
-        the kernel, encoded bounds for file skipping)."""
-        if not where:
-            return [], {}
-        unknown = sorted(set(where) - set(snap.schema.fieldNames()))
+    def plan_side(table, snap, where, side):
+        """The side's surviving files per bucket and its kernel filters
+        ``[(col, lo, hi)]``, from ``table.plan``."""
+        unknown = sorted(set(where or ()) - set(snap.schema.fieldNames()))
         if unknown:
             raise ValueError(f"{side}_where: not in schema: {unknown}")
-        conformed = _conform_where_bounds(snap.schema, where)
-        tz = table._session_tz_bounds(conformed)
-        enc = {c: (_stats_encode(lo), _stats_encode(hi))
-               for c, (lo, hi) in tz.items()}
-        return [(c, lo, hi) for c, (lo, hi) in tz.items()], enc
+        p = table.plan(version=snap.version, where=where)
+        by_bucket: dict[int, list[str]] = {}
+        for f in p.files:
+            by_bucket.setdefault(f.bucket, []).append(os.path.join(table.root, f.path))
+        return by_bucket, [(c, lo, hi) for c, (lo, hi) in p.bounds.items()]
 
-    l_filters, l_enc = prep_where(left, lsnap, left_where, "left")
-    r_filters, r_enc = prep_where(right, rsnap, right_where, "right")
+    l_files, l_filters = plan_side(left, lsnap, left_where, "left")
+    r_files, r_filters = plan_side(right, rsnap, right_where, "right")
 
     # columns a side must SCAN beyond keys+payload: the live-state op
     # filter and any predicate column not selected as payload; none of
@@ -231,15 +224,11 @@ def colocated_join(
     l_read = T.StructType([T.StructField(c, ltypes[c], True) for c in l_scan])
     r_read = T.StructType([T.StructField(c, rtypes[c], True) for c in r_scan])
 
-    # metadata only: per-bucket absolute file lists from both manifests,
-    # stats-skipped against the encoded bounds (optimization, never the
-    # filter — the kernel applies the exact residual)
+    # metadata only: per-bucket absolute file lists from both plans (the
+    # kernel applies the exact residual)
     rows = []
     for b in range(lsnap.n_buckets):
-        lf = [os.path.join(left.root, f.path)
-              for f in lsnap.files_for([b]) if _file_may_match(f, l_enc)]
-        rf = [os.path.join(right.root, f.path)
-              for f in rsnap.files_for([b]) if _file_may_match(f, r_enc)]
+        lf, rf = l_files.get(b, []), r_files.get(b, [])
         if not lf:
             continue  # no left rows: contributes nothing to inner OR left
         if not rf and how == "inner":

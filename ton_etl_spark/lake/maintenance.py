@@ -465,6 +465,34 @@ def zorder_needed(
     return False, worst, "well-clustered"
 
 
+def _predicate_scope(table: LakeTable, snap: Snapshot, where: dict,
+                     where_in: dict, file_granular: bool):
+    """The copy-on-write scope of a predicate-scoped DELETE/UPDATE at
+    ``snap``, from ``table.plan``: ``(buckets, src, keep_files, matched)``,
+    or None when no file may match.  ``buckets`` hold at least one file
+    the plan kept; ``matched`` is the plan's residual with NULL => False.
+    Bucket-granular, ``src`` reads every file of the buckets.  With
+    ``file_granular`` it reads only the plan's files, and the buckets'
+    other files ride into the new manifests by reference (``keep_files``)
+    — exact by the skipping argument: a file the plan skipped holds no
+    matching row, so keeping it whole equals filtering it."""
+    plan = table.plan(version=snap.version, where=where, where_in=where_in)
+    buckets = sorted({f.bucket for f in plan.files})
+    if not buckets:
+        return None
+    matched = F.coalesce(plan.residual, F.lit(False))
+    if not file_granular:
+        return buckets, table.read(buckets=buckets, version=snap.version), None, matched
+    hit = {f.path for f in plan.files}
+    keep_files: dict[int, list] = {b: [] for b in buckets}
+    for f in snap.files_for(buckets):
+        if f.path not in hit:
+            keep_files[f.bucket].append(f)
+    paths = [os.path.join(table.root, f.path) for f in plan.files]
+    src = table.spark.read.schema(snap.schema).parquet(*paths)
+    return buckets, src, keep_files, matched
+
+
 def delete_where(
     table: LakeTable,
     where: dict | None = None,
@@ -521,13 +549,6 @@ def delete_where(
     exclude every value.  A NULL or unencodable probe value keeps that
     column unprunable but never breaks exactness (NULL never matches
     ``isin`` — NULL rows are always kept, same as ranges)."""
-    from ton_etl_spark.lake.table import (
-        _encode_probe_lists,
-        _file_may_match,
-        _file_may_match_in,
-        _stats_encode,
-    )
-
     where = where or {}
     where_in = where_in or {}
     if any(lo is None and hi is None for lo, hi in where.values()):
@@ -542,77 +563,25 @@ def delete_where(
             "probe list"
         )
     snap = table.current()
-    if where:
-        from ton_etl_spark.lake.table import _conform_where_bounds
-
-        where = _conform_where_bounds(snap.schema, where)
-    if where_in:
-        from ton_etl_spark.lake.table import _conform_where_in
-
-        # same-typed probes before hashing/encoding/filtering — see
-        # _conform_where_in for why raw values are unsound under ANSI
-        where_in = _conform_where_in(snap.schema, where_in)
-    if any(len(v) == 0 for v in where_in.values()):
-        # an empty (or all-unrepresentable) probe list matches nothing;
-        # the delete is a no-op
-        return {"applied": False, "buckets": [], "deleted_rows": 0}
     if commit_key is not None and snap.has_commit_key(commit_key):
         return {"applied": False, "buckets": [], "deleted_rows": 0}
-    enc = {
-        c: (_stats_encode(lo), _stats_encode(hi))
-        for c, (lo, hi) in table._session_tz_bounds(where).items()
-    }
-    enc_in: dict[str, list] = (
-        _encode_probe_lists(table._session_tz_converter(), where_in)
-        if where_in
-        else {}
-    )
-    cand = table._probe_buckets(snap, where_in) if where_in else None
-    buckets = sorted({
-        f.bucket for f in snap.files
-        if (cand is None or f.bucket in cand)
-        and _file_may_match(f, enc) and _file_may_match_in(f, enc_in)
-    })
-    if not buckets:
+    scope = _predicate_scope(table, snap, where, where_in, file_granular)
+    if scope is None:
         return {"applied": False, "buckets": [], "deleted_rows": 0}
-    matched = F.lit(True)
-    for col, (lo, hi) in where.items():
-        if lo is not None:
-            matched = matched & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            matched = matched & (F.col(col) <= F.lit(hi))
-    for col, vals in where_in.items():
-        matched = matched & F.col(col).isin(list(vals))
-    keep = ~F.coalesce(matched, F.lit(False))  # NULL range col => kept
+    buckets, src, keep_files, matched = scope
+    keep = ~matched  # NULL pred col => kept
     if protect_tombstones and OP_COL in snap.schema.fieldNames():
         keep = keep | F.coalesce(F.col(OP_COL) == "d", F.lit(False))
-    bset = set(buckets)
-    before = sum(f.rows for f in snap.files if f.bucket in bset)
-    keep_files = None
-    if file_granular:
-        keep_files = {b: [] for b in buckets}
-        hit_paths = []
-        for f in snap.files:
-            if f.bucket not in bset:
-                continue
-            if _file_may_match(f, enc) and _file_may_match_in(f, enc_in):
-                hit_paths.append(os.path.join(table.root, f.path))
-            else:
-                keep_files[f.bucket].append(f)
-        src = table.spark.read.schema(snap.schema).parquet(*hit_paths)
-        df = src.where(keep)
-    else:
-        df = table.read(buckets=buckets, version=snap.version).where(keep)
+    before = sum(f.rows for f in snap.files_for(buckets))
     ok = table.overwrite_buckets(
-        df, buckets, commit_key=commit_key, schema=snap.schema,
+        src.where(keep), buckets, commit_key=commit_key, schema=snap.schema,
         base_version=snap.version, keep_files=keep_files,
     )
     # post-commit re-read: exact unless another writer lands in these
     # buckets between our commit and this read (our own commit already
     # conflicts/rebases any interleaved touch of them)
     after = (
-        sum(f.rows for f in table.current().files if f.bucket in bset)
-        if ok else before
+        sum(f.rows for f in table.current().files_for(buckets)) if ok else before
     )
     return {"applied": ok, "buckets": buckets, "deleted_rows": before - after}
 
@@ -652,15 +621,6 @@ def update_where(
     Returns ``{"applied", "buckets", "updated_rows"}`` — ``updated_rows``
     is the exact matched count (one extra scan of the touched slice;
     compliance updates want the audited number)."""
-    from ton_etl_spark.lake.table import (
-        _conform_where_bounds,
-        _conform_where_in,
-        _encode_probe_lists,
-        _file_may_match,
-        _file_may_match_in,
-        _stats_encode,
-    )
-
     where = where or {}
     where_in = where_in or {}
     if not set_exprs:
@@ -686,55 +646,12 @@ def update_where(
             "update_where needs at least one bounded range or a where_in "
             "probe list — for a full-table rewrite use rewrite_buckets"
         )
-    if where:
-        where = _conform_where_bounds(snap.schema, where)
-    if where_in:
-        where_in = _conform_where_in(snap.schema, where_in)
-    if any(len(v) == 0 for v in where_in.values()):
-        return {"applied": False, "buckets": [], "updated_rows": 0}
     if commit_key is not None and snap.has_commit_key(commit_key):
         return {"applied": False, "buckets": [], "updated_rows": 0}
-    enc = {
-        c: (_stats_encode(lo), _stats_encode(hi))
-        for c, (lo, hi) in table._session_tz_bounds(where).items()
-    }
-    enc_in: dict[str, list] = (
-        _encode_probe_lists(table._session_tz_converter(), where_in)
-        if where_in
-        else {}
-    )
-    cand = table._probe_buckets(snap, where_in) if where_in else None
-    buckets = sorted({
-        f.bucket for f in snap.files
-        if (cand is None or f.bucket in cand)
-        and _file_may_match(f, enc) and _file_may_match_in(f, enc_in)
-    })
-    if not buckets:
+    scope = _predicate_scope(table, snap, where, where_in, file_granular)
+    if scope is None:
         return {"applied": False, "buckets": [], "updated_rows": 0}
-    matched = F.lit(True)
-    for col, (lo, hi) in where.items():
-        if lo is not None:
-            matched = matched & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            matched = matched & (F.col(col) <= F.lit(hi))
-    for col, vals in where_in.items():
-        matched = matched & F.col(col).isin(list(vals))
-    matched = F.coalesce(matched, F.lit(False))  # NULL pred col => untouched
-    bset = set(buckets)
-    keep_files = None
-    if file_granular:
-        keep_files = {b: [] for b in buckets}
-        hit_paths = []
-        for f in snap.files:
-            if f.bucket not in bset:
-                continue
-            if _file_may_match(f, enc) and _file_may_match_in(f, enc_in):
-                hit_paths.append(os.path.join(table.root, f.path))
-            else:
-                keep_files[f.bucket].append(f)
-        src = table.spark.read.schema(snap.schema).parquet(*hit_paths)
-    else:
-        src = table.read(buckets=buckets, version=snap.version)
+    buckets, src, keep_files, matched = scope  # NULL pred col => untouched
     updated_rows = src.where(matched).count()
     proj = []
     for f in snap.schema.fields:

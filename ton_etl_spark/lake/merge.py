@@ -32,9 +32,7 @@ Scale design (the part the reference outsources to Postgres indexes):
    batch reaches the reducer as ≤ n_input_partitions candidates.  This is
    the salting effect (spread hot-key work across map tasks, re-merge at
    apply) derived from the input partitioning instead of an explicit salt
-   column; ``reduce_batch_lww`` below keeps the explicit salted two-stage
-   form for callers that need to pre-reduce a pathologically skewed feed
-   before it ever reaches the merge.
+   column.
 3. **Bucket-pruned copy-on-write.** Only buckets touched by the batch are
    read and rewritten; a small change batch against a 100 TB table
    rewrites a bounded slice, not the world.
@@ -42,25 +40,13 @@ Scale design (the part the reference outsources to Postgres indexes):
 
 from __future__ import annotations
 
-import os
-import sys
-import time
 import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_TIMING = os.environ.get("SPARK_GRAFT_TIMING", "") not in ("", "0")
-
-
-def _tlog(label: str, t0: float) -> None:
-    if _TIMING:
-        print(f"@@timing {label} {time.perf_counter() - t0:.2f}s", file=sys.stdout, flush=True)
-
 from ton_etl_spark.cdc.schema import OP_COL, LSN_COL, TS_COL, op_priority_expr
-from ton_etl_spark.lake.table import LakeTable, bucket_of, _merge_schemas, _conform
-
-DEFAULT_SALT = 16
+from ton_etl_spark.lake.table import LakeTable, _merge_schemas, _conform
 
 # One conf-pinned child session per (SparkContext, n_buckets), reused across
 # merges: a multi-day stream used to create a session per epoch per table.
@@ -93,38 +79,10 @@ def _ord_expr(prefix: str = "") -> F.Column:
     )
 
 
-def reduce_batch_lww(
-    batch: DataFrame,
-    key_cols: list[str],
-    n_salts: int = DEFAULT_SALT,
-) -> DataFrame:
-    """Explicitly salted two-stage pre-reduce: collapse a CDC micro-batch to
-    one winning event per key before it reaches the merge.
-
-    The merge itself already bounds reduce-side skew via map-side partial
-    aggregation; use this when the *feed* must be collapsed first (e.g. a
-    pathological batch where one key dominates every input partition and
-    even the per-partition candidates are worth spreading).  Stage 1 groups
-    by (key, salt) — salt derived from the ordering column so events of a
-    hot key spread over ``n_salts`` reducers — stage 2 reduces the
-    ≤ n_salts candidates per key.
-    """
-    ord_expr = _ord_expr()
-    payload = F.struct(*[F.col(c) for c in batch.columns])
-    salted = batch.withColumn("__salt", F.pmod(F.xxhash64(F.col(LSN_COL)), F.lit(n_salts)))
-    stage1 = salted.groupBy(*key_cols, "__salt").agg(
-        F.max_by(payload, ord_expr).alias("__win"), F.max(ord_expr).alias("__ord")
-    )
-    stage2 = stage1.groupBy(*key_cols).agg(F.max_by(F.col("__win"), F.col("__ord")).alias("__win"))
-    return stage2.select("__win.*")
-
-
 def merge_lww(
     table: LakeTable,
     batch: DataFrame,
     commit_key: str | None = None,
-    pre_reduced: bool = False,  # kept for API compat; the single-agg merge
-    n_salts: int = DEFAULT_SALT,  # handles raw and pre-reduced batches alike
     buckets: list[int] | None = None,
 ) -> dict:
     """MERGE a CDC batch into ``table`` with LWW semantics, in ONE shuffle.
@@ -160,10 +118,7 @@ def merge_lww(
     # through the validation UDF re-ran the whole Arrow pipeline and nearly
     # doubled epoch cost.)
     if buckets is None:
-        t0 = time.perf_counter()
-        bexpr = bucket_of(key_cols, snap.n_buckets)
-        buckets = [r["__b"] for r in batch.select(bexpr.alias("__b")).distinct().collect()]
-        _tlog("probe", t0)
+        buckets = table.buckets_of(batch, snap)
 
     current = table.read(buckets=buckets)
 
@@ -203,7 +158,6 @@ def merge_lww(
             .agg(F.max_by(payload, ord_expr).alias("__win"))
             .select("__win.*")
         )
-        t0 = time.perf_counter()
         ok = table.overwrite_buckets(
             winners,
             buckets,
@@ -212,7 +166,6 @@ def merge_lww(
             pre_partitioned=True,
             base_version=snap.version,
         )
-        _tlog("merge_write", t0)
     finally:
         spark.catalog.dropGlobalTempView(view)
     return {"applied": ok, "buckets": sorted(buckets)}

@@ -67,8 +67,10 @@ winner's snapshot.  Readers are lock-free.
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
+import operator
 import os
 import re
 import shutil
@@ -76,7 +78,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -388,21 +390,21 @@ def _conform_where_bounds(
     }
 
 
-def _encode_probe_lists(conv, where_in: dict[str, list]) -> dict[str, list]:
-    """Pre-encode ``where_in`` probe lists for ``_file_may_match_in`` —
-    the ONE implementation of the sentinel contract (sorted for the bisect;
-    ``[]`` marks a column unprunable when any probe value is NULL or
-    unencodable / unorderable), shared by ``LakeTable.read`` and
-    ``maintenance.delete_where``.  The skip test's exactness depends on
-    every call site encoding identically, so this must not be inlined."""
-    enc_in: dict[str, list] = {}
-    for c, vals in where_in.items():
-        ev = [_stats_encode(conv(v)) for v in vals]
-        try:
-            enc_in[c] = sorted(ev) if None not in ev else []
-        except TypeError:
-            enc_in[c] = []
-    return enc_in
+def _pin_naive(v: Any) -> Any:
+    """Make a NAIVE datetime predicate value aware in the zone the residual
+    filter gives it.  PySpark turns a naive ``datetime`` literal into an
+    instant in the Python process's local zone (``F.lit`` and
+    ``createDataFrame`` both go through ``time.mktime``), NOT in
+    ``spark.sql.session.timeZone``; ``datetime.astimezone()`` applies the
+    same rule.  The stored bounds are UTC, so the skip side must pin the
+    value before ``_stats_encode`` canonicalizes it — comparing the raw
+    wall clock against UTC bounds would skip matching files whenever the
+    local zone is not UTC.  Other values pass through."""
+    import datetime as _dt
+
+    if isinstance(v, _dt.datetime) and v.tzinfo is None:
+        return v.astimezone()
+    return v
 
 
 def _file_may_match(f: DataFile, enc_where: dict[str, tuple[Any, Any]]) -> bool:
@@ -547,6 +549,23 @@ class Snapshot:
             recent_commit_keys=list(d["recent_commit_keys"]),
             properties=dict(d.get("properties", {})),
         )
+
+
+@dataclass
+class ScanPlan:
+    """What a predicate-scoped operation reads (``LakeTable.plan``): the
+    snapshot, the data files that survive bucket and stats skipping, and
+    the exact ``residual`` filter (None when there is no predicate).
+    Skipping is an optimization and the residual is the truth: a consumer
+    that filters ``files`` by ``residual`` gets the same rows however many
+    files were skipped.  ``bounds`` are the conformed ``where`` ranges with
+    naive datetimes pinned (``_pin_naive``) — the form an evaluator outside
+    Spark (the co-located join's Arrow kernel) compares against."""
+
+    snapshot: Snapshot
+    files: list[DataFile]
+    residual: Column | None
+    bounds: dict[str, tuple[Any, Any]]
 
 
 # Safe lossless promotion chains (the Iceberg v2 `promote` set, which is
@@ -931,59 +950,6 @@ class LakeTable:
     def _widening(snap: Snapshot) -> bool:
         return snap.properties.get("type_widening", "").lower() in ("1", "true")
 
-    def _session_tz_bounds(
-        self, where: dict[str, tuple[Any, Any]]
-    ) -> dict[str, tuple[Any, Any]]:
-        """Naive datetime bounds are session-local (that is how the Spark
-        residual filter interprets them); make that explicit so
-        ``_stats_encode`` canonicalizes them to the UTC the stored bounds
-        use.  Non-datetime values pass through untouched.  Spark accepts
-        offset-style timezone ids ('+09:00', 'GMT+8') that ZoneInfo does
-        not — those are parsed as fixed offsets; anything unrecognizable
-        disables skipping for that bound (``None`` => unbounded => every
-        file kept; the residual filter stays correct)."""
-        conv = self._session_tz_converter()
-        return {c: (conv(lo), conv(hi)) for c, (lo, hi) in where.items()}
-
-    def _session_tz_converter(self):
-        """Shared naive-datetime → session-tz-aware converter for skip-side
-        predicate encoding (see ``_session_tz_bounds`` for the contract);
-        returns a callable so in-list probes reuse the same resolution."""
-        import datetime as _dt
-        import re as _re
-
-        tz: _dt.tzinfo | None | bool = None  # False => unresolvable
-
-        def _resolve_tz() -> _dt.tzinfo | bool:
-            name = self.spark.conf.get("spark.sql.session.timeZone", "UTC")
-            try:
-                from zoneinfo import ZoneInfo
-
-                return ZoneInfo(name)
-            except Exception:
-                m = _re.fullmatch(
-                    r"(?:GMT|UTC)?([+-])(\d{1,2})(?::?(\d{2}))?", name
-                )
-                if not m:
-                    return False
-                sign = 1 if m.group(1) == "+" else -1
-                delta = _dt.timedelta(
-                    hours=int(m.group(2)), minutes=int(m.group(3) or 0)
-                )
-                return _dt.timezone(sign * delta)
-
-        def conv(v):
-            nonlocal tz
-            if isinstance(v, _dt.datetime) and v.tzinfo is None:
-                if tz is None:
-                    tz = _resolve_tz()
-                if tz is False:
-                    return None  # unknown session tz: never skip on this bound
-                return v.replace(tzinfo=tz)
-            return v
-
-        return conv
-
     # ------------------------------------------------------------------ bucketing
     def check_bucket_fn(self, snap: Snapshot) -> None:
         """Fail loudly if the table was written with a different bucket hash:
@@ -996,12 +962,14 @@ class LakeTable:
                 f"computes {BUCKET_FN_ID!r}; refusing bucket-dependent operation"
             )
 
-    def bucket_expr(self, n_buckets: int | None = None, key_cols: list[str] | None = None):
-        snap = self.current()
+    def buckets_of(self, df: DataFrame, snap: Snapshot) -> list[int]:
+        """The distinct storage buckets ``df``'s rows hash to under
+        ``snap``'s layout — the touched set a MERGE or a mart refresh
+        rewrites.  One small job: a column-pruned scan of the key columns
+        and a distinct of at most ``n_buckets`` ints."""
         self.check_bucket_fn(snap)
-        snap_keys = key_cols if key_cols is not None else snap.key_cols
-        n = n_buckets if n_buckets is not None else snap.n_buckets
-        return bucket_of(snap_keys, n)
+        expr = bucket_of(snap.key_cols, snap.n_buckets)
+        return [r[0] for r in df.select(expr.alias("__b")).distinct().collect()]
 
     # ------------------------------------------------------------------ read
     def read(
@@ -1047,20 +1015,62 @@ class LakeTable:
         the string form, a string probe on a long column is parsed, and a
         value the type cannot represent matches nothing — never an ANSI
         runtime cast error, and never a hash/filter disagreement."""
+        p = self.plan(buckets=buckets, version=version, where=where, tag=tag,
+                      where_in=where_in)
+        schema = p.snapshot.schema
+        if not p.files:
+            return self.spark.createDataFrame([], schema)
+        paths = [os.path.join(self.root, f.path) for f in p.files]
+        # explicit schema => old files yield NULL for late-added columns
+        # (additive evolution), and column pruning/pushdown still apply.
+        df = self.spark.read.schema(schema).parquet(*paths)
+        return df if p.residual is None else df.where(p.residual)
+
+    def plan(
+        self,
+        buckets: list[int] | None = None,
+        version: int | None = None,
+        where: dict[str, tuple[Any, Any]] | None = None,
+        tag: str | None = None,
+        where_in: dict[str, list] | None = None,
+    ) -> ScanPlan:
+        """The ONE pruning plan behind every predicate-scoped operation —
+        ``read``, ``maintenance.delete_where``/``update_where`` and
+        ``join.colocated_join`` all scan what this returns.  Arguments are
+        ``read``'s.  In order:
+
+        1. conform ``where`` bounds and ``where_in`` probes to the column
+           types (``_conform_where_bounds`` / ``_conform_where_in``); a
+           probe list left empty matches nothing, so no file survives;
+        2. a key-covering probe picks the candidate buckets
+           (``_probe_buckets``, the only Spark job planning runs), and any
+           bucket pruning first checks the recorded bucket function;
+        3. files whose manifest bounds exclude every probe value or a range
+           are skipped (``_file_may_match_in`` / ``_file_may_match``), with
+           naive datetimes pinned the way the residual reads them.
+
+        The residual is the conformed predicate as one Column: ranges
+        (``>=``/``<=``) AND ``isin`` lists.  NULL in a predicate column
+        never satisfies it."""
         if tag is not None:
             if version is not None:
                 raise ValueError("pass version OR tag, not both")
             version = self.resolve_tag(tag)
         snap = self.snapshot(version) if version is not None else self.current()
-        if where:
-            where = _conform_where_bounds(snap.schema, where)
-        if where_in:
-            where_in = _conform_where_in(snap.schema, where_in)
-            if any(len(v) == 0 for v in where_in.values()):
-                # a probe list that is empty (or emptied by conformance —
-                # no value representable in the column type) matches
-                # nothing: skip the scan entirely
-                return self.spark.createDataFrame([], snap.schema)
+        where = _conform_where_bounds(snap.schema, where) if where else {}
+        where_in = _conform_where_in(snap.schema, where_in) if where_in else {}
+        terms = []
+        for col, (lo, hi) in where.items():
+            if lo is not None:
+                terms.append(F.col(col) >= F.lit(lo))
+            if hi is not None:
+                terms.append(F.col(col) <= F.lit(hi))
+        terms += [F.col(col).isin(list(vals)) for col, vals in where_in.items()]
+        residual = functools.reduce(operator.and_, terms) if terms else None
+        bounds = {c: (_pin_naive(lo), _pin_naive(hi)) for c, (lo, hi) in where.items()}
+        if any(len(v) == 0 for v in where_in.values()):
+            # empty, or emptied by conformance: skip the scan entirely
+            return ScanPlan(snap, [], residual, bounds)
         if where_in and buckets is None:
             buckets = self._probe_buckets(snap, where_in)
         if buckets is not None:
@@ -1068,36 +1078,21 @@ class LakeTable:
             self.check_bucket_fn(snap)
         files = snap.files_for(buckets)
         if where_in:
-            enc_in = _encode_probe_lists(self._session_tz_converter(), where_in)
+            # encoded once per plan, not per file (a snapshot can list 10^5
+            # files): sorted for the bisect; [] marks a column unprunable
+            # when any probe value is NULL, unencodable or unorderable
+            enc_in: dict[str, list] = {}
+            for col, vals in where_in.items():
+                ev = [_stats_encode(_pin_naive(v)) for v in vals]
+                try:
+                    enc_in[col] = sorted(ev) if None not in ev else []
+                except TypeError:
+                    enc_in[col] = []
             files = [f for f in files if _file_may_match_in(f, enc_in)]
         if where:
-            # A NAIVE datetime bound means session-local time to the
-            # residual filter below, but the stored bounds are UTC — attach
-            # the session tz before encoding, or a non-UTC session would
-            # compare wall-clock strings against UTC bounds and silently
-            # skip matching files.  Encode once here, not per file.
-            enc = {
-                c: (_stats_encode(lo), _stats_encode(hi))
-                for c, (lo, hi) in self._session_tz_bounds(where).items()
-            }
+            enc = {c: (_stats_encode(lo), _stats_encode(hi)) for c, (lo, hi) in bounds.items()}
             files = [f for f in files if _file_may_match(f, enc)]
-        schema = snap.schema
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.root, f.path) for f in files]
-        # explicit schema => old files yield NULL for late-added columns
-        # (additive evolution), and column pruning/pushdown still apply.
-        df = self.spark.read.schema(schema).parquet(*paths)
-        if where:
-            for col, (lo, hi) in where.items():
-                if lo is not None:
-                    df = df.where(F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    df = df.where(F.col(col) <= F.lit(hi))
-        if where_in:
-            for col, vals in where_in.items():
-                df = df.where(F.col(col).isin(list(vals)))
-        return df
+        return ScanPlan(snap, files, residual, bounds)
 
     _PROBE_BUCKET_MAX_COMBOS = 4096
 
