@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import Row, functions as F, types as T
 
+from ton_etl_spark.lake.maintenance import rebucket
 from ton_etl_spark.lake.table import LakeTable
 
 
@@ -79,8 +80,9 @@ def test_point_lookup_exact_with_blooms(spark, bloom_table):
 
 
 def test_bloom_survives_evolution_commits(spark, bloom_table, tmp_path):
-    """Later commits (schema evolution, new appends) keep writing blooms —
-    the property rides the snapshot, not the first writer."""
+    """Later commits (schema evolution, new appends, a rebucket) keep
+    writing blooms — the property rides the snapshot, not the first
+    writer."""
     t = bloom_table
     t.append(
         spark.createDataFrame(
@@ -91,3 +93,8 @@ def test_bloom_survives_evolution_commits(spark, bloom_table, tmp_path):
     newest = max(t.current().files, key=lambda f: f.path)
     offsets = _bloom_offsets(spark, os.path.join(t.root, newest.path))
     assert offsets["doc_id"] >= 0
+    # a rebucket rewrites every file under the table's properties too
+    rebucket(t, 4)
+    assert t.current().n_buckets == 4
+    for f in t.current().files:
+        assert _bloom_offsets(spark, os.path.join(t.root, f.path))["doc_id"] >= 0, f.path

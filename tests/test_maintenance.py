@@ -496,6 +496,61 @@ def test_rebucket_loses_cas_to_concurrent_writer(spark, tmp_path):
     assert sorted(r["doc_id"] for r in read_state(t).collect()) == ["a", "b"]
 
 
+def test_rebucket_rebases_over_commit_key_only_append(spark, tmp_path):
+    """An interleaved commit that only records a commit key (the mart
+    refresh's empty append) touches no bucket and keeps the schema, so a
+    rebucket that loses the CAS to it rebases instead of failing — and
+    keeps the interleaved key."""
+    from ton_etl_spark.lake import maintenance as mmod
+    from tests.test_concurrency import _hooked_publish
+
+    t = make_sequences_table(spark, str(tmp_path / "rb"), n_buckets=4)
+    apply_cdc_batch(
+        t,
+        spark.createDataFrame(
+            [("a", "c", 1, 1, [1], 1, "web"), ("b", "c", 2, 2, [2], 1, "web")],
+            CDC_EVENT_SCHEMA,
+        ),
+        epoch=0,
+    )
+    rows_before = sorted(map(tuple, t.read().collect()))
+    v0 = t.current_version()
+    other = LakeTable.load(spark, t.root)
+    _hooked_publish(
+        t,
+        lambda: other.append(
+            spark.createDataFrame([], other.current().schema),
+            commit_key="martsync=0-1",
+        ),
+    )
+    res = mmod.rebucket(t, 8, commit_key="rebucket=1")
+    assert res["applied"] and res["n_buckets"] == 8
+    snap = t.current()
+    assert snap.version == v0 + 2  # the empty append, then the rebased rebucket
+    assert snap.n_buckets == 8
+    assert snap.has_commit_key("martsync=0-1") and snap.has_commit_key("rebucket=1")
+    assert sorted(map(tuple, t.read().collect())) == rows_before
+
+
+def test_append_never_rebases_over_rebucket(spark, tmp_path):
+    """An append's files are bucketed under the layout it read; rebased
+    onto a rebucketed snapshot their bucket ids would name other buckets
+    and key-pruned reads would miss rows — so the append must conflict."""
+    from ton_etl_spark.lake import maintenance as mmod
+    from ton_etl_spark.lake.table import CommitConflictError
+    from tests.test_concurrency import _hooked_publish
+
+    schema = spark.createDataFrame([], "k string, v long").schema
+    t = LakeTable.create(spark, str(tmp_path / "ar"), schema=schema,
+                         key_cols=["k"], n_buckets=2)
+    t.append(spark.createDataFrame([(f"k{i}", i) for i in range(8)], schema))
+    other = LakeTable.load(spark, t.root)
+    _hooked_publish(t, lambda: mmod.rebucket(other, 4))
+    with pytest.raises(CommitConflictError, match="bucket layout changed"):
+        t.append(spark.createDataFrame([(f"n{i}", i) for i in range(8)], schema))
+    assert t.current().n_buckets == 4 and t.read().count() == 8
+
+
 def test_delete_where_prunes_untouched_buckets(spark, tmp_path):
     """Range delete rewrites only buckets whose file bounds intersect the
     range; everything else keeps its manifest pointer (metadata proof of

@@ -17,10 +17,12 @@ literal, so skipping must agree with the residual filter, not with the
 session time zone."""
 
 import datetime as dt
+import functools
 import itertools
 import random
 import shutil
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ton_etl_spark.lake.maintenance import delete_where, update_where
@@ -157,5 +159,67 @@ def test_read_delete_update_agree_with_oracle(spark, tmp_path):
                 assert all_keys - set(left) == want, (ctx, fg)
                 # no row outside the predicate was updated
                 assert not any(left.values()), (ctx, fg)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def test_ntz_skipping_agrees_with_residual_in_any_session_zone(spark, tmp_path):
+    """``timestamp_ntz`` footer stats are wall clocks, and Spark compares an
+    NTZ column with a datetime literal at the session zone's wall clock.
+    ``read`` must return exactly what the residual returns over every file,
+    in UTC, New York and Tokyo sessions — bounds and probes at a DST fold
+    (2026-11-01) and gap (2026-03-08) included — while still skipping."""
+    from zoneinfo import ZoneInfo
+
+    utc = dt.timezone.utc
+    jan = dt.datetime(2026, 1, 1, 12)
+    nov = dt.datetime(2026, 11, 1, 0, 50)  # spans the New York DST fold
+    mar = dt.datetime(2026, 3, 8, 1, 30)  # spans the New York DST gap
+    rows = ([(i, jan + dt.timedelta(minutes=i)) for i in range(100)]  # 12:00-13:39
+            + [(100 + i, nov + dt.timedelta(minutes=5 * i)) for i in range(30)]
+            + [(200 + i, mar + dt.timedelta(minutes=5 * i)) for i in range(30)])
+    schema = spark.createDataFrame([], "k long, ts timestamp_ntz").schema
+    t = LakeTable.create(spark, str(tmp_path / "ntz"), schema=schema, key_cols=["k"],
+                         n_buckets=1, stats_cols=["ts"], sort_cols=["ts"],
+                         target_file_rows=10)
+    t.append(spark.createDataFrame(rows, schema), commit_key="seed")
+    bound = jan.replace(minute=50)  # naive: an instant in the process zone
+    fold1 = dt.datetime(2026, 11, 1, 5, 30, tzinfo=utc)  # New York 01:30 EDT
+    fold2 = dt.datetime(2026, 11, 1, 6, 30, tzinfo=utc)  # New York 01:30 EST
+    gap_before = dt.datetime(2026, 3, 8, 6, 50, tzinfo=utc)  # New York 01:50 EST
+    gap_after = dt.datetime(2026, 3, 8, 7, 10, tzinfo=utc)  # New York 03:10 EDT
+    cases = [
+        ({"ts": (bound, None)}, {}),
+        ({"ts": (None, bound)}, {}),
+        ({"ts": (bound, bound + dt.timedelta(minutes=10))}, {}),
+        ({"ts": (None, fold2)}, {}),
+        ({"ts": (fold1, None)}, {}),
+        ({"ts": (fold2, None)}, {}),
+        ({"ts": (gap_after, None)}, {}),
+        ({"ts": (None, gap_before)}, {}),
+        ({}, {"ts": [bound, dt.datetime(2026, 1, 1, 17, 50, tzinfo=utc),
+                     dt.datetime(2026, 1, 1, 3, 50, tzinfo=utc), fold1, fold2]}),
+    ]
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for tz in ("UTC", "America/New_York", "Asia/Tokyo"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            plans = [t.plan(where=w, where_in=wi) for w, wi in cases]
+            flags = t.read().select(
+                "k", *[p.residual.alias(f"m{i}") for i, p in enumerate(plans)]
+            ).collect()
+            # every case's skipping read in one job
+            got_rows = functools.reduce(DataFrame.unionByName, [
+                t.read(where=w, where_in=wi).select("k", F.lit(i).alias("case"))
+                for i, (w, wi) in enumerate(cases)
+            ]).collect()
+            for i, (w, wi) in enumerate(cases):
+                want = {r["k"] for r in flags if r[f"m{i}"]}
+                got = {r["k"] for r in got_rows if r["case"] == i}
+                assert got == want, (tz, w, wi)
+            # still skipping: 12:50-13:00 at this zone's wall clock spans 2 files
+            wall = jan.replace(minute=50, tzinfo=ZoneInfo(tz))
+            span = (wall, wall + dt.timedelta(minutes=10))
+            assert len(t.plan(where={"ts": span}).files) == 2, tz
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)

@@ -300,7 +300,7 @@ def test_zorder_gate_fires_without_declared_stats(spark, tmp_path):
     # their (wide, unclustered) bounds, so coverage stays complete and the
     # erosion surfaces through the overlap metric itself
     t.append(_rows(4000, 8000), commit_key="more")
-    assert set(LakeTable._prop_cols(t.current(), "stats_cols")) >= {"a", "b"}
+    assert set(LakeTable._prop_cols(t.current().properties, "stats_cols")) >= {"a", "b"}
     new_files = [f for f in t.current().files if f.rows and f.stats]
     assert all("a" in f.stats and "b" in f.stats for f in new_files)
     m = clustering_overlap(t)

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ton_etl_spark.cdc.schema import OP_COL
+from ton_etl_spark.cdc.apply import live_state
 from ton_etl_spark.lake.table import LakeTable
 
 MART_SCHEMA_SUFFIX = [
@@ -61,7 +61,7 @@ def make_agg_mart(
 def recompute_agg_mart(source: LakeTable, group_cols: list[str]) -> DataFrame:
     """The full-recompute twin used to verify incremental maintenance:
     aggregate the source's LIVE state (tombstones excluded) from scratch."""
-    live = source.read().where(F.col(OP_COL) != "d")
+    live = live_state(source.read())
     return live.groupBy(*group_cols).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.coalesce(F.col("n_tok").cast("long"), F.lit(0))).alias("n_tok_sum"),
@@ -156,7 +156,7 @@ def refresh_agg_mart(
     msnap = mart.current()
     group_cols = msnap.key_cols
 
-    ch = source.changes(from_version, to_version).where(F.col(OP_COL) != "d")
+    ch = live_state(source.changes(from_version, to_version))
     sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(F.lit(-1))
     delta = ch.groupBy(*group_cols).agg(
         F.sum(sign).cast("long").alias("d_docs"),

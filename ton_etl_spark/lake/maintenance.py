@@ -71,7 +71,7 @@ def default_small_rows(table: LakeTable, snap: Snapshot) -> int | None:
     Shared by ``compact_small_files`` and the ``describe`` CLI's
     ``small_files`` demand signal so the metric an operator watches and
     the threshold ``--binpack`` acts on can never drift apart."""
-    target = table._target_file_rows(snap)
+    target = table._target_file_rows(snap.properties)
     return max(1, target // 2) if target else None
 
 
@@ -267,10 +267,11 @@ def rebucket(
       ``check_bucket_fn`` keeps passing; the snapshot's per-version
       ``n_buckets`` is what readers and merges consult, so time-travel
       reads of old versions keep pruning with the OLD count).
-    - The swap is a single ``_publish``: concurrently-committed epochs win
-      the CAS and this raises ``CommitConflictError`` — a rebucket planned
-      against a stale base holds stale rows and MUST be re-derived, never
-      rebased (same contract as merge/overwrite, unlike append).  Run it
+    - The swap is one ``LakeTable._commit`` replacing every bucket, so
+      its rebase rule is merge/overwrite's: an interleaved commit that
+      touched a bucket or the schema wins and this raises
+      ``CommitConflictError`` (re-derive); one that only recorded a commit
+      key (the mart refresh's empty append) is rebased over.  Run it
       between epochs of the ingest loop, or let the loop's next merge pick
       up the new count automatically from the snapshot.
 
@@ -289,30 +290,12 @@ def rebucket(
     df = table.read(version=snap.version)  # raw rows, tombstones included
     commit_id = f"c{snap.version + 1}-rb{uuid.uuid4().hex[:8]}"
     new_files = table._write_commit_files(
-        df, commit_id, new_n_buckets, snap.key_cols,
-        target_file_rows=table._target_file_rows(snap),
-        stats_cols=table._prop_cols(snap, "stats_cols"),
-        sort_cols=table._prop_cols(snap, "sort_cols"),
+        df, commit_id, new_n_buckets, snap.key_cols, snap.properties
     )
-    by_bucket: dict[int, list] = {}
-    for f in new_files:
-        by_bucket.setdefault(f.bucket, []).append(f)
-    manifests = {
-        b: table._write_manifest(b, fs, commit_id) for b, fs in by_bucket.items()
-    }
-    wm, recent = snap.advanced_keys(commit_key)
-    new_snap = Snapshot(
-        version=snap.version + 1,
-        schema_json=snap.schema_json,
-        n_buckets=new_n_buckets,
-        key_cols=snap.key_cols,
-        manifests=manifests,
-        commit_watermarks=wm,
-        recent_commit_keys=recent,
-        properties=snap.properties,
-    )
-    new_snap._root = table.root
-    table._publish(new_snap)  # CommitConflictError => loser re-derives
+    # every bucket of the old layout is replaced by the new layout's files
+    if not table._commit(snap, commit_id, commit_key, new_files,
+                         replace=range(snap.n_buckets), n_buckets=new_n_buckets):
+        return {"applied": False, "n_buckets": table.current().n_buckets}
     return {
         "applied": True,
         "n_buckets": new_n_buckets,
@@ -448,7 +431,7 @@ def zorder_needed(
         # same loud-misconfig contract as create()'s stats_cols check: a
         # typo'd column would otherwise just never fire the gate
         raise ValueError(f"zorder_cols not in schema: {unknown}")
-    declared = set(LakeTable._prop_cols(snap, "stats_cols"))
+    declared = set(LakeTable._prop_cols(snap.properties, "stats_cols"))
     blind = sorted(
         c for c in zorder_cols
         if _stats_encodable(field_types[c])
@@ -808,11 +791,10 @@ def rewrite_zorder(
 
     Runs on the existing copy-on-write path: same CAS commit, same rebase
     rules, same bucket layout (z-ordering changes clustering WITHIN
-    buckets, never row→bucket routing).  Bounds for ``cols`` are
-    harvested even when not declared as ``stats_cols`` — and the commit
-    PROMOTES them into the ``stats_cols`` property, so every later
-    merge/append keeps recording their bounds too.  Without the
-    promotion, post-rewrite commits drop the bounds again: the files are
+    buckets, never row→bucket routing).  The commit PROMOTES ``cols``
+    into the ``stats_cols`` property and writes its files under it, so
+    they and every later merge/append record bounds for ``cols``.
+    Without the promotion, post-rewrite commits drop the bounds: files are
     unprunable on those columns, the overlap metric is blind to them,
     and ``zorder_needed``'s coverage rule would fire EVERY cycle on a
     merge-heavy table (merges rewrite whole buckets) — always-on full
@@ -830,11 +812,11 @@ def rewrite_zorder(
     df = table.read(buckets=buckets)
     bounds = zorder_boundaries(df, cols, bits=bits)
     z = zorder_value(df, bounds, bits=bits)
-    declared = LakeTable._prop_cols(snap, "stats_cols")
+    declared = LakeTable._prop_cols(snap.properties, "stats_cols")
     promoted = list(dict.fromkeys(declared + list(cols)))
     ok = table.overwrite_buckets(
         df, buckets, commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, sort_exprs=[z], extra_stats_cols=cols,
+        base_version=snap.version, sort_exprs=[z],
         properties_update=(
             {"stats_cols": ",".join(promoted)} if promoted != declared else None
         ),

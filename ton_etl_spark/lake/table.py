@@ -57,12 +57,13 @@ filesystem APIs.  Design goals, in order:
    NOT EXISTS``, ``parser/createdb.sql:93,114-121``, and Glue auto-create,
    ``datalake_daily_sync.py:268-296``).
 
-Concurrency contract: single writer per table (exactly how the reference
-runs one consumer-group per sink table) — and since round 4 the contract
-is ENFORCED, not just documented: ``_publish`` is an optimistic
-compare-and-swap on the ``_current`` pointer, so a second writer racing a
-commit gets ``CommitConflictError`` instead of silently dropping the
-winner's snapshot.  Readers are lock-free.
+Concurrency contract: every data commit writes its files, then goes
+through ONE commit step, ``LakeTable._commit``, whose ``_publish`` is a
+compare-and-swap on the ``_current`` pointer.  A writer that loses the
+race rebases metadata-only under one rule (an append always; a bucket
+replacement only if the interleaved commits left its buckets, the schema
+and the layout unchanged) or gets ``CommitConflictError``.  Readers are
+lock-free.
 """
 
 from __future__ import annotations
@@ -75,6 +76,7 @@ import os
 import re
 import shutil
 import uuid
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -92,6 +94,9 @@ BUCKET_COL = "__bucket"
 
 # bounded idempotency record (see module docstring §2)
 RECENT_KEYS_MAX = 1024
+# metadata-only rebases a commit attempts after losing the CAS before it
+# raises CommitConflictError (see ``LakeTable._commit``)
+MAX_REBASES = 8
 _NUMERIC_KEY = re.compile(r"(.*)=(\d+)\Z")
 
 # Watermark coverage is OPT-IN per prefix: only keys in this reserved
@@ -405,6 +410,43 @@ def _pin_naive(v: Any) -> Any:
     if isinstance(v, _dt.datetime) and v.tzinfo is None:
         return v.astimezone()
     return v
+
+
+def _session_zone(zone_id: str):
+    """``spark.sql.session.timeZone`` as a tzinfo: a fixed offset ('UTC',
+    '+09:00', 'GMT-5') or a region; None when Python cannot resolve it."""
+    import datetime as _dt
+    from zoneinfo import ZoneInfo
+
+    m = re.fullmatch(r"(?:Z|UTC|GMT|UT)?([+-]\d{1,2})?(?::?(\d{2}))?", zone_id)
+    if zone_id and m:
+        off = _dt.timedelta(hours=abs(int(m.group(1) or 0)), minutes=int(m.group(2) or 0))
+        return _dt.timezone(-off if "-" in zone_id else off)
+    try:
+        return ZoneInfo(zone_id)
+    except (KeyError, ValueError, OSError):  # ZoneInfoNotFoundError: KeyError
+        return None
+
+
+def _ntz_walls(v: Any, zone) -> tuple[Any, Any]:
+    """(lowest, highest) wall clock a ``timestamp_ntz`` row equal to the
+    datetime ``v`` can hold — the form NTZ footer stats are in.  Spark
+    compares at ``v``'s wall clock in the session ``zone``, or, when that
+    wall clock is ambiguous (DST fold), reads each row as an instant; the
+    two differ by the offset change, so the range spans every offset the
+    zone uses within two days, and a bound never skips a matching file.
+    (None, None) when the zone is unknown: nothing is skipped."""
+    import datetime as _dt
+
+    if zone is None:
+        return None, None
+    if not isinstance(v, _dt.datetime):
+        return v, v
+    inst = _pin_naive(v).astimezone(_dt.timezone.utc)
+    offs = [(inst + _dt.timedelta(hours=h)).astimezone(zone).utcoffset()
+            for h in range(-48, 49, 3)]
+    wall = inst.replace(tzinfo=None)
+    return wall + min(offs), wall + max(offs)
 
 
 def _file_may_match(f: DataFile, enc_where: dict[str, tuple[Any, Any]]) -> bool:
@@ -937,13 +979,13 @@ class LakeTable:
         return self.current().has_commit_key(commit_key)
 
     @staticmethod
-    def _target_file_rows(snap: Snapshot) -> int | None:
-        v = snap.properties.get("target_file_rows")
+    def _target_file_rows(props: dict[str, str]) -> int | None:
+        v = props.get("target_file_rows")
         return int(v) if v else None
 
     @staticmethod
-    def _prop_cols(snap: Snapshot, prop: str) -> list[str]:
-        v = snap.properties.get(prop)
+    def _prop_cols(props: dict[str, str], prop: str) -> list[str]:
+        v = props.get(prop)
         return [c for c in v.split(",") if c] if v else []
 
     @staticmethod
@@ -1047,7 +1089,9 @@ class LakeTable:
            bucket pruning first checks the recorded bucket function;
         3. files whose manifest bounds exclude every probe value or a range
            are skipped (``_file_may_match_in`` / ``_file_may_match``), with
-           naive datetimes pinned the way the residual reads them.
+           naive datetimes pinned the way the residual reads them, and
+           values on ``timestamp_ntz`` columns taken as wall clocks in
+           ``spark.sql.session.timeZone`` (``_ntz_walls``).
 
         The residual is the conformed predicate as one Column: ranges
         (``>=``/``<=``) AND ``isin`` lists.  NULL in a predicate column
@@ -1077,20 +1121,34 @@ class LakeTable:
             # pruning correctness depends on the bucket hash matching
             self.check_bucket_fn(snap)
         files = snap.files_for(buckets)
+        # timestamp_ntz stats are wall clocks: predicate values on those
+        # columns are compared as session-zone wall clocks (``_ntz_walls``)
+        ntz = {f.name for f in snap.schema.fields
+               if isinstance(f.dataType, T.TimestampNTZType)} & (set(where) | set(where_in))
+        zone = _session_zone(self.spark.conf.get("spark.sql.session.timeZone")) if ntz else None
         if where_in:
             # encoded once per plan, not per file (a snapshot can list 10^5
             # files): sorted for the bisect; [] marks a column unprunable
-            # when any probe value is NULL, unencodable or unorderable
+            # when any probe value is NULL, unencodable or unorderable, or
+            # an NTZ probe has no single wall clock
             enc_in: dict[str, list] = {}
             for col, vals in where_in.items():
-                ev = [_stats_encode(_pin_naive(v)) for v in vals]
+                if col in ntz:
+                    walls = [_ntz_walls(v, zone) for v in vals]
+                    ev = [_stats_encode(lo) if lo == hi else None for lo, hi in walls]
+                else:
+                    ev = [_stats_encode(_pin_naive(v)) for v in vals]
                 try:
                     enc_in[col] = sorted(ev) if None not in ev else []
                 except TypeError:
                     enc_in[col] = []
             files = [f for f in files if _file_may_match_in(f, enc_in)]
         if where:
-            enc = {c: (_stats_encode(lo), _stats_encode(hi)) for c, (lo, hi) in bounds.items()}
+            enc = {}
+            for c, (lo, hi) in bounds.items():
+                if c in ntz:
+                    lo, hi = _ntz_walls(lo, zone)[0], _ntz_walls(hi, zone)[1]
+                enc[c] = (_stats_encode(lo), _stats_encode(hi))
             files = [f for f in files if _file_may_match(f, enc)]
         return ScanPlan(snap, files, residual, bounds)
 
@@ -1175,15 +1233,14 @@ class LakeTable:
         commit_id: str,
         n_buckets: int,
         key_cols: list[str],
+        props: dict[str, str],
         pre_partitioned: bool = False,
-        target_file_rows: int | None = None,
-        stats_cols: list[str] | None = None,
-        sort_cols: list[str] | None = None,
-        bloom_cols: list[str] | None = None,
         sort_exprs: list | None = None,
     ) -> list[DataFile]:
         """Write ``df`` as one directory tree partitioned by bucket; return the
-        produced files tagged with their bucket.  One output file per bucket
+        produced files tagged with their bucket.  ``props`` (the properties
+        the commit will publish) give ``target_file_rows``, ``stats_cols``,
+        ``sort_cols`` and ``bloom_cols``.  One output file per bucket
         by default (a MERGE batch touches a bounded set of buckets, so files
         stay coarse); with ``target_file_rows`` set (the table property, see
         ``create``) each bucket's output is split at that row count via
@@ -1204,6 +1261,9 @@ class LakeTable:
         O(n_buckets) — skipping it would fan out to n_partitions ×
         n_buckets files (measured 2× end-to-end regression from distributed
         listing on every read)."""
+        target_file_rows = self._target_file_rows(props)
+        stats_cols = self._prop_cols(props, "stats_cols")
+        sort_cols = self._prop_cols(props, "sort_cols")
         commit_rel = os.path.join(DATA_DIR, commit_id)
         commit_abs = os.path.join(self.root, commit_rel)
         out = df.withColumn(BUCKET_COL, bucket_of(key_cols, n_buckets))
@@ -1224,7 +1284,7 @@ class LakeTable:
         writer = out.write.mode("overwrite")
         if target_file_rows is not None:
             writer = writer.option("maxRecordsPerFile", int(target_file_rows))
-        for c in bloom_cols or ():
+        for c in self._prop_cols(props, "bloom_cols"):
             # per-column parquet-mr bloom; NDV bounded by the file row cap
             # when known, so the filter is sized instead of defaulting to
             # the max-bytes cap
@@ -1300,71 +1360,111 @@ class LakeTable:
         os.replace(tmp, path)
         return rel
 
-    def append(
-        self, df: DataFrame, commit_key: str | None = None, max_rebases: int = 8
+    def _commit(
+        self,
+        base: Snapshot,
+        commit_id: str,
+        commit_key: str | None,
+        new_files: list[DataFile],
+        replace: Iterable[int] | None = None,
+        keep_files: dict[int, list[DataFile]] | None = None,
+        schema: T.StructType | None = None,
+        n_buckets: int | None = None,
+        properties: dict[str, str] | None = None,
     ) -> bool:
-        """Append rows (no key dedup).  Returns False if commit_key already
-        applied.  Metadata cost: one new manifest per TOUCHED bucket; the
-        rest of the table re-points to its existing manifests.
+        """The ONE commit step (``append``, ``overwrite_buckets``,
+        ``maintenance.rebucket``): the only code that writes manifests,
+        advances the commit keys, assembles the next ``Snapshot`` and
+        publishes it, for ``new_files`` already written against ``base``.
+        ``replace``: buckets of ``base``'s layout whose files are dropped
+        (then re-listed as ``keep_files`` + ``new_files``); None = append.
+        ``properties`` are merged over the current ones.
 
-        Concurrency: an append's DATA FILES are valid against any base
-        version (appends are order-independent), so losing the CAS to a
-        concurrent writer triggers a METADATA-ONLY rebase — re-read the new
-        current snapshot, rebuild the touched manifests, re-publish — up to
-        ``max_rebases`` times.  No Spark re-execution, no file rewrite: the
-        expensive half of the commit runs exactly once (the Iceberg
-        fast-append retry).  A MERGE/overwrite conflict still raises —
-        its winners were computed against stale data and must be
-        re-derived."""
-        snap = self.current()
-        if commit_key is not None and snap.has_commit_key(commit_key):
-            return False
-        self.check_bucket_fn(snap)
-        schema = _merge_schemas(snap.schema, df.schema, self._widening(snap))
-        df = _conform(df, schema)
-        commit_id = f"c{snap.version + 1}-{uuid.uuid4().hex[:8]}"
-        new_files = self._write_commit_files(
-            df, commit_id, snap.n_buckets, snap.key_cols,
-            target_file_rows=self._target_file_rows(snap),
-            stats_cols=self._prop_cols(snap, "stats_cols"),
-            sort_cols=self._prop_cols(snap, "sort_cols"),
-            bloom_cols=self._prop_cols(snap, "bloom_cols"),
-        )
-        by_bucket: dict[int, list[DataFile]] = {}
+        A lost CAS re-reads current and rebases metadata-only, up to
+        ``MAX_REBASES`` times, under one rule: an append is valid against
+        any base, so it always rebases (re-merging the schema); a
+        replacement's rows were derived from ``base``'s replaced buckets,
+        so it rebases only when every interleaved commit left those
+        buckets' manifests, the schema and the bucket layout unchanged.
+        Files written under a since-changed layout never rebase.  Refusal
+        raises ``CommitConflictError`` (re-derive).  Returns False when
+        another writer applied ``commit_key`` first."""
+        bset = None if replace is None else set(replace)
+        by_bucket = {b: list(fs) for b, fs in (keep_files or {}).items() if fs}
         for f in new_files:
             by_bucket.setdefault(f.bucket, []).append(f)
-        for attempt in range(max_rebases + 1):
-            if attempt > 0:
-                snap = self.current()  # rebase on the NEW current
+        schema = base.schema if schema is None else schema
+        snap = base
+        for attempt in range(MAX_REBASES + 1):
+            if attempt:
+                snap = self.current()
                 if commit_key is not None and snap.has_commit_key(commit_key):
-                    # another writer applied this very key while we raced
-                    return False
-                schema = _merge_schemas(snap.schema, schema, self._widening(snap))
-            manifests = dict(snap.manifests)
-            for b, nf in by_bucket.items():
+                    return False  # another writer applied this very key
+                unsafe = None
+                if (bset is not None or by_bucket) and (
+                    snap.n_buckets != base.n_buckets
+                    or snap.properties.get("bucket_fn") != base.properties.get("bucket_fn")
+                ):
+                    unsafe = "bucket layout changed"
+                elif bset is None:
+                    schema = _merge_schemas(snap.schema, schema, self._widening(snap))
+                elif snap.schema_json != base.schema_json:
+                    unsafe = "schema changed"
+                elif any(snap.manifests.get(b) != base.manifests.get(b) for b in bset):
+                    unsafe = "overlapping bucket replaced"
+                if unsafe:
+                    raise CommitConflictError(
+                        f"table {self.root}: "
+                        f"{'append' if bset is None else 'bucket replacement'} planned "
+                        f"against version {base.version} cannot rebase onto "
+                        f"{snap.version} ({unsafe}); re-derive from the new current state"
+                    )
+            # an append's buckets keep their files; replaced buckets drop theirs
+            manifests = {b: p for b, p in snap.manifests.items() if b not in (bset or ())}
+            for b, fs in by_bucket.items():
                 old = snap.files_for([b]) if b in manifests else []
                 manifests[b] = self._write_manifest(
-                    b, old + nf, f"{commit_id}-r{attempt}" if attempt else commit_id
+                    b, old + fs, f"{commit_id}-r{attempt}" if attempt else commit_id
                 )
             wm, recent = snap.advanced_keys(commit_key)
             new_snap = Snapshot(
                 version=snap.version + 1,
                 schema_json=json.dumps(schema.jsonValue()),
-                n_buckets=snap.n_buckets,
+                n_buckets=snap.n_buckets if n_buckets is None else n_buckets,
                 key_cols=snap.key_cols,
                 manifests=manifests,
                 commit_watermarks=wm,
                 recent_commit_keys=recent,
-                properties=snap.properties,
+                properties={**snap.properties, **(properties or {})},
             )
             new_snap._root = self.root
             try:
                 self._publish(new_snap)
                 return True
             except CommitConflictError:
-                if attempt == max_rebases:
+                if attempt == MAX_REBASES:
                     raise
         raise AssertionError("unreachable")
+
+    def append(self, df: DataFrame, commit_key: str | None = None) -> bool:
+        """Append rows (no key dedup).  Returns False if commit_key already
+        applied.  Metadata cost: one new manifest per TOUCHED bucket; the
+        rest of the table re-points to its existing manifests.
+
+        Concurrency: an append's data files are valid against any base
+        version, so losing the CAS to a concurrent writer rebases metadata
+        only (``_commit``) — no Spark re-execution, no file rewrite."""
+        snap = self.current()
+        if commit_key is not None and snap.has_commit_key(commit_key):
+            return False
+        self.check_bucket_fn(snap)
+        schema = _merge_schemas(snap.schema, df.schema, self._widening(snap))
+        commit_id = f"c{snap.version + 1}-{uuid.uuid4().hex[:8]}"
+        new_files = self._write_commit_files(
+            _conform(df, schema), commit_id, snap.n_buckets, snap.key_cols,
+            snap.properties,
+        )
+        return self._commit(snap, commit_id, commit_key, new_files, schema=schema)
 
     def overwrite_buckets(
         self,
@@ -1373,10 +1473,8 @@ class LakeTable:
         commit_key: str | None = None,
         schema: T.StructType | None = None,
         pre_partitioned: bool = False,
-        max_rebases: int = 4,
         base_version: int | None = None,
         sort_exprs: list | None = None,
-        extra_stats_cols: list[str] | None = None,
         keep_files: dict[int, list["DataFile"]] | None = None,
         properties_update: dict[str, str] | None = None,
     ) -> bool:
@@ -1393,28 +1491,14 @@ class LakeTable:
         and be silently clobbered.  Callers that read and commit in one
         breath may omit it (the entry-time ``current()`` is then the base).
 
-        Concurrency: losing the CAS to a concurrent writer triggers a
-        METADATA-ONLY rebase — but, unlike ``append`` (whose data files are
-        valid against any base), a bucket replacement's surviving rows were
-        computed FROM the base contents of ``buckets``, so the rebase is
-        legal only when every interleaved commit is provably irrelevant to
-        that computation: it touched none of our replaced buckets, and
-        changed neither the schema nor the bucket layout.  Under those
-        checks the already-written files and manifests re-point onto the
-        new current snapshot unchanged (Iceberg's partition-scoped
-        conflict validation).  Anything else re-raises
-        ``CommitConflictError`` and the caller must re-derive.  This is
-        what lets a background compactor (``lake/maintenance.py``) run
-        against a live streaming merge: the two touch disjoint bucket
-        groups almost always, and the loser re-points instead of
-        re-running Spark.
+        Concurrency: a lost CAS rebases metadata-only when the interleaved
+        commits touched none of ``buckets`` and kept the schema and layout
+        (``_commit``), else raises ``CommitConflictError``.  So a background
+        compactor can run against a live streaming merge without re-running
+        Spark.
 
         ``sort_exprs``: clustering expressions replacing the declared
         ``sort_cols`` for this commit only (the z-order rewrite path).
-        ``extra_stats_cols``: harvest file bounds for these columns in
-        addition to the declared ``stats_cols`` — files written by LATER
-        commits won't carry them (and are simply never skipped on them;
-        skipping stays an optimization).
 
         ``keep_files``: FILE-granular replacement — for each replaced
         bucket, these existing DataFiles are carried into the new
@@ -1426,102 +1510,35 @@ class LakeTable:
         rewritten manifest.
 
         ``properties_update``: table properties merged into the published
-        snapshot (e.g. z-order promoting its columns into ``stats_cols``
-        so LATER commits keep recording their bounds).  Rides the same
-        CAS; keys not listed keep their current values."""
+        snapshot and used to write this commit's files (e.g. z-order
+        promoting its columns into ``stats_cols``).  Rides the same CAS;
+        keys not listed keep their current values."""
         snap = (
             self.snapshot(base_version) if base_version is not None else self.current()
         )
         if commit_key is not None and self.current().has_commit_key(commit_key):
             return False
         self.check_bucket_fn(snap)
-        new_schema = (
-            schema
-            if schema is not None
-            else _merge_schemas(snap.schema, df.schema, self._widening(snap))
-        )
-        df = _conform(df, new_schema)
+        if schema is None:
+            schema = _merge_schemas(snap.schema, df.schema, self._widening(snap))
         commit_id = f"c{snap.version + 1}-{uuid.uuid4().hex[:8]}"
-        stats_cols = self._prop_cols(snap, "stats_cols")
-        if extra_stats_cols:
-            stats_cols = list(dict.fromkeys((stats_cols or []) + list(extra_stats_cols)))
         new_files = self._write_commit_files(
-            df, commit_id, snap.n_buckets, snap.key_cols,
-            pre_partitioned=pre_partitioned,
-            target_file_rows=self._target_file_rows(snap),
-            stats_cols=stats_cols,
-            sort_cols=self._prop_cols(snap, "sort_cols"),
-            bloom_cols=self._prop_cols(snap, "bloom_cols"),
-            sort_exprs=sort_exprs,
+            _conform(df, schema), commit_id, snap.n_buckets, snap.key_cols,
+            {**snap.properties, **(properties_update or {})},
+            pre_partitioned=pre_partitioned, sort_exprs=sort_exprs,
         )
         bset = set(buckets)
         stray = sorted({f.bucket for f in new_files} - bset)
         if stray:
             # a row landing outside the replace-set would shadow live data
             raise ValueError(f"overwrite produced rows in unreplaced buckets {stray}")
-        by_bucket: dict[int, list[DataFile]] = {}
-        for b, kept in (keep_files or {}).items():
-            if b not in bset:
-                raise ValueError(f"keep_files bucket {b} outside replace-set")
-            if kept:
-                by_bucket[b] = list(kept)
-        for f in new_files:
-            by_bucket.setdefault(f.bucket, []).append(f)
-        new_manifests = {
-            b: self._write_manifest(b, nf, commit_id) for b, nf in by_bucket.items()
-        }
-        base = snap  # the snapshot the surviving rows were derived from
-        for attempt in range(max_rebases + 1):
-            if attempt > 0:
-                snap = self.current()
-                if commit_key is not None and snap.has_commit_key(commit_key):
-                    # another writer applied this very key while we raced
-                    return False
-                # safe-rebase validation: every interleaved commit must be
-                # irrelevant to the replaced buckets' derivation
-                unsafe = None
-                if snap.n_buckets != base.n_buckets or snap.properties.get(
-                    "bucket_fn"
-                ) != base.properties.get("bucket_fn"):
-                    unsafe = "bucket layout changed"
-                elif snap.schema_json != base.schema_json:
-                    unsafe = "schema changed"
-                elif any(
-                    snap.manifests.get(b) != base.manifests.get(b) for b in bset
-                ):
-                    unsafe = "overlapping bucket replaced"
-                if unsafe:
-                    raise CommitConflictError(
-                        f"table {self.root}: bucket replacement planned against "
-                        f"version {base.version} cannot rebase onto "
-                        f"{snap.version} ({unsafe}); re-derive from the new "
-                        "current state"
-                    )
-            manifests = {b: p for b, p in snap.manifests.items() if b not in bset}
-            manifests.update(new_manifests)
-            wm, recent = snap.advanced_keys(commit_key)
-            new_snap = Snapshot(
-                version=snap.version + 1,
-                schema_json=json.dumps(new_schema.jsonValue()),
-                n_buckets=snap.n_buckets,
-                key_cols=snap.key_cols,
-                manifests=manifests,
-                commit_watermarks=wm,
-                recent_commit_keys=recent,
-                properties=(
-                    {**snap.properties, **properties_update}
-                    if properties_update
-                    else snap.properties
-                ),
-            )
-            new_snap._root = self.root
-            try:
-                self._publish(new_snap)
-                return True
-            except CommitConflictError:
-                if attempt == max_rebases:
-                    raise
-        raise AssertionError("unreachable")
+        outside = sorted(set(keep_files or ()) - bset)
+        if outside:
+            raise ValueError(f"keep_files bucket {outside[0]} outside replace-set")
+        return self._commit(
+            snap, commit_id, commit_key, new_files, replace=bset,
+            keep_files=keep_files, schema=schema, properties=properties_update,
+        )
 
 
 def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:

@@ -148,7 +148,7 @@ class MetricsRecorder(StreamingQueryListener):
         df = self.spark.createDataFrame([row], METRICS_SCHEMA)
         # the lock serializes this process's recorders; cross-process CAS
         # losses are absorbed inside append() itself as metadata-only
-        # rebases (lake/table.py max_rebases) — no outer retry, which
+        # rebases (lake/table.py MAX_REBASES) — no outer retry, which
         # would re-run the whole Spark write per attempt
         with self._lock:
             try:
