@@ -94,7 +94,9 @@ def test_new_catalog_table_provisions_mid_stream(spark, tmp_path):
     """Three micro-batches; the provider returns only ``seq`` on the first
     poll and {seq, tok_meta} afterwards.  tok_meta must be created
     mid-stream (its first commit is epoch 1, not 0) and both tables end
-    equal to their full-log LWW oracles."""
+    equal to their full-log LWW oracles.  With ``maintenance_every=3`` the
+    last batch is a maintenance epoch for both sinks: each compacts bucket
+    group 0 and its lineage table whole."""
     log_seq = _flat_log(spark, 600, 3, SEQ_SCHEMA, _seq_row)
     log_meta = _flat_log(spark, 300, 5, META_SCHEMA, _meta_row)
 
@@ -124,6 +126,7 @@ def test_new_catalog_table_provisions_mid_stream(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         lineage_dir=str(tmp_path / "lineage"),
         max_files_per_trigger=1,
+        maintenance_every=3,
     )
     q.awaitTermination()
     assert calls["n"] == 3  # one poll per micro-batch
@@ -139,6 +142,18 @@ def test_new_catalog_table_provisions_mid_stream(spark, tmp_path):
     # rows are the proof no epoch-0 apply ran)
     lin = LakeTable.load(spark, str(tmp_path / "lineage" / "tok_meta")).read()
     assert {r["checkpoint_epoch"] for r in lin.collect()} == {1, 2}
+
+    # batch 2 is the maintenance epoch: rolling group 0 (buckets b % 4 == 0,
+    # which hold files at these key counts) on each sink, and a whole-table
+    # compaction of each lineage table
+    for name in ("seq", "tok_meta"):
+        t = LakeTable.load(spark, str(tmp_path / "tables" / name))
+        assert any(f.bucket % 4 == 0 for f in t.current().files), name
+        assert t.has_commit("roll=2-g0"), name
+        lin_t = LakeTable.load(spark, str(tmp_path / "lineage" / name))
+        assert lin_t.has_commit("roll=2-g0"), name
+        buckets = [f.bucket for f in lin_t.current().files]
+        assert buckets and len(buckets) == len(set(buckets)), (name, buckets)
 
 
 def test_catalog_column_growth_evolves_sink_mid_stream(spark, tmp_path):

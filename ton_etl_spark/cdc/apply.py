@@ -87,16 +87,6 @@ def live_state(df: DataFrame) -> DataFrame:
     return df.where(F.col(OP_COL) != "d")
 
 
-def is_cdc_frame(df: DataFrame) -> bool:
-    """Heuristic for "this table holds CDC state": BOTH envelope columns
-    (op AND lsn) present.  Requiring the pair, not just an ``op`` column,
-    keeps a non-CDC table that merely has a column named ``op`` (opcode
-    data, say) from being silently tombstone-filtered by surfaces that
-    default to the live-state view."""
-    cols = set(df.columns)
-    return OP_COL in cols and LSN_COL in cols
-
-
 def make_sequences_table(
     spark: SparkSession, root: str, n_buckets: int = 16,
     target_file_rows: int | None = None,

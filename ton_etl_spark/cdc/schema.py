@@ -50,6 +50,16 @@ CDC_EVENT_SCHEMA_EVOLVED = T.StructType(
 SEQUENCES_SCHEMA = CDC_EVENT_SCHEMA_EVOLVED
 
 
+def is_cdc_schema(schema: T.StructType) -> bool:
+    """The ONE "this table holds CDC state" rule: BOTH envelope columns
+    (op AND lsn) present.  Requiring the pair, not just an ``op`` column,
+    keeps a non-CDC table that merely has a column named ``op`` (opcode
+    data, say) from being silently tombstone-filtered by surfaces that
+    default to the live-state view."""
+    names = set(schema.fieldNames())
+    return OP_COL in names and LSN_COL in names
+
+
 def op_priority_expr(op: Column | None = None) -> Column:
     op = F.col(OP_COL) if op is None else op
     expr = F.lit(0)

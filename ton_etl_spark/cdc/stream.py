@@ -2,18 +2,34 @@
 
 The production analog of the reference's Kafka consumer loop
 (``parser/main.py:85-143``): an unbounded source of CDC envelopes, applied
-in micro-batches.  Two sources:
+in micro-batches.  Every starter is a thin caller of two private helpers:
 
-- ``start_cdc_stream``: file stream over already-decoded delivery parquet.
-- ``start_cdc_envelope_stream``: file stream of Kafka-shaped frames
-  (key/value binary + topic/partition/offset/timestamp — the exact column
-  set of ``readStream.format("kafka")``) decoded by
-  ``cdc.envelope.parse_cdc_envelope`` (Debezium JSON + ``__``-meta strip);
+- ``_run``, the one consumer loop: a file source (``_source``) drained by
+  ``foreachBatch`` under a checkpoint, each micro-batch persisted around
+  the starter's callback.
+- ``_sink_epoch``, the one per-sink epoch step: the exactly-once MERGE
+  (``apply_cdc_batch``), then the mart refresh, then rolling maintenance,
+  then the symlink export — each optional, chosen by the starter.
+
+The starters differ only in source and policy:
+
+- ``start_cdc_stream``: decoded delivery parquet into one sink, with the
+  whole policy (lineage, maintenance, mart, export).
+- ``start_cdc_envelope_stream``: Kafka-shaped frames (the exact column set
+  of ``readStream.format("kafka")``) decoded on the stream by
+  ``cdc.envelope.parse_cdc_envelope`` into one sink, lineage only;
   swapping in a real broker is replacing the file source with
-  ``cdc.envelope.kafka_source`` — every transformation downstream is
-  identical.
+  ``cdc.envelope.kafka_source``.
+- ``start_cdc_multi_table_stream`` / ``start_cdc_catalog_stream``: one
+  frame stream routed by ``__table`` to N sinks, each route's slice
+  decoded with its own schema, with lineage and maintenance.  The
+  multi-table stream applies every route on every trigger; the catalog
+  stream only routes present in the batch.
 
-The sink is the LakeTable MERGE inside ``foreachBatch``.
+Sink, lineage and mart handles are opened once per stream: a ``LakeTable``
+handle holds only ``spark`` and ``root`` and re-reads the snapshot pointer
+on every call.  Only the catalog stream converges its sinks per trigger,
+because its table set is dynamic.
 
 Exactly-once contract (reference analogs X1/X2/X6 in SURVEY.md §2.9):
 Spark's checkpoint gives at-least-once ``foreachBatch`` invocations with a
@@ -25,13 +41,58 @@ ordering exactly mirrors the reference's "DB commit, then Kafka commit".
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ton_etl_spark.cdc.apply import apply_cdc_batch, make_lineage_table, make_sequences_table
-from ton_etl_spark.cdc.schema import CDC_EVENT_SCHEMA_EVOLVED
+from ton_etl_spark.cdc.envelope import KAFKA_FRAME_SCHEMA, ROUTE_COL, parse_cdc_envelope
+from ton_etl_spark.cdc.schema import CDC_EVENT_SCHEMA_EVOLVED, KEY_COLS
 from ton_etl_spark.lake.table import LakeTable
+
+
+def _source(
+    spark: SparkSession, schema: T.StructType, glob: str, max_files_per_trigger: int
+) -> DataFrame:
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(glob)
+    )
+
+
+def _routed_frames(spark: SparkSession, frames_glob: str, max_files_per_trigger: int) -> DataFrame:
+    """Frames with ONLY the routing field extracted: one narrow JVM
+    expression per message; the full decode runs per slice."""
+    frames = _source(spark, KAFKA_FRAME_SCHEMA, frames_glob, max_files_per_trigger)
+    return frames.withColumn(
+        ROUTE_COL, F.get_json_object(F.col("value").cast("string"), "$.__table")
+    )
+
+
+def _run(src: DataFrame, checkpoint_dir: str, on_batch: Callable[[DataFrame, int], None]):
+    """Start (or restart from checkpoint) ``src`` drained by ``on_batch``.
+    The micro-batch is persisted around ``on_batch``, which consumes it
+    more than once (bucket probe, lineage, merge): the source is read and
+    any streaming decode runs once per trigger, not once per action, and
+    the progress counters (``numInputRows``, observed ``delivery`` events)
+    are exact instead of one count per execution pass."""
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            on_batch(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return (
+        src.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _run_rolling_maintenance(
@@ -71,6 +132,77 @@ def _run_rolling_maintenance(
         # append-only, one file per bucket per epoch — compact it whole;
         # it is small by construction
         rolling_maintenance(lineage, batch_id, every=every, groups=1)
+
+
+def _sink_epoch(
+    table: LakeTable,
+    events: DataFrame,
+    batch_id: int,
+    lineage: LakeTable | None = None,
+    maintenance_every: int | None = None,
+    maintenance_groups: int = 4,
+    tombstone_retain_lsn: int | None = None,
+    mart: LakeTable | None = None,
+    export_dir: str | None = None,
+) -> None:
+    """One sink's epoch: merge, then mart refresh, then rolling
+    maintenance, then export — each step sees the commits of the ones
+    before it."""
+    apply_cdc_batch(table, events, epoch=batch_id, lineage=lineage)
+    if mart is not None:
+        from ton_etl_spark.lake.incremental import (
+            last_synced_version,
+            rebuild_agg_mart,
+            refresh_agg_mart,
+        )
+
+        frm = last_synced_version(mart)
+        if frm is None:
+            # no cursor: the mart may hold pre-existing content (manual
+            # bootstrap, or the cursor key aged out of the recent-keys
+            # window) — a delta from version 0 would double-count it, so
+            # bootstrap with the full recompute, which is correct from
+            # ANY prior state
+            rebuild_agg_mart(mart, table, to_version=table.current_version())
+        else:
+            refresh_agg_mart(
+                mart, table, from_version=frm, to_version=table.current_version()
+            )
+    _run_rolling_maintenance(
+        table, lineage, events, batch_id,
+        maintenance_every, maintenance_groups, tombstone_retain_lsn,
+    )
+    if export_dir is not None:
+        from ton_etl_spark.lake.ddl import write_symlink_manifest
+
+        # re-read the pointer: maintenance may have committed after the
+        # merge; the export must name the latest published snapshot
+        write_symlink_manifest(table, export_dir, version=table.current_version())
+
+
+def _route_epoch(
+    batch_df: DataFrame,
+    name: str,
+    payload_schema: T.StructType | None,
+    table: LakeTable,
+    batch_id: int,
+    lineage: LakeTable | None,
+    *policy,
+) -> None:
+    """Decode route ``name``'s slice of a routed frame batch and run
+    ``_sink_epoch`` on it (``policy``: its maintenance arguments).  The
+    DECODED slice is persisted too: the sink step consumes it several
+    times (bucket probe, lineage, merge, maintenance max-lsn) and each
+    action would otherwise re-run the heavy ``from_json`` over the raw
+    frames — this is what makes "full-decoded exactly once" true, not
+    just intended."""
+    sl = parse_cdc_envelope(
+        batch_df.where(F.col(ROUTE_COL) == name), payload_schema=payload_schema
+    ).persist()
+    try:
+        _sink_epoch(table, sl, batch_id, lineage, *policy)
+    finally:
+        sl.unpersist()
 
 
 def start_cdc_stream(
@@ -124,12 +256,13 @@ def start_cdc_stream(
     per-commit, since the refresh is one small metadata file."""
     table = make_sequences_table(spark, table_root, n_buckets=n_buckets)
     lineage = make_lineage_table(spark, lineage_root) if lineage_root else None
+    mart = None
+    if mart_root is not None:
+        from ton_etl_spark.lake.incremental import make_agg_mart
 
-    src = (
-        spark.readStream.schema(CDC_EVENT_SCHEMA_EVOLVED)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(log_glob)
-    )
+        mart = make_agg_mart(spark, mart_root, group_cols=list(mart_group_cols))
+
+    src = _source(spark, CDC_EVENT_SCHEMA_EVOLVED, log_glob, max_files_per_trigger)
     # free per-micro-batch delivery counters in the streaming progress
     # (SURVEY A9; the reference's "N messages/sec" consumer log line) —
     # observed metrics ride the existing scan, no extra pass
@@ -139,67 +272,15 @@ def start_cdc_stream(
         F.min("lsn").alias("min_lsn"),
         F.max("lsn").alias("max_lsn"),
     )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: apply_cdc_batch consumes the batch more than once (bucket
-        # probe, lineage, merge) — caching it (a) reads the source files once
-        # per trigger instead of per action and (b) makes the trigger's
-        # progress counters (numInputRows, observed delivery events) exact
-        # instead of accumulating one count per execution pass
-        batch_df.persist()
-        try:
-            # reload table handle each batch: snapshot pointer may have advanced
-            t = LakeTable.load(spark, table_root)
-            apply_cdc_batch(t, batch_df, epoch=batch_id, lineage=lineage)
-            _post_merge(t, batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _post_merge(t: LakeTable, batch_df: DataFrame, batch_id: int) -> None:
-        if mart_root is not None:
-            from ton_etl_spark.lake.incremental import (
-                last_synced_version,
-                make_agg_mart,
-                rebuild_agg_mart,
-                refresh_agg_mart,
-            )
-
-            mart = make_agg_mart(spark, mart_root, group_cols=list(mart_group_cols))
-            frm = last_synced_version(mart)
-            if frm is None:
-                # no cursor: the mart may hold pre-existing content (manual
-                # bootstrap, or the cursor key aged out of the recent-keys
-                # window) — a delta from version 0 would double-count it, so
-                # bootstrap with the full recompute, which is correct from
-                # ANY prior state
-                rebuild_agg_mart(mart, t, to_version=t.current_version())
-            else:
-                refresh_agg_mart(
-                    mart, t, from_version=frm, to_version=t.current_version()
-                )
-        _run_rolling_maintenance(
-            t,
-            lineage,
-            batch_df,
-            batch_id,
-            maintenance_every,
-            maintenance_groups,
-            tombstone_retain_lsn,
-        )
-        if export_dir is not None:
-            from ton_etl_spark.lake.ddl import write_symlink_manifest
-
-            # re-read the pointer: maintenance may have committed after the
-            # merge; the export must name the latest published snapshot
-            write_symlink_manifest(t, export_dir, version=t.current_version())
-
-    query = (
-        src.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _run(
+        src,
+        checkpoint_dir,
+        lambda batch_df, batch_id: _sink_epoch(
+            table, batch_df, batch_id, lineage,
+            maintenance_every, maintenance_groups, tombstone_retain_lsn,
+            mart=mart, export_dir=export_dir,
+        ),
     )
-    return query
 
 
 def start_cdc_envelope_stream(
@@ -217,33 +298,13 @@ def start_cdc_envelope_stream(
     ``start_cdc_stream``.  ``from_json`` is a streamable projection, so the
     decode lives on the streaming DataFrame itself (JVM-side, codegen), not
     in foreachBatch."""
-    from ton_etl_spark.cdc.envelope import KAFKA_FRAME_SCHEMA, parse_cdc_envelope
-
-    make_sequences_table(spark, table_root, n_buckets=n_buckets)
+    table = make_sequences_table(spark, table_root, n_buckets=n_buckets)
     lineage = make_lineage_table(spark, lineage_root) if lineage_root else None
-
-    frames = (
-        spark.readStream.schema(KAFKA_FRAME_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(frames_glob)
-    )
-    events = parse_cdc_envelope(frames, table=table_filter)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # persist for the same reasons as start_cdc_stream — and here each
-        # re-execution would also re-run the from_json envelope decode
-        batch_df.persist()
-        try:
-            t = LakeTable.load(spark, table_root)
-            apply_cdc_batch(t, batch_df, epoch=batch_id, lineage=lineage)
-        finally:
-            batch_df.unpersist()
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    frames = _source(spark, KAFKA_FRAME_SCHEMA, frames_glob, max_files_per_trigger)
+    return _run(
+        parse_cdc_envelope(frames, table=table_filter),
+        checkpoint_dir,
+        lambda batch_df, batch_id: _sink_epoch(table, batch_df, batch_id, lineage),
     )
 
 
@@ -273,9 +334,8 @@ def start_cdc_multi_table_stream(
     shape from the same topic.
 
     Decode is two-phase, sized to what each phase needs: the STREAM
-    extracts only the routing field (``get_json_object`` of ``__table`` —
-    one narrow JVM expression over every message), and each table's full
-    Debezium decode (``from_json`` with THAT table's schema) runs inside
+    extracts only the routing field, and each table's full Debezium
+    decode (``from_json`` with THAT table's schema) runs inside
     ``foreachBatch`` on that table's slice only — so every message is
     full-decoded exactly once, with its own schema, and messages for
     tables this job does not own (or with unparseable routing) are
@@ -294,31 +354,23 @@ def start_cdc_multi_table_stream(
     manifest no-op, B's applies — so each table independently converges to
     exactly-once without cross-table coordination (the same property the
     reference gets from per-sink consumer groups)."""
-    from ton_etl_spark.cdc.envelope import (
-        KAFKA_FRAME_SCHEMA,
-        ROUTE_COL,
-        parse_cdc_envelope,
-    )
-    from ton_etl_spark.cdc.schema import KEY_COLS
-
-    from ton_etl_spark.cdc.schema import CDC_EVENT_SCHEMA_EVOLVED
-
     schemas = payload_schemas or {}
+    sinks = {}
     for name, root in table_roots.items():
         if name in schemas:
-            LakeTable.get_or_create(
+            t = LakeTable.get_or_create(
                 spark, root, schema=schemas[name], key_cols=KEY_COLS,
                 n_buckets=n_buckets,
             )
         else:
-            make_sequences_table(spark, root, n_buckets=n_buckets)
+            t = make_sequences_table(spark, root, n_buckets=n_buckets)
         # config-drift guard: restarting WITHOUT the schema a sink was built
         # with would decode its frames against the default sequences schema,
         # silently nulling the custom payload columns and letting those rows
         # win LWW over good stored data.  The sink's own persisted schema is
         # the source of truth — every stored payload column must survive the
         # decode we are about to run.
-        stored = set(LakeTable.load(spark, root).current().schema.fieldNames())
+        stored = set(t.current().schema.fieldNames())
         decode = set((schemas.get(name) or CDC_EVENT_SCHEMA_EVOLVED).fieldNames())
         missing = sorted(stored - decode)
         if missing:
@@ -327,56 +379,21 @@ def start_cdc_multi_table_stream(
                 f"configured payload schema would not decode — pass the "
                 f"table's schema in payload_schemas (config drift guard)"
             )
+        sinks[name] = t
     lineages = {
         name: make_lineage_table(spark, root)
         for name, root in (lineage_roots or {}).items()
     }
 
-    frames = (
-        spark.readStream.schema(KAFKA_FRAME_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(frames_glob)
-    )
-    routed = frames.withColumn(
-        ROUTE_COL, F.get_json_object(F.col("value").cast("string"), "$.__table")
-    ).where(F.col(ROUTE_COL).isin(list(table_roots)))
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for name, root in table_roots.items():
-                t = LakeTable.load(spark, root)
-                # persist the DECODED slice too: the merge path consumes it
-                # several times (bucket probe, lineage, merge, maintenance
-                # max-lsn) and each action would otherwise re-run the heavy
-                # from_json over the raw frames — this is what makes
-                # "full-decoded exactly once" true, not just intended
-                sl = parse_cdc_envelope(
-                    batch_df.where(F.col(ROUTE_COL) == name),
-                    payload_schema=schemas.get(name),
-                ).persist()
-                try:
-                    apply_cdc_batch(t, sl, epoch=batch_id, lineage=lineages.get(name))
-                    _run_rolling_maintenance(
-                        t,
-                        lineages.get(name),
-                        sl,
-                        batch_id,
-                        maintenance_every,
-                        maintenance_groups,
-                        tombstone_retain_lsn,
-                    )
-                finally:
-                    sl.unpersist()
-        finally:
-            batch_df.unpersist()
+        for name, t in sinks.items():
+            _route_epoch(
+                batch_df, name, schemas.get(name), t, batch_id, lineages.get(name),
+                maintenance_every, maintenance_groups, tombstone_retain_lsn,
+            )
 
-    return (
-        routed.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    routed = _routed_frames(spark, frames_glob, max_files_per_trigger)
+    return _run(routed.where(F.col(ROUTE_COL).isin(list(table_roots))), checkpoint_dir, _apply)
 
 
 def start_cdc_catalog_stream(
@@ -426,77 +443,41 @@ def start_cdc_catalog_stream(
     as in ``start_cdc_multi_table_stream`` — a catalog that GROWS between a
     crash and the restart simply sees the replayed micro-batch apply to the
     new table and no-op on the old ones."""
-    from ton_etl_spark.cdc.envelope import (
-        KAFKA_FRAME_SCHEMA,
-        ROUTE_COL,
-        parse_cdc_envelope,
-    )
-    from ton_etl_spark.cdc.schema import KEY_COLS
     from ton_etl_spark.lake.catalog import sync_table_from_catalog
 
     key_cols = list(key_cols or KEY_COLS)
-
-    frames = (
-        spark.readStream.schema(KAFKA_FRAME_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(frames_glob)
-    )
-    # stream side extracts ONLY the routing field; no table filter here —
-    # the table set is dynamic, so membership is decided per micro-batch
-    routed = frames.withColumn(
-        ROUTE_COL, F.get_json_object(F.col("value").cast("string"), "$.__table")
-    ).where(F.col(ROUTE_COL).isNotNull())
+    lineages: dict[str, LakeTable] = {}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         catalog = catalog_provider()
-        batch_df.persist()
-        try:
-            # which tables actually have rows this trigger: one tiny
-            # distinct over the already-extracted route column.  Sink
-            # provisioning/evolution below still converges on the WHOLE
-            # catalog (O(columns) driver-side metadata), but the heavy
-            # decode→merge path runs only for present tables — a catalog
-            # of hundreds of tables must not cost hundreds of no-op Spark
-            # job groups per trigger.
-            present = {
-                r[ROUTE_COL]
-                for r in batch_df.select(ROUTE_COL).distinct().collect()
-            }
-            for name in sorted(catalog):
-                root = os.path.join(tables_dir, name)
-                t, _report = sync_table_from_catalog(
-                    spark, root, catalog[name], key_cols=key_cols,
-                    envelope=True, n_buckets=n_buckets,
-                    **(table_kwargs or {}),
-                )
-                if name not in present:
-                    continue
-                lin = (
-                    make_lineage_table(spark, os.path.join(lineage_dir, name))
-                    if lineage_dir
-                    else None
-                )
-                sl = parse_cdc_envelope(
-                    batch_df.where(F.col(ROUTE_COL) == name),
-                    payload_schema=t.current().schema,
-                ).persist()
-                try:
-                    apply_cdc_batch(t, sl, epoch=batch_id, lineage=lin)
-                    _run_rolling_maintenance(
-                        t, lin, sl, batch_id,
-                        maintenance_every, maintenance_groups, tombstone_retain_lsn,
-                    )
-                finally:
-                    sl.unpersist()
-        finally:
-            batch_df.unpersist()
+        # which tables actually have rows this trigger: one tiny distinct
+        # over the already-extracted route column.  Sink provisioning and
+        # evolution below still converge on the WHOLE catalog (O(columns)
+        # driver-side metadata), but the heavy decode→merge path runs only
+        # for present tables — a catalog of hundreds of tables must not
+        # cost hundreds of no-op Spark job groups per trigger.
+        present = {
+            r[ROUTE_COL] for r in batch_df.select(ROUTE_COL).distinct().collect()
+        }
+        for name in sorted(catalog):
+            t, _report = sync_table_from_catalog(
+                spark, os.path.join(tables_dir, name), catalog[name],
+                key_cols=key_cols, envelope=True, n_buckets=n_buckets,
+                **(table_kwargs or {}),
+            )
+            if name not in present:
+                continue
+            if lineage_dir and name not in lineages:
+                lineages[name] = make_lineage_table(spark, os.path.join(lineage_dir, name))
+            _route_epoch(
+                batch_df, name, t.current().schema, t, batch_id, lineages.get(name),
+                maintenance_every, maintenance_groups, tombstone_retain_lsn,
+            )
 
-    return (
-        routed.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    # no table filter on the stream: the table set is dynamic, so
+    # membership is decided per micro-batch
+    routed = _routed_frames(spark, frames_glob, max_files_per_trigger)
+    return _run(routed.where(F.col(ROUTE_COL).isNotNull()), checkpoint_dir, _apply)
 
 
 def run_stream_to_completion(

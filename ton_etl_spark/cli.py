@@ -244,9 +244,10 @@ def _cmd_lookup(args) -> int:
     the LIVE STATE — a deleted key returns nothing, matching what the
     reference's SELECTs answer; ``--raw`` switches to storage view
     (tombstones included).  The rule and the detection are shared with
-    ``read_state`` (``cdc/apply.live_state`` / ``is_cdc_frame``) so the
-    CLI cannot drift from the library semantics."""
-    from ton_etl_spark.cdc.apply import is_cdc_frame, live_state
+    ``read_state`` (``cdc/apply.live_state`` / ``cdc/schema.is_cdc_schema``)
+    so the CLI cannot drift from the library semantics."""
+    from ton_etl_spark.cdc.apply import live_state
+    from ton_etl_spark.cdc.schema import is_cdc_schema
     from ton_etl_spark.lake.table import LakeTable
 
     spark = _spark(args)
@@ -257,7 +258,7 @@ def _cmd_lookup(args) -> int:
     ):
         raise SystemExit('--in must be a JSON object of {"col": [values...]}')
     df = t.read(where_in=probes)
-    if not args.raw and is_cdc_frame(df):
+    if not args.raw and is_cdc_schema(df.schema):
         df = live_state(df)
     if args.columns:
         df = df.select(*[c.strip() for c in args.columns.split(",") if c.strip()])

@@ -52,15 +52,10 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ton_etl_spark.cdc.schema import LSN_COL, OP_COL
+from ton_etl_spark.cdc.schema import OP_COL, is_cdc_schema
 from ton_etl_spark.lake.table import LakeTable
 
 __all__ = ["colocated_join"]
-
-
-def _is_cdc_schema(schema: T.StructType) -> bool:
-    names = set(schema.fieldNames())
-    return OP_COL in names and LSN_COL in names
 
 
 def colocated_join(
@@ -92,7 +87,7 @@ def colocated_join(
     different layout need ``rebucket`` first, or a plain Spark join.
 
     ``cdc`` controls CDC sides (both ``op`` and ``lsn`` present — the
-    shared ``is_cdc_frame`` rule): ``"live"`` (default) joins the LIVE
+    shared ``is_cdc_schema`` rule): ``"live"`` (default) joins the LIVE
     STATE — tombstone rows (``op='d'``) are filtered inside the kernel,
     the same default view ``read_state`` and the ``lookup`` CLI answer.
     The LWW MERGE already stores at most one row per key (the write path
@@ -145,8 +140,8 @@ def colocated_join(
                 f"vs {rtypes[k].simpleString()}): same values hash to "
                 "different buckets under different types"
             )
-    l_live = cdc == "live" and _is_cdc_schema(lsnap.schema)
-    r_live = cdc == "live" and _is_cdc_schema(rsnap.schema)
+    l_live = cdc == "live" and is_cdc_schema(lsnap.schema)
+    r_live = cdc == "live" and is_cdc_schema(rsnap.schema)
 
     lcols = (
         list(left_columns)

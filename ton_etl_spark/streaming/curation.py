@@ -288,8 +288,8 @@ def start_curation_stream(
     index and the table rows themselves) — only decision audit rows age
     out, so replay equality is untouched.  Tags pin snapshots that must
     survive expiry."""
-    make_curated_table(spark, table_root, n_buckets=n_buckets)
-    make_decision_table(spark, decision_root)
+    t = make_curated_table(spark, table_root, n_buckets=n_buckets)
+    d = make_decision_table(spark, decision_root)
 
     src = (
         spark.readStream.schema("doc_id long, text string, source string")
@@ -298,9 +298,6 @@ def start_curation_stream(
     )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # reload handles: snapshot pointers advance across epochs
-        t = LakeTable.load(spark, table_root)
-        d = LakeTable.load(spark, decision_root)
         curate_batch(spark, t, d, index_path, batch_df, batch_id, **gates)
         if retain_epochs is not None and (batch_id + 1) % retention_every == 0:
             from ton_etl_spark.lake.maintenance import (

@@ -45,13 +45,11 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("trigger_ms", T.LongType(), True),  # durationMs.triggerExecution
         T.StructField("add_batch_ms", T.LongType(), True),  # durationMs.addBatch
         # the observe("delivery", ...) counters from cdc/stream.py (NULL when
-        # the watched observation is absent from this query).  CAVEAT:
-        # `events` counts rows THROUGH the observation point accumulated
-        # across every execution of the batch plan — a foreachBatch that
-        # consumes the batch twice (bucket probe + merge) reports ~2× the
-        # delivered rows.  min/max aggregates are pass-invariant and exact;
-        # for exact delivered counts use num_input_rows (derived from source
-        # offsets, not execution) or the lineage table's event_count.
+        # the watched observation is absent from this query).  `events`
+        # counts rows THROUGH the observation point, summed over every
+        # execution of the batch plan; it is exact because the stream's one
+        # runner (cdc/stream.py `_run`) persists each micro-batch, so the
+        # plan executes once however often the sink step consumes it.
         T.StructField("events", T.LongType(), True),
         T.StructField("min_lsn", T.LongType(), True),
         T.StructField("max_lsn", T.LongType(), True),
