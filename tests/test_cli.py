@@ -11,6 +11,32 @@ from ton_etl_spark.cdc.generator import generate_cdc_log, write_cdc_log
 from ton_etl_spark.cli import main
 
 
+def test_cli_session_leaves_environment_unchanged(spark, monkeypatch):
+    """A one-shot command turns the session pre-warm off through
+    ``get_spark(prewarm=False)``, not by writing ``os.environ``; a set
+    ``SPARK_GRAFT_PY_PREWARM`` is left to ``get_spark``'s rule."""
+    import argparse
+
+    from ton_etl_spark import cli
+
+    monkeypatch.delenv("SPARK_GRAFT_PY_PREWARM", raising=False)
+    seen = {}
+
+    def fake_get_spark(**kw):
+        seen.update(kw)
+        return spark
+
+    monkeypatch.setattr("ton_etl_spark.session.get_spark", fake_get_spark)
+    before = dict(os.environ)
+    assert cli._spark(argparse.Namespace(master="local[2]", cmd="describe")) is spark
+    assert dict(os.environ) == before
+    assert seen["prewarm"] is False
+    # a set variable keeps get_spark's own rule
+    monkeypatch.setenv("SPARK_GRAFT_PY_PREWARM", "true")
+    cli._spark(argparse.Namespace(master="local[2]", cmd="describe"))
+    assert seen["prewarm"] is None
+
+
 def test_cli_replay_then_oracle_check_and_maintain(spark, tmp_path, capsys):
     log_root = str(tmp_path / "log")
     write_cdc_log(generate_cdc_log(spark, 2000, seed=71), log_root, n_batches=3, dup_pct=10, seed=71)

@@ -374,3 +374,33 @@ def test_colocated_join_randomized_differential(spark, tmp_path):
         assert _rows(got.select(*want.columns)) == _rows(want), (
             trial, how, nb, ktype, lw
         )
+
+
+def test_colocated_join_ntz_range_in_non_utc_session_zone(spark, tmp_path):
+    """A ``timestamp_ntz`` range in a Tokyo session: the Arrow kernel must
+    keep exactly the rows Spark's residual keeps, which compares NTZ
+    values at the session zone's wall clock (03:30 UTC is 12:30 in Tokyo),
+    not at the bound's UTC wall clock."""
+    import datetime as dt
+
+    base = dt.datetime(2026, 1, 1, 12)  # NTZ wall clocks 12:00-13:59
+    lt = spark.createDataFrame([(i, base + dt.timedelta(minutes=i)) for i in range(120)],
+                               "k long, ts timestamp_ntz")
+    rt = spark.createDataFrame([(i, i * 10) for i in range(120)], "k long, v long")
+    l = LakeTable.create(spark, str(tmp_path / "l"), schema=lt.schema, key_cols=["k"],
+                         n_buckets=4, stats_cols=["ts"])
+    r = LakeTable.create(spark, str(tmp_path / "r"), schema=rt.schema, key_cols=["k"],
+                         n_buckets=4)
+    l.append(lt, commit_key="seed")
+    r.append(rt, commit_key="seed")
+    bound = dt.datetime(2026, 1, 1, 3, 30, tzinfo=dt.timezone.utc)
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+        for where in ({"ts": (bound, None)}, {"ts": (None, bound)}):
+            want = l.read(where=where).join(r.read(), "k").select("k", "ts", "v")
+            got = colocated_join(l, r, left_where=where)
+            assert _rows(got) == _rows(want), where
+        assert len(_rows(colocated_join(l, r, left_where={"ts": (bound, None)}))) == 90
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)

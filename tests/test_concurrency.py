@@ -298,10 +298,10 @@ def test_disjoint_bucket_replacement_rebases_metadata_only(spark, tmp_path):
         t2,
         lambda: t1.overwrite_buckets(
             t1.read(buckets=[b_a]).withColumn("v", F.col("v") + 100),
-            [b_a], commit_key="win-a",
+            [b_a], commit_key="win-a", feed=False,
         ),
     )
-    assert t2.overwrite_buckets(df_b, [b_b], commit_key="lose-b")
+    assert t2.overwrite_buckets(df_b, [b_b], commit_key="lose-b", feed=False)
     assert writes["n"] == 1  # data written exactly once: metadata-only rebase
     assert t1.current_version() == 3  # seed + winner + rebased loser
     snap = t1.current()
@@ -330,11 +330,11 @@ def test_overlapping_bucket_replacement_must_rederive(spark, tmp_path):
         t2,
         lambda: t1.overwrite_buckets(
             t1.read(buckets=[1]).withColumn("v", F.col("v") + 100),
-            [1], commit_key="win-a",
+            [1], commit_key="win-a", feed=False,
         ),
     )
     with pytest.raises(CommitConflictError, match="overlapping bucket"):
-        t2.overwrite_buckets(df_b, [0, 1], commit_key="lose-b")
+        t2.overwrite_buckets(df_b, [0, 1], commit_key="lose-b", feed=False)
     # the winner's state is intact and the loser left no snapshot behind
     snap = t1.current()
     assert snap.has_commit_key("win-a") and not snap.has_commit_key("lose-b")
@@ -362,7 +362,7 @@ def test_schema_divergent_replacement_must_rederive(spark, tmp_path):
         ),
     )
     with pytest.raises(CommitConflictError, match="schema changed"):
-        t2.overwrite_buckets(df_b, [0], commit_key="lose-b")
+        t2.overwrite_buckets(df_b, [0], commit_key="lose-b", feed=False)
 
 
 def test_replacement_race_on_same_commit_key_is_idempotent(spark, tmp_path):
@@ -382,10 +382,10 @@ def test_replacement_race_on_same_commit_key_is_idempotent(spark, tmp_path):
         t2,
         lambda: t1.overwrite_buckets(
             t1.read(buckets=[0]).withColumn("v", F.col("v") + 1000),
-            [0], commit_key="epoch=7",
+            [0], commit_key="epoch=7", feed=False,
         ),
     )
-    assert t2.overwrite_buckets(df, [0], commit_key="epoch=7") is False
+    assert t2.overwrite_buckets(df, [0], commit_key="epoch=7", feed=False) is False
     assert t1.current_version() == 2
 
 
@@ -440,7 +440,7 @@ def test_racing_disjoint_replacements_all_commit(spark, tmp_path):
         try:
             df = t.read(buckets=[b]).withColumn("v", F.col("v") + 1000 * (b + 1))
             assert t.overwrite_buckets(df, [b], commit_key=f"rw-{b}",
-                                       base_version=base)
+                                       base_version=base, feed=False)
         except Exception as e:  # pragma: no cover - surfaced below
             errors.append(e)
 

@@ -46,7 +46,7 @@ def test_duckdb_view_reads_snapshot_not_directory(spark, tmp_path):
     t.append(spark.createDataFrame([(f"k{i}", i) for i in range(10)], schema))
     # orphan the first commit's files in bucket 0+1 via a full overwrite
     t.overwrite_buckets(
-        t.read().withColumn("v", F.col("v") + 100), [0, 1], commit_key="rw"
+        t.read().withColumn("v", F.col("v") + 100), [0, 1], commit_key="rw", feed=False,
     )
     on_disk = glob.glob(os.path.join(t.root, DATA_DIR, "**", "*.parquet"),
                         recursive=True)

@@ -121,6 +121,22 @@ def test_exact_dedup(spark, docs):
     assert groups[2] == 1 and groups[3] == 1 and groups[5] == 1
 
 
+def test_exact_dedup_size_gate_reads_env_at_call_time(spark, docs, monkeypatch):
+    """``SPARK_GRAFT_WIDEN_MIN_BYTES`` gates the scan widening per call: a
+    change between calls takes effect without re-importing the module."""
+    from ton_etl_spark.operators import dedup as D
+
+    widened = []
+    monkeypatch.setattr(D, "_local_input_bytes", lambda df: 1000)
+    monkeypatch.setattr(D, "_widen_if_narrow", lambda df: widened.append(1) or df)
+    monkeypatch.setenv("SPARK_GRAFT_WIDEN_MIN_BYTES", "1001")
+    D.exact_dedup(docs)
+    assert widened == []
+    monkeypatch.setenv("SPARK_GRAFT_WIDEN_MIN_BYTES", "1000")
+    D.exact_dedup(docs)
+    assert widened == [1]
+
+
 def test_segment_dedup_strips_boilerplate(spark):
     # 4 docs sharing a 3-word boilerplate prefix (docfreq 4 >= 3); each
     # also has a unique tail that must survive in original order

@@ -1,10 +1,9 @@
 """Hot-key skew: a single doc_id carrying most of a batch's events must
 reduce correctly and cheaply.
 
-The MERGE's groupBy plans a map-side partial aggregation, so a hot key
-reaches the reducer as ≤ one candidate per input partition (salting
-derived from the input partitioning, SURVEY.md §4 'custom needed').  It
-must pick the same winner the one-pass oracle picks.
+The MERGE ranks a key's events inside one task (an external sort that
+spills), whether the key's bucket is empty or already holds its stored
+row.  Either way it must pick the same winner the one-pass oracle picks.
 """
 
 import pytest
@@ -55,6 +54,17 @@ def test_merge_hot_key_matches_oracle(spark, hot_batch, tmp_path):
     got = sorted(tuple(r) for r in read_state(table).collect())
     want = sorted(tuple(r) for r in final_state_oracle(hot_batch).collect())
     assert got == want and len(got) > 0
+    # a second hot epoch into the populated buckets: the stored row ranks
+    # against the batch, and the feed holds the old and new hot-key rows
+    v0 = table.current_version()
+    later = hot_batch.withColumn("lsn", F.col("lsn") + 200_000).withColumn(
+        "ts_ms", F.col("ts_ms") + 200_000)
+    apply_cdc_batch(table, later, epoch=1)
+    got = sorted(tuple(r) for r in read_state(table).collect())
+    want = sorted(tuple(r) for r in final_state_oracle(hot_batch.unionByName(later)).collect())
+    assert got == want
+    hot = table.changes(v0, table.current_version()).where(F.col("doc_id") == "hot")
+    assert sorted(r["_change_type"] for r in hot.collect()) == ["delete", "insert"]
 
 
 def test_funnel_pattern_bounded_under_hot_user(spark, tmp_path):

@@ -38,11 +38,12 @@ def _spark(args):
 
     # a one-shot CLI command never amortizes the session pre-warm (a few
     # seconds of worker-pool fork + JIT warm jobs that pay off over a
-    # long-lived query session); default it off here, overridable with
-    # SPARK_GRAFT_PY_PREWARM=1 for CLI sessions that will run many jobs
-    os.environ.setdefault("SPARK_GRAFT_PY_PREWARM", "0")
+    # long-lived query session); default it off here.  A set
+    # SPARK_GRAFT_PY_PREWARM keeps get_spark's rule (on unless "0") for
+    # CLI sessions that will run many jobs
+    prewarm = None if "SPARK_GRAFT_PY_PREWARM" in os.environ else False
     master = args.master or os.environ.get("SPARK_MASTER") or "local[*]"
-    return get_spark(app_name=f"ton_etl_spark.{args.cmd}", master=master)
+    return get_spark(app_name=f"ton_etl_spark.{args.cmd}", master=master, prewarm=prewarm)
 
 
 def _cmd_replay(args) -> int:

@@ -5,16 +5,21 @@ each daily sync derives the mart from ONLY the new slice of the source
 and unions it with the existing mart instead of recomputing the world
 (``datalake_daily_sync.py:717-1268``).  This module is the engine-native
 form of that pattern: ``LakeTable.changes(v0, v1)`` supplies the
-insert/delete changelog (pruned to buckets whose manifests moved), and
-``refresh_agg_mart`` folds it into a derived aggregate table with
-retraction arithmetic — +1 for inserts, -1 for deletes — so updates and
-deletes maintain the mart exactly, not just append-only growth.
+insert/delete changelog, read from the change feeds the source's commits
+recorded (the MERGE writes its feed in the same job as its data, so the
+refresh never scans a source bucket), and ``refresh_agg_mart`` folds it
+into a derived aggregate table with retraction arithmetic — +1 for
+inserts, -1 for deletes — so updates and deletes maintain the mart
+exactly, not just append-only growth.  This is aggregation straight off
+the change stream (Event Trend Aggregation's shape, SIGMOD 2019).
 
-Scale shape: one refresh costs O(changed slice) on the source side (the
-changelog read is manifest-pruned) and O(touched mart buckets) on the
-mart side (the mart is itself a LakeTable bucketed by the group key; only
-buckets containing affected groups are read and rewritten).  The source
-table's size never enters the refresh cost.
+Scale shape: one refresh costs O(changed rows) on the source side (the
+feed holds only the rows the interval's commits changed) and O(touched
+mart buckets) on the mart side (the mart is itself a LakeTable bucketed by
+the group key; only buckets containing affected groups are read and
+rewritten).  The source table's size never enters the refresh cost.  The
+mart's own commits record their feeds too (the old and new row of each
+group that moved), so a mart can be followed like any source.
 
 Correctness contract (tested): after any sequence of refreshes covering
 ``v0 → vN`` the mart equals the full recompute over the source's live
@@ -23,7 +28,9 @@ state at vN, and re-running a refresh interval is a commit-key no-op.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import time
 from collections.abc import Callable
@@ -33,7 +40,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ton_etl_spark.cdc.apply import live_state
-from ton_etl_spark.lake.table import LakeTable
+from ton_etl_spark.lake.table import (
+    DELETE,
+    INSERT,
+    ROW,
+    LakeTable,
+    feed_frame,
+    outputs,
+)
 
 MART_SCHEMA_SUFFIX = [
     T.StructField("n_docs", T.LongType(), True),
@@ -89,23 +103,73 @@ def rebuild_agg_mart(mart: LakeTable, source: LakeTable, to_version: int | None 
     """Full recompute of the mart from the source's LIVE state, replacing
     every mart bucket, and setting the refresh cursor to ``to_version``
     (commit key ``martsync=<v>-<v>``).  This is the safe bootstrap AND the
-    fallback when an incremental interval can no longer be read (the
-    ``from`` snapshot was expired): correct from any prior mart content,
-    at full-recompute cost."""
+    fallback when an incremental interval can no longer be read (a
+    snapshot of it was expired): correct from any prior mart content, at
+    full-recompute cost.  The commit's feed deletes each old row that
+    differs from the recompute and inserts its replacement."""
     to_version = to_version if to_version is not None else source.current_version()
     commit_key = f"martsync={to_version}-{to_version}"
     if mart.has_commit(commit_key):
         return {"applied": False, "from": to_version, "to": to_version, "rebuild": True}
     msnap = mart.current()
     new = recompute_agg_mart(source, msnap.key_cols)
+    old = _prefixed(mart.read(), msnap.schema)
+    names = msnap.schema.fieldNames()
+    # feed: a group whose row differs (or exists on one side only) is a
+    # delete of the old row plus an insert of the new one
+    same = functools.reduce(
+        operator.and_, [F.col(_OLD + c).eqNullSafe(F.col(c)) for c in names]
+    )
     applied = mart.overwrite_buckets(
-        new,
+        _group_feed(
+            old.join(new, _on_groups(old, new, msnap.key_cols), "full"),
+            msnap.schema, unchanged=same, has_new=F.col("n_docs").isNotNull(),
+            new={c: F.col(c) for c in names},
+        ),
         buckets=list(range(msnap.n_buckets)),
         commit_key=commit_key,
         schema=msnap.schema,
         base_version=msnap.version,
+        feed=True,
     )
     return {"applied": applied, "from": to_version, "to": to_version, "rebuild": True}
+
+
+# prefix of the old mart row's columns next to the new values
+_OLD = "__old_"
+
+
+def _prefixed(df: DataFrame, schema: T.StructType) -> DataFrame:
+    return df.select(*[F.col(c).alias(_OLD + c) for c in schema.fieldNames()])
+
+
+def _on_groups(old: DataFrame, other: DataFrame, group_cols: list[str]):
+    """Null-SAFE join condition on the group key: a NULL group value
+    (nullable in the CDC schema) must match its own row, or the mart
+    accumulates duplicate NULL-group rows and diverges from the full
+    recompute."""
+    return functools.reduce(
+        operator.and_, [old[_OLD + c].eqNullSafe(other[c]) for c in group_cols]
+    )
+
+
+def _group_feed(
+    joined: DataFrame, schema: T.StructType, unchanged, has_new, new: dict
+) -> DataFrame:
+    """The mart commit's ``feed_frame``: an unchanged group's old row stays;
+    a changed group's old row (when there was one) is deleted and its new
+    row (when ``has_new``) is written and inserted."""
+    has_old = F.col(_OLD + "n_docs").isNotNull()
+    out = F.when(unchanged, outputs(ROW)).otherwise(F.concat(
+        F.when(has_new, outputs(ROW, INSERT)).otherwise(outputs()),
+        F.when(has_old, outputs(DELETE)).otherwise(outputs()),
+    ))
+    old = {c: F.col(_OLD + c) for c in schema.fieldNames()}
+    return feed_frame(
+        joined, schema, out,
+        new={c: F.when(unchanged, old[c]).otherwise(e) for c, e in new.items()},
+        old=old,
+    )
 
 
 def refresh_agg_mart(
@@ -119,17 +183,23 @@ def refresh_agg_mart(
     mart.
 
     Mechanics:
-    1. ``source.changes`` yields stored-row inserts/deletes for buckets
-       whose manifests moved — an update is a delete+insert pair, so signed
-       (+1/-1) aggregation computes the exact per-group delta, including
-       retractions from deletes and token-count changes from updates.
+    1. ``source.changes`` yields the stored-row inserts/deletes the
+       interval's commits recorded in their change feeds — an update is a
+       delete+insert pair, so signed (+1/-1) aggregation computes the
+       exact per-group delta, including retractions from deletes and
+       token-count changes from updates.
     2. Only mart buckets containing affected groups are read (driver-side
        bucket-id probe, ≤ n_buckets ints — same pattern as the CDC merge's
        bucket probe); unaffected groups in those buckets ride along
-       unchanged through the copy-on-write.
+       unchanged through the copy-on-write, and the commit records the old
+       and new row of each group that moved as its own change feed.
     3. Groups whose count reaches zero are dropped from the mart.
     4. The commit key ``martsync=<from>-<to>`` makes a re-run of the same
        interval a no-op (verbatim dedup in the recent-keys window).
+
+    An interval whose snapshots were expired (or written before feeds
+    existed) cannot be read from feeds; it falls back to ``rebuild_agg_mart`` (``allow_rebuild``) or raises
+    ``FileNotFoundError``.
 
     The caller owns interval bookkeeping (apply intervals in order,
     exactly covering the version range — the same contract as any
@@ -144,9 +214,9 @@ def refresh_agg_mart(
     if mart.has_commit(commit_key):
         return {"applied": False, "from": from_version, "to": to_version}
     try:
-        source.snapshot(from_version)
+        ch = live_state(source.changes(from_version, to_version))
     except FileNotFoundError:
-        # the interval's base snapshot was expired (snapshot-expiry
+        # a snapshot of the interval was expired (snapshot-expiry
         # maintenance ran past the cursor) — an incremental read is
         # impossible; fall back to the full recompute instead of wedging
         # the caller in an unrecoverable crash loop
@@ -154,49 +224,50 @@ def refresh_agg_mart(
             return rebuild_agg_mart(mart, source, to_version)
         raise
     msnap = mart.current()
+    mart.check_bucket_fn(msnap)
     group_cols = msnap.key_cols
 
-    ch = live_state(source.changes(from_version, to_version))
     sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(F.lit(-1))
-    delta = ch.groupBy(*group_cols).agg(
-        F.sum(sign).cast("long").alias("d_docs"),
-        F.sum(sign * F.coalesce(F.col("n_tok").cast("long"), F.lit(0))).alias("d_tok"),
+    delta = (
+        ch.groupBy(*group_cols)
+        .agg(
+            F.sum(sign).cast("long").alias("d_docs"),
+            F.sum(sign * F.coalesce(F.col("n_tok").cast("long"), F.lit(0))).alias("d_tok"),
+        )
+        # drop no-op groups early (an update that keeps n_tok constant nets out)
+        .where((F.col("d_docs") != 0) | (F.col("d_tok") != 0))
     )
-    # drop no-op groups early (an update that keeps n_tok constant nets out)
-    delta = delta.where((F.col("d_docs") != 0) | (F.col("d_tok") != 0))
-    # the delta plan (changes() = two bucket scans + two exceptAll shuffles)
-    # is consumed twice — the bucket probe below, then the merge — so cache
-    # it for the refresh's duration (same double-execution trap the CDC
-    # bucket probe documents in cdc/apply.py)
+    # the delta plan (the interval's feed read + one aggregate) is consumed
+    # twice — the bucket probe below, then the merge — so cache it for the
+    # refresh's duration; only the ≤ n_buckets touched bucket ids reach the
+    # driver (same double-execution trap the CDC bucket probe documents in
+    # cdc/apply.py)
     delta = delta.persist()
     try:
-        buckets = mart.buckets_of(delta, msnap)
+        buckets = sorted(mart.buckets_of(delta, msnap))
         if not buckets:
             # nothing changed (or a pure compaction): still record the interval
             mart.append(mart.spark.createDataFrame([], msnap.schema), commit_key=commit_key)
             return {"applied": True, "from": from_version, "to": to_version, "buckets": []}
-
-        old = mart.read(buckets=buckets)
-        # null-SAFE join on the group key: a NULL group value (nullable in the
-        # CDC schema) must match its own delta row, or the mart accumulates
-        # duplicate NULL-group rows and diverges from the full recompute
-        cond = None
-        for c in group_cols:
-            e = old[c].eqNullSafe(delta[c])
-            cond = e if cond is None else (cond & e)
-        merged = old.join(delta, on=cond, how="full").select(
-            *[F.coalesce(old[c], delta[c]).alias(c) for c in group_cols],
-            (F.coalesce(old["n_docs"], F.lit(0)) + F.coalesce(delta["d_docs"], F.lit(0)))
-            .cast("long")
-            .alias("n_docs"),
-            (F.coalesce(old["n_tok_sum"], F.lit(0)) + F.coalesce(delta["d_tok"], F.lit(0)))
-            .cast("long")
-            .alias("n_tok_sum"),
-        )
-        survivors = merged.where(F.col("n_docs") > 0)
+        old = _prefixed(mart.read(buckets=buckets), msnap.schema)
+        n_docs = (
+            F.coalesce(F.col(_OLD + "n_docs"), F.lit(0)) + F.coalesce(delta["d_docs"], F.lit(0))
+        ).cast("long")
+        n_tok = (
+            F.coalesce(F.col(_OLD + "n_tok_sum"), F.lit(0)) + F.coalesce(delta["d_tok"], F.lit(0))
+        ).cast("long")
+        # groups whose count reaches zero leave the mart
         applied = mart.overwrite_buckets(
-            survivors, buckets, commit_key=commit_key, schema=msnap.schema,
-            base_version=msnap.version,
+            _group_feed(
+                old.join(delta, _on_groups(old, delta, group_cols), how="full"),
+                msnap.schema, unchanged=delta["d_docs"].isNull(), has_new=n_docs > 0,
+                new={
+                    **{c: F.coalesce(F.col(_OLD + c), delta[c]) for c in group_cols},
+                    "n_docs": n_docs, "n_tok_sum": n_tok,
+                },
+            ),
+            buckets, commit_key=commit_key, schema=msnap.schema,
+            base_version=msnap.version, feed=True,
         )
     finally:
         delta.unpersist()
@@ -260,15 +331,16 @@ def follow_changes(
     conforms to the final schema (absent column = NULL).
 
     Maintenance commits compose: a pure compaction / bin-pack / z-order
-    rewrite moves the head without changing stored rows, so the interval
-    delivers an EMPTY batch (``changes``'s storage-content diff) and the
-    cursor advances past it — the tail never wedges on, or double-counts,
-    a maintenance epoch.  A ``gc_tombstones`` sweep IS a storage change
-    (tombstone rows leave) and is delivered as such — the documented
-    storage-level contract.
+    rewrite / rebucket moves the head without changing stored rows, so it
+    records an empty change feed; its interval delivers an EMPTY batch
+    without re-reading the compacted buckets, and the cursor advances past
+    it — the tail never wedges on, or double-counts, a maintenance epoch.
+    A ``gc_tombstones`` sweep IS a storage change (tombstone rows leave)
+    and is delivered as such — the documented storage-level contract.
 
     Snapshot expiry past the cursor (the follower was down longer than
-    the source's retention) makes the interval unreadable.  Default:
+    the source's retention) makes the interval unreadable, and so does a
+    snapshot written before feeds existed.  Default:
     raise a clear error naming the resync requirement — silently jumping
     the cursor would drop changes.  ``on_expired(table, cursor, head)``
     opts into recovery: the hook must resync the consumer to the
@@ -277,11 +349,11 @@ def follow_changes(
     persisted at ``head`` and the tail resumes incrementally.
 
     Scale shape: each poll is one manifest-head read (O(1) metadata); each
-    batch costs O(changed buckets) like any ``changes`` read — the
-    follower never rescans the table.  Stops after ``max_batches``
-    processed batches or ``idle_polls`` consecutive empty polls (run it
-    under a supervisor loop for an unbounded tail); returns
-    ``{"batches", "cursor"}``.
+    batch reads the interval's change feeds — O(changed rows), like any
+    ``changes`` read — so the follower never rescans the table.  Stops
+    after ``max_batches`` processed batches or ``idle_polls`` consecutive
+    empty polls (run it under a supervisor loop for an unbounded tail);
+    returns ``{"batches", "cursor"}``.
     """
     batches = 0
     idle = 0
@@ -299,10 +371,11 @@ def follow_changes(
         except FileNotFoundError as e:
             if on_expired is None:
                 raise RuntimeError(
-                    f"follow_changes: snapshot v{cursor} was expired while "
-                    f"the follower was down — the interval ({cursor}, "
-                    f"{head}] cannot be read incrementally. Resync the "
-                    "consumer from the source's current state and restart "
+                    f"follow_changes: a snapshot of the interval ({cursor}, "
+                    f"{head}] was expired while the follower was down, or "
+                    "records no change feed — it cannot be read "
+                    "incrementally. Resync the consumer from the source's "
+                    "current state and restart "
                     "the cursor at head (or pass on_expired= to do it "
                     "in-loop)."
                 ) from e

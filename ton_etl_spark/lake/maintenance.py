@@ -14,13 +14,31 @@ pure driver-side metadata work plus file deletes.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import uuid
 
 from pyspark.sql import functions as F
 
 from ton_etl_spark.cdc.schema import LSN_COL, OP_COL
-from ton_etl_spark.lake.table import DATA_DIR, MANIFEST_DIR, LakeTable, Snapshot
+from ton_etl_spark.lake.table import (
+    DATA_DIR,
+    DELETE,
+    INSERT,
+    MANIFEST_DIR,
+    ROW,
+    LakeTable,
+    Snapshot,
+    feed_frame,
+    outputs,
+)
+
+
+def _kept_or_deleted(keep) -> "F.Column":
+    """``feed_frame`` outputs of a row filter: a row satisfying ``keep``
+    stays, any other row (``keep`` false or NULL) is a deleted row."""
+    return F.when(F.coalesce(keep, F.lit(False)), outputs(ROW)).otherwise(outputs(DELETE))
 
 
 def rewrite_buckets(
@@ -32,7 +50,9 @@ def rewrite_buckets(
     """Copy-on-write rewrite of ``buckets`` (default: all), keeping only
     rows matching ``predicate`` (default: all rows).  Collapses each bucket
     back to one file — the small-file compaction half — and applies row GC
-    — the filter half.  Idempotent on ``commit_key``."""
+    — the filter half.  The change feed holds the filtered-out rows as
+    deletes (empty for a plain compaction).  Idempotent on
+    ``commit_key``."""
     snap = table.current()
     if commit_key is not None and snap.has_commit_key(commit_key):
         return {"applied": False, "buckets": []}
@@ -40,9 +60,10 @@ def rewrite_buckets(
         buckets = sorted(snap.manifests.keys())
     df = table.read(buckets=buckets)
     if predicate is not None:
-        df = df.where(predicate)
+        df = feed_frame(df, snap.schema, _kept_or_deleted(predicate))
     ok = table.overwrite_buckets(df, buckets, commit_key=commit_key,
-                                 schema=snap.schema, base_version=snap.version)
+                                 schema=snap.schema, base_version=snap.version,
+                                 feed=predicate is not None)
     return {"applied": ok, "buckets": buckets}
 
 
@@ -142,7 +163,7 @@ def compact_small_files(
     df = table.spark.read.schema(snap.schema).parquet(*small_paths)
     ok = table.overwrite_buckets(
         df, touched, commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, keep_files=keep_files,
+        base_version=snap.version, keep_files=keep_files, feed=False,
     )
     return {"applied": ok, "buckets": touched, "packed_files": n_packed}
 
@@ -289,11 +310,12 @@ def rebucket(
         return {"applied": False, "n_buckets": snap.n_buckets}
     df = table.read(version=snap.version)  # raw rows, tombstones included
     commit_id = f"c{snap.version + 1}-rb{uuid.uuid4().hex[:8]}"
-    new_files = table._write_commit_files(
+    new_files, _ = table._write_commit_files(
         df, commit_id, new_n_buckets, snap.key_cols, snap.properties
     )
-    # every bucket of the old layout is replaced by the new layout's files
-    if not table._commit(snap, commit_id, commit_key, new_files,
+    # every bucket of the old layout is replaced by the new layout's files;
+    # every row is kept, so the feed is empty
+    if not table._commit(snap, commit_id, commit_key, new_files, [],
                          replace=range(snap.n_buckets), n_buckets=new_n_buckets):
         return {"applied": False, "n_buckets": table.current().n_buckets}
     return {
@@ -557,8 +579,9 @@ def delete_where(
         keep = keep | F.coalesce(F.col(OP_COL) == "d", F.lit(False))
     before = sum(f.rows for f in snap.files_for(buckets))
     ok = table.overwrite_buckets(
-        src.where(keep), buckets, commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, keep_files=keep_files,
+        feed_frame(src, snap.schema, _kept_or_deleted(keep)), buckets,
+        commit_key=commit_key, schema=snap.schema,
+        base_version=snap.version, keep_files=keep_files, feed=True,
     )
     # post-commit re-read: exact unless another writer lands in these
     # buckets between our commit and this read (our own commit already
@@ -601,6 +624,12 @@ def update_where(
     LWW ordering history — the caller owns that; updating payload
     columns (the redaction case) leaves ordering intact.
 
+    Change feed: each row whose set columns change is a delete of its old
+    image and an insert of its new one.  That is the commit's net change
+    unless two rows of one key are updated so that one's new image equals
+    the other's old one (possible only where a key holds several rows);
+    ``changes()`` then reports both.
+
     Returns ``{"applied", "buckets", "updated_rows"}`` — ``updated_rows``
     is the exact matched count (one extra scan of the touched slice;
     compliance updates want the audited number)."""
@@ -636,20 +665,22 @@ def update_where(
         return {"applied": False, "buckets": [], "updated_rows": 0}
     buckets, src, keep_files, matched = scope  # NULL pred col => untouched
     updated_rows = src.where(matched).count()
-    proj = []
+    new = {}
     for f in snap.schema.fields:
         if f.name in set_exprs:
             e = set_exprs[f.name]
             e = F.expr(e) if isinstance(e, str) else e
-            proj.append(
-                F.when(matched, e.cast(f.dataType))
-                .otherwise(F.col(f.name)).alias(f.name)
-            )
-        else:
-            proj.append(F.col(f.name))
+            new[f.name] = F.when(matched, e.cast(f.dataType)).otherwise(F.col(f.name))
+    # feed: a row whose set columns really changed is a delete of its old
+    # image plus an insert of the new one
+    changed = functools.reduce(
+        operator.or_, [~new[c].eqNullSafe(F.col(c)) for c in new]
+    )
+    out = F.when(changed, outputs(ROW, INSERT, DELETE)).otherwise(outputs(ROW))
     ok = table.overwrite_buckets(
-        src.select(*proj), buckets, commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, keep_files=keep_files,
+        feed_frame(src, snap.schema, out, new=new),
+        buckets, commit_key=commit_key, schema=snap.schema,
+        base_version=snap.version, keep_files=keep_files, feed=True,
     )
     return {"applied": ok, "buckets": buckets, "updated_rows": updated_rows}
 
@@ -816,7 +847,7 @@ def rewrite_zorder(
     promoted = list(dict.fromkeys(declared + list(cols)))
     ok = table.overwrite_buckets(
         df, buckets, commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, sort_exprs=[z],
+        base_version=snap.version, sort_exprs=[z], feed=False,
         properties_update=(
             {"stats_cols": ",".join(promoted)} if promoted != declared else None
         ),
@@ -829,9 +860,11 @@ def expire_snapshots(
     table: LakeTable, keep_last: int = 1, grace_seconds: float = 600.0
 ) -> dict:
     """Delete snapshot metadata older than the newest ``keep_last``
-    versions and any data file no kept snapshot references.  Time-travel
-    reads to expired versions stop working (same contract as Iceberg
-    ``expire_snapshots``); the commit-key history of the CURRENT snapshot
+    versions and any data or change-feed file no kept snapshot references
+    (a kept snapshot keeps its own feed, so ``changes()`` over kept
+    versions still reads).  Time-travel reads to expired versions, and
+    ``changes()`` intervals that span one, stop working (same contract as
+    Iceberg ``expire_snapshots``); the commit-key history of the CURRENT snapshot
     is untouched, so batch idempotency is preserved.  TAGGED versions are
     always kept (Iceberg tag retention): a tag pins the exact dataset a
     training run consumed, so retention can never collect it — delete the
@@ -855,6 +888,7 @@ def expire_snapshots(
         s = table.snapshot(v)
         referenced_manifests.update(s.manifests.values())
         referenced.update(f.path for f in s.files)
+        referenced.update(c.path for c in s.feed or ())
 
     cutoff = time.time() - grace_seconds
 

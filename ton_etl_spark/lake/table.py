@@ -57,6 +57,15 @@ filesystem APIs.  Design goals, in order:
    NOT EXISTS``, ``parser/createdb.sql:93,114-121``, and Glue auto-create,
    ``datalake_daily_sync.py:268-296``).
 
+5. **A change feed per commit** — every snapshot records the rows its
+   commit inserted and deleted (``Snapshot.feed``, Delta's Change Data
+   Feed role; reference analog: each parser upsert is itself re-published
+   as a ``ton.parsed.*`` CDC topic).  Feed files are written by the same
+   Spark job as the commit's data files and registered in the same
+   published snapshot, so there is no second commit point; they never
+   appear in ``Snapshot.files``, reads or lookups.  ``changes(v0, v1)``
+   reads the feeds of ``(v0, v1]`` instead of diffing two snapshots.
+
 Concurrency contract: every data commit writes its files, then goes
 through ONE commit step, ``LakeTable._commit``, whose ``_publish`` is a
 compare-and-swap on the ``_current`` pointer.  A writer that loses the
@@ -91,6 +100,14 @@ MANIFEST_DIR = os.path.join(META_DIR, "manifests")
 DATA_DIR = "data"
 CURRENT_PTR = "_current"
 BUCKET_COL = "__bucket"
+# ``changes()``' output column: 'insert' or 'delete'
+CHANGE_COL = "_change_type"
+# Tag column of a frame written with ``overwrite_buckets(feed=True)``: NULL
+# marks a row of the new bucket contents, INSERT/DELETE a change-feed row.
+# Written as a partition directory (``__change=row|insert|delete``).
+FEED_COL = "__change"
+INSERT, DELETE = "insert", "delete"
+_TABLE_ROW = "row"
 
 # bounded idempotency record (see module docstring §2)
 RECENT_KEYS_MAX = 1024
@@ -165,6 +182,24 @@ class DataFile:
             path=d["path"], bucket=int(d["bucket"]), rows=int(d["rows"]),
             stats=d.get("stats"),
         )
+
+
+@dataclass
+class ChangeFile:
+    """One file of a commit's change feed: rows the commit inserted or
+    deleted (``change``), stored in the table schema of the commit's
+    snapshot.  An insert may reference one of the commit's own data files
+    (an append's files, a merge bucket that was empty) instead of a copy."""
+
+    path: str  # relative to table root
+    change: str  # INSERT or DELETE
+
+    def to_json(self) -> dict[str, Any]:
+        return {"path": self.path, "change": self.change}
+
+    @staticmethod
+    def from_json(d: dict[str, Any]) -> "ChangeFile":
+        return ChangeFile(path=d["path"], change=d["change"])
 
 
 def _stats_encode(v: Any) -> Any:
@@ -449,6 +484,19 @@ def _ntz_walls(v: Any, zone) -> tuple[Any, Any]:
     return wall + min(offs), wall + max(offs)
 
 
+def _ntz_wall(v: Any, zone) -> Any:
+    """The wall clock in the session ``zone`` at which Spark compares a
+    ``timestamp_ntz`` column with the datetime ``v`` — the exact value
+    inside ``_ntz_walls``' range, for an evaluator outside Spark that
+    filters NTZ rows.  ``v`` as given when it is no datetime or the zone
+    is unknown."""
+    import datetime as _dt
+
+    if zone is None or not isinstance(v, _dt.datetime):
+        return v
+    return _pin_naive(v).astimezone(zone).replace(tzinfo=None)
+
+
 def _file_may_match(f: DataFile, enc_where: dict[str, tuple[Any, Any]]) -> bool:
     """Conservative skip test: False only when a file's stored [min, max]
     bounds PROVE no row can satisfy every range.  Missing stats (old
@@ -490,6 +538,9 @@ class Snapshot:
     commit_watermarks: dict[str, int] = field(default_factory=dict)
     recent_commit_keys: list[str] = field(default_factory=list)
     properties: dict[str, str] = field(default_factory=dict)
+    # the change feed of the commit that published this version; [] for a
+    # commit that changed no row, None for a snapshot written before feeds
+    feed: list[ChangeFile] | None = field(default_factory=list)
     # set by LakeTable when loading, so .files can resolve manifests
     _root: str | None = field(default=None, repr=False, compare=False)
 
@@ -571,6 +622,7 @@ class Snapshot:
             "commit_watermarks": self.commit_watermarks,
             "recent_commit_keys": self.recent_commit_keys,
             "properties": self.properties,
+            "feed": [c.to_json() for c in self.feed] if self.feed is not None else None,
         }
 
     @staticmethod
@@ -590,6 +642,10 @@ class Snapshot:
             commit_watermarks={k: int(v) for k, v in d["commit_watermarks"].items()},
             recent_commit_keys=list(d["recent_commit_keys"]),
             properties=dict(d.get("properties", {})),
+            feed=(
+                [ChangeFile.from_json(c) for c in d["feed"]]
+                if d.get("feed") is not None else None
+            ),
         )
 
 
@@ -600,9 +656,12 @@ class ScanPlan:
     the exact ``residual`` filter (None when there is no predicate).
     Skipping is an optimization and the residual is the truth: a consumer
     that filters ``files`` by ``residual`` gets the same rows however many
-    files were skipped.  ``bounds`` are the conformed ``where`` ranges with
-    naive datetimes pinned (``_pin_naive``) — the form an evaluator outside
-    Spark (the co-located join's Arrow kernel) compares against."""
+    files were skipped.  ``bounds`` are the conformed ``where`` ranges in
+    the form an evaluator outside Spark (the co-located join's Arrow
+    kernel) compares stored values against: naive datetimes pinned
+    (``_pin_naive``), and on ``timestamp_ntz`` columns the session-zone
+    wall clock (``_ntz_wall``), since NTZ values are stored as wall
+    clocks."""
 
     snapshot: Snapshot
     files: list[DataFile]
@@ -633,7 +692,10 @@ def _widen_type(a: T.DataType, b: T.DataType) -> T.DataType | None:
     if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
         el = _widen_type(a.elementType, b.elementType)
         if el is not None:
-            return T.ArrayType(el, a.containsNull or b.containsNull)
+            # nullable elements: Parquet reads relax element nullability,
+            # and Spark refuses to cast array<int> (nullable elements) to
+            # a non-null array<bigint>, so narrow files could not be read up
+            return T.ArrayType(el, True)
     return None
 
 
@@ -1112,20 +1174,22 @@ class LakeTable:
         terms += [F.col(col).isin(list(vals)) for col, vals in where_in.items()]
         residual = functools.reduce(operator.and_, terms) if terms else None
         bounds = {c: (_pin_naive(lo), _pin_naive(hi)) for c, (lo, hi) in where.items()}
+        # timestamp_ntz stats are wall clocks: predicate values on those
+        # columns are compared as session-zone wall clocks (``_ntz_walls``)
+        ntz = {f.name for f in snap.schema.fields
+               if isinstance(f.dataType, T.TimestampNTZType)} & (set(where) | set(where_in))
+        zone = _session_zone(self.spark.conf.get("spark.sql.session.timeZone")) if ntz else None
+        walls = {c: (_ntz_wall(lo, zone), _ntz_wall(hi, zone)) if c in ntz else (lo, hi)
+                 for c, (lo, hi) in bounds.items()}
         if any(len(v) == 0 for v in where_in.values()):
             # empty, or emptied by conformance: skip the scan entirely
-            return ScanPlan(snap, [], residual, bounds)
+            return ScanPlan(snap, [], residual, walls)
         if where_in and buckets is None:
             buckets = self._probe_buckets(snap, where_in)
         if buckets is not None:
             # pruning correctness depends on the bucket hash matching
             self.check_bucket_fn(snap)
         files = snap.files_for(buckets)
-        # timestamp_ntz stats are wall clocks: predicate values on those
-        # columns are compared as session-zone wall clocks (``_ntz_walls``)
-        ntz = {f.name for f in snap.schema.fields
-               if isinstance(f.dataType, T.TimestampNTZType)} & (set(where) | set(where_in))
-        zone = _session_zone(self.spark.conf.get("spark.sql.session.timeZone")) if ntz else None
         if where_in:
             # encoded once per plan, not per file (a snapshot can list 10^5
             # files): sorted for the bisect; [] marks a column unprunable
@@ -1150,7 +1214,7 @@ class LakeTable:
                     lo, hi = _ntz_walls(lo, zone)[0], _ntz_walls(hi, zone)[1]
                 enc[c] = (_stats_encode(lo), _stats_encode(hi))
             files = [f for f in files if _file_may_match(f, enc)]
-        return ScanPlan(snap, files, residual, bounds)
+        return ScanPlan(snap, files, residual, walls)
 
     _PROBE_BUCKET_MAX_COMBOS = 4096
 
@@ -1203,28 +1267,61 @@ class LakeTable:
 
         Returns the rows whose stored content differs, tagged
         ``_change_type`` ∈ {insert, delete}; an updated key appears as a
-        delete of its old payload plus an insert of the new one.  Metadata
-        does the pruning: only buckets whose MANIFEST POINTER changed
-        between the snapshots are read at either version — an incremental
-        consumer of a 100 TB table scans the touched slice, never the
-        world.  A pure compaction rewrites manifests without changing rows
-        and therefore yields zero change rows (at the cost of re-reading
-        the compacted buckets)."""
-        new_snap = (
-            self.snapshot(to_version) if to_version is not None else self.current()
-        )
-        old_snap = self.snapshot(from_version)
-        touched = [
-            b
-            for b in set(old_snap.manifests) | set(new_snap.manifests)
-            if old_snap.manifests.get(b) != new_snap.manifests.get(b)
-        ]
-        schema = new_snap.schema
-        old = _conform(self.read(buckets=touched, version=old_snap.version), schema)
-        new = _conform(self.read(buckets=touched, version=new_snap.version), schema)
-        ins = new.exceptAll(old).withColumn("_change_type", F.lit("insert"))
-        dele = old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
-        return ins.unionByName(dele)
+        delete of its old payload plus an insert of the new one.  The
+        result is the multiset difference of the two snapshots, read from
+        the change feeds the commits of ``(from_version, to_version]``
+        recorded (``Snapshot.feed``) — no bucket of either snapshot is
+        scanned, so an incremental consumer of a 100 TB table reads only
+        the rows that changed.  Each feed is conformed to ``to_version``'s
+        schema (late-added columns NULL, widened types cast up).  A
+        commit's feed is already net, so a single contributing commit is
+        returned as is; feeds of several commits are netted with
+        ``exceptAll`` (a row inserted and deleted inside the interval
+        cancels).  Maintenance commits (compaction, z-order, rebucket)
+        record an empty feed and contribute nothing.
+
+        Raises ``FileNotFoundError`` when ``from_version`` or an
+        intermediate snapshot was expired, or when a snapshot of the
+        interval was written before feeds existed: the interval can no
+        longer be read incrementally."""
+        to_version = self.current_version() if to_version is None else to_version
+        schema = self.snapshot(to_version).schema
+        self.snapshot(from_version)  # an expired base: FileNotFoundError
+        # (schema of the commit, change) -> feed files, so a long interval
+        # reads one relation per distinct schema, not one per commit
+        groups: dict[tuple[str, str], list[str]] = {}
+        contributing = 0
+        for v in range(from_version + 1, to_version + 1):
+            snap = self.snapshot(v)
+            if snap.feed is None:
+                # written before feeds existed: as unreadable incrementally
+                # as an expired snapshot, so consumers take the same fallback
+                raise FileNotFoundError(
+                    f"table {self.root}: snapshot v{v} records no change feed "
+                    "(written before feeds existed); changes() cannot span it"
+                )
+            contributing += bool(snap.feed)
+            for c in snap.feed:
+                groups.setdefault((snap.schema_json, c.change), []).append(
+                    os.path.join(self.root, c.path)
+                )
+        parts: dict[str, list[DataFrame]] = {INSERT: [], DELETE: []}
+        for (schema_json, change), paths in groups.items():
+            df = self.spark.read.schema(
+                T.StructType.fromJson(json.loads(schema_json))
+            ).parquet(*paths)
+            parts[change].append(_conform(df, schema))
+        if contributing > 1 and parts[INSERT] and parts[DELETE]:
+            ins, dele = (functools.reduce(DataFrame.unionByName, parts[c])
+                         for c in (INSERT, DELETE))
+            parts = {INSERT: [ins.exceptAll(dele)], DELETE: [dele.exceptAll(ins)]}
+        tagged = [df.withColumn(CHANGE_COL, F.lit(c)) for c in (INSERT, DELETE)
+                  for df in parts[c]]
+        if not tagged:
+            return self.spark.createDataFrame(
+                [], T.StructType(schema.fields + [T.StructField(CHANGE_COL, T.StringType())])
+            )
+        return functools.reduce(DataFrame.unionByName, tagged)
 
     # ------------------------------------------------------------------ write
     def _write_commit_files(
@@ -1236,9 +1333,13 @@ class LakeTable:
         props: dict[str, str],
         pre_partitioned: bool = False,
         sort_exprs: list | None = None,
-    ) -> list[DataFile]:
+    ) -> tuple[list[DataFile], list[ChangeFile]]:
         """Write ``df`` as one directory tree partitioned by bucket; return the
-        produced files tagged with their bucket.  ``props`` (the properties
+        produced data files tagged with their bucket, and the change-feed
+        files.  A ``df`` carrying ``FEED_COL`` (see ``overwrite_buckets``)
+        holds both in one frame, and one Spark job writes both: the tag
+        becomes an outer partition directory, so feed rows never land in a
+        data file.  ``props`` (the properties
         the commit will publish) give ``target_file_rows``, ``stats_cols``,
         ``sort_cols`` and ``bloom_cols``.  One output file per bucket
         by default (a MERGE batch touches a bounded set of buckets, so files
@@ -1266,21 +1367,33 @@ class LakeTable:
         sort_cols = self._prop_cols(props, "sort_cols")
         commit_rel = os.path.join(DATA_DIR, commit_id)
         commit_abs = os.path.join(self.root, commit_rel)
-        out = df.withColumn(BUCKET_COL, bucket_of(key_cols, n_buckets))
+        bucket = bucket_of(key_cols, n_buckets)
+        if FEED_COL in df.columns:
+            # feed rows are not bucketed (bucket -1): each write task emits
+            # at most one file per change type, not one per bucket it holds
+            row = F.col(FEED_COL).isNull()
+            out = df.select(
+                *[c for c in df.columns if c != FEED_COL],
+                F.when(row, bucket).otherwise(F.lit(-1)).alias(BUCKET_COL),
+                F.coalesce(F.col(FEED_COL), F.lit(_TABLE_ROW)).alias(FEED_COL),
+            )
+            parts = [FEED_COL, BUCKET_COL]
+        else:
+            out, parts = df.withColumn(BUCKET_COL, bucket), [BUCKET_COL]
         if not pre_partitioned:
             out = out.repartition(n_buckets, F.col(BUCKET_COL))
         if sort_exprs is not None:
             # caller-supplied clustering expressions (e.g. a z-order value)
             # replace the table's declared sort_cols for THIS commit; an
             # expression sorts without materializing a physical column
-            out = out.sortWithinPartitions(BUCKET_COL, *sort_exprs)
+            out = out.sortWithinPartitions(*parts, *sort_exprs)
         elif sort_cols:
-            # per-task sort, no exchange: leading BUCKET_COL keeps each
-            # bucket's rows contiguous (the dynamic-partition writer needs
-            # that sort anyway — pre-sorting folds both into one), and the
-            # trailing sort_cols cluster rows so maxRecordsPerFile splits
-            # land with tight, near-disjoint stats ranges
-            out = out.sortWithinPartitions(BUCKET_COL, *sort_cols)
+            # per-task sort, no exchange: leading partition columns keep
+            # each bucket's rows contiguous (the dynamic-partition writer
+            # needs that sort anyway — pre-sorting folds both into one), and
+            # the trailing sort_cols cluster rows so maxRecordsPerFile
+            # splits land with tight, near-disjoint stats ranges
+            out = out.sortWithinPartitions(*parts, *sort_cols)
         writer = out.write.mode("overwrite")
         if target_file_rows is not None:
             writer = writer.option("maxRecordsPerFile", int(target_file_rows))
@@ -1293,21 +1406,34 @@ class LakeTable:
                 writer = writer.option(
                     f"parquet.bloom.filter.expected.ndv#{c}", int(target_file_rows)
                 )
-        writer.partitionBy(BUCKET_COL).parquet(commit_abs)
+        writer.partitionBy(*parts).parquet(commit_abs)
         # stat the produced files with a thread pool: footer opens are
         # ~ms each but serial over n_buckets files they add up to a fixed
         # driver-side cost per commit that hurts scaling (Amdahl)
         from concurrent.futures import ThreadPoolExecutor
 
         todo: list[tuple[str, int]] = []
-        for entry in os.listdir(commit_abs):
-            if not entry.startswith(f"{BUCKET_COL}="):
-                continue
-            bucket = int(entry.split("=", 1)[1])
-            bdir = os.path.join(commit_abs, entry)
-            for fn in os.listdir(bdir):
-                if fn.endswith(".parquet"):
-                    todo.append((os.path.join(commit_rel, entry, fn), bucket))
+        changes: list[ChangeFile] = []
+        tops = [(commit_rel, _TABLE_ROW)]
+        if len(parts) == 2:
+            tops = [
+                (os.path.join(commit_rel, e), e.split("=", 1)[1])
+                for e in os.listdir(commit_abs) if e.startswith(f"{FEED_COL}=")
+            ]
+        for top, change in tops:
+            for entry in os.listdir(os.path.join(self.root, top)):
+                if not entry.startswith(f"{BUCKET_COL}="):
+                    continue
+                bucket = int(entry.split("=", 1)[1])
+                bdir = os.path.join(self.root, top, entry)
+                for fn in os.listdir(bdir):
+                    if not fn.endswith(".parquet"):
+                        continue
+                    rel = os.path.join(top, entry, fn)
+                    if change == _TABLE_ROW:
+                        todo.append((rel, bucket))
+                    else:
+                        changes.append(ChangeFile(rel, change))
 
         def _stat(item: tuple[str, int]) -> DataFile:
             import pyarrow.parquet as pq
@@ -1347,7 +1473,7 @@ class LakeTable:
 
         with ThreadPoolExecutor(max_workers=16) as pool:
             files = list(pool.map(_stat, todo))
-        return files
+        return files, changes
 
     def _write_manifest(self, bucket: int, files: list[DataFile], commit_id: str) -> str:
         """Write one immutable per-bucket manifest; return its rel path."""
@@ -1366,6 +1492,7 @@ class LakeTable:
         commit_id: str,
         commit_key: str | None,
         new_files: list[DataFile],
+        feed: list[ChangeFile],
         replace: Iterable[int] | None = None,
         keep_files: dict[int, list[DataFile]] | None = None,
         schema: T.StructType | None = None,
@@ -1376,8 +1503,10 @@ class LakeTable:
         ``maintenance.rebucket``): the only code that writes manifests,
         advances the commit keys, assembles the next ``Snapshot`` and
         publishes it, for ``new_files`` already written against ``base``.
-        ``replace``: buckets of ``base``'s layout whose files are dropped
-        (then re-listed as ``keep_files`` + ``new_files``); None = append.
+        ``feed``: the commit's change feed, published in the same snapshot
+        (``[]`` for a commit that changes no row).  ``replace``: buckets of
+        ``base``'s layout whose files are dropped (then re-listed as
+        ``keep_files`` + ``new_files``); None = append.
         ``properties`` are merged over the current ones.
 
         A lost CAS re-reads current and rebases metadata-only, up to
@@ -1436,6 +1565,7 @@ class LakeTable:
                 commit_watermarks=wm,
                 recent_commit_keys=recent,
                 properties={**snap.properties, **(properties or {})},
+                feed=feed,
             )
             new_snap._root = self.root
             try:
@@ -1453,18 +1583,22 @@ class LakeTable:
 
         Concurrency: an append's data files are valid against any base
         version, so losing the CAS to a concurrent writer rebases metadata
-        only (``_commit``) — no Spark re-execution, no file rewrite."""
+        only (``_commit``) — no Spark re-execution, no file rewrite.
+
+        Change feed: the new data files are the inserts, referenced by the
+        feed without a copy."""
         snap = self.current()
         if commit_key is not None and snap.has_commit_key(commit_key):
             return False
         self.check_bucket_fn(snap)
         schema = _merge_schemas(snap.schema, df.schema, self._widening(snap))
         commit_id = f"c{snap.version + 1}-{uuid.uuid4().hex[:8]}"
-        new_files = self._write_commit_files(
+        new_files, _ = self._write_commit_files(
             _conform(df, schema), commit_id, snap.n_buckets, snap.key_cols,
             snap.properties,
         )
-        return self._commit(snap, commit_id, commit_key, new_files, schema=schema)
+        feed = [ChangeFile(f.path, INSERT) for f in new_files if f.rows]
+        return self._commit(snap, commit_id, commit_key, new_files, feed, schema=schema)
 
     def overwrite_buckets(
         self,
@@ -1477,6 +1611,9 @@ class LakeTable:
         sort_exprs: list | None = None,
         keep_files: dict[int, list["DataFile"]] | None = None,
         properties_update: dict[str, str] | None = None,
+        *,
+        feed: bool,
+        inserted_buckets: Iterable[int] = (),
     ) -> bool:
         """Copy-on-write commit: replace all files of ``buckets`` with ``df``
         (which must contain exactly the surviving rows for those buckets).
@@ -1512,7 +1649,20 @@ class LakeTable:
         ``properties_update``: table properties merged into the published
         snapshot and used to write this commit's files (e.g. z-order
         promoting its columns into ``stats_cols``).  Rides the same CAS;
-        keys not listed keep their current values."""
+        keys not listed keep their current values.
+
+        ``feed`` (required — every commit states what it changed):
+        ``True`` when ``df`` carries the change feed next to the new rows,
+        tagged in ``FEED_COL``: NULL for a row of the new bucket contents,
+        ``INSERT``/``DELETE`` for a feed row (build such a frame with
+        ``feed_frame``); the feed must be net — no row both inserted and
+        deleted — and it is written by the same job as the data.
+        ``False`` when ``df`` holds only the new rows: a row-preserving
+        rewrite (compaction, z-order) then records an empty feed.
+        ``inserted_buckets``: buckets that held no row at the base, so
+        every new row in them is an insert — their new data files are
+        referenced by the feed instead of copied (the caller leaves their
+        INSERT rows out of ``df``)."""
         snap = (
             self.snapshot(base_version) if base_version is not None else self.current()
         )
@@ -1522,11 +1672,17 @@ class LakeTable:
         if schema is None:
             schema = _merge_schemas(snap.schema, df.schema, self._widening(snap))
         commit_id = f"c{snap.version + 1}-{uuid.uuid4().hex[:8]}"
-        new_files = self._write_commit_files(
-            _conform(df, schema), commit_id, snap.n_buckets, snap.key_cols,
+        wschema = schema
+        if feed:
+            wschema = T.StructType(schema.fields + [T.StructField(FEED_COL, T.StringType())])
+        new_files, changes = self._write_commit_files(
+            _conform(df, wschema), commit_id, snap.n_buckets, snap.key_cols,
             {**snap.properties, **(properties_update or {})},
             pre_partitioned=pre_partitioned, sort_exprs=sort_exprs,
         )
+        ins = set(inserted_buckets)
+        changes += [ChangeFile(f.path, INSERT) for f in new_files
+                    if f.bucket in ins and f.rows]
         bset = set(buckets)
         stray = sorted({f.bucket for f in new_files} - bset)
         if stray:
@@ -1536,9 +1692,44 @@ class LakeTable:
         if outside:
             raise ValueError(f"keep_files bucket {outside[0]} outside replace-set")
         return self._commit(
-            snap, commit_id, commit_key, new_files, replace=bset,
+            snap, commit_id, commit_key, new_files, changes, replace=bset,
             keep_files=keep_files, schema=schema, properties=properties_update,
         )
+
+
+# ``feed_frame`` output kind of a row of the new bucket contents
+ROW = None
+
+
+def outputs(*kinds: str | None) -> Column:
+    """A ``feed_frame`` outputs array of ROW, INSERT and DELETE entries."""
+    if not kinds:
+        return F.array().cast("array<string>")
+    return F.array(*[F.lit(k).cast("string") for k in kinds])
+
+
+def feed_frame(
+    df: DataFrame,
+    schema: T.StructType,
+    out: Column,
+    new: dict[str, Column] | None = None,
+    old: dict[str, Column] | None = None,
+) -> DataFrame:
+    """The ``overwrite_buckets(feed=True)`` frame: each row of ``df`` is
+    exploded into the kinds listed in ``out`` (an ``outputs`` array): ROW
+    (a row of the new bucket contents), INSERT and DELETE (change-feed
+    rows).  ROW and INSERT take the post-image ``new``, DELETE the
+    pre-image ``old``; both map ``schema`` columns to expressions over
+    ``df`` and default to the column itself.  The images are picked per
+    column, never built as structs, so a row that is only kept costs one
+    one-element array."""
+    new, old = new or {}, old or {}
+    x = F.col(FEED_COL)
+    cols = [x]
+    for f in schema.fields:
+        post, pre = new.get(f.name, F.col(f.name)), old.get(f.name, F.col(f.name))
+        cols.append(F.when(x == DELETE, pre).otherwise(post).alias(f.name))
+    return df.withColumn(FEED_COL, F.explode(out)).select(*cols)
 
 
 def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:

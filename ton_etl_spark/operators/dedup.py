@@ -359,11 +359,16 @@ def _local_input_bytes(df: DataFrame) -> int:
         return -1
 
 
-# balance pays off for a CHEAP per-row pass only above this input size
-# (A/B: md5 dedup at 0.6 MB is 0.25 s unwidened vs 0.42 s widened — the
-# exchange dominates; at 6 MB it is 1.06 s vs 0.5 s — the serial scan
-# dominates).  Heavy kernels (minhash/embedding) widen unconditionally.
-_WIDEN_MIN_BYTES = int(__import__("os").environ.get("SPARK_GRAFT_WIDEN_MIN_BYTES", 4 << 20))
+def _widen_min_bytes() -> int:
+    """Balance pays off for a CHEAP per-row pass only above this input size
+    (A/B: md5 dedup at 0.6 MB is 0.25 s unwidened vs 0.42 s widened — the
+    exchange dominates; at 6 MB it is 1.06 s vs 0.5 s — the serial scan
+    dominates).  Heavy kernels (minhash/embedding) widen unconditionally.
+    ``SPARK_GRAFT_WIDEN_MIN_BYTES`` overrides the 4 MiB default; it is read
+    per call, so a process can change it between queries."""
+    import os as _os
+
+    return int(_os.environ.get("SPARK_GRAFT_WIDEN_MIN_BYTES", 4 << 20))
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -371,10 +376,10 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     representative = min id, plus group size.  One hash-agg shuffle."""
     # size-gated balance: one md5 per row is cheap, so the exchange is
     # only worth paying when the serial one-row-group scan carries enough
-    # bytes (see _WIDEN_MIN_BYTES A/B)
+    # bytes (see _widen_min_bytes A/B)
     src = docs.select(F.col(id_col), F.col(text_col))
     b = _local_input_bytes(docs)
-    if b >= _WIDEN_MIN_BYTES:
+    if b >= _widen_min_bytes():
         src = _widen_if_narrow(src)
     fp = fingerprint(F.col(text_col))
     return (

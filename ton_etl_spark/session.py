@@ -99,12 +99,16 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
+    prewarm: bool | None = None,
 ) -> SparkSession:
     """Build (or get) a SparkSession with engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
     On a real cluster callers pass ``master=None`` via spark-submit and the
     submit-time master wins.
+
+    ``prewarm``: run ``_prewarm_session`` once per application.  None
+    (default) follows ``SPARK_GRAFT_PY_PREWARM`` (on unless it is "0").
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -143,6 +147,8 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_PY_PREWARM", "1") != "0":
+    if prewarm is None:
+        prewarm = os.environ.get("SPARK_GRAFT_PY_PREWARM", "1") != "0"
+    if prewarm:
         _prewarm_session(spark)
     return spark
