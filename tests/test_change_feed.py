@@ -19,6 +19,7 @@ from ton_etl_spark.lake.incremental import (
     refresh_agg_mart,
 )
 from ton_etl_spark.lake.maintenance import (
+    compact_small_files,
     delete_where,
     expire_snapshots,
     gc_tombstones,
@@ -70,8 +71,9 @@ def test_changes_equal_snapshot_diff_over_random_writer_sequences(spark, tmp_pat
     """Seeded random sequences of every writer — CDC epochs with updates,
     deletes, duplicates and stale events, a mid-stream added column and an
     array<int> -> array<bigint> widening, append, delete_where,
-    update_where, gc_tombstones and the row-preserving rewrites — and
-    random intervals: the feed equals the snapshot diff as a multiset."""
+    update_where (bucket- and file-granular), gc_tombstones and the
+    row-preserving rewrites, bin-pack included — and random intervals:
+    the feed equals the snapshot diff as a multiset."""
     rng = random.Random(5)
     # a sequences table that opts into widening, so the widened epoch
     # below is a legal evolution
@@ -111,9 +113,23 @@ def test_changes_equal_snapshot_diff_over_random_writer_sequences(spark, tmp_pat
         keys = [f"a{state['fresh']}-{i}" for i in range(2)] + [rng.choice(sorted(seen))]
         t.append(_events(spark, [[k, "c", n, n, [i], 1, "web"] for i, k in enumerate(keys)]))
 
+    def compact():
+        append()  # a second file in a stored key's bucket: something packs
+        small_rows = max(f.rows for f in t.current().files) + 1
+        assert compact_small_files(t, small_rows=small_rows)["packed_files"]
+
+    def file_granular(op, *args):
+        # after an append, the newest LSN sits in files of its own, so the
+        # rewrite reads those and carries the buckets' other files along
+        append()
+        op(t, *args, where={"lsn": (state["lsn"], None)}, file_granular=True)
+
     ops = {
         "cdc": cdc,
         "append": append,
+        "compact_small_files": compact,
+        "delete_where_files": lambda: file_granular(delete_where),
+        "update_where_files": lambda: file_granular(update_where, {"n_tok": "n_tok + 100"}),
         "delete_where": lambda: delete_where(
             t, where={"lsn": (state["lsn"] - 6, state["lsn"] - 3)}),
         "update_where": lambda: update_where(

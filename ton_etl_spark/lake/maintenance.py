@@ -6,7 +6,17 @@ each partition into a bounded file set (``datalake_daily_sync.py:298-337``,
 old data is considered settled (``:412-630``).  Iceberg analog:
 ``rewrite_data_files`` + ``expire_snapshots``.
 
-Scale notes: a rewrite is a full copy-on-write of the selected buckets —
+One copy-on-write step, ``_rewrite``, is behind every maintenance rewrite
+that keeps the bucket layout (``rewrite_buckets``, ``gc_tombstones``,
+``compact_small_files``, ``rewrite_zorder``, ``delete_where``,
+``update_where``): it reads exactly the given files at one snapshot,
+replaces the buckets they live in, carries those buckets' other files by
+reference, and commits against that same snapshot.  Each operation states
+only three things: which files, which row rule (keep, drop or change a
+row, and so its change feed) and which write order.  ``rebucket`` changes
+the layout and so commits through ``LakeTable._commit`` directly.
+
+Scale notes: a rewrite is a full copy-on-write of the selected files —
 at 100 TB you compact *bucket subsets* on a rolling schedule (the
 ``buckets`` parameter), never the world in one commit; snapshot expiry is
 pure driver-side metadata work plus file deletes.
@@ -28,11 +38,59 @@ from ton_etl_spark.lake.table import (
     INSERT,
     MANIFEST_DIR,
     ROW,
+    DataFile,
     LakeTable,
     Snapshot,
     feed_frame,
     outputs,
 )
+
+# a bucket packs only when it holds at least this many small files —
+# packing one small file into one small file is pure churn
+MIN_PACK_FILES = 2
+
+
+def _scan(table: LakeTable, snap: Snapshot, files: list[DataFile]):
+    """Exactly ``files``, read under ``snap.schema``: an old file NULL-fills
+    a late-added column, like ``read()``."""
+    paths = [os.path.join(table.root, f.path) for f in files]
+    return table.spark.read.schema(snap.schema).parquet(*paths)
+
+
+def _rewrite(
+    table: LakeTable,
+    snap: Snapshot,
+    files: list[DataFile],
+    commit_key: str | None,
+    out=None,
+    new: dict | None = None,
+    sort_exprs: list | None = None,
+    properties_update: dict[str, str] | None = None,
+) -> tuple[bool, list[int]]:
+    """The ONE copy-on-write step: read exactly ``files`` at ``snap``, turn
+    each row into the ``feed_frame`` outputs ``out`` with post-image
+    ``new`` (None: every row is kept and the feed is empty), and replace
+    the buckets the files live in, carrying each bucket's other files
+    into its new manifest by reference.  The commit is anchored on
+    ``snap.version``, so a commit that lands in these buckets after
+    ``snap`` conflicts instead of being overwritten.  ``sort_exprs`` is
+    the write order (None: the declared ``sort_cols``).  Returns
+    ``(applied, replaced buckets)``."""
+    buckets = sorted({f.bucket for f in files})
+    scanned = {f.path for f in files}
+    keep_files: dict[int, list[DataFile]] = {b: [] for b in buckets}
+    for f in snap.files_for(buckets):
+        if f.path not in scanned:
+            keep_files[f.bucket].append(f)
+    df = _scan(table, snap, files)
+    if out is not None:
+        df = feed_frame(df, snap.schema, out, new=new)
+    ok = table.overwrite_buckets(
+        df, buckets, commit_key=commit_key, schema=snap.schema,
+        base_version=snap.version, sort_exprs=sort_exprs, keep_files=keep_files,
+        properties_update=properties_update, feed=out is not None,
+    )
+    return ok, buckets
 
 
 def _kept_or_deleted(keep) -> "F.Column":
@@ -44,26 +102,18 @@ def _kept_or_deleted(keep) -> "F.Column":
 def rewrite_buckets(
     table: LakeTable,
     buckets: list[int] | None = None,
-    predicate=None,
     commit_key: str | None = None,
 ) -> dict:
-    """Copy-on-write rewrite of ``buckets`` (default: all), keeping only
-    rows matching ``predicate`` (default: all rows).  Collapses each bucket
-    back to one file — the small-file compaction half — and applies row GC
-    — the filter half.  The change feed holds the filtered-out rows as
-    deletes (empty for a plain compaction).  Idempotent on
+    """Copy-on-write rewrite of every file of ``buckets`` (default: all),
+    keeping every row: collapses each bucket back to bounded files — the
+    full compaction.  The change feed is empty.  Idempotent on
     ``commit_key``."""
     snap = table.current()
     if commit_key is not None and snap.has_commit_key(commit_key):
         return {"applied": False, "buckets": []}
     if buckets is None:
-        buckets = sorted(snap.manifests.keys())
-    df = table.read(buckets=buckets)
-    if predicate is not None:
-        df = feed_frame(df, snap.schema, _kept_or_deleted(predicate))
-    ok = table.overwrite_buckets(df, buckets, commit_key=commit_key,
-                                 schema=snap.schema, base_version=snap.version,
-                                 feed=predicate is not None)
+        buckets = sorted(snap.manifests)
+    ok, _ = _rewrite(table, snap, snap.files_for(buckets), commit_key)
     return {"applied": ok, "buckets": buckets}
 
 
@@ -73,7 +123,10 @@ def gc_tombstones(
     buckets: list[int] | None = None,
     commit_key: str | None = None,
 ) -> dict:
-    """Drop delete-tombstones whose LSN is at or below ``horizon_lsn``.
+    """Drop delete-tombstones whose LSN is at or below ``horizon_lsn``:
+    ``rewrite_buckets``' files (every file of ``buckets``, default all)
+    with a row rule that drops the expired tombstones, so the change
+    feed holds them as deletes.
 
     Tombstones are retained in storage so stale lower-LSN redeliveries
     cannot resurrect a deleted key (see lake/merge.py).  Once the source's
@@ -82,8 +135,15 @@ def gc_tombstones(
     outranked and are safe to GC.  Calling this with a horizon ahead of the
     redelivery bound re-opens the resurrection window — the caller owns
     that contract."""
+    snap = table.current()
+    if commit_key is not None and snap.has_commit_key(commit_key):
+        return {"applied": False, "buckets": []}
+    if buckets is None:
+        buckets = sorted(snap.manifests)
     keep = ~((F.col(OP_COL) == "d") & (F.col(LSN_COL) <= F.lit(horizon_lsn)))
-    return rewrite_buckets(table, buckets=buckets, predicate=keep, commit_key=commit_key)
+    ok, _ = _rewrite(table, snap, snap.files_for(buckets), commit_key,
+                     out=_kept_or_deleted(keep))
+    return {"applied": ok, "buckets": buckets}
 
 
 def default_small_rows(table: LakeTable, snap: Snapshot) -> int | None:
@@ -100,14 +160,15 @@ def compact_small_files(
     table: LakeTable,
     buckets: list[int] | None = None,
     small_rows: int | None = None,
-    min_input_files: int = 2,
     commit_key: str | None = None,
 ) -> dict:
     """Bin-pack compaction (the Iceberg ``rewrite_data_files`` binpack
-    strategy role): per bucket, coalesce only the files BELOW the size
-    threshold into fresh packed files, leaving well-sized files
-    byte-untouched — they are carried into the new manifest by reference
-    (``overwrite_buckets(keep_files=)``), never opened, never rewritten.
+    strategy role): the rewrite step's files are the small ones — below
+    the size threshold — of each bucket that holds at least
+    ``MIN_PACK_FILES`` of them, and every row is kept.  They are coalesced
+    into fresh packed files, while the bucket's well-sized files are
+    carried into the new manifest by reference, never opened, never
+    rewritten.
 
     This is the write-amplification fix for a streaming ingest loop at
     100 TB: each epoch appends one small file per touched bucket, so after
@@ -118,54 +179,28 @@ def compact_small_files(
     unfiltered (row GC stays ``gc_tombstones``' contract).
 
     ``small_rows``: files with fewer rows are pack candidates (default:
-    half the table's ``target_file_rows``).  ``min_input_files``: a bucket
-    packs only when it has at least this many candidates — packing one
-    small file into one small file is pure churn.  Idempotent on
+    half the table's ``target_file_rows``).  Idempotent on
     ``commit_key``; concurrency follows ``overwrite_buckets`` (bucket-
     granular conflicts, metadata-only rebase when disjoint)."""
     snap = table.current()
     if commit_key is not None and snap.has_commit_key(commit_key):
         return {"applied": False, "buckets": [], "packed_files": 0}
-    if buckets is None:
-        buckets = sorted(snap.manifests)
-    if small_rows is not None:
-        threshold = small_rows
-    else:
-        threshold = default_small_rows(table, snap)
-        if threshold is None:
-            raise ValueError(
-                "compact_small_files needs a threshold: pass small_rows= "
-                "or create the table with target_file_rows (without one "
-                "there is no definition of 'small')"
-            )
-    bset_all = set(buckets)
-    by_bucket: dict[int, list] = {}
-    for f in snap.files:
-        if f.bucket in bset_all:
-            by_bucket.setdefault(f.bucket, []).append(f)
-    keep_files: dict[int, list] = {}
-    small_paths: list[str] = []
-    touched: list[int] = []
-    n_packed = 0
-    for b in buckets:
-        fs = by_bucket.get(b, [])
-        small = [f for f in fs if f.rows < threshold]
-        if len(small) < min_input_files:
-            continue
-        touched.append(b)
-        keep_files[b] = [f for f in fs if f.rows >= threshold]
-        small_paths += [os.path.join(table.root, f.path) for f in small]
-        n_packed += len(small)
-    if not touched:
+    threshold = small_rows if small_rows is not None else default_small_rows(table, snap)
+    if threshold is None:
+        raise ValueError(
+            "compact_small_files needs a threshold: pass small_rows= "
+            "or create the table with target_file_rows (without one "
+            "there is no definition of 'small')"
+        )
+    small: dict[int, list[DataFile]] = {}
+    for f in snap.files_for(buckets):
+        if f.rows < threshold:
+            small.setdefault(f.bucket, []).append(f)
+    files = [f for fs in small.values() if len(fs) >= MIN_PACK_FILES for f in fs]
+    if not files:
         return {"applied": False, "buckets": [], "packed_files": 0}
-    # explicit snapshot schema: old slivers NULL-fill late-added columns,
-    # exactly like read()
-    df = table.spark.read.schema(snap.schema).parquet(*small_paths)
-    ok = table.overwrite_buckets(
-        df, touched, commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, keep_files=keep_files, feed=False,
-    )
-    return {"applied": ok, "buckets": touched, "packed_files": n_packed}
+    ok, touched = _rewrite(table, snap, files, commit_key)
+    return {"applied": ok, "buckets": touched, "packed_files": len(files)}
 
 
 def rolling_maintenance(
@@ -188,7 +223,10 @@ def rolling_maintenance(
     epoch is bounded and amortized instead of a periodic full-table
     rewrite (reference analog: the daily CTAS compaction works one
     partition at a time, ``datalake_daily_sync.py:298-337``).  Over
-    ``every × groups`` epochs every bucket gets compacted once.
+    ``every × groups`` epochs every bucket gets compacted once.  Each
+    strategy below is a file set of the group and a row rule handed to the
+    one rewrite step (``_rewrite``): all files for a collapse, a z-order
+    or a tombstone GC, the small files for a bin-pack.
 
     Returns None on non-maintenance epochs; otherwise the rewrite stats.
     Idempotent per epoch via the ``roll=<epoch>`` commit key (recent-keys
@@ -328,8 +366,6 @@ def rebucket(
 
 def clustering_overlap(
     table: LakeTable,
-    version: int | None = None,
-    buckets: list[int] | None = None,
     files: list | None = None,
     cols: list[str] | None = None,
 ) -> dict:
@@ -349,19 +385,13 @@ def clustering_overlap(
 
     Columns with mixed-type bounds (schema evolution) or no stats report
     null.  Buckets with a single stats-carrying file contribute no pairs.
-    ``buckets`` restricts the metric to one bucket group — how
-    ``rolling_maintenance``'s auto-z-order gate scores just the group it
-    would rewrite this cycle.  ``files`` lets a caller that already
-    loaded the manifest entries (``zorder_needed``) pass them in instead
-    of re-reading every manifest from disk; ``cols`` restricts the
-    scoring to the columns actually consumed.
+    ``files`` (default: every file of the current snapshot) lets a caller
+    that already loaded the manifest entries (``zorder_needed``) pass
+    them in instead of re-reading every manifest from disk; ``cols``
+    restricts the scoring to the columns actually consumed.
     """
     if files is None:
-        snap = table.snapshot(version) if version is not None else table.current()
-        files = snap.files
-        if buckets is not None:
-            bset = set(buckets)
-            files = [f for f in files if f.bucket in bset]
+        files = table.current().files
     seen = {c for f in files if f.stats for c in f.stats}
     cols = sorted(seen if cols is None else (seen & set(cols)))
     out: dict[str, float | None] = {}
@@ -470,32 +500,35 @@ def zorder_needed(
     return False, worst, "well-clustered"
 
 
-def _predicate_scope(table: LakeTable, snap: Snapshot, where: dict,
-                     where_in: dict, file_granular: bool):
-    """The copy-on-write scope of a predicate-scoped DELETE/UPDATE at
-    ``snap``, from ``table.plan``: ``(buckets, src, keep_files, matched)``,
-    or None when no file may match.  ``buckets`` hold at least one file
-    the plan kept; ``matched`` is the plan's residual with NULL => False.
-    Bucket-granular, ``src`` reads every file of the buckets.  With
-    ``file_granular`` it reads only the plan's files, and the buckets'
-    other files ride into the new manifests by reference (``keep_files``)
-    — exact by the skipping argument: a file the plan skipped holds no
-    matching row, so keeping it whole equals filtering it."""
-    plan = table.plan(version=snap.version, where=where, where_in=where_in)
-    buckets = sorted({f.bucket for f in plan.files})
-    if not buckets:
+def _predicate_files(table: LakeTable, snap: Snapshot, where: dict, where_in: dict,
+                     file_granular: bool, commit_key: str | None, op: str):
+    """The rewrite files of a predicate-scoped DELETE/UPDATE at ``snap``,
+    from ``table.plan``: ``(files, matched)``, or None when ``commit_key``
+    is already applied or no file may match.  ``matched`` is the plan's
+    residual with NULL => False.  Bucket-granular, ``files`` is every
+    file of the buckets holding a file the plan kept; with
+    ``file_granular`` it is the plan's files only, and the rewrite step
+    carries the buckets' other files by reference — exact by the skipping
+    argument: a file the plan skipped holds no matching row, so keeping
+    it whole equals filtering it."""
+    if any(lo is None and hi is None for lo, hi in where.values()):
+        raise ValueError(
+            f"{op} needs bounded ranges; a (None, None) range would also "
+            "match NULL rows, contradicting the NULL-kept contract"
+        )
+    if not where and not where_in:
+        raise ValueError(
+            f"{op} needs at least one bounded range or a where_in probe list"
+        )
+    if commit_key is not None and snap.has_commit_key(commit_key):
         return None
-    matched = F.coalesce(plan.residual, F.lit(False))
+    plan = table.plan(version=snap.version, where=where, where_in=where_in)
+    if not plan.files:
+        return None
+    files = plan.files
     if not file_granular:
-        return buckets, table.read(buckets=buckets, version=snap.version), None, matched
-    hit = {f.path for f in plan.files}
-    keep_files: dict[int, list] = {b: [] for b in buckets}
-    for f in snap.files_for(buckets):
-        if f.path not in hit:
-            keep_files[f.bucket].append(f)
-    paths = [os.path.join(table.root, f.path) for f in plan.files]
-    src = table.spark.read.schema(snap.schema).parquet(*paths)
-    return buckets, src, keep_files, matched
+        files = snap.files_for(sorted({f.bucket for f in files}))
+    return files, F.coalesce(plan.residual, F.lit(False))
 
 
 def delete_where(
@@ -554,35 +587,17 @@ def delete_where(
     exclude every value.  A NULL or unencodable probe value keeps that
     column unprunable but never breaks exactness (NULL never matches
     ``isin`` — NULL rows are always kept, same as ranges)."""
-    where = where or {}
-    where_in = where_in or {}
-    if any(lo is None and hi is None for lo, hi in where.values()):
-        raise ValueError(
-            "delete_where needs at least one bounded range; a (None, None) "
-            "range would also delete NULL rows, contradicting the NULL-kept "
-            "contract — use rewrite_buckets(predicate=...) for a full wipe"
-        )
-    if not where and not where_in:
-        raise ValueError(
-            "delete_where needs at least one bounded range or a where_in "
-            "probe list"
-        )
     snap = table.current()
-    if commit_key is not None and snap.has_commit_key(commit_key):
-        return {"applied": False, "buckets": [], "deleted_rows": 0}
-    scope = _predicate_scope(table, snap, where, where_in, file_granular)
+    scope = _predicate_files(table, snap, where or {}, where_in or {},
+                             file_granular, commit_key, "delete_where")
     if scope is None:
         return {"applied": False, "buckets": [], "deleted_rows": 0}
-    buckets, src, keep_files, matched = scope
+    files, matched = scope
     keep = ~matched  # NULL pred col => kept
     if protect_tombstones and OP_COL in snap.schema.fieldNames():
         keep = keep | F.coalesce(F.col(OP_COL) == "d", F.lit(False))
+    ok, buckets = _rewrite(table, snap, files, commit_key, out=_kept_or_deleted(keep))
     before = sum(f.rows for f in snap.files_for(buckets))
-    ok = table.overwrite_buckets(
-        feed_frame(src, snap.schema, _kept_or_deleted(keep)), buckets,
-        commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, keep_files=keep_files, feed=True,
-    )
     # post-commit re-read: exact unless another writer lands in these
     # buckets between our commit and this read (our own commit already
     # conflicts/rebases any interleaved touch of them)
@@ -633,13 +648,10 @@ def update_where(
     Returns ``{"applied", "buckets", "updated_rows"}`` — ``updated_rows``
     is the exact matched count (one extra scan of the touched slice;
     compliance updates want the audited number)."""
-    where = where or {}
-    where_in = where_in or {}
     if not set_exprs:
         raise ValueError("update_where needs at least one set column")
     snap = table.current()
-    field_types = {f.name: f.dataType for f in snap.schema.fields}
-    unknown = sorted(set(set_exprs) - set(field_types))
+    unknown = sorted(set(set_exprs) - set(snap.schema.fieldNames()))
     if unknown:
         raise ValueError(f"set columns not in schema: {unknown}")
     bad_keys = sorted(set(set_exprs) & set(snap.key_cols))
@@ -648,23 +660,12 @@ def update_where(
             f"cannot set key columns {bad_keys}: the updated row would "
             "hash to a different bucket — that is a delete+insert"
         )
-    if any(lo is None and hi is None for lo, hi in where.values()):
-        raise ValueError(
-            "update_where needs bounded ranges; a (None, None) range would "
-            "also update NULL rows, contradicting the NULL-kept contract"
-        )
-    if not where and not where_in:
-        raise ValueError(
-            "update_where needs at least one bounded range or a where_in "
-            "probe list — for a full-table rewrite use rewrite_buckets"
-        )
-    if commit_key is not None and snap.has_commit_key(commit_key):
-        return {"applied": False, "buckets": [], "updated_rows": 0}
-    scope = _predicate_scope(table, snap, where, where_in, file_granular)
+    scope = _predicate_files(table, snap, where or {}, where_in or {},
+                             file_granular, commit_key, "update_where")
     if scope is None:
         return {"applied": False, "buckets": [], "updated_rows": 0}
-    buckets, src, keep_files, matched = scope  # NULL pred col => untouched
-    updated_rows = src.where(matched).count()
+    files, matched = scope  # NULL pred col => untouched
+    updated_rows = _scan(table, snap, files).where(matched).count()
     new = {}
     for f in snap.schema.fields:
         if f.name in set_exprs:
@@ -677,11 +678,7 @@ def update_where(
         operator.or_, [~new[c].eqNullSafe(F.col(c)) for c in new]
     )
     out = F.when(changed, outputs(ROW, INSERT, DELETE)).otherwise(outputs(ROW))
-    ok = table.overwrite_buckets(
-        feed_frame(src, snap.schema, out, new=new),
-        buckets, commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, keep_files=keep_files, feed=True,
-    )
+    ok, buckets = _rewrite(table, snap, files, commit_key, out=out, new=new)
     return {"applied": ok, "buckets": buckets, "updated_rows": updated_rows}
 
 
@@ -820,7 +817,8 @@ def rewrite_zorder(
     ``sort_cols`` clusters only its leading column (Iceberg/Delta
     ``rewrite_data_files(strategy => 'zorder')`` role).
 
-    Runs on the existing copy-on-write path: same CAS commit, same rebase
+    Runs on the one rewrite step: every file of ``buckets`` (default all),
+    every row kept, written in z-order — same CAS commit, same rebase
     rules, same bucket layout (z-ordering changes clustering WITHIN
     buckets, never row→bucket routing).  The commit PROMOTES ``cols``
     into the ``stats_cols`` property and writes its files under it, so
@@ -839,15 +837,14 @@ def rewrite_zorder(
     if commit_key is not None and snap.has_commit_key(commit_key):
         return {"applied": False, "buckets": []}
     if buckets is None:
-        buckets = sorted(snap.manifests.keys())
-    df = table.read(buckets=buckets)
+        buckets = sorted(snap.manifests)
+    files = snap.files_for(buckets)
+    df = _scan(table, snap, files)  # the quantile pass reads what is rewritten
     bounds = zorder_boundaries(df, cols, bits=bits)
-    z = zorder_value(df, bounds, bits=bits)
     declared = LakeTable._prop_cols(snap.properties, "stats_cols")
     promoted = list(dict.fromkeys(declared + list(cols)))
-    ok = table.overwrite_buckets(
-        df, buckets, commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, sort_exprs=[z], feed=False,
+    ok, _ = _rewrite(
+        table, snap, files, commit_key, sort_exprs=[zorder_value(df, bounds, bits=bits)],
         properties_update=(
             {"stats_cols": ",".join(promoted)} if promoted != declared else None
         ),
