@@ -201,6 +201,68 @@ def test_rebuild_corrects_cursorless_prepopulated_mart(spark, tmp_path):
     assert _mart_rows(mart) == [("web", 2, 3)]  # NOT doubled
 
 
+def test_rebuild_reads_the_source_at_its_cursor(spark, tmp_path):
+    """``rebuild_agg_mart(to_version=v)`` aggregates the source AT ``v``,
+    the version it records as the cursor: the next refresh ``(v, head]``
+    then counts each later change once, not twice."""
+    from ton_etl_spark.lake.incremental import rebuild_agg_mart
+
+    t = make_sequences_table(spark, str(tmp_path / "src"), n_buckets=4)
+    mart = make_agg_mart(spark, str(tmp_path / "mart"), group_cols=["source"])
+    apply_cdc_batch(t, spark.createDataFrame(
+        [("k1", "c", 1, 1, [1, 2], 2, "web")], schema=CDC_EVENT_SCHEMA), epoch=0)
+    v1 = t.current_version()
+    apply_cdc_batch(t, spark.createDataFrame(
+        [("k2", "c", 2, 2, [3], 1, "web")], schema=CDC_EVENT_SCHEMA), epoch=1)
+    head = t.current_version()
+    assert rebuild_agg_mart(mart, t, to_version=v1)["applied"]
+    assert _mart_rows(mart) == [("web", 1, 2)]
+    assert refresh_agg_mart(mart, t, v1, head)["applied"]
+    assert _mart_rows(mart) == _full_rows(t) == [("web", 2, 3)]
+
+
+def test_rebuild_rewrites_only_the_groups_that_moved(spark, tmp_path):
+    """A rebuild folds "recompute minus stored rows": stored groups the
+    source no longer has are deleted (a ``(g, 0, 0)`` row too, though its
+    sums are zero), a bucket holding only correct groups keeps its
+    manifest, and a rebuild over a correct mart commits only its cursor."""
+    from ton_etl_spark.lake.incremental import last_synced_version, rebuild_agg_mart
+    from ton_etl_spark.lake.table import bucket_of
+
+    t = make_sequences_table(spark, str(tmp_path / "src"), n_buckets=4)
+    mart = make_agg_mart(spark, str(tmp_path / "mart"), group_cols=["source"])
+    apply_cdc_batch(t, spark.createDataFrame(
+        [("k1", "c", 1, 1, [1, 2], 2, "web")], schema=CDC_EVENT_SCHEMA), epoch=0)
+    names = ["web", "books", "code", "news", "wiki", "forum", "papers", "chat"]
+    bucket = dict(
+        spark.createDataFrame([(n,) for n in names], "source string")
+        .select("source", bucket_of(["source"], 4)).collect()
+    )
+    gone, empty = [n for n in names if bucket[n] != bucket["web"]][:2]
+    schema = mart.current().schema
+    mart.append(spark.createDataFrame(
+        [("web", 1, 2), (gone, 5, 9), (empty, 0, 0)], schema), commit_key="bootstrap")
+    before = mart.current()
+
+    res = rebuild_agg_mart(mart, t)
+    assert res["applied"] and res["buckets"] == sorted({bucket[gone], bucket[empty]})
+    assert _mart_rows(mart) == _full_rows(t) == [("web", 1, 2)]
+    assert mart.current().manifests[bucket["web"]] == before.manifests[bucket["web"]]
+    feed = mart.changes(before.version, mart.current_version()).collect()
+    assert sorted((r["source"], r["_change_type"]) for r in feed) == sorted(
+        [(gone, "delete"), (empty, "delete")]
+    )
+
+    # nothing moved: the rebuild commits its cursor and no data file
+    apply_cdc_batch(t, spark.createDataFrame(
+        [("k1", "c", 1, 1, [1, 2], 2, "web")], schema=CDC_EVENT_SCHEMA), epoch=1)
+    settled = mart.current()
+    res = rebuild_agg_mart(mart, t)
+    assert res["applied"] and res["buckets"] == []
+    assert last_synced_version(mart) == t.current_version()
+    assert mart.current().manifests == settled.manifests
+
+
 def test_streaming_mart_maintenance_crash_safe(spark, tmp_path, monkeypatch):
     """The streaming materialized view: a mart maintained inside the CDC
     stream loop, with a crash injected BETWEEN a merge and its mart

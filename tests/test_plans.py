@@ -11,8 +11,7 @@ from pyspark.sql import functions as F
 
 from ton_etl_spark.cdc.generator import generate_cdc_log
 from ton_etl_spark.functions.tokens import with_token_validation
-from ton_etl_spark.lake.merge import _ord_expr
-from ton_etl_spark.lake.table import LakeTable, _conform, _merge_schemas
+from ton_etl_spark.lake.table import LakeTable
 from ton_etl_spark.cdc.apply import make_sequences_table
 from ton_etl_spark.plans.queries import QUERIES, load_table
 
@@ -29,27 +28,36 @@ def _optimized_scan_line(df) -> str:
     )
 
 
-def test_merge_is_single_exchange(spark, tmp_path):
-    """The LWW merge must shuffle the payload exactly once, hash-partitioned
-    on the key with numPartitions == n_buckets (lake/merge.py design)."""
+def test_merge_is_single_exchange(spark, tmp_path, monkeypatch):
+    """The frame ``merge_lww`` commits must shuffle the payload exactly
+    once, hash-partitioned on the key into n_buckets partitions even when
+    the caller's session has a different ``shuffle.partitions``
+    (lake/merge.py design).  ``REPARTITION_BY_COL`` locks the conf-pinned
+    child session: a ``repartition(n_buckets, *keys)`` in the caller's
+    session plans ``REPARTITION_BY_NUM``, which AQE cannot coalesce."""
+    from ton_etl_spark.lake.merge import merge_lww
+
     table = make_sequences_table(spark, str(tmp_path / "t"), n_buckets=16)
-    snap = table.current()
-    batch = with_token_validation(generate_cdc_log(spark, 20_000, seed=13))
-    ts = _merge_schemas(snap.schema, batch.schema)
-    allrows = _conform(table.read(), ts).unionByName(_conform(batch, ts))
-    payload = F.struct(*[F.col(f.name) for f in ts.fields])
+    frames = []
+    real = LakeTable.overwrite_buckets
+
+    def spy(self, df, *args, **kwargs):
+        frames.append(df)
+        return real(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "overwrite_buckets", spy)
+    batch = with_token_validation(generate_cdc_log(spark, 2_000, seed=13))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        winners = (
-            allrows.groupBy("doc_id").agg(F.max_by(payload, _ord_expr()).alias("__win"))
-        ).select("__win.*")
-        plan = _executed_plan(winners)
+        assert merge_lww(table, batch, commit_key="epoch=0")["applied"]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    exchanges = re.findall(r"Exchange (\w+)", plan)
+    assert len(frames) == 1
+    plan = _executed_plan(frames[0])
+    exchanges = re.findall(r"Exchange (\w+.*)", plan)
     assert len(exchanges) == 1, plan
-    assert re.search(r"Exchange hashpartitioning\(doc_id#\d+, 16\)", plan), plan
+    assert re.match(r"hashpartitioning\(doc_id#\d+, 16\), REPARTITION_BY_COL", exchanges[0]), plan
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):

@@ -121,7 +121,6 @@ def apply_cdc_batch(
     batch: DataFrame,
     epoch: int,
     lineage: LakeTable | None = None,
-    validate: bool | str = "auto",
 ) -> dict:
     """Apply one delivery micro-batch: validate tokens (vectorized pandas
     UDF), record per-partition lineage, LWW-reduce, MERGE.  Idempotent on
@@ -137,7 +136,7 @@ def apply_cdc_batch(
     # persists its micro-batches anyway — there the win is progress-counter
     # exactness and (envelope path) from_json decode reuse.
     # bucket probe on the RAW batch: a column-pruned scan of the key only
-    # (the validation mapInArrow below would otherwise run twice — once for
+    # (the validation UDF below would otherwise run twice — once for
     # the probe, once for the merge; measured ~2× epoch cost)
     buckets = table.buckets_of(batch, table.current())
 
@@ -162,19 +161,10 @@ def apply_cdc_batch(
         )
         lineage.append(lin, commit_key=commit_key)
 
-    # validate='auto' (default): validate token payloads, pass through
-    # schemas without token columns (heterogeneous multi-table sinks do
-    # their own domain validation, like the reference's per-table parsers).
-    # validate=True is a hard requirement: a sequences batch that LOST its
-    # token columns to a bad upstream projection must fail loudly, not
-    # merge unvalidated.
-    has_token_cols = "tokens" in batch.columns and "n_tok" in batch.columns
-    if validate is True and not has_token_cols:
-        raise ValueError(
-            "validate=True but batch lacks tokens/n_tok columns; pass "
-            "validate='auto' for heterogeneous payloads"
-        )
-    if validate and has_token_cols:
+    # a batch carrying token payloads is validated; other schemas pass
+    # through (heterogeneous multi-table sinks do their own domain
+    # validation, like the reference's per-table parsers)
+    if "tokens" in batch.columns and "n_tok" in batch.columns:
         batch = with_token_validation(batch)
 
     stats = merge_lww(table, batch, commit_key=commit_key, buckets=buckets)

@@ -147,27 +147,14 @@ def _sink_epoch(
 ) -> None:
     """One sink's epoch: merge, then mart refresh, then rolling
     maintenance, then export — each step sees the commits of the ones
-    before it."""
+    before it.  The mart is folded forward from its own cursor
+    (``last_synced_version``) to the merge's head; a mart with no cursor
+    is rebuilt by the same call."""
     apply_cdc_batch(table, events, epoch=batch_id, lineage=lineage)
     if mart is not None:
-        from ton_etl_spark.lake.incremental import (
-            last_synced_version,
-            rebuild_agg_mart,
-            refresh_agg_mart,
-        )
+        from ton_etl_spark.lake.incremental import last_synced_version, refresh_agg_mart
 
-        frm = last_synced_version(mart)
-        if frm is None:
-            # no cursor: the mart may hold pre-existing content (manual
-            # bootstrap, or the cursor key aged out of the recent-keys
-            # window) — a delta from version 0 would double-count it, so
-            # bootstrap with the full recompute, which is correct from
-            # ANY prior state
-            rebuild_agg_mart(mart, table, to_version=table.current_version())
-        else:
-            refresh_agg_mart(
-                mart, table, from_version=frm, to_version=table.current_version()
-            )
+        refresh_agg_mart(mart, table, last_synced_version(mart), table.current_version())
     _run_rolling_maintenance(
         table, lineage, events, batch_id,
         maintenance_every, maintenance_groups, tombstone_retain_lsn,

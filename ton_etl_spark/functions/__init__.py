@@ -1,9 +1,8 @@
-from ton_etl_spark.functions.tokens import validate_tokens_udf, with_token_validation
+from ton_etl_spark.functions.tokens import with_token_validation
 from ton_etl_spark.functions.debezium import decode_debezium_decimal_udf
 from ton_etl_spark.functions.emulator import MissingLibraryError, run_get_method
 
 __all__ = [
-    "validate_tokens_udf",
     "with_token_validation",
     "decode_debezium_decimal_udf",
     "MissingLibraryError",

@@ -25,98 +25,6 @@ from pyspark.sql import types as T
 
 DEFAULT_VOCAB = 32768
 
-_VALID_SCHEMA = T.StructType(
-    [
-        T.StructField("n_tok_actual", T.IntegerType(), True),
-        T.StructField("len_ok", T.BooleanType(), False),
-        T.StructField("vocab_ok", T.BooleanType(), False),
-    ]
-)
-
-
-def validate_tokens_udf(vocab_size: int = DEFAULT_VOCAB):
-    """pandas UDF: (tokens, n_tok) -> struct(n_tok_actual, len_ok, vocab_ok).
-
-    Token arrays arrive as Arrow lists; length and range checks run over the
-    flattened values array (numpy), never per Python row.
-    """
-
-    @F.pandas_udf(_VALID_SCHEMA)
-    def _validate(tokens: pd.Series, n_tok: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        lens = tokens.map(lambda a: -1 if a is None else len(a))  # cheap; list accessor
-        lens = lens.astype("int64")
-        # flatten once for the vocab check (vectorized over the whole batch)
-        vocab_ok = np.ones(len(tokens), dtype=bool)
-        notnull = lens.values >= 0
-        if notnull.any():
-            arrs = tokens[notnull]
-            flat = np.concatenate([np.asarray(a, dtype=np.int64) for a in arrs]) if len(arrs) else np.array([], dtype=np.int64)
-            if flat.size:
-                bad_mask = (flat < 0) | (flat >= vocab_size)
-                if bad_mask.any():
-                    # map bad flat positions back to rows via repeat lengths
-                    row_lens = lens.values[notnull]
-                    row_ids = np.repeat(np.arange(len(row_lens)), row_lens)
-                    bad_rows = np.unique(row_ids[bad_mask])
-                    idx = np.flatnonzero(notnull)[bad_rows]
-                    vocab_ok[idx] = False
-        declared = n_tok.fillna(-1).astype("int64")
-        len_ok = (lens.values == declared.values) | ((lens.values == -1) & (declared.values == -1))
-        return pd.DataFrame(
-            {
-                "n_tok_actual": pd.array(
-                    np.where(lens.values >= 0, lens.values, None), dtype="Int32"
-                ),
-                "len_ok": len_ok,
-                "vocab_ok": vocab_ok,
-            }
-        )
-
-    return _validate
-
-
-def _make_valid_mask(vocab_size: int):
-    """Build the Arrow-kernel validity-mask function: len_ok & vocab_ok.
-
-    Fast path: one ``min_max`` over the flattened token buffer decides
-    vocab_ok for the whole batch; the per-row scatter only runs when the
-    batch actually contains an out-of-vocab value (anomalies are rare by
-    construction, like the reference's NonCriticalParserError rows).
-
-    Defined as a closure so cloudpickle ships it by value — Spark's Python
-    workers do not have this package on their path.
-    """
-
-    def _valid_mask(batch):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tokens = batch.column(batch.schema.get_field_index("tokens"))
-        n_tok = batch.column(batch.schema.get_field_index("n_tok"))
-        lengths = pc.list_value_length(tokens)
-        both_null = pc.and_(pc.is_null(lengths), pc.is_null(n_tok))
-        len_ok = pc.fill_null(pc.equal(lengths, pc.cast(n_tok, lengths.type)), False)
-        len_ok = pc.or_(len_ok, both_null)
-
-        flat = pc.list_flatten(tokens)
-        if len(flat) == 0:
-            return len_ok
-        mm = pc.min_max(flat).as_py()
-        if mm["min"] is not None and mm["min"] >= 0 and mm["max"] < vocab_size:
-            return len_ok  # whole batch in-vocab
-        # slow path: map bad flat positions back to their rows
-        vals = flat.to_numpy(zero_copy_only=False)
-        bad = (vals < 0) | (vals >= vocab_size)
-        parent = pc.list_parent_indices(tokens).to_numpy(zero_copy_only=False)
-        vocab_ok = np.ones(batch.num_rows, dtype=bool)
-        vocab_ok[np.unique(parent[bad])] = False
-        return pc.and_(len_ok, pa.array(vocab_ok))
-
-    return _valid_mask
-
 
 def _valid_arrays(ta, nt, vocab_size: int):
     """Shared Arrow-kernel validity check over (tokens: ListArray,
@@ -287,41 +195,3 @@ def explode_token_windows(
             )
 
     return slim.mapInArrow(_convert, schema=out_schema)
-
-
-def with_token_validation_arrow(
-    df: DataFrame, vocab_size: int = DEFAULT_VOCAB, strict: bool = True
-) -> DataFrame:
-    """Whole-row ``mapInArrow`` variant of :func:`with_token_validation`.
-
-    Kept for payload transforms that must REWRITE the token arrays (the
-    BOC-parse analog, where output columns differ from input) — for pure
-    validation the scalar-UDF form above is strictly better.
-    """
-    valid_mask = _make_valid_mask(vocab_size)
-
-    if strict:
-        out_schema = df.schema
-
-        def _filter(batches):
-            for b in batches:
-                yield b.filter(valid_mask(b))
-
-        return df.mapInArrow(_filter, schema=out_schema)
-
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("valid", T.BooleanType(), False)]
-    )
-
-    def _flag(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            mask = valid_mask(b)
-            arrays = [b.column(i) for i in range(b.num_columns)] + [mask]
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                schema=pa.schema(list(b.schema) + [pa.field("valid", pa.bool_(), False)]),
-            )
-
-    return df.mapInArrow(_flag, schema=out_schema)

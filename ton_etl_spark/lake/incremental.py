@@ -13,6 +13,13 @@ inserts, -1 for deletes — so updates and deletes maintain the mart
 exactly, not just append-only growth.  This is aggregation straight off
 the change stream (Event Trend Aggregation's shape, SIGMOD 2019).
 
+Every mart commit goes through one fold step, ``_fold``: a caller states
+only its per-group signed delta — ``refresh_agg_mart`` the interval's
+changelog, ``rebuild_agg_mart`` the full recompute minus the stored rows —
+and the fold rewrites the touched mart buckets under one feed rule: a
+group with no delta keeps its row, a group that moved has its old row
+deleted and its new row inserted while its count stays above 0.
+
 Scale shape: one refresh costs O(changed rows) on the source side (the
 feed holds only the rows the interval's commits changed) and O(touched
 mart buckets) on the mart side (the mart is itself a LakeTable bucketed by
@@ -45,6 +52,7 @@ from ton_etl_spark.lake.table import (
     INSERT,
     ROW,
     LakeTable,
+    Snapshot,
     feed_frame,
     outputs,
 )
@@ -72,13 +80,22 @@ def make_agg_mart(
     )
 
 
+def _sums(rows: DataFrame, group_cols: list[str], sign=1) -> DataFrame:
+    """Per group of ``rows``: the row count ``d_docs`` and the token sum
+    ``d_tok`` (a NULL ``n_tok`` counts 0), each row weighted by ``sign``
+    (a number or a column)."""
+    sign = F.lit(sign)
+    return rows.groupBy(*group_cols).agg(
+        F.sum(sign).cast("long").alias("d_docs"),
+        F.sum(sign * F.coalesce(F.col("n_tok").cast("long"), F.lit(0))).alias("d_tok"),
+    )
+
+
 def recompute_agg_mart(source: LakeTable, group_cols: list[str]) -> DataFrame:
     """The full-recompute twin used to verify incremental maintenance:
     aggregate the source's LIVE state (tombstones excluded) from scratch."""
-    live = live_state(source.read())
-    return live.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.coalesce(F.col("n_tok").cast("long"), F.lit(0))).alias("n_tok_sum"),
+    return _sums(live_state(source.read()), group_cols).toDF(
+        *group_cols, "n_docs", "n_tok_sum"
     )
 
 
@@ -99,83 +116,105 @@ def last_synced_version(mart: LakeTable) -> int | None:
     return best
 
 
-def rebuild_agg_mart(mart: LakeTable, source: LakeTable, to_version: int | None = None) -> dict:
-    """Full recompute of the mart from the source's LIVE state, replacing
-    every mart bucket, and setting the refresh cursor to ``to_version``
-    (commit key ``martsync=<v>-<v>``).  This is the safe bootstrap AND the
-    fallback when an incremental interval can no longer be read (a
-    snapshot of it was expired): correct from any prior mart content, at
-    full-recompute cost.  The commit's feed deletes each old row that
-    differs from the recompute and inserts its replacement."""
-    to_version = to_version if to_version is not None else source.current_version()
-    commit_key = f"martsync={to_version}-{to_version}"
-    if mart.has_commit(commit_key):
-        return {"applied": False, "from": to_version, "to": to_version, "rebuild": True}
-    msnap = mart.current()
-    new = recompute_agg_mart(source, msnap.key_cols)
-    old = _prefixed(mart.read(), msnap.schema)
-    names = msnap.schema.fieldNames()
-    # feed: a group whose row differs (or exists on one side only) is a
-    # delete of the old row plus an insert of the new one
-    same = functools.reduce(
-        operator.and_, [F.col(_OLD + c).eqNullSafe(F.col(c)) for c in names]
-    )
-    applied = mart.overwrite_buckets(
-        _group_feed(
-            old.join(new, _on_groups(old, new, msnap.key_cols), "full"),
-            msnap.schema, unchanged=same, has_new=F.col("n_docs").isNotNull(),
-            new={c: F.col(c) for c in names},
-        ),
-        buckets=list(range(msnap.n_buckets)),
-        commit_key=commit_key,
-        schema=msnap.schema,
-        base_version=msnap.version,
-        feed=True,
-    )
-    return {"applied": applied, "from": to_version, "to": to_version, "rebuild": True}
-
-
-# prefix of the old mart row's columns next to the new values
+# prefix of the stored mart row's columns next to the delta's
 _OLD = "__old_"
 
 
-def _prefixed(df: DataFrame, schema: T.StructType) -> DataFrame:
-    return df.select(*[F.col(c).alias(_OLD + c) for c in schema.fieldNames()])
+def _fold(
+    mart: LakeTable, msnap: Snapshot, delta: DataFrame, commit_key: str
+) -> tuple[bool, list[int]]:
+    """The mart's one commit: fold ``delta`` (group columns plus signed
+    ``d_docs``/``d_tok``; a row marks its group as moved) into the stored
+    rows of the buckets it touches, read at ``msnap``.
+
+    One feed rule: a group with no delta row keeps its row; a moved
+    group's old row (when there was one) is deleted, and its new row is
+    written and inserted while its count stays above 0.  The join is
+    NULL-safe on the group key: a NULL group value (nullable in the CDC
+    schema) must match its own row, or the mart accumulates duplicate
+    NULL-group rows.  A delta touching no bucket records only
+    ``commit_key``.  Returns ``(applied, touched buckets)``."""
+    names = msnap.schema.fieldNames()
+    # the delta is consumed twice — the bucket probe, then the join — so
+    # it is cached for the fold; only the ≤ n_buckets touched bucket ids
+    # reach the driver (the double-execution trap the CDC bucket probe
+    # documents in cdc/apply.py)
+    delta = delta.persist()
+    try:
+        buckets = sorted(mart.buckets_of(delta, msnap))
+        if not buckets:
+            mart.append(mart.spark.createDataFrame([], msnap.schema), commit_key=commit_key)
+            return True, []
+        stored = mart.read(buckets=buckets, version=msnap.version).select(
+            *[F.col(c).alias(_OLD + c) for c in names]
+        )
+        old = {c: F.col(_OLD + c) for c in names}
+        on = functools.reduce(
+            operator.and_, [old[c].eqNullSafe(delta[c]) for c in msnap.key_cols]
+        )
+        n_docs = F.coalesce(old["n_docs"], F.lit(0)) + F.coalesce(delta["d_docs"], F.lit(0))
+        n_tok = F.coalesce(old["n_tok_sum"], F.lit(0)) + F.coalesce(delta["d_tok"], F.lit(0))
+        out = F.when(delta["d_docs"].isNull(), outputs(ROW)).otherwise(F.concat(
+            F.when(n_docs > 0, outputs(ROW, INSERT)).otherwise(outputs()),
+            F.when(old["n_docs"].isNotNull(), outputs(DELETE)).otherwise(outputs()),
+        ))
+        new = {c: F.coalesce(old[c], delta[c]) for c in msnap.key_cols}
+        applied = mart.overwrite_buckets(
+            feed_frame(
+                stored.join(delta, on, "full"), msnap.schema, out,
+                new={**new, "n_docs": n_docs.cast("long"), "n_tok_sum": n_tok.cast("long")},
+                old=old,
+            ),
+            buckets, commit_key=commit_key, schema=msnap.schema,
+            base_version=msnap.version, feed=True,
+        )
+    finally:
+        delta.unpersist()
+    return applied, buckets
 
 
-def _on_groups(old: DataFrame, other: DataFrame, group_cols: list[str]):
-    """Null-SAFE join condition on the group key: a NULL group value
-    (nullable in the CDC schema) must match its own row, or the mart
-    accumulates duplicate NULL-group rows and diverges from the full
-    recompute."""
-    return functools.reduce(
-        operator.and_, [old[_OLD + c].eqNullSafe(other[c]) for c in group_cols]
+def rebuild_agg_mart(mart: LakeTable, source: LakeTable, to_version: int | None = None) -> dict:
+    """Full recompute of the mart from the source's LIVE state at
+    ``to_version`` (default: the head), setting the refresh cursor there
+    (commit key ``martsync=<v>-<v>``).  This is the safe bootstrap AND the
+    fallback when an incremental interval can no longer be read (a
+    snapshot of it was expired): correct from any prior mart content, at
+    full-recompute cost on the source side.
+
+    The fold's delta is "recompute minus stored rows", so only the groups
+    that moved are rewritten: a group on one side only is kept even when
+    its sums are zero (a stored ``(g, 0, 0)`` row must still be deleted),
+    and a rebuild over a mart that is already correct commits only its
+    cursor."""
+    to_version = to_version if to_version is not None else source.current_version()
+    res = {"applied": False, "from": to_version, "to": to_version, "rebuild": True}
+    commit_key = f"martsync={to_version}-{to_version}"
+    if mart.has_commit(commit_key):
+        return res
+    msnap = mart.current()
+    group_cols = msnap.key_cols
+    stored = mart.read(version=msnap.version).select(
+        *group_cols, (-F.col("n_docs")).alias("d_docs"), (-F.col("n_tok_sum")).alias("d_tok")
     )
-
-
-def _group_feed(
-    joined: DataFrame, schema: T.StructType, unchanged, has_new, new: dict
-) -> DataFrame:
-    """The mart commit's ``feed_frame``: an unchanged group's old row stays;
-    a changed group's old row (when there was one) is deleted and its new
-    row (when ``has_new``) is written and inserted."""
-    has_old = F.col(_OLD + "n_docs").isNotNull()
-    out = F.when(unchanged, outputs(ROW)).otherwise(F.concat(
-        F.when(has_new, outputs(ROW, INSERT)).otherwise(outputs()),
-        F.when(has_old, outputs(DELETE)).otherwise(outputs()),
-    ))
-    old = {c: F.col(_OLD + c) for c in schema.fieldNames()}
-    return feed_frame(
-        joined, schema, out,
-        new={c: F.when(unchanged, old[c]).otherwise(e) for c, e in new.items()},
-        old=old,
+    delta = (
+        _sums(live_state(source.read(version=to_version)), group_cols)
+        .unionByName(stored)
+        .groupBy(*group_cols)
+        .agg(
+            F.sum("d_docs").alias("d_docs"), F.sum("d_tok").alias("d_tok"),
+            F.count(F.lit(1)).alias("__sides"),
+        )
+        .where((F.col("d_docs") != 0) | (F.col("d_tok") != 0) | (F.col("__sides") == 1))
+        .drop("__sides")
     )
+    res["applied"], res["buckets"] = _fold(mart, msnap, delta, commit_key)
+    return res
 
 
 def refresh_agg_mart(
     mart: LakeTable,
     source: LakeTable,
-    from_version: int,
+    from_version: int | None,
     to_version: int | None = None,
     allow_rebuild: bool = True,
 ) -> dict:
@@ -188,17 +227,18 @@ def refresh_agg_mart(
        delete+insert pair, so signed (+1/-1) aggregation computes the
        exact per-group delta, including retractions from deletes and
        token-count changes from updates.
-    2. Only mart buckets containing affected groups are read (driver-side
-       bucket-id probe, ≤ n_buckets ints — same pattern as the CDC merge's
-       bucket probe); unaffected groups in those buckets ride along
-       unchanged through the copy-on-write, and the commit records the old
-       and new row of each group that moved as its own change feed.
-    3. Groups whose count reaches zero are dropped from the mart.
-    4. The commit key ``martsync=<from>-<to>`` makes a re-run of the same
+    2. ``_fold`` reads only the mart buckets containing affected groups
+       and rewrites them; unaffected groups in those buckets ride along
+       unchanged, and groups whose count reaches zero leave the mart.
+    3. The commit key ``martsync=<from>-<to>`` makes a re-run of the same
        interval a no-op (verbatim dedup in the recent-keys window).
 
-    An interval whose snapshots were expired (or written before feeds
-    existed) cannot be read from feeds; it falls back to ``rebuild_agg_mart`` (``allow_rebuild``) or raises
+    ``from_version=None`` (a mart with no cursor: never refreshed, a
+    manual bootstrap, or the cursor key aged out of the recent-keys
+    window) rebuilds: such a mart may hold rows that a delta from version
+    0 would double.  An interval whose snapshots were expired (or written
+    before feeds existed) cannot be read from feeds; it falls back to
+    ``rebuild_agg_mart`` (``allow_rebuild``) or raises
     ``FileNotFoundError``.
 
     The caller owns interval bookkeeping (apply intervals in order,
@@ -206,13 +246,16 @@ def refresh_agg_mart(
     changelog consumer).
     """
     to_version = to_version if to_version is not None else source.current_version()
+    if from_version is None:
+        return rebuild_agg_mart(mart, source, to_version)
+    res = {"applied": False, "from": from_version, "to": to_version}
     if to_version <= from_version:
         # nothing new (e.g. a crash-replayed epoch whose merge was already
         # a manifest no-op) — no empty commit, no cursor movement needed
-        return {"applied": False, "from": from_version, "to": to_version}
+        return res
     commit_key = f"martsync={from_version}-{to_version}"
     if mart.has_commit(commit_key):
-        return {"applied": False, "from": from_version, "to": to_version}
+        return res
     try:
         ch = live_state(source.changes(from_version, to_version))
     except FileNotFoundError:
@@ -224,54 +267,11 @@ def refresh_agg_mart(
             return rebuild_agg_mart(mart, source, to_version)
         raise
     msnap = mart.current()
-    mart.check_bucket_fn(msnap)
-    group_cols = msnap.key_cols
-
     sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(F.lit(-1))
-    delta = (
-        ch.groupBy(*group_cols)
-        .agg(
-            F.sum(sign).cast("long").alias("d_docs"),
-            F.sum(sign * F.coalesce(F.col("n_tok").cast("long"), F.lit(0))).alias("d_tok"),
-        )
-        # drop no-op groups early (an update that keeps n_tok constant nets out)
-        .where((F.col("d_docs") != 0) | (F.col("d_tok") != 0))
-    )
-    # the delta plan (the interval's feed read + one aggregate) is consumed
-    # twice — the bucket probe below, then the merge — so cache it for the
-    # refresh's duration; only the ≤ n_buckets touched bucket ids reach the
-    # driver (same double-execution trap the CDC bucket probe documents in
-    # cdc/apply.py)
-    delta = delta.persist()
-    try:
-        buckets = sorted(mart.buckets_of(delta, msnap))
-        if not buckets:
-            # nothing changed (or a pure compaction): still record the interval
-            mart.append(mart.spark.createDataFrame([], msnap.schema), commit_key=commit_key)
-            return {"applied": True, "from": from_version, "to": to_version, "buckets": []}
-        old = _prefixed(mart.read(buckets=buckets), msnap.schema)
-        n_docs = (
-            F.coalesce(F.col(_OLD + "n_docs"), F.lit(0)) + F.coalesce(delta["d_docs"], F.lit(0))
-        ).cast("long")
-        n_tok = (
-            F.coalesce(F.col(_OLD + "n_tok_sum"), F.lit(0)) + F.coalesce(delta["d_tok"], F.lit(0))
-        ).cast("long")
-        # groups whose count reaches zero leave the mart
-        applied = mart.overwrite_buckets(
-            _group_feed(
-                old.join(delta, _on_groups(old, delta, group_cols), how="full"),
-                msnap.schema, unchanged=delta["d_docs"].isNull(), has_new=n_docs > 0,
-                new={
-                    **{c: F.coalesce(F.col(_OLD + c), delta[c]) for c in group_cols},
-                    "n_docs": n_docs, "n_tok_sum": n_tok,
-                },
-            ),
-            buckets, commit_key=commit_key, schema=msnap.schema,
-            base_version=msnap.version, feed=True,
-        )
-    finally:
-        delta.unpersist()
-    return {"applied": applied, "from": from_version, "to": to_version, "buckets": buckets}
+    # drop no-op groups early (an update that keeps n_tok constant nets out)
+    delta = _sums(ch, msnap.key_cols, sign).where((F.col("d_docs") != 0) | (F.col("d_tok") != 0))
+    res["applied"], res["buckets"] = _fold(mart, msnap, delta, commit_key)
+    return res
 
 
 # ---------------------------------------------------------------------------
