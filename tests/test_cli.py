@@ -37,6 +37,25 @@ def test_cli_session_leaves_environment_unchanged(spark, monkeypatch):
     assert seen["prewarm"] is None
 
 
+def test_cli_keeps_active_session_settings(spark, tmp_path, capsys):
+    """An in-process command joins the running session as it is: the
+    engine defaults (32 shuffle partitions) must not overwrite the
+    fixture's 8 for every test that runs after it."""
+    from ton_etl_spark.lake.table import LakeTable
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    d = spark.range(10).selectExpr("id AS k", "id AS v")
+    LakeTable.create(spark, str(tmp_path / "t"), schema=d.schema,
+                     key_cols=["k"], n_buckets=2).append(d, commit_key="s")
+    try:
+        assert main(["describe", "--table", str(tmp_path / "t")]) == 0
+        capsys.readouterr()
+        assert spark.conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_cli_replay_then_oracle_check_and_maintain(spark, tmp_path, capsys):
     log_root = str(tmp_path / "log")
     write_cdc_log(generate_cdc_log(spark, 2000, seed=71), log_root, n_batches=3, dup_pct=10, seed=71)

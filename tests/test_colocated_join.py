@@ -77,29 +77,44 @@ def test_colocated_join_null_keys_and_duplicates(spark, tmp_path):
 
 def test_colocated_join_schema_evolution_and_widening(spark, tmp_path):
     """Old files missing a late-added column yield typed NULLs, and an
-    int->long widened column casts per file — the same contract as
-    LakeTable.read, enforced inside the Arrow kernel."""
-    base = spark.createDataFrame([(i, i * 10) for i in range(100)],
-                                 "k long, v int")
+    int->long widened column (and an array<int>->array<bigint> payload)
+    casts per file — the same contract as LakeTable.read, left to the
+    scan.  Ranges on the widened column across both eras, and on a column
+    the right side added later, keep exactly the rows ``read(where=)``
+    keeps, for inner and left joins."""
+    base = spark.createDataFrame([(i, i * 10, [i]) for i in range(100)],
+                                 "k long, v int, a array<int>")
     l = LakeTable.create(spark, str(tmp_path / "l"), schema=base.schema,
                          key_cols=["k"], n_buckets=4, type_widening=True)
     l.append(base, commit_key="old-era")
     evolved = spark.createDataFrame(
-        [(i, i * 10_000_000_000, f"s{i}") for i in range(100, 160)],
-        "k long, v long, extra string",
+        [(i, i * 10_000_000_000, [i, i * 10_000_000_000], f"s{i}")
+         for i in range(100, 160)],
+        "k long, v long, a array<bigint>, extra string",
     )
-    l.append(evolved, commit_key="new-era")  # widens v, adds extra
-    rdata = spark.range(160).selectExpr("id AS k", "id % 5 AS tag")
+    l.append(evolved, commit_key="new-era")  # widens v and a, adds extra
+    rdata = spark.range(100).selectExpr("id AS k", "id % 5 AS tag")
     r = LakeTable.create(spark, str(tmp_path / "r"), schema=rdata.schema,
                          key_cols=["k"], n_buckets=4)
     r.append(rdata, commit_key="s")
+    r.append(spark.range(100, 160).selectExpr("id AS k", "id % 5 AS tag",
+                                              "id * 3 AS late"),
+             commit_key="late-era")  # adds late
     got = colocated_join(l, r)
-    want = l.read().join(r.read(), "k")
     assert got.schema["v"].dataType == T.LongType()
-    assert _rows(got.select(*want.columns)) == _rows(want)
+    assert got.schema["a"].dataType == T.ArrayType(T.LongType())
     # old-era rows carry NULL extra, new-era the real value
     assert got.where("k < 100 AND extra IS NULL").count() == 100
     assert got.where("k >= 100 AND extra IS NOT NULL").count() == 60
+
+    v_range = {"v": (500, 1_200_000_000_000)}  # old era k >= 50, new era k <= 120
+    late_range = {"late": (None, 400)}  # late-era rows only, k <= 133
+    for how in ("inner", "left"):
+        for lw, rw in ((None, None), (v_range, None), (None, late_range),
+                       (v_range, late_range)):
+            got = colocated_join(l, r, how=how, left_where=lw, right_where=rw)
+            want = l.read(where=lw).join(r.read(where=rw), "k", how)
+            assert _rows(got.select(*want.columns)) == _rows(want), (how, lw, rw)
 
 
 def test_colocated_join_column_selection_prunes_and_errors(spark, tmp_path):

@@ -54,7 +54,7 @@ from ton_etl_spark.lake.table import LakeTable
 
 
 def _source(
-    spark: SparkSession, schema: T.StructType, glob: str, max_files_per_trigger: int
+    spark: SparkSession, schema: T.StructType | str, glob: str, max_files_per_trigger: int
 ) -> DataFrame:
     return (
         spark.readStream.schema(schema)

@@ -33,6 +33,19 @@ import os
 import sys
 
 
+def _probe_lists(text: str, flag: str) -> dict:
+    """Parse a ``{"col": [values...]}`` probe flag (``lookup --in``,
+    ``maintain --delete-in``/``--update-in``).  A scalar string value
+    would be iterated character by character and probe, delete or update
+    the wrong keys, so any other shape exits."""
+    probes = json.loads(text)
+    if not isinstance(probes, dict) or not all(
+        isinstance(v, list) for v in probes.values()
+    ):
+        raise SystemExit(f'{flag} must be a JSON object of {{"col": [values...]}}')
+    return probes
+
+
 def _spark(args):
     from ton_etl_spark.session import get_spark
 
@@ -165,15 +178,7 @@ def _cmd_maintain(args) -> int:
         upd_ranges = {
             c: (lo, hi) for c, (lo, hi) in json.loads(args.update_where).items()
         } if args.update_where else None
-        upd_probes = json.loads(args.update_in) if args.update_in else None
-        if upd_probes is not None and (
-            not isinstance(upd_probes, dict)
-            or not all(isinstance(v, list) for v in upd_probes.values())
-        ):
-            # same scalar-string guard as --delete-in / lookup --in
-            raise SystemExit(
-                '--update-in must be a JSON object of {"col": [values...]}'
-            )
+        upd_probes = _probe_lists(args.update_in, "--update-in") if args.update_in else None
         out["update"] = update_where(
             t, upd_set, where=upd_ranges, where_in=upd_probes,
             commit_key=(args.commit_key + "-upd") if args.commit_key else None,
@@ -183,16 +188,7 @@ def _cmd_maintain(args) -> int:
         ranges = {
             c: (lo, hi) for c, (lo, hi) in json.loads(args.delete_where).items()
         } if args.delete_where else None
-        probes = json.loads(args.delete_in) if args.delete_in else None
-        if probes is not None and (
-            not isinstance(probes, dict)
-            or not all(isinstance(v, list) for v in probes.values())
-        ):
-            # same guard as lookup --in: a scalar string value would be
-            # iterated character-by-character and DELETE the wrong keys
-            raise SystemExit(
-                '--delete-in must be a JSON object of {"col": [values...]}'
-            )
+        probes = _probe_lists(args.delete_in, "--delete-in") if args.delete_in else None
         out["delete"] = delete_where(
             t, ranges,
             where_in=probes,
@@ -253,12 +249,7 @@ def _cmd_lookup(args) -> int:
 
     spark = _spark(args)
     t = LakeTable.load(spark, args.table)
-    probes = json.loads(args.where_in)
-    if not isinstance(probes, dict) or not all(
-        isinstance(v, list) for v in probes.values()
-    ):
-        raise SystemExit('--in must be a JSON object of {"col": [values...]}')
-    df = t.read(where_in=probes)
+    df = t.read(where_in=_probe_lists(args.where_in, "--in"))
     if not args.raw and is_cdc_schema(df.schema):
         df = live_state(df)
     if args.columns:
@@ -318,19 +309,15 @@ def _cmd_follow(args) -> int:
 
 
 def _cmd_describe(args) -> int:
-    from collections import Counter
-
+    from ton_etl_spark.lake.maintenance import layout_summary
     from ton_etl_spark.lake.table import LakeTable
-
-    from ton_etl_spark.lake.maintenance import default_small_rows
 
     spark = _spark(args)
     t = LakeTable.load(spark, args.table)
     snap = t.current()
     files = snap.files
-    per_bucket = Counter(f.bucket for f in files)
-    stats_cols = sorted({c for f in files if f.stats for c in f.stats})
-    small_thr = default_small_rows(t, snap)
+    layout = layout_summary(t, snap)
+    stats_cols = layout["stats_columns"]
     out = {
         "cmd": "describe",
         "root": t.root,
@@ -339,21 +326,10 @@ def _cmd_describe(args) -> int:
         "key_cols": snap.key_cols,
         "schema_fields": [f.name for f in snap.schema.fields],
         "properties": snap.properties,
-        "n_files": len(files),
-        "rows_total": sum(f.rows for f in files),
-        "files_per_bucket": {str(b): n for b, n in sorted(per_bucket.items())},
-        "stats_columns": stats_cols,
-        "stats_coverage": (
-            round(sum(1 for f in files if f.stats) / len(files), 4) if files else None
-        ),
-        # the binpack demand signal, dual of --clustering for z-order:
-        # sliver files pile up one per append epoch; a high count says
-        # schedule maintain --binpack.  Threshold comes from the SAME
-        # helper --binpack acts on, so signal and action can't drift.
-        "small_files": (
-            sum(1 for f in files if f.rows < small_thr)
-            if small_thr is not None else None
-        ),
+        # small_files is the binpack demand signal, dual of --clustering
+        # for z-order: sliver files pile up one per append epoch; a high
+        # count says schedule maintain --binpack
+        **layout,
         "commit_watermarks": snap.commit_watermarks,
         "tags": t.tags(),
     }

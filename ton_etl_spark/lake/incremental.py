@@ -63,16 +63,12 @@ MART_SCHEMA_SUFFIX = [
 ]
 
 
-def make_agg_mart(
-    spark, root: str, group_cols: list[str], group_types: list[T.DataType] | None = None,
-    n_buckets: int = 4,
-) -> LakeTable:
+def make_agg_mart(spark, root: str, group_cols: list[str], n_buckets: int = 4) -> LakeTable:
     """Create (or open) the derived aggregate mart: one row per group with
     (n_docs, n_tok_sum) — the doc-count / token-volume rollup a training
-    pipeline keeps per corpus source."""
-    types = group_types or [T.StringType()] * len(group_cols)
+    pipeline keeps per corpus source.  Group columns are strings."""
     schema = T.StructType(
-        [T.StructField(c, t, True) for c, t in zip(group_cols, types)]
+        [T.StructField(c, T.StringType(), True) for c in group_cols]
         + MART_SCHEMA_SUFFIX
     )
     return LakeTable.get_or_create(

@@ -10,17 +10,18 @@ operating point that shuffle of two full tables IS the query cost.
 
 ``colocated_join`` is the Iceberg storage-partitioned-join role for this
 format: the driver pairs up the two manifests' per-bucket file lists
-(metadata only), and one ``mapInArrow`` task per bucket reads both
-sides' files with pyarrow and hash-joins them in Arrow — ZERO Exchange
-in the physical plan (plan-locked in tests), data moves only
-filesystem -> task.  The write side of the same idea is ``bucket_of``
+(metadata only), and one ``mapInArrow`` task per bucket reads each
+side's files with one ``pyarrow.dataset`` scan and hash-joins them in
+Arrow — ZERO Exchange in the physical plan (plan-locked in tests), data
+moves only filesystem -> task.  The write side of the same idea is ``bucket_of``
 == ``HashPartitioning`` (lake/table.py:128-137); this is the read side.
 
 Semantics match Spark/ANSI SQL joins: NULL keys never match (Arrow's
 hash join implements SQL null semantics; verified in tests against a
 Spark join on identical frames).  Additive schema evolution and type
-widening are honored per file exactly like ``LakeTable.read`` (absent
-column -> typed NULL, old narrow values cast to the widened type).
+widening are left to the scan, exactly like ``LakeTable.read``: the
+dataset reads every file under the side's current schema (absent column
+-> typed NULL, old narrow values cast to the widened type).
 
 List/struct payload columns ride through a surrogate-index join (Arrow's
 hash join rejects nested non-key columns): the join runs on slim
@@ -29,12 +30,12 @@ null right indices from a left join gather as NULL rows.
 
 Scale shape: one task per bucket.  The RIGHT side is the build side and
 is resident per task; the LEFT side STREAMS through the join in
-row-group-sized chunks (each chunk joins independently against the full
-right bucket — correct for inner and left-outer alike, since every left
+``batch_rows``-sized chunks (each chunk joins independently against the
+full right bucket — correct for inner and left-outer alike, since every left
 row appears in exactly one chunk and sees every potential match).  Task
 memory is therefore O(right bucket + one left chunk): put the smaller
 table on the right, and a skewed giant bucket on the left costs I/O,
-not memory.  Column pruning happens at the pyarrow reader, so
+not memory.  Column pruning happens at the dataset scan, so
 ``left_columns``/``right_columns`` bound the I/O and the build size,
 not just the output width.
 
@@ -46,7 +47,9 @@ lookups.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 
 from pyspark.sql import DataFrame
@@ -254,10 +257,10 @@ def _make_kernel(
     rcols: list[str],
     how: str,
     batch_rows: int,
-    l_live: bool = False,
-    r_live: bool = False,
-    l_filters: list | None = None,
-    r_filters: list | None = None,
+    l_live: bool,
+    r_live: bool,
+    l_filters: list,
+    r_filters: list,
 ):
     """Build the per-bucket Arrow join kernel.  Captures only plain
     picklable values (Spark StructTypes, name lists); every pyarrow
@@ -267,72 +270,36 @@ def _make_kernel(
     def kernel(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
+        import pyarrow.dataset as ds
         from pyspark.sql.pandas.types import to_arrow_type
 
-        def arrow_schema(st: T.StructType) -> "pa.Schema":
-            return pa.schema([(f.name, to_arrow_type(f.dataType)) for f in st.fields])
-
-        l_schema, r_schema = arrow_schema(l_read), arrow_schema(r_read)
-
-        def conform(t: "pa.Table", have: set, schema: "pa.Schema") -> "pa.Table":
-            """Conform one file's (or chunk's) columns to the current
-            schema: absent column -> typed NULLs, present column -> cast
-            to the (possibly widened) target type."""
-            arrays = []
-            for field in schema:
-                if field.name in have:
-                    arrays.append(pc.cast(t.column(field.name), field.type))
-                else:
-                    arrays.append(pa.nulls(t.num_rows, field.type))
-            return pa.table(arrays, schema=schema)
-
-        def read_conform(paths: list[str], schema: "pa.Schema") -> "pa.Table":
-            """Whole-side read (the resident BUILD side).  Unselected
-            columns never leave the parquet reader (column pruning at
-            I/O level)."""
-            if not paths:
-                return schema.empty_table()
-            parts = []
-            for p in paths:
-                pf = pq.ParquetFile(p)
-                have = set(pf.schema_arrow.names)
-                want = [n for n in schema.names if n in have]
-                parts.append(conform(pf.read(columns=want), have, schema))
-            return pa.concat_tables(parts) if len(parts) > 1 else parts[0]
-
-        def stream_conform(paths: list[str], schema: "pa.Schema", rows: int):
-            """Chunked read (the streamed PROBE side): row-group-sized
-            batches, each conformed independently — a skewed giant
-            bucket never materializes whole."""
-            for p in paths:
-                pf = pq.ParquetFile(p)
-                have = set(pf.schema_arrow.names)
-                want = [n for n in schema.names if n in have]
-                for batch in pf.iter_batches(batch_size=rows, columns=want):
-                    yield conform(pa.Table.from_batches([batch]), have, schema)
+        def scan(paths: list[str], st: T.StructType, live: bool, filters: list):
+            """One dataset scan of a side's bucket files under the side's
+            schema.  The scan conforms every file (absent column -> typed
+            NULLs, narrow type -> cast up), prunes columns at the reader,
+            and applies the residual filter pre-join (ON-clause placement):
+            null comparisons drop the row, matching the Spark residual in
+            LakeTable.read."""
+            schema = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in st.fields])
+            # the ONE live-state rule (cdc/apply.live_state): op != 'd'
+            # keeps every live row (op is never NULL in a CDC frame)
+            conds = [ds.field(OP_COL) != "d"] if live else []
+            for col, lo, hi in filters:
+                typ = schema.field(col).type
+                if lo is not None:
+                    conds.append(ds.field(col) >= pa.scalar(lo, typ))
+                if hi is not None:
+                    conds.append(ds.field(col) <= pa.scalar(hi, typ))
+            return ds.dataset(paths, schema=schema, format="parquet").scanner(
+                columns=schema.names,
+                filter=functools.reduce(operator.and_, conds) if conds else None,
+                batch_size=batch_rows,
+            )
 
         def gather(table: "pa.Table", cols: list[str], idx) -> list:
             # take with null indices yields typed NULLs — exactly the
             # left-outer contract for unmatched right payloads
             return [pc.take(table.column(c), idx) for c in cols]
-
-        def live(t: "pa.Table") -> "pa.Table":
-            # the ONE live-state rule (cdc/apply.live_state): op != 'd'
-            # keeps every live row (op is never NULL in a CDC frame)
-            return t.filter(pc.not_equal(t.column(OP_COL), "d"))
-
-        def ranges(t: "pa.Table", filters: list) -> "pa.Table":
-            # residual range filter, pre-join (ON-clause placement);
-            # null comparisons are null => filtered out, matching the
-            # Spark residual in LakeTable.read
-            for col, lo, hi in filters:
-                typ = t.schema.field(col).type
-                if lo is not None:
-                    t = t.filter(pc.greater_equal(t.column(col), pa.scalar(lo, typ)))
-                if hi is not None:
-                    t = t.filter(pc.less_equal(t.column(col), pa.scalar(hi, typ)))
-            return t
 
         def join_chunk(lt: "pa.Table", rslim: "pa.Table", rt: "pa.Table"):
             """Join one probe chunk against the resident build side via
@@ -357,26 +324,17 @@ def _make_kernel(
             yield from out.to_batches(max_chunksize=batch_rows)
 
         for rb in batches:
-            meta = rb.to_pylist()
-            for row in meta:
-                rt = read_conform(json.loads(row["rf"]), r_schema)
-                if r_live:
-                    rt = live(rt)
-                if r_filters:
-                    rt = ranges(rt, r_filters)
+            for row in rb.to_pylist():
+                rt = scan(json.loads(row["rf"]), r_read, r_live, r_filters).to_table()
                 if rt.num_rows == 0 and join_type == "inner":
                     continue
                 ri = pa.array(range(rt.num_rows), pa.int64())
                 rslim = rt.select(keys).append_column("__ri", ri)
                 # each probe chunk joins independently: every left row
                 # lives in exactly one chunk and sees the whole build side
-                for lt in stream_conform(json.loads(row["lf"]), l_schema, batch_rows):
-                    if l_live:
-                        lt = live(lt)
-                    if l_filters:
-                        lt = ranges(lt, l_filters)
-                    if lt.num_rows == 0:
-                        continue
-                    yield from join_chunk(lt, rslim, rt)
+                probe = scan(json.loads(row["lf"]), l_read, l_live, l_filters)
+                for batch in probe.to_batches():
+                    if batch.num_rows:
+                        yield from join_chunk(pa.Table.from_batches([batch]), rslim, rt)
 
     return kernel

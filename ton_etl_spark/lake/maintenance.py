@@ -28,6 +28,7 @@ import functools
 import operator
 import os
 import uuid
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -149,11 +150,35 @@ def gc_tombstones(
 def default_small_rows(table: LakeTable, snap: Snapshot) -> int | None:
     """The ONE definition of a 'small' (pack-candidate) file — half the
     table's ``target_file_rows``, None when no target is declared.
-    Shared by ``compact_small_files`` and the ``describe`` CLI's
+    Shared by ``compact_small_files`` and ``layout_summary``'s
     ``small_files`` demand signal so the metric an operator watches and
     the threshold ``--binpack`` acts on can never drift apart."""
     target = table._target_file_rows(snap.properties)
     return max(1, target // 2) if target else None
+
+
+def layout_summary(table: LakeTable, snap: Snapshot) -> dict:
+    """``snap``'s layout from manifest metadata alone (no Spark job),
+    under the ``describe`` CLI's keys.  ``small_files`` is the bin-pack
+    demand signal: files below ``default_small_rows``, None when the
+    table declares no target.  ``describe`` prints this dict and the
+    exporter's layout gauges publish it, so the two surfaces cannot
+    disagree."""
+    files = snap.files
+    thr = default_small_rows(table, snap)
+    per_bucket = Counter(f.bucket for f in files)
+    return {
+        "n_files": len(files),
+        "rows_total": sum(f.rows for f in files),
+        "files_per_bucket": {str(b): n for b, n in sorted(per_bucket.items())},
+        "stats_columns": sorted({c for f in files if f.stats for c in f.stats}),
+        "stats_coverage": (
+            round(sum(1 for f in files if f.stats) / len(files), 4) if files else None
+        ),
+        "small_files": (
+            sum(1 for f in files if f.rows < thr) if thr is not None else None
+        ),
+    }
 
 
 def compact_small_files(
@@ -743,9 +768,7 @@ def _zorder_double(df, col: str):
     )
 
 
-def zorder_boundaries(
-    df, cols: list[str], bits: int = 8, relative_error: float = 0.001
-) -> dict[str, list[float]]:
+def zorder_boundaries(df, cols: list[str], bits: int = 8) -> dict[str, list[float]]:
     """Per-column quantile bin boundaries for the z-value (2^bits bins).
 
     Quantile bins, not min/max linear scaling: a skewed column (lsn hot at
@@ -758,7 +781,7 @@ def zorder_boundaries(
     probs = [i / n_bins for i in range(1, n_bins)]
     proj = df.select(*[_zorder_double(df, c).alias(c) for c in cols])
     out: dict[str, list[float]] = {}
-    for c, qs in zip(cols, proj.approxQuantile(cols, probs, relative_error)):
+    for c, qs in zip(cols, proj.approxQuantile(cols, probs, 0.001)):
         # constant / near-constant columns repeat boundaries; dedupe so the
         # binning expression stays minimal (empty => every row bins to 0)
         out[c] = sorted(set(qs))

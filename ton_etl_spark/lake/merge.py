@@ -90,13 +90,12 @@ def _child_session(spark, n_buckets: int):
     return child
 
 
-def _ord_expr(prefix: str = "") -> F.Column:
+def _ord_expr() -> F.Column:
     """The LWW total order: (lsn, ts_ms, op_priority), struct-comparable."""
-    c = (lambda n: F.col(prefix + n)) if prefix else F.col
     return F.struct(
-        c(LSN_COL).alias("lsn"),
-        F.coalesce(c(TS_COL), F.lit(0)).alias("ts_ms"),
-        op_priority_expr(c(OP_COL)).alias("op_pri"),
+        F.col(LSN_COL).alias("lsn"),
+        F.coalesce(F.col(TS_COL), F.lit(0)).alias("ts_ms"),
+        op_priority_expr(F.col(OP_COL)).alias("op_pri"),
     )
 
 
@@ -127,7 +126,7 @@ def merge_lww(
     """
     snap = table.current()
     if commit_key is not None and snap.has_commit_key(commit_key):
-        return {"applied": False, "buckets": [], "rows_written": 0}
+        return {"applied": False, "buckets": []}
     table.check_bucket_fn(snap)
     key_cols = snap.key_cols
 

@@ -757,7 +757,6 @@ class LakeTable:
         schema: T.StructType,
         key_cols: list[str],
         n_buckets: int = 16,
-        properties: dict[str, str] | None = None,
         target_file_rows: int | None = None,
         stats_cols: list[str] | None = None,
         sort_cols: list[str] | None = None,
@@ -811,7 +810,7 @@ class LakeTable:
         os.makedirs(t._meta, exist_ok=True)
         os.makedirs(os.path.join(t.root, MANIFEST_DIR), exist_ok=True)
         os.makedirs(os.path.join(t.root, DATA_DIR), exist_ok=True)
-        props = {**(properties or {}), "bucket_fn": BUCKET_FN_ID}
+        props = {"bucket_fn": BUCKET_FN_ID}
         if type_widening:
             props["type_widening"] = "true"
         if target_file_rows is not None:
@@ -1272,8 +1271,9 @@ class LakeTable:
         the change feeds the commits of ``(from_version, to_version]``
         recorded (``Snapshot.feed``) — no bucket of either snapshot is
         scanned, so an incremental consumer of a 100 TB table reads only
-        the rows that changed.  Each feed is conformed to ``to_version``'s
-        schema (late-added columns NULL, widened types cast up).  A
+        the rows that changed.  All feed files of one change type are read
+        as one relation under ``to_version``'s schema (the scan null-fills
+        late-added columns and casts widened types up).  A
         commit's feed is already net, so a single contributing commit is
         returned as is; feeds of several commits are netted with
         ``exceptAll`` (a row inserted and deleted inside the interval
@@ -1287,9 +1287,7 @@ class LakeTable:
         to_version = self.current_version() if to_version is None else to_version
         schema = self.snapshot(to_version).schema
         self.snapshot(from_version)  # an expired base: FileNotFoundError
-        # (schema of the commit, change) -> feed files, so a long interval
-        # reads one relation per distinct schema, not one per commit
-        groups: dict[tuple[str, str], list[str]] = {}
+        paths: dict[str, list[str]] = {INSERT: [], DELETE: []}
         contributing = 0
         for v in range(from_version + 1, to_version + 1):
             snap = self.snapshot(v)
@@ -1302,21 +1300,15 @@ class LakeTable:
                 )
             contributing += bool(snap.feed)
             for c in snap.feed:
-                groups.setdefault((snap.schema_json, c.change), []).append(
-                    os.path.join(self.root, c.path)
-                )
-        parts: dict[str, list[DataFrame]] = {INSERT: [], DELETE: []}
-        for (schema_json, change), paths in groups.items():
-            df = self.spark.read.schema(
-                T.StructType.fromJson(json.loads(schema_json))
-            ).parquet(*paths)
-            parts[change].append(_conform(df, schema))
-        if contributing > 1 and parts[INSERT] and parts[DELETE]:
-            ins, dele = (functools.reduce(DataFrame.unionByName, parts[c])
-                         for c in (INSERT, DELETE))
-            parts = {INSERT: [ins.exceptAll(dele)], DELETE: [dele.exceptAll(ins)]}
-        tagged = [df.withColumn(CHANGE_COL, F.lit(c)) for c in (INSERT, DELETE)
-                  for df in parts[c]]
+                paths[c.change].append(os.path.join(self.root, c.path))
+        # one relation per change type: the scan reads every feed file
+        # under to_version's schema, whatever schema its commit had
+        parts = {c: self.spark.read.schema(schema).parquet(*p)
+                 for c, p in paths.items() if p}
+        if contributing > 1 and len(parts) == 2:
+            ins, dele = parts[INSERT], parts[DELETE]
+            parts = {INSERT: ins.exceptAll(dele), DELETE: dele.exceptAll(ins)}
+        tagged = [df.withColumn(CHANGE_COL, F.lit(c)) for c, df in parts.items()]
         if not tagged:
             return self.spark.createDataFrame(
                 [], T.StructType(schema.fields + [T.StructField(CHANGE_COL, T.StringType())])

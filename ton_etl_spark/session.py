@@ -101,7 +101,10 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
     prewarm: bool | None = None,
 ) -> SparkSession:
-    """Build (or get) a SparkSession with engine defaults.
+    """Return the already-active SparkSession unchanged, or build one
+    with engine defaults.  The defaults apply only to a session built
+    here: an in-process caller (a CLI command run inside a job or a test
+    suite) never rewrites the settings of the session it joins.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
     On a real cluster callers pass ``master=None`` via spark-submit and the
@@ -110,6 +113,9 @@ def get_spark(
     ``prewarm``: run ``_prewarm_session`` once per application.  None
     (default) follows ``SPARK_GRAFT_PY_PREWARM`` (on unless it is "0").
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"

@@ -56,6 +56,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ton_etl_spark.cdc.stream import _run, _source
 from ton_etl_spark.functions import text as TXT
 from ton_etl_spark.lake.table import LakeTable
 from ton_etl_spark.operators.dedup import (
@@ -94,14 +95,7 @@ def read_corpus(table: LakeTable) -> DataFrame:
     return table.read().where(F.col("admitted")).drop("admitted")
 
 
-def _ensure_index(
-    table: LakeTable,
-    index_path: str,
-    n_hashes: int = 32,
-    bands: int = 8,
-    k_shingle: int = 3,
-    seed: int = 42,
-) -> dict:
+def _ensure_index(table: LakeTable, index_path: str) -> dict:
     """The index's sidecar params, rebuilding the whole index from the
     curated table when the sidecar is absent (fresh start, or a crash
     mid-append retracted it).  The rebuild reads ALL stored rows —
@@ -114,13 +108,7 @@ def _ensure_index(
             return json.load(fh)
     wm = table.current().commit_watermarks.get("epoch", -1)
     write_minhash_index(
-        table.read().select("doc_id", "text"),
-        index_path,
-        n_hashes=n_hashes,
-        bands=bands,
-        k_shingle=k_shingle,
-        seed=seed,
-        meta_updates={"epoch": wm},
+        table.read().select("doc_id", "text"), index_path, meta_updates={"epoch": wm}
     )
     with open(meta_p) as fh:
         return json.load(fh)
@@ -273,7 +261,10 @@ def start_curation_stream(
     **gates,
 ):
     """Streaming curation: a file stream of raw document parquet
-    (doc_id/text/source) curated per micro-batch by ``curate_batch``.
+    (doc_id/text/source) curated per micro-batch by ``curate_batch``, on
+    the CDC streams' one consumer loop (``cdc/stream.py``'s ``_source``
+    and ``_run``: same file source, trigger, checkpoint and persisted
+    micro-batch).
     Restart with the same ``checkpoint_dir`` resumes from the last
     committed source offset; replayed batches no-op via the commit keys
     and the index's epoch cursor (see module docstring for the crash
@@ -290,12 +281,8 @@ def start_curation_stream(
     survive expiry."""
     t = make_curated_table(spark, table_root, n_buckets=n_buckets)
     d = make_decision_table(spark, decision_root)
-
-    src = (
-        spark.readStream.schema("doc_id long, text string, source string")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(doc_glob)
-    )
+    src = _source(spark, "doc_id long, text string, source string", doc_glob,
+                  max_files_per_trigger)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         curate_batch(spark, t, d, index_path, batch_df, batch_id, **gates)
@@ -334,9 +321,4 @@ def start_curation_stream(
                 grace_seconds=retention_grace_seconds,
             )
 
-    return (
-        src.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run(src, checkpoint_dir, _apply)

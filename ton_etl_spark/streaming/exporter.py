@@ -73,37 +73,30 @@ def update_table_layout_gauges(
     and the alert the metric drives must fall silent with it."""
     import os as _os
 
-    from ton_etl_spark.lake.maintenance import (
-        clustering_overlap,
-        default_small_rows,
-    )
+    from ton_etl_spark.lake.maintenance import clustering_overlap, layout_summary
 
     snap = table.current()
-    files = snap.files
+    layout = layout_summary(table, snap)
     labels = {"table": label or _os.path.basename(table.root.rstrip("/"))}
     reg.clear_matching(f"{prefix}_small_files", labels)
     reg.clear_matching(f"{prefix}_clustering_overlap", labels)
     reg.describe(f"{prefix}_files", "data files in the current snapshot")
-    reg.set(f"{prefix}_files", labels, float(len(files)))
+    reg.set(f"{prefix}_files", labels, float(layout["n_files"]))
     reg.describe(f"{prefix}_rows", "stored rows in the current snapshot")
-    reg.set(f"{prefix}_rows", labels, float(sum(f.rows for f in files)))
+    reg.set(f"{prefix}_rows", labels, float(layout["rows_total"]))
     reg.describe(f"{prefix}_version", "current snapshot version")
     reg.set(f"{prefix}_version", labels, float(snap.version))
-    thr = default_small_rows(table, snap)
-    if thr is not None:
+    if layout["small_files"] is not None:
         reg.describe(
             f"{prefix}_small_files",
             "bin-pack demand: files below half target_file_rows",
         )
-        reg.set(
-            f"{prefix}_small_files", labels,
-            float(sum(1 for f in files if f.rows < thr)),
-        )
+        reg.set(f"{prefix}_small_files", labels, float(layout["small_files"]))
     reg.describe(
         f"{prefix}_clustering_overlap",
         "z-order demand: same-bucket bounds-overlap fraction per column",
     )
-    for c, v in clustering_overlap(table, files=files).items():
+    for c, v in clustering_overlap(table, files=snap.files).items():
         if v is not None:
             reg.set(f"{prefix}_clustering_overlap", {**labels, "col": c}, v)
 
