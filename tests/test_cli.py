@@ -87,6 +87,7 @@ def test_cli_stream_and_multi_stream(spark, tmp_path, capsys):
     dirs = write_cdc_log(
         generate_cdc_log(spark, 1500, seed=72), log_root, n_batches=2, dup_pct=5, seed=72
     )
+    listeners = len(spark.streams._jsqm.listListeners())
     assert main([
         "stream",
         "--log-glob", os.path.join(log_root, "phase=*", "__seq=*"),
@@ -99,6 +100,8 @@ def test_cli_stream_and_multi_stream(spark, tmp_path, capsys):
     st = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert st["rows"] > 0
     assert st["metrics_rows"] >= 1  # the exporter surface drained progress rows
+    # the recorder is detached: later streams in this session are not recorded
+    assert len(spark.streams._jsqm.listListeners()) == listeners
     assert main(["oracle-check", "--table", str(tmp_path / "t1"), "--log-root", log_root]) == 0
     capsys.readouterr()
 
@@ -290,7 +293,9 @@ def test_cli_maintain_input_guards(spark, tmp_path, capsys):
     """Round-6 review fixes: (a) `--delete-in` must reject a scalar probe
     value — a bare string would be iterated character-by-character and
     DELETE the wrong keys (GDPR path); (b) `--zorder-if-overlap` without
-    `--zorder` must fail loudly, not silently skip maintenance."""
+    `--zorder` must fail loudly, not silently skip maintenance; (c)
+    `--delete-where`/`--update-where` must reject any shape other than
+    {"col": [lo, hi]} with a clean exit, not a TypeError traceback."""
     import pytest
 
     from ton_etl_spark.lake.table import LakeTable
@@ -307,6 +312,14 @@ def test_cli_maintain_input_guards(spark, tmp_path, capsys):
         main(["maintain", "--table", table, "--delete-in", '{"user": "17"}'])
     # nothing was deleted: users "1" and "7" (the characters of "17") intact
     assert t.read().count() == 3
+    # a range flag that is not {"col": [lo, hi]} exits before any action
+    with pytest.raises(SystemExit, match="delete-where"):
+        main(["maintain", "--table", table, "--delete-where", '{"v": 5}'])
+    with pytest.raises(SystemExit, match="update-where"):
+        main(["maintain", "--table", table, "--update-set", '{"v": "v + 1"}',
+              "--update-where", '{"v": [1, 2, 3]}'])
+    assert sorted((r["user"], r["v"]) for r in t.read().collect()) == [
+        ("1", 2), ("17", 1), ("7", 3)]
 
     with pytest.raises(SystemExit, match="requires --zorder"):
         main(["maintain", "--table", table, "--zorder-if-overlap", "0.5"])

@@ -3,6 +3,7 @@ expiry frees storage without breaking current reads or idempotency, and
 rewrite compaction collapses buckets to one file."""
 
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -259,7 +260,8 @@ def test_rolling_tombstone_gc_bounds_tombstones_on_ordered_log(spark, tmp_path):
         apply_cdc_batch(t, batch, epoch=e)
         # retain window = 250 LSNs (~2.5 epochs of redelivery slack)
         rolling_maintenance(
-            t, e, every=2, groups=2, tombstone_horizon_lsn=base + 2 * per_epoch - 250
+            t, e, every=2, groups=2,
+            rewrite=partial(gc_tombstones, horizon_lsn=base + 2 * per_epoch - 250),
         )
     raw = t.read()
     n_tomb = raw.where(F.col("op") == "d").count()
@@ -865,9 +867,8 @@ def test_binpack_never_opens_wellsized_files(spark, tmp_path):
 
 
 def test_rolling_maintenance_binpack_strategy(spark, tmp_path):
-    """rolling_maintenance(binpack_small_rows=) packs one rolling group's
-    slivers per cycle and refuses to combine with strategies that must
-    rewrite every file."""
+    """rolling_maintenance(rewrite=compact_small_files) packs one rolling
+    group's slivers per cycle."""
     from ton_etl_spark.lake.maintenance import compact_small_files, rolling_maintenance
 
     schema = spark.createDataFrame([], "k long, v string").schema
@@ -880,16 +881,9 @@ def test_rolling_maintenance_binpack_strategy(spark, tmp_path):
                  .selectExpr("id AS k", "concat('v', id) AS v"),
                  commit_key=f"s{i}")
 
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        rolling_maintenance(t, epoch=7, every=8, groups=2,
-                            zorder_cols=["k"], binpack_small_rows=100)
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        rolling_maintenance(t, epoch=7, every=8, groups=2,
-                            tombstone_horizon_lsn=5, binpack_small_rows=100)
-
     before = dict(t.current().manifests)
     r = rolling_maintenance(t, epoch=7, every=8, groups=2,
-                            binpack_small_rows=100)
+                            rewrite=partial(compact_small_files, small_rows=100))
     assert r["applied"] and set(r["buckets"]) <= {0, 2}  # group 0 of 2
     snap = t.current()
     assert snap.manifests[1] == before[1]  # other group untouched

@@ -6,6 +6,7 @@ them at once (Iceberg/Delta rewrite_data_files zorder strategy role).
 """
 
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -135,12 +136,10 @@ def test_rolling_maintenance_zorder_group(spark, tmp_path):
 
     t = _make(spark, str(tmp_path / "z3"), n=4000, target_file_rows=50)
     before = {b: m for b, m in t.current().manifests.items()}
-    with pytest.raises(ValueError, match="not both"):
-        rolling_maintenance(t, epoch=7, every=8, groups=2,
-                            tombstone_horizon_lsn=1, zorder_cols=["a", "b"])
+    zorder = partial(rewrite_zorder, cols=["a", "b"])
     assert rolling_maintenance(t, epoch=6, every=8, groups=2,
-                               zorder_cols=["a", "b"]) is None  # off-epoch
-    r = rolling_maintenance(t, epoch=7, every=8, groups=2, zorder_cols=["a", "b"])
+                               rewrite=zorder) is None  # off-epoch
+    r = rolling_maintenance(t, epoch=7, every=8, groups=2, rewrite=zorder)
     assert r["applied"] and set(r["buckets"]) == {0}  # group 0 of 2
     snap = t.current()
     assert snap.manifests[1] == before[1]  # other group untouched
@@ -149,7 +148,7 @@ def test_rolling_maintenance_zorder_group(spark, tmp_path):
     assert all("b" in f.stats for f in g0_files)
     # replay idempotency: the same epoch retried is a no-op
     assert rolling_maintenance(t, epoch=7, every=8, groups=2,
-                               zorder_cols=["a", "b"])["applied"] is False
+                               rewrite=zorder)["applied"] is False
     assert t.read().count() == 4000
 
 
@@ -217,12 +216,9 @@ def test_rolling_maintenance_zorder_threshold_autotrigger(spark, tmp_path):
     from ton_etl_spark.lake.maintenance import clustering_overlap, rolling_maintenance
 
     t = _make(spark, str(tmp_path / "zat"), n=4000, target_file_rows=50)
-    with pytest.raises(ValueError, match="requires zorder_cols"):
-        rolling_maintenance(t, epoch=7, every=8, groups=2,
-                            zorder_overlap_threshold=0.5)
 
-    kw = dict(every=8, groups=2, zorder_cols=["a", "b"],
-              zorder_overlap_threshold=0.6)
+    kw = dict(every=8, groups=2,
+              rewrite=partial(rewrite_zorder, cols=["a", "b"], if_overlap=0.6))
     # seed state: sorted on a, random on b => b overlap ~1 => both groups fire
     r0 = rolling_maintenance(t, epoch=7, **kw)    # group 0
     r1 = rolling_maintenance(t, epoch=15, **kw)   # group 1
@@ -283,8 +279,8 @@ def test_zorder_gate_fires_without_declared_stats(spark, tmp_path):
     t.append(df, commit_key="seed")
     assert "a" not in clustering_overlap(t)     # metric blind to a/b
 
-    kw = dict(every=8, groups=1, zorder_cols=["a", "b"],
-              zorder_overlap_threshold=0.6)
+    kw = dict(every=8, groups=1,
+              rewrite=partial(rewrite_zorder, cols=["a", "b"], if_overlap=0.6))
     r0 = rolling_maintenance(t, epoch=7, **kw)  # bootstrap fires
     assert r0["applied"]
 

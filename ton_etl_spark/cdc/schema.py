@@ -20,6 +20,11 @@ LSN_COL = "lsn"
 TS_COL = "ts_ms"
 KEY_COLS = ["doc_id"]
 
+# name of the per-micro-batch delivery counters (events, min_lsn, max_lsn)
+# a CDC stream observes on its source scan (cdc/stream.py) and the metrics
+# recorder reads from each progress event (streaming/observability.py)
+DELIVERY_OBSERVATION = "delivery"
+
 # Debezium op codes: c=create, r=snapshot-read, u=update, d=delete.
 # Priority breaks exact (lsn, ts_ms) ties deterministically: a delete beats
 # an update beats a read beats a create at the same position, so replay

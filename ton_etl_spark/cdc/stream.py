@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,7 +50,7 @@ from pyspark.sql import types as T
 
 from ton_etl_spark.cdc.apply import apply_cdc_batch, make_lineage_table, make_sequences_table
 from ton_etl_spark.cdc.envelope import KAFKA_FRAME_SCHEMA, ROUTE_COL, parse_cdc_envelope
-from ton_etl_spark.cdc.schema import CDC_EVENT_SCHEMA_EVOLVED, KEY_COLS
+from ton_etl_spark.cdc.schema import CDC_EVENT_SCHEMA_EVOLVED, DELIVERY_OBSERVATION, KEY_COLS
 from ton_etl_spark.lake.table import LakeTable
 
 
@@ -105,29 +106,31 @@ def _run_rolling_maintenance(
     tombstone_retain_lsn: int | None,
 ) -> None:
     """Invoke the rolling maintenance policy on a maintenance epoch: one
-    bucket group of the sink (optionally GC'ing tombstones below max
-    applied LSN − retain window) plus a whole-table compaction of the
-    small append-only lineage table.
+    bucket group of the sink, collapsed by ``rewrite_buckets`` or, with a
+    retain window, rewritten by ``gc_tombstones`` below max applied LSN −
+    ``tombstone_retain_lsn``; plus a whole-table compaction of the small
+    append-only lineage table.
 
-    The GC horizon is derived from the LINEAGE table's recorded max_lsn
-    (a few rows per epoch) rather than re-aggregating the micro-batch,
-    which would re-read the whole delivery batch from the source — the
-    lineage rows were computed on the same scan that fed the merge."""
+    With lineage, the max applied LSN is the LINEAGE table's recorded
+    ``max_lsn``, because it covers every epoch applied so far, not only
+    this micro-batch; without lineage it is this batch's max."""
     if not every or (batch_id + 1) % every != 0:
         return
-    from ton_etl_spark.lake.maintenance import rolling_maintenance
+    from ton_etl_spark.lake.maintenance import (
+        gc_tombstones,
+        rewrite_buckets,
+        rolling_maintenance,
+    )
 
-    horizon = None
+    rewrite = rewrite_buckets
     if tombstone_retain_lsn is not None:
         if lineage is not None:
             mx = lineage.read().agg(F.max("max_lsn")).first()[0]
         else:
             mx = batch_df.agg(F.max("lsn")).first()[0]
         if mx is not None:
-            horizon = mx - tombstone_retain_lsn
-    rolling_maintenance(
-        table, batch_id, every=every, groups=groups, tombstone_horizon_lsn=horizon
-    )
+            rewrite = partial(gc_tombstones, horizon_lsn=mx - tombstone_retain_lsn)
+    rolling_maintenance(table, batch_id, every=every, groups=groups, rewrite=rewrite)
     if lineage is not None:
         # append-only, one file per bucket per epoch — compact it whole;
         # it is small by construction
@@ -254,7 +257,7 @@ def start_cdc_stream(
     # (SURVEY A9; the reference's "N messages/sec" consumer log line) —
     # observed metrics ride the existing scan, no extra pass
     src = src.observe(
-        "delivery",
+        DELIVERY_OBSERVATION,
         F.count(F.lit(1)).alias("events"),
         F.min("lsn").alias("min_lsn"),
         F.max("lsn").alias("max_lsn"),

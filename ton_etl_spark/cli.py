@@ -46,6 +46,24 @@ def _probe_lists(text: str, flag: str) -> dict:
     return probes
 
 
+def _ranges(text: str, flag: str) -> dict:
+    """Parse a ``{"col": [lo, hi]}`` range flag (``maintain
+    --delete-where``/``--update-where``; inclusive bounds, null for an
+    open end).  Any other shape exits instead of failing in the unpack."""
+    ranges = json.loads(text)
+    if not isinstance(ranges, dict) or not all(
+        isinstance(v, list) and len(v) == 2 for v in ranges.values()
+    ):
+        raise SystemExit(f'{flag} must be a JSON object of {{"col": [lo, hi]}}')
+    return {c: tuple(v) for c, v in ranges.items()}
+
+
+def _action_key(args, suffix: str) -> str | None:
+    """One ``maintain`` action's commit key: ``--commit-key`` plus the
+    action's suffix, so each action of a run dedupes on its own key."""
+    return f"{args.commit_key}-{suffix}" if args.commit_key else None
+
+
 def _spark(args):
     from ton_etl_spark.session import get_spark
 
@@ -87,34 +105,39 @@ def _cmd_stream(args) -> int:
     from ton_etl_spark.cdc.apply import read_state
     from ton_etl_spark.cdc.stream import start_cdc_stream
     from ton_etl_spark.lake.table import LakeTable
+    from ton_etl_spark.streaming.observability import (
+        attach_metrics_recorder,
+        detach_metrics_recorder,
+    )
 
     spark = _spark(args)
-    rec = None
-    if args.metrics:
-        from ton_etl_spark.streaming.observability import attach_metrics_recorder
-
-        rec = attach_metrics_recorder(spark, args.metrics)
-    q = start_cdc_stream(
-        spark,
-        log_glob=args.log_glob,
-        table_root=args.table,
-        checkpoint_dir=args.checkpoint,
-        lineage_root=args.lineage,
-        n_buckets=args.buckets,
-        max_files_per_trigger=args.max_files_per_trigger,
-        maintenance_every=args.maintenance_every,
-        tombstone_retain_lsn=args.tombstone_retain_lsn,
-        mart_root=args.mart,
-    )
-    q.awaitTermination()
-    rows = read_state(LakeTable.load(spark, args.table)).count()
-    out: dict = {"cmd": "stream", "rows": rows}
-    if rec is not None:
-        # drain: listener delivery is asynchronous; later batches' progress
-        # events may still be queued when awaitTermination returns, so wait
-        # for quiescence rather than any fixed row count
-        out["metrics_rows"] = rec.drain()
-        out["metrics_root"] = args.metrics
+    out: dict = {"cmd": "stream"}
+    rec = attach_metrics_recorder(spark, args.metrics) if args.metrics else None
+    try:
+        start_cdc_stream(
+            spark,
+            log_glob=args.log_glob,
+            table_root=args.table,
+            checkpoint_dir=args.checkpoint,
+            lineage_root=args.lineage,
+            n_buckets=args.buckets,
+            max_files_per_trigger=args.max_files_per_trigger,
+            maintenance_every=args.maintenance_every,
+            tombstone_retain_lsn=args.tombstone_retain_lsn,
+            mart_root=args.mart,
+        ).awaitTermination()
+        out["rows"] = read_state(LakeTable.load(spark, args.table)).count()
+        if rec is not None:
+            # drain: listener delivery is asynchronous; later batches'
+            # progress events may still be queued when awaitTermination
+            # returns, so wait for quiescence rather than any row count
+            out["metrics_rows"] = rec.drain()
+            out["metrics_root"] = args.metrics
+    finally:
+        # the listener lives on the session, which outlives this command
+        # in-process: left attached, it would record every later stream
+        if rec is not None:
+            detach_metrics_recorder(spark, rec)
     print(json.dumps(out))
     return 0
 
@@ -153,11 +176,10 @@ def _cmd_maintain(args) -> int:
     t = LakeTable.load(spark, args.table)
     out: dict = {"cmd": "maintain"}
     if args.zorder_if_overlap is not None and not args.zorder:
-        # fail on misconfiguration, matching rolling_maintenance's
-        # ValueError — a silently-ignored gate flag looks like "maintenance
-        # ran" while the table never re-clusters.  Validate BEFORE any
-        # action block: a config error must not leave a half-executed
-        # maintenance run behind.
+        # fail on misconfiguration — a silently-ignored gate flag looks
+        # like "maintenance ran" while the table never re-clusters.
+        # Validate BEFORE any action block: a config error must not leave
+        # a half-executed maintenance run behind.
         raise SystemExit("--zorder-if-overlap requires --zorder")
     if args.small_rows is not None and not args.binpack:
         raise SystemExit("--small-rows requires --binpack")
@@ -165,6 +187,10 @@ def _cmd_maintain(args) -> int:
         raise SystemExit("--purge-tombstones requires --delete-where/--delete-in")
     if (args.update_where or args.update_in) and not args.update_set:
         raise SystemExit("--update-where/--update-in require --update-set")
+    upd_ranges = _ranges(args.update_where, "--update-where") if args.update_where else None
+    upd_probes = _probe_lists(args.update_in, "--update-in") if args.update_in else None
+    ranges = _ranges(args.delete_where, "--delete-where") if args.delete_where else None
+    probes = _probe_lists(args.delete_in, "--delete-in") if args.delete_in else None
     if args.update_set:
         from ton_etl_spark.lake.maintenance import update_where
 
@@ -175,56 +201,32 @@ def _cmd_maintain(args) -> int:
             isinstance(v, str) for v in upd_set.values()
         ):
             raise SystemExit('--update-set must be {"col": "sql expr"}')
-        upd_ranges = {
-            c: (lo, hi) for c, (lo, hi) in json.loads(args.update_where).items()
-        } if args.update_where else None
-        upd_probes = _probe_lists(args.update_in, "--update-in") if args.update_in else None
         out["update"] = update_where(
             t, upd_set, where=upd_ranges, where_in=upd_probes,
-            commit_key=(args.commit_key + "-upd") if args.commit_key else None,
-            file_granular=args.file_granular,
+            commit_key=_action_key(args, "upd"), file_granular=args.file_granular,
         )
     if args.delete_where or args.delete_in:
-        ranges = {
-            c: (lo, hi) for c, (lo, hi) in json.loads(args.delete_where).items()
-        } if args.delete_where else None
-        probes = _probe_lists(args.delete_in, "--delete-in") if args.delete_in else None
         out["delete"] = delete_where(
             t, ranges,
             where_in=probes,
-            commit_key=(args.commit_key + "-del") if args.commit_key else None,
+            commit_key=_action_key(args, "del"),
             file_granular=args.file_granular,
             protect_tombstones=not args.purge_tombstones,
         )
     if args.zorder:
-        zcols = [c.strip() for c in args.zorder.split(",") if c.strip()]
-        worst = None
-        needed = True
-        if args.zorder_if_overlap is not None:
-            from ton_etl_spark.lake.maintenance import zorder_needed
-
-            needed, worst, reason = zorder_needed(t, zcols, args.zorder_if_overlap)
-        if not needed:
-            out["zorder"] = {"applied": False, "overlap": worst,
-                             "skipped": reason}
-        else:
-            out["zorder"] = rewrite_zorder(
-                t, zcols,
-                commit_key=(args.commit_key + "-z") if args.commit_key else None,
-            )
-            if worst is not None:
-                out["zorder"]["overlap"] = worst
+        out["zorder"] = rewrite_zorder(
+            t, [c.strip() for c in args.zorder.split(",") if c.strip()],
+            commit_key=_action_key(args, "z"), if_overlap=args.zorder_if_overlap,
+        )
     if args.binpack:
         out["binpack"] = compact_small_files(
-            t, small_rows=args.small_rows,
-            commit_key=(args.commit_key + "-bp") if args.commit_key else None,
+            t, small_rows=args.small_rows, commit_key=_action_key(args, "bp"),
         )
     if args.compact:
         out["compact"] = rewrite_buckets(t, commit_key=args.commit_key)
     if args.gc_tombstones_below is not None:
         out["gc"] = gc_tombstones(
-            t, args.gc_tombstones_below,
-            commit_key=(args.commit_key + "-gc") if args.commit_key else None,
+            t, args.gc_tombstones_below, commit_key=_action_key(args, "gc"),
         )
     if args.expire_keep_last is not None:
         out["expire"] = expire_snapshots(t, keep_last=args.expire_keep_last)

@@ -17,9 +17,12 @@ row, and so its change feed) and which write order.  ``rebucket`` changes
 the layout and so commits through ``LakeTable._commit`` directly.
 
 Scale notes: a rewrite is a full copy-on-write of the selected files —
-at 100 TB you compact *bucket subsets* on a rolling schedule (the
-``buckets`` parameter), never the world in one commit; snapshot expiry is
-pure driver-side metadata work plus file deletes.
+at 100 TB you compact *bucket subsets* on a rolling schedule, never the
+world in one commit.  Choosing the slice and rewriting it are two steps,
+as in the reference's per-partition CTAS: ``rolling_maintenance`` picks
+one bucket group per maintenance epoch and calls the rewrite its caller
+names with ``buckets=`` and ``commit_key=``.  Snapshot expiry is pure
+driver-side metadata work plus file deletes.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ import operator
 import os
 import uuid
 from collections import Counter
+from collections.abc import Callable
 
 from pyspark.sql import functions as F
 
@@ -233,101 +237,37 @@ def rolling_maintenance(
     epoch: int,
     every: int = 8,
     groups: int = 4,
-    tombstone_horizon_lsn: int | None = None,
-    zorder_cols: list[str] | None = None,
-    zorder_overlap_threshold: float | None = None,
-    binpack_small_rows: int | None = None,
+    rewrite: Callable[..., dict] = rewrite_buckets,
 ) -> dict | None:
     """Automated maintenance policy for a long-running ingest loop: every
-    ``every`` epochs, compact ONE rolling group of buckets (group id cycles
-    with the epoch), optionally GC'ing tombstones at or below
-    ``tombstone_horizon_lsn`` in the same rewrite.
+    ``every`` epochs, run ``rewrite`` on ONE rolling group of buckets (the
+    group id cycles with the epoch).  This step chooses only the slice;
+    the caller names what runs on it.
 
     Rolling by bucket group is the 100 TB discipline: each maintenance
     commit rewrites 1/``groups`` of the table, so maintenance cost per
     epoch is bounded and amortized instead of a periodic full-table
     rewrite (reference analog: the daily CTAS compaction works one
     partition at a time, ``datalake_daily_sync.py:298-337``).  Over
-    ``every × groups`` epochs every bucket gets compacted once.  Each
-    strategy below is a file set of the group and a row rule handed to the
-    one rewrite step (``_rewrite``): all files for a collapse, a z-order
-    or a tombstone GC, the small files for a bin-pack.
+    ``every × groups`` epochs every bucket gets maintained once.
 
-    Returns None on non-maintenance epochs; otherwise the rewrite stats.
-    Idempotent per epoch via the ``roll=<epoch>`` commit key (recent-keys
-    dedup, so a foreachBatch retry doesn't compact twice).
+    ``rewrite(table, buckets=, commit_key=) -> dict`` is any rewrite of
+    this module scoped to a bucket list: ``rewrite_buckets`` (default, a
+    full collapse), ``gc_tombstones``, ``compact_small_files`` or
+    ``rewrite_zorder``, with their other arguments bound by
+    ``functools.partial``.
 
-    ``zorder_cols``: compact the group AS a z-order clustering rewrite
-    (``rewrite_zorder``) instead of a plain collapse — the ingest loop
-    then continuously restores multi-column skipping locality that
-    inter-maintenance merges erode, one bucket group at a time.
-    Mutually exclusive with ``tombstone_horizon_lsn`` (a z-order rewrite
-    keeps every row; GC'ing inside it would fork the tombstone predicate
-    into a second place).
-
-    ``zorder_overlap_threshold``: make the z-order rewrite DEMAND-DRIVEN —
-    the cycle's group is re-clustered only when its worst per-column
-    ``clustering_overlap`` over ``zorder_cols`` exceeds the threshold
-    (manifest math only, no Spark job for the check), so a well-clustered
-    table pays zero rewrite I/O while a degrading ingest stream still
-    self-heals.  Without it, every cycle rewrites its group
-    unconditionally — correct but wasteful at 100 TB, where most cycles
-    follow appends that touched few buckets.
-
-    ``binpack_small_rows``: compact the group with ``compact_small_files``
-    (threshold = this many rows) instead of a full collapse — maintenance
-    I/O becomes proportional to the NEW data in the group, not the
-    group's total size; a quiet group pays zero rewrites.  Mutually
-    exclusive with the other strategies (tombstone GC must rewrite every
-    file that may hold an expired tombstone; a z-order rewrite must
-    rewrite every file to interleave)."""
-    if zorder_cols and tombstone_horizon_lsn is not None:
-        # validate BEFORE the epoch gate: a misconfigured ingest loop must
-        # fail on its first call, not epochs later inside foreachBatch
-        raise ValueError("pass zorder_cols OR tombstone_horizon_lsn, not both")
-    if zorder_overlap_threshold is not None and not zorder_cols:
-        raise ValueError("zorder_overlap_threshold requires zorder_cols")
-    if binpack_small_rows is not None and (
-        zorder_cols or tombstone_horizon_lsn is not None
-    ):
-        raise ValueError(
-            "binpack_small_rows is mutually exclusive with zorder_cols / "
-            "tombstone_horizon_lsn — bin-pack never opens well-sized files, "
-            "which both of those strategies must rewrite"
-        )
+    Returns None on non-maintenance epochs and on a group with no bucket;
+    otherwise the rewrite's result.  Idempotent per epoch via the
+    ``roll=<epoch>`` commit key (recent-keys dedup, so a foreachBatch
+    retry doesn't rewrite twice)."""
     if every <= 0 or (epoch + 1) % every != 0:
         return None
-    snap = table.current()
     g = ((epoch + 1) // every - 1) % groups
-    buckets = [b for b in sorted(snap.manifests) if b % groups == g]
+    buckets = [b for b in sorted(table.current().manifests) if b % groups == g]
     if not buckets:
         return None
-    key = f"roll={epoch}-g{g}"
-    if tombstone_horizon_lsn is not None:
-        # delegate so the tombstone-retention predicate lives in ONE place
-        return gc_tombstones(
-            table, tombstone_horizon_lsn, buckets=buckets, commit_key=key
-        )
-    if zorder_cols:
-        if zorder_overlap_threshold is not None:
-            needed, worst, reason = zorder_needed(
-                table, zorder_cols, zorder_overlap_threshold,
-                version=snap.version, buckets=buckets,
-            )
-            if not needed:
-                return {
-                    "applied": False,
-                    "buckets": buckets,
-                    "overlap": worst,
-                    "skipped": reason,
-                }
-        return rewrite_zorder(table, zorder_cols, buckets=buckets, commit_key=key)
-    if binpack_small_rows is not None:
-        return compact_small_files(
-            table, buckets=buckets, small_rows=binpack_small_rows,
-            commit_key=key,
-        )
-    return rewrite_buckets(table, buckets=buckets, commit_key=key)
+    return rewrite(table, buckets=buckets, commit_key=f"roll={epoch}-g{g}")
 
 
 def rebucket(
@@ -464,8 +404,8 @@ def zorder_needed(
     buckets: list[int] | None = None,
 ) -> tuple[bool, float | None, str | None]:
     """Demand gate for a clustering rewrite — manifest math only, no Spark
-    job.  Returns ``(needed, worst_overlap, skip_reason)``; the ONE gate
-    shared by ``rolling_maintenance`` and the ``maintain`` CLI.
+    job.  Returns ``(needed, worst_overlap, skip_reason)``; the ONE gate,
+    applied by ``rewrite_zorder(if_overlap=)`` for every caller.
 
     A rewrite fires when EITHER holds:
 
@@ -833,6 +773,7 @@ def rewrite_zorder(
     buckets: list[int] | None = None,
     commit_key: str | None = None,
     bits: int = 8,
+    if_overlap: float | None = None,
 ) -> dict:
     """Z-order clustering rewrite: re-sort each bucket's rows by the Morton
     interleave of ``cols`` so file-level [min, max] bounds get tight on
@@ -855,12 +796,28 @@ def rewrite_zorder(
     bounds.  Later merge commits still sort by the declared ``sort_cols``
     — z-order locality decays as buckets take new writes, so schedule
     this like compaction (it IS a compaction, one rolling bucket group
-    at a time at 100 TB — the ``buckets`` arg)."""
+    at a time at 100 TB — the ``buckets`` arg).
+
+    ``if_overlap``: make the rewrite DEMAND-DRIVEN — it runs only when
+    ``zorder_needed`` over ``cols`` at this threshold says so, scored on
+    the snapshot and files it would rewrite (manifest math only, no Spark
+    job), so a well-clustered table pays zero rewrite I/O while a
+    degrading ingest stream still self-heals.  A skip returns
+    ``{"applied": False, "buckets", "overlap", "skipped"}``; a run adds
+    ``"overlap"`` to the rewrite's result."""
     snap = table.current()
     if commit_key is not None and snap.has_commit_key(commit_key):
         return {"applied": False, "buckets": []}
     if buckets is None:
         buckets = sorted(snap.manifests)
+    gate = {}
+    if if_overlap is not None:
+        needed, worst, reason = zorder_needed(
+            table, cols, if_overlap, version=snap.version, buckets=buckets)
+        if not needed:
+            return {"applied": False, "buckets": buckets, "overlap": worst,
+                    "skipped": reason}
+        gate = {"overlap": worst}
     files = snap.files_for(buckets)
     df = _scan(table, snap, files)  # the quantile pass reads what is rewritten
     bounds = zorder_boundaries(df, cols, bits=bits)
@@ -873,7 +830,7 @@ def rewrite_zorder(
         ),
     )
     return {"applied": ok, "buckets": buckets,
-            "bins": {c: len(b) + 1 for c, b in bounds.items()}}
+            "bins": {c: len(b) + 1 for c, b in bounds.items()}, **gate}
 
 
 def expire_snapshots(

@@ -733,6 +733,23 @@ def _merge_schemas(
     return T.StructType(out)
 
 
+_COL_PROPS = ("stats_cols", "sort_cols", "bloom_cols")
+
+
+def _layout_properties(stats_cols=None, sort_cols=None, bloom_cols=None,
+                       target_file_rows=None, type_widening=False, **_) -> dict[str, str]:
+    """The table properties ``LakeTable.create``'s layout keywords
+    publish (an unset keyword publishes none).  ``get_or_create`` passes
+    a caller's whole ``create`` keywords (``**_`` takes the non-layout
+    ones) and compares the result with the stored properties."""
+    props = {p: ",".join(c) for p, c in zip(_COL_PROPS, (stats_cols, sort_cols, bloom_cols)) if c}
+    if target_file_rows is not None:
+        props["target_file_rows"] = str(int(target_file_rows))
+    if type_widening:
+        props["type_widening"] = "true"
+    return props
+
+
 class LakeTable:
     """A bucketed, versioned Parquet table with atomic commits."""
 
@@ -810,24 +827,15 @@ class LakeTable:
         os.makedirs(t._meta, exist_ok=True)
         os.makedirs(os.path.join(t.root, MANIFEST_DIR), exist_ok=True)
         os.makedirs(os.path.join(t.root, DATA_DIR), exist_ok=True)
-        props = {"bucket_fn": BUCKET_FN_ID}
-        if type_widening:
-            props["type_widening"] = "true"
-        if target_file_rows is not None:
-            if target_file_rows <= 0:
-                raise ValueError("target_file_rows must be positive")
-            props["target_file_rows"] = str(int(target_file_rows))
+        if target_file_rows is not None and target_file_rows <= 0:
+            raise ValueError("target_file_rows must be positive")
         field_names = {f.name for f in schema.fields}
-        for prop, cols in (
-            ("stats_cols", stats_cols),
-            ("sort_cols", sort_cols),
-            ("bloom_cols", bloom_cols),
-        ):
-            if cols:
-                unknown = sorted(set(cols) - field_names)
-                if unknown:
-                    raise ValueError(f"{prop} not in schema: {unknown}")
-                props[prop] = ",".join(cols)
+        for prop, cols in zip(_COL_PROPS, (stats_cols, sort_cols, bloom_cols)):
+            unknown = sorted(set(cols or ()) - field_names)
+            if unknown:
+                raise ValueError(f"{prop} not in schema: {unknown}")
+        props = {"bucket_fn": BUCKET_FN_ID, **_layout_properties(
+            stats_cols, sort_cols, bloom_cols, target_file_rows, type_widening)}
         snap = Snapshot(
             version=0,
             schema_json=json.dumps(schema.jsonValue()),
@@ -879,19 +887,9 @@ class LakeTable:
             if asked - stored:  # additive evolution makes extra stored cols fine
                 want["schema_fields"] = sorted(asked)
                 have["schema_fields"] = sorted(stored)
-        for prop in ("stats_cols", "sort_cols", "bloom_cols"):
-            if kw.get(prop):
-                asked_s = ",".join(kw[prop])
-                if props.get(prop, "") != asked_s:
-                    want[prop], have[prop] = asked_s, props.get(prop)
-        if kw.get("target_file_rows") is not None:
-            asked_r = str(int(kw["target_file_rows"]))
-            if props.get("target_file_rows") != asked_r:
-                want["target_file_rows"] = asked_r
-                have["target_file_rows"] = props.get("target_file_rows")
-        if kw.get("type_widening") and not self._widening(snap):
-            want["type_widening"] = "true"
-            have["type_widening"] = props.get("type_widening")
+        for prop, value in _layout_properties(**kw).items():
+            if props.get(prop) != value:
+                want[prop], have[prop] = value, props.get(prop)
         if want:
             _LOG.warning(
                 "get_or_create(%s): table exists; requested settings differ from "

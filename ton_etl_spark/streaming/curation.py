@@ -52,6 +52,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -288,8 +289,10 @@ def start_curation_stream(
         curate_batch(spark, t, d, index_path, batch_df, batch_id, **gates)
         if retain_epochs is not None and (batch_id + 1) % retention_every == 0:
             from ton_etl_spark.lake.maintenance import (
+                compact_small_files,
                 expire_snapshots,
                 retention_sweep,
+                rewrite_buckets,
                 rolling_maintenance,
             )
 
@@ -312,10 +315,10 @@ def start_curation_stream(
             # append-only, so retention_binpack_rows= makes each cycle
             # coalesce only the per-epoch sliver files — I/O proportional
             # to newly admitted docs, never re-copying settled files.
-            rolling_maintenance(
-                t, batch_id, every=retention_every, groups=retention_groups,
-                binpack_small_rows=retention_binpack_rows,
-            )
+            rewrite = (rewrite_buckets if retention_binpack_rows is None else
+                       partial(compact_small_files, small_rows=retention_binpack_rows))
+            rolling_maintenance(t, batch_id, every=retention_every,
+                                groups=retention_groups, rewrite=rewrite)
             expire_snapshots(
                 t, keep_last=keep_last_snapshots,
                 grace_seconds=retention_grace_seconds,

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQueryListener
 
+from ton_etl_spark.cdc.schema import DELIVERY_OBSERVATION
 from ton_etl_spark.lake.table import CommitConflictError, LakeTable
 
 METRICS_SCHEMA = T.StructType(
@@ -44,8 +45,8 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("num_input_rows", T.LongType(), True),
         T.StructField("trigger_ms", T.LongType(), True),  # durationMs.triggerExecution
         T.StructField("add_batch_ms", T.LongType(), True),  # durationMs.addBatch
-        # the observe("delivery", ...) counters from cdc/stream.py (NULL when
-        # the watched observation is absent from this query).  `events`
+        # the DELIVERY_OBSERVATION counters from cdc/stream.py (NULL when
+        # this query observes none).  `events`
         # counts rows THROUGH the observation point, summed over every
         # execution of the batch plan; it is exact because the stream's one
         # runner (cdc/stream.py `_run`) persists each micro-batch, so the
@@ -79,7 +80,6 @@ class MetricsRecorder(StreamingQueryListener):
         self,
         spark: SparkSession,
         root: str,
-        observation: str = "delivery",
         retain_seconds: float | None = None,
         retention_every: int = 32,
         keep_last_snapshots: int = 2,
@@ -93,7 +93,6 @@ class MetricsRecorder(StreamingQueryListener):
         retention must keep.  ``None`` (default) keeps everything —
         unchanged behavior for short-lived jobs."""
         self.spark = spark
-        self.observation = observation
         self.table = make_metrics_table(spark, root)
         self.errors: list[Exception] = []
         self.rows_written = 0
@@ -124,7 +123,7 @@ class MetricsRecorder(StreamingQueryListener):
 
     # -------------------------------------------------------- internals
     def _record(self, p: dict) -> None:
-        obs = (p.get("observedMetrics") or {}).get(self.observation) or {}
+        obs = (p.get("observedMetrics") or {}).get(DELIVERY_OBSERVATION) or {}
         dur = p.get("durationMs") or {}
 
         def _long(v):
@@ -227,10 +226,8 @@ class MetricsRecorder(StreamingQueryListener):
         return self.rows_written
 
 
-def attach_metrics_recorder(
-    spark: SparkSession, root: str, observation: str = "delivery"
-) -> MetricsRecorder:
-    rec = MetricsRecorder(spark, root, observation)
+def attach_metrics_recorder(spark: SparkSession, root: str) -> MetricsRecorder:
+    rec = MetricsRecorder(spark, root)
     spark.streams.addListener(rec)
     return rec
 
