@@ -11,6 +11,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import ton_etl_spark.cdc.stream as stream_mod
 from ton_etl_spark.cdc.apply import final_state_oracle, read_full_log, read_state
@@ -22,6 +23,26 @@ from ton_etl_spark.lake.table import LakeTable
 
 def _rows(df, order="doc_id"):
     return [r.asDict() for r in df.orderBy(order, "lsn").collect()]
+
+
+META_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType(), True),
+        T.StructField("op", T.StringType(), True),
+        T.StructField("lsn", T.LongType(), True),
+        T.StructField("ts_ms", T.LongType(), True),
+        T.StructField("symbol", T.StringType(), True),
+        T.StructField("decimals", T.LongType(), True),
+    ]
+)
+
+
+def _meta_log(spark, n, lsn0=0):
+    rows = [
+        (f"m{i % 20}", "u" if i % 3 == 0 else "c", lsn0 + i + 1, lsn0 + i + 1, f"S{i}", i % 9)
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, schema=META_SCHEMA)
 
 
 def _make_two_table_frames(spark, tmp_path, n=2500, n_batches=3):
@@ -47,10 +68,7 @@ def _make_two_table_frames(spark, tmp_path, n=2500, n_batches=3):
 def test_route_col_survives_decode(spark):
     log = generate_cdc_log(spark, 200, seed=29)
     frames = to_kafka_frames(log, table="seq_a")
-    out = parse_cdc_envelope(frames, keep_route_col=True)
-    assert ROUTE_COL in out.columns
-    assert {r[ROUTE_COL] for r in out.select(ROUTE_COL).distinct().collect()} == {"seq_a"}
-    # default decode still strips every meta field
+    # default decode strips every meta field
     assert ROUTE_COL not in parse_cdc_envelope(frames).columns
 
 
@@ -198,3 +216,93 @@ def test_multi_table_stream_runs_rolling_maintenance_per_sink(spark, tmp_path):
             for r in lin.read().select("checkpoint_epoch").collect()
         }
         assert epochs == set(range(4))
+
+
+def test_route_without_rows_commits_nothing(spark, tmp_path):
+    """seq_b has rows only in the first of four triggers: its sink and its
+    lineage table commit once (version 1 after the create), not once per
+    trigger, while seq_a applies every trigger; both equal their oracles."""
+    log_dir_a = str(tmp_path / "log_a")
+    dirs_a = write_cdc_log(
+        generate_cdc_log(spark, 800, seed=41), log_dir_a, n_batches=4, dup_pct=10, seed=41
+    )
+    log_b = generate_cdc_log(spark, 300, seed=42)
+    frames_dir = str(tmp_path / "frames")
+    for i, da in enumerate(dirs_a):
+        f = to_kafka_frames(spark.read.parquet(da), table="seq_a")
+        if i == 0:
+            f = f.unionByName(to_kafka_frames(log_b, table="seq_b"))
+        f.coalesce(1).write.parquet(os.path.join(frames_dir, f"b{i}"))
+
+    roots = {"seq_a": str(tmp_path / "ta"), "seq_b": str(tmp_path / "tb")}
+    lineage_roots = {"seq_a": str(tmp_path / "la"), "seq_b": str(tmp_path / "lb")}
+    q = start_cdc_multi_table_stream(
+        spark,
+        frames_glob=os.path.join(frames_dir, "*"),
+        table_roots=roots,
+        checkpoint_dir=str(tmp_path / "ck"),
+        lineage_roots=lineage_roots,
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination()
+
+    assert LakeTable.load(spark, roots["seq_b"]).current_version() == 1
+    assert LakeTable.load(spark, lineage_roots["seq_b"]).current_version() == 1
+    lin_a = LakeTable.load(spark, lineage_roots["seq_a"]).read()
+    assert {r["checkpoint_epoch"] for r in lin_a.collect()} == set(range(4))
+    ta = LakeTable.load(spark, roots["seq_a"])
+    assert _rows(read_state(ta)) == _rows(final_state_oracle(read_full_log(spark, log_dir_a)))
+    tb = LakeTable.load(spark, roots["seq_b"])
+    assert _rows(read_state(tb)) == _rows(final_state_oracle(log_b))
+
+
+def test_multi_table_rejects_unknown_route_keys(spark, tmp_path):
+    """A payload_schemas or lineage_roots key that names no route is a
+    typo: rejected before any sink, lineage table or stream is created."""
+    roots = {"seq_a": str(tmp_path / "ta")}
+    for kw in (
+        {"payload_schemas": {"seq_x": META_SCHEMA}},
+        {"lineage_roots": {"seq_x": str(tmp_path / "lx")}},
+    ):
+        with pytest.raises(ValueError, match="seq_x"):
+            start_cdc_multi_table_stream(
+                spark,
+                frames_glob=str(tmp_path / "frames" / "*"),
+                table_roots=roots,
+                checkpoint_dir=str(tmp_path / "ck"),
+                **kw,
+            )
+        assert not os.path.exists(roots["seq_a"])
+        assert not os.path.exists(str(tmp_path / "lx"))
+        assert not os.path.exists(str(tmp_path / "ck"))
+
+
+def test_multi_table_config_drift_guard(spark, tmp_path):
+    """Restarting a stream on a custom-schema sink WITHOUT its
+    payload_schemas entry would decode its frames against the default
+    schema and null the custom columns: the restart raises, naming the
+    columns, and the sink does not move."""
+    frames_dir = str(tmp_path / "frames")
+    to_kafka_frames(_meta_log(spark, 60), table="tok_meta").coalesce(1).write.parquet(
+        os.path.join(frames_dir, "b0")
+    )
+    roots = {"tok_meta": str(tmp_path / "tm")}
+    kw = dict(
+        frames_glob=os.path.join(frames_dir, "*"),
+        table_roots=roots,
+        checkpoint_dir=str(tmp_path / "ck"),
+        max_files_per_trigger=1,
+    )
+    start_cdc_multi_table_stream(
+        spark, payload_schemas={"tok_meta": META_SCHEMA}, **kw
+    ).awaitTermination()
+    t = LakeTable.load(spark, roots["tok_meta"])
+    v = t.current_version()
+    assert _rows(read_state(t)) == _rows(final_state_oracle(_meta_log(spark, 60)))
+
+    to_kafka_frames(_meta_log(spark, 30, lsn0=60), table="tok_meta").coalesce(1).write.parquet(
+        os.path.join(frames_dir, "b1")
+    )
+    with pytest.raises(ValueError, match=r"\['decimals', 'symbol'\]"):
+        start_cdc_multi_table_stream(spark, **kw)
+    assert t.current_version() == v

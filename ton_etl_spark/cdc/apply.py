@@ -122,10 +122,11 @@ def apply_cdc_batch(
     epoch: int,
     lineage: LakeTable | None = None,
 ) -> dict:
-    """Apply one delivery micro-batch: validate tokens (vectorized pandas
-    UDF), record per-partition lineage, LWW-reduce, MERGE.  Idempotent on
-    ``epoch`` (the commit manifest key), so a re-executed foreachBatch or a
-    crash-restart replaying the same epoch is a no-op."""
+    """Apply one delivery micro-batch: record per-partition lineage of the
+    delivered rows, validate tokens (vectorized pandas UDF), then MERGE
+    (``merge_lww``).  Idempotent on ``epoch`` (the commit manifest key), so
+    a re-executed foreachBatch or a crash-restart replaying the same epoch
+    is a no-op."""
     commit_key = f"epoch={epoch}"
     if table.has_commit(commit_key):
         return {"applied": False, "epoch": epoch}

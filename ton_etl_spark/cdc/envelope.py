@@ -45,9 +45,9 @@ KAFKA_FRAME_SCHEMA = T.StructType(
 # parity with the reference's FIELDS_TO_REMOVE (datalake/main.py:50)
 ENVELOPE_META_FIELDS = ["__op", "__table", "__lsn", "__source_ts_ms"]
 
-# routing column kept (on request) through the decode so ONE decoded stream
-# can fan out to N sinks — the reference's topic→parsers routing map
-# (parser/parsers/__init__.py:118-132).  Dropped again before any merge.
+# routing column: ``__table`` extracted from the raw frame so ONE stream can
+# fan out to N sinks — the reference's topic→parsers routing map
+# (parser/parsers/__init__.py:118-132).  The decode never emits it.
 ROUTE_COL = "_route_table"
 
 
@@ -76,21 +76,19 @@ def parse_cdc_envelope(
     frames: DataFrame,
     payload_schema: T.StructType | None = None,
     value_col: str = "value",
-    table: str | None = None,
     allowed_ops: tuple[str, ...] | None = None,
-    keep_route_col: bool = False,
 ) -> DataFrame:
     """Kafka-shaped frames → CDC event rows (the engine's envelope schema).
 
-    - ``table``: keep only messages whose ``__table`` matches (the
-      topic→converter fan-out, ``datalake/main.py:213``).
     - ``allowed_ops``: e.g. ``("c", "r")`` mirrors the reference's
       append-mart op filter (``__op == c/r``, plus ``u`` when
       ``updates_enabled`` — ``datalake/main.py:214``).  ``None`` keeps every
       op including tombstones — the keyed-table MERGE path needs deletes.
-    - ``keep_route_col``: retain ``__table`` as :data:`ROUTE_COL` so a
-      single decoded stream can fan out to several sinks (the multi-table
-      routing path, ``cdc.stream.start_cdc_multi_table_stream``).
+
+    Routing on ``__table`` (the topic→converter fan-out,
+    ``datalake/main.py:213``) happens before the decode: the routed
+    streams of ``cdc.stream`` extract it as :data:`ROUTE_COL` and decode
+    each route's slice separately.
 
     The ``__``-meta fields are renamed into the engine envelope
     (op/lsn/ts_ms) and never appear in the output — the FIELDS_TO_REMOVE
@@ -118,8 +116,6 @@ def parse_cdc_envelope(
         & F.col("e.__op").isNotNull()
         & F.col("e.__lsn").isNotNull()
     )
-    if table is not None:
-        parsed = parsed.where(F.col("e.__table") == table)
     if allowed_ops is not None:
         parsed = parsed.where(F.col("e.__op").isin(list(allowed_ops)))
     rename = {
@@ -133,8 +129,6 @@ def parse_cdc_envelope(
         else F.col(f"e.{f.name}").alias(f.name)
         for f in payload_schema.fields
     ]
-    if keep_route_col:
-        cols.append(F.col("e.__table").alias(ROUTE_COL))
     return parsed.select(*cols)
 
 

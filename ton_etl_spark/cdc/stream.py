@@ -15,21 +15,22 @@ The starters differ only in source and policy:
 
 - ``start_cdc_stream``: decoded delivery parquet into one sink, with the
   whole policy (lineage, maintenance, mart, export).
-- ``start_cdc_envelope_stream``: Kafka-shaped frames (the exact column set
-  of ``readStream.format("kafka")``) decoded on the stream by
-  ``cdc.envelope.parse_cdc_envelope`` into one sink, lineage only;
-  swapping in a real broker is replacing the file source with
-  ``cdc.envelope.kafka_source``.
 - ``start_cdc_multi_table_stream`` / ``start_cdc_catalog_stream``: one
-  frame stream routed by ``__table`` to N sinks, each route's slice
-  decoded with its own schema, with lineage and maintenance.  The
-  multi-table stream applies every route on every trigger; the catalog
-  stream only routes present in the batch.
+  stream of Kafka-shaped frames (the exact column set of
+  ``readStream.format("kafka")``; swapping in a real broker is replacing
+  the file source with ``cdc.envelope.kafka_source``) routed to N sinks by
+  one rule: a frame goes to the sink its ``__table`` names.  Both run the
+  one routed step ``_start_routed``: per trigger it collects the routes
+  present in the batch, and for each present route that the starter's
+  route map names, decodes that route's slice with the route's own schema
+  and runs ``_sink_epoch`` on it, with lineage and maintenance.  A route
+  with no rows in a trigger commits nothing.  The multi-table stream's
+  route map is fixed at start; the catalog stream converges its map onto
+  the catalog every trigger, because its table set is dynamic.
 
 Sink, lineage and mart handles are opened once per stream: a ``LakeTable``
 handle holds only ``spark`` and ``root`` and re-reads the snapshot pointer
-on every call.  Only the catalog stream converges its sinks per trigger,
-because its table set is dynamic.
+on every call.
 
 Exactly-once contract (reference analogs X1/X2/X6 in SURVEY.md §2.9):
 Spark's checkpoint gives at-least-once ``foreachBatch`` invocations with a
@@ -61,15 +62,6 @@ def _source(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(glob)
-    )
-
-
-def _routed_frames(spark: SparkSession, frames_glob: str, max_files_per_trigger: int) -> DataFrame:
-    """Frames with ONLY the routing field extracted: one narrow JVM
-    expression per message; the full decode runs per slice."""
-    frames = _source(spark, KAFKA_FRAME_SCHEMA, frames_glob, max_files_per_trigger)
-    return frames.withColumn(
-        ROUTE_COL, F.get_json_object(F.col("value").cast("string"), "$.__table")
     )
 
 
@@ -170,29 +162,50 @@ def _sink_epoch(
         write_symlink_manifest(table, export_dir, version=table.current_version())
 
 
-def _route_epoch(
-    batch_df: DataFrame,
-    name: str,
-    payload_schema: T.StructType | None,
-    table: LakeTable,
-    batch_id: int,
-    lineage: LakeTable | None,
+def _start_routed(
+    spark: SparkSession,
+    frames_glob: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    routes: Callable[[set[str]], dict],
     *policy,
-) -> None:
-    """Decode route ``name``'s slice of a routed frame batch and run
-    ``_sink_epoch`` on it (``policy``: its maintenance arguments).  The
-    DECODED slice is persisted too: the sink step consumes it several
+):
+    """The one routed stream: Kafka-shaped frames with ONLY the routing
+    field extracted on the stream (one narrow JVM expression per message),
+    drained by one per-trigger step.
+
+    ``routes(present)`` is read once per trigger with the set of route
+    names that have rows in it, and returns ``{name: (table, payload
+    schema or None, lineage or None)}``.  For each present route the map
+    names, in sorted order, the step decodes that route's slice with its
+    schema and runs ``_sink_epoch`` on it (``policy``: its maintenance
+    arguments).  A route missing from the map is never decoded; a route
+    with no rows in the trigger gets no merge, no lineage row and no
+    rolling maintenance.
+
+    The DECODED slice is persisted too: the sink step consumes it several
     times (bucket probe, lineage, merge, maintenance max-lsn) and each
     action would otherwise re-run the heavy ``from_json`` over the raw
-    frames — this is what makes "full-decoded exactly once" true, not
-    just intended."""
-    sl = parse_cdc_envelope(
-        batch_df.where(F.col(ROUTE_COL) == name), payload_schema=payload_schema
-    ).persist()
-    try:
-        _sink_epoch(table, sl, batch_id, lineage, *policy)
-    finally:
-        sl.unpersist()
+    frames, so every message is full-decoded exactly once."""
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        present = {r[ROUTE_COL] for r in batch_df.select(ROUTE_COL).distinct().collect()}
+        sinks = routes(present)
+        for name in sorted(present & sinks.keys()):
+            table, payload_schema, lineage = sinks[name]
+            sl = parse_cdc_envelope(
+                batch_df.where(F.col(ROUTE_COL) == name), payload_schema=payload_schema
+            ).persist()
+            try:
+                _sink_epoch(table, sl, batch_id, lineage, *policy)
+            finally:
+                sl.unpersist()
+
+    frames = _source(spark, KAFKA_FRAME_SCHEMA, frames_glob, max_files_per_trigger)
+    routed = frames.withColumn(
+        ROUTE_COL, F.get_json_object(F.col("value").cast("string"), "$.__table")
+    )
+    return _run(routed.where(F.col(ROUTE_COL).isNotNull()), checkpoint_dir, _apply)
 
 
 def start_cdc_stream(
@@ -207,7 +220,6 @@ def start_cdc_stream(
     maintenance_groups: int = 4,
     tombstone_retain_lsn: int | None = None,
     mart_root: str | None = None,
-    mart_group_cols: tuple[str, ...] = ("source",),
     export_dir: str | None = None,
 ):
     """Start (or restart from checkpoint) the streaming tail.
@@ -228,8 +240,9 @@ def start_cdc_stream(
     (see ``gc_tombstones``).
 
     ``mart_root``: maintain a derived aggregate mart (a streaming
-    materialized view) alongside the sink — after each merge, the mart is
-    folded forward from ``LakeTable.changes`` over exactly the version
+    materialized view, one row per ``source``) alongside the sink — after
+    each merge, the mart is folded forward from ``LakeTable.changes`` over
+    exactly the version
     interval the merge produced (reference analog: the incremental
     nft_events build as a continuous process).  Crash-safe with no side
     channel: the refresh cursor is recovered from the mart's own commit
@@ -250,7 +263,7 @@ def start_cdc_stream(
     if mart_root is not None:
         from ton_etl_spark.lake.incremental import make_agg_mart
 
-        mart = make_agg_mart(spark, mart_root, group_cols=list(mart_group_cols))
+        mart = make_agg_mart(spark, mart_root, group_cols=["source"])
 
     src = _source(spark, CDC_EVENT_SCHEMA_EVOLVED, log_glob, max_files_per_trigger)
     # free per-micro-batch delivery counters in the streaming progress
@@ -270,31 +283,6 @@ def start_cdc_stream(
             maintenance_every, maintenance_groups, tombstone_retain_lsn,
             mart=mart, export_dir=export_dir,
         ),
-    )
-
-
-def start_cdc_envelope_stream(
-    spark: SparkSession,
-    frames_glob: str,
-    table_root: str,
-    checkpoint_dir: str,
-    lineage_root: str | None = None,
-    n_buckets: int = 16,
-    max_files_per_trigger: int = 2,
-    table_filter: str | None = None,
-):
-    """Streaming tail over Kafka-SHAPED frames: decode the Debezium JSON
-    envelope per micro-batch, then the same exactly-once MERGE as
-    ``start_cdc_stream``.  ``from_json`` is a streamable projection, so the
-    decode lives on the streaming DataFrame itself (JVM-side, codegen), not
-    in foreachBatch."""
-    table = make_sequences_table(spark, table_root, n_buckets=n_buckets)
-    lineage = make_lineage_table(spark, lineage_root) if lineage_root else None
-    frames = _source(spark, KAFKA_FRAME_SCHEMA, frames_glob, max_files_per_trigger)
-    return _run(
-        parse_cdc_envelope(frames, table=table_filter),
-        checkpoint_dir,
-        lambda batch_df, batch_id: _sink_epoch(table, batch_df, batch_id, lineage),
     )
 
 
@@ -321,7 +309,9 @@ def start_cdc_multi_table_stream(
     to its own payload ``StructType`` (must carry the engine envelope
     columns doc_id/op/lsn/ts_ms; defaults to the tokenized-sequence
     schema) — the reference's parsers each produce a different table
-    shape from the same topic.
+    shape from the same topic.  A key of ``payload_schemas`` or
+    ``lineage_roots`` that names no route in ``table_roots`` is a
+    ``ValueError`` before anything is created.
 
     Decode is two-phase, sized to what each phase needs: the STREAM
     extracts only the routing field, and each table's full Debezium
@@ -332,9 +322,11 @@ def start_cdc_multi_table_stream(
     dropped before any heavy parse, the same way the reference ignores
     topics absent from its routing map.
 
-    ``maintenance_every``/``maintenance_groups``/``tombstone_retain_lsn``:
-    the same rolling maintenance policy as ``start_cdc_stream``, applied to
-    EVERY sink (and its lineage table) on maintenance epochs — without it a
+    A sink with no rows in a trigger is skipped: no merge, no lineage row,
+    no maintenance.  ``maintenance_every``/``maintenance_groups``/
+    ``tombstone_retain_lsn``: the same rolling maintenance policy as
+    ``start_cdc_stream``, applied to each sink (and its lineage table) on
+    the maintenance epochs in which it receives rows — without it a
     long-running multi-table stream's lineage tables grow one file per
     bucket per epoch without bound.
 
@@ -345,6 +337,13 @@ def start_cdc_multi_table_stream(
     exactly-once without cross-table coordination (the same property the
     reference gets from per-sink consumer groups)."""
     schemas = payload_schemas or {}
+    lineage_roots = lineage_roots or {}
+    unknown = sorted((schemas.keys() | lineage_roots.keys()) - table_roots.keys())
+    if unknown:
+        raise ValueError(
+            f"payload_schemas/lineage_roots name {unknown}, which are not "
+            f"routes of table_roots {sorted(table_roots)}"
+        )
     sinks = {}
     for name, root in table_roots.items():
         if name in schemas:
@@ -369,21 +368,12 @@ def start_cdc_multi_table_stream(
                 f"configured payload schema would not decode — pass the "
                 f"table's schema in payload_schemas (config drift guard)"
             )
-        sinks[name] = t
-    lineages = {
-        name: make_lineage_table(spark, root)
-        for name, root in (lineage_roots or {}).items()
-    }
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        for name, t in sinks.items():
-            _route_epoch(
-                batch_df, name, schemas.get(name), t, batch_id, lineages.get(name),
-                maintenance_every, maintenance_groups, tombstone_retain_lsn,
-            )
-
-    routed = _routed_frames(spark, frames_glob, max_files_per_trigger)
-    return _run(routed.where(F.col(ROUTE_COL).isin(list(table_roots))), checkpoint_dir, _apply)
+        lineage = make_lineage_table(spark, lineage_roots[name]) if name in lineage_roots else None
+        sinks[name] = (t, schemas.get(name), lineage)
+    return _start_routed(
+        spark, frames_glob, checkpoint_dir, max_files_per_trigger, lambda _present: sinks,
+        maintenance_every, maintenance_groups, tombstone_retain_lsn,
+    )
 
 
 def start_cdc_catalog_stream(
@@ -419,11 +409,15 @@ def start_cdc_catalog_stream(
     flowing within one trigger of appearing in the catalog.
 
     Sinks live at ``<tables_dir>/<table_name>`` (lineage, when enabled, at
-    ``<lineage_dir>/<table_name>``).  Each slice decodes against its sink's
-    STORED schema — a superset of the catalog under the additive-only
-    contract — so a column the catalog dropped keeps decoding (new row
-    images null it, which is the correct complete-image semantics), and a
-    column the catalog just added decodes from this very batch onward.
+    ``<lineage_dir>/<table_name>``, opened the first time the table has
+    rows).  Each slice decodes against its sink's STORED schema — a
+    superset of the catalog under the additive-only contract — so a column
+    the catalog dropped keeps decoding (new row images null it, which is
+    the correct complete-image semantics), and a column the catalog just
+    added decodes from this very batch onward.  Provisioning and evolution
+    converge on the WHOLE catalog, but only tables with rows in the trigger
+    are decoded, merged and maintained — a catalog of hundreds of tables
+    must not cost hundreds of no-op Spark job groups per trigger.
 
     Events for tables not (yet) in the catalog are dropped before any heavy
     parse, exactly as the reference ignores topics absent from its routing
@@ -438,17 +432,9 @@ def start_cdc_catalog_stream(
     key_cols = list(key_cols or KEY_COLS)
     lineages: dict[str, LakeTable] = {}
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _routes(present: set[str]) -> dict:
         catalog = catalog_provider()
-        # which tables actually have rows this trigger: one tiny distinct
-        # over the already-extracted route column.  Sink provisioning and
-        # evolution below still converge on the WHOLE catalog (O(columns)
-        # driver-side metadata), but the heavy decode→merge path runs only
-        # for present tables — a catalog of hundreds of tables must not
-        # cost hundreds of no-op Spark job groups per trigger.
-        present = {
-            r[ROUTE_COL] for r in batch_df.select(ROUTE_COL).distinct().collect()
-        }
+        sinks = {}
         for name in sorted(catalog):
             t, _report = sync_table_from_catalog(
                 spark, os.path.join(tables_dir, name), catalog[name],
@@ -459,15 +445,13 @@ def start_cdc_catalog_stream(
                 continue
             if lineage_dir and name not in lineages:
                 lineages[name] = make_lineage_table(spark, os.path.join(lineage_dir, name))
-            _route_epoch(
-                batch_df, name, t.current().schema, t, batch_id, lineages.get(name),
-                maintenance_every, maintenance_groups, tombstone_retain_lsn,
-            )
+            sinks[name] = (t, t.current().schema, lineages.get(name))
+        return sinks
 
-    # no table filter on the stream: the table set is dynamic, so
-    # membership is decided per micro-batch
-    routed = _routed_frames(spark, frames_glob, max_files_per_trigger)
-    return _run(routed.where(F.col(ROUTE_COL).isNotNull()), checkpoint_dir, _apply)
+    return _start_routed(
+        spark, frames_glob, checkpoint_dir, max_files_per_trigger, _routes,
+        maintenance_every, maintenance_groups, tombstone_retain_lsn,
+    )
 
 
 def run_stream_to_completion(
