@@ -39,7 +39,7 @@ from typing import Any, Iterable, Mapping
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from ton_etl_spark.lake.table import LakeTable, _merge_schemas, _widen_type
+from ton_etl_spark.lake.table import LakeTable, _local_frame, _merge_schemas, _widen_type
 
 _LOG = logging.getLogger(__name__)
 
@@ -255,6 +255,6 @@ def sync_table_from_catalog(
     if commit_key is None:
         cols_sig = json.dumps([(f.name, f.dataType.simpleString()) for f in merged.fields])
         commit_key = "catalog-sync-" + hashlib.md5(cols_sig.encode()).hexdigest()[:16]
-    t.append(spark.createDataFrame([], merged), commit_key=commit_key)
+    t.append(_local_frame(spark, merged), commit_key=commit_key)
     return t, {"action": "evolved", "added": added, "missing_in_catalog": removed,
                "widened": widened}

@@ -53,6 +53,7 @@ from ton_etl_spark.lake.table import (
     ROW,
     LakeTable,
     Snapshot,
+    _local_frame,
     feed_frame,
     outputs,
 )
@@ -139,7 +140,7 @@ def _fold(
     try:
         buckets = sorted(mart.buckets_of(delta, msnap))
         if not buckets:
-            mart.append(mart.spark.createDataFrame([], msnap.schema), commit_key=commit_key)
+            mart.append(_local_frame(mart.spark, msnap.schema), commit_key=commit_key)
             return True, []
         stored = mart.read(buckets=buckets, version=msnap.version).select(
             *[F.col(c).alias(_OLD + c) for c in names]

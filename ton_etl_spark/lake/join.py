@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ton_etl_spark.cdc.schema import OP_COL, is_cdc_schema
-from ton_etl_spark.lake.table import LakeTable
+from ton_etl_spark.lake.table import LakeTable, _local_frame
 
 __all__ = ["colocated_join"]
 
@@ -234,7 +234,7 @@ def colocated_join(
         rows.append((b, json.dumps(lf), json.dumps(rf)))
     spark = left.spark
     if not rows:
-        return spark.createDataFrame([], out_schema)
+        return _local_frame(spark, out_schema)
 
     # one RDD slice per surviving bucket => one mapInArrow task per bucket,
     # and the plan stays Exchange-free (ExistingRDD -> MapInArrow)

@@ -288,12 +288,12 @@ def _conform_where_in(
     coerced comparison ('07' = 7) would disagree with the bucket hash of
     the stringified probe, silently missing rows in pruned reads.  After
     conformance every comparison is same-type: no column cast, no ANSI
-    crash, hash and filter agree.  NULLs pass through (they never match
-    ``isin`` but the encoder's unprunable sentinel must see them);
-    unknown columns pass through so the filter raises Spark's own
-    unresolved-column error."""
+    crash, hash and filter agree.  NULLs are dropped too: they never
+    satisfy ``isin``, so keeping one would only turn off the column's
+    pruning.  Unknown columns pass through so the filter raises Spark's
+    own unresolved-column error."""
     import datetime as _dt
-    from decimal import Decimal, InvalidOperation
+    from decimal import Context, Decimal, InvalidOperation
 
     names = set(schema.fieldNames())
     out: dict[str, list] = {}
@@ -305,7 +305,6 @@ def _conform_where_in(
         conv: list = []
         for v in vals:
             if v is None:
-                conv.append(None)
                 continue
             try:
                 if isinstance(
@@ -317,7 +316,10 @@ def _conform_where_in(
                         continue  # 7.5 can equal no integral value
                     if isinstance(v, Decimal) and v % 1 != 0:
                         continue  # int() would TRUNCATE Decimal('7.5') to 7
-                    conv.append(int(v))
+                    # tinyint..bigint hold 8 << rank bits
+                    half = 1 << ((8 << _INT_RANK[dt.simpleString()]) - 1)
+                    if -half <= int(v) < half:
+                        conv.append(int(v))
                 elif isinstance(dt, (T.FloatType, T.DoubleType)):
                     if isinstance(v, bool):
                         continue
@@ -325,7 +327,10 @@ def _conform_where_in(
                 elif isinstance(dt, T.StringType):
                     conv.append(v if isinstance(v, str) else str(v))
                 elif isinstance(dt, T.DecimalType):
-                    conv.append(v if isinstance(v, Decimal) else Decimal(str(v)))
+                    d = v if isinstance(v, Decimal) else Decimal(str(v))
+                    q = d.quantize(Decimal(1).scaleb(-dt.scale), context=Context(prec=80))
+                    if q == d and len(q.as_tuple().digits) <= dt.precision:
+                        conv.append(d)  # else: more digits than the type holds
                 elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
                     if isinstance(v, str):
                         conv.append(_dt.datetime.fromisoformat(v))
@@ -495,6 +500,27 @@ def _ntz_wall(v: Any, zone) -> Any:
     if zone is None or not isinstance(v, _dt.datetime):
         return v
     return _pin_naive(v).astimezone(zone).replace(tzinfo=None)
+
+
+def _probe_stored(v: Any, dt: T.DataType | None, zone) -> Any:
+    """The one stored value a conformed ``where_in`` probe ``v`` can equal
+    under the residual ``isin``, in the form the bucket hash and the footer
+    stats both take; None when there is no single one, which keeps the
+    column unprunable.  A ``timestamp`` probe is the instant
+    (``_pin_naive``).  A ``timestamp_ntz`` probe is its session-zone wall
+    clock, when ``_ntz_walls`` pins it to one (an unknown zone, or a DST
+    gap or fold within reach, does not).  A datetime probe on a ``date``
+    column matches the date whose session-zone midnight it is, so it is
+    that instant's session-zone date (Spark compares a date with a
+    datetime as timestamps)."""
+    import datetime as _dt
+
+    if isinstance(dt, T.TimestampNTZType):
+        lo, hi = _ntz_walls(v, zone)
+        return lo if lo == hi else None
+    if isinstance(v, _dt.datetime) and isinstance(dt, T.DateType):
+        return None if zone is None else _ntz_wall(v, zone).date()
+    return _pin_naive(v)
 
 
 def _file_may_match(f: DataFile, enc_where: dict[str, tuple[Any, Any]]) -> bool:
@@ -1102,8 +1128,9 @@ class LakeTable:
         ``parser/db.py:112-256``); columns AND together, values within a
         column OR.  Three pruning layers compose: (1) when the probe
         columns cover the table's key columns, the candidate BUCKETS are
-        computed by hashing the probe keys (one tiny local-relation job) —
-        a point lookup on a 100 TB table opens one bucket's files; (2)
+        computed by hashing the probe keys over an Arrow-built local
+        relation (no Spark job) — a point lookup on a 100 TB table
+        opens one bucket's files; (2)
         files whose [min, max] bounds contain no probe value are skipped;
         (3) the residual ``isin`` filter is pushed to the Parquet scan,
         where per-file bloom filters (``bloom_cols``) do the row-group
@@ -1115,12 +1142,14 @@ class LakeTable:
         (``_conform_where_in``): an int probe on a string column looks up
         the string form, a string probe on a long column is parsed, and a
         value the type cannot represent matches nothing — never an ANSI
-        runtime cast error, and never a hash/filter disagreement."""
+        runtime cast error, and never a hash/filter disagreement.  A plan
+        that keeps no file returns an empty local frame (``_local_frame``):
+        no Spark job."""
         p = self.plan(buckets=buckets, version=version, where=where, tag=tag,
                       where_in=where_in)
         schema = p.snapshot.schema
         if not p.files:
-            return self.spark.createDataFrame([], schema)
+            return _local_frame(self.spark, schema)
         paths = [os.path.join(self.root, f.path) for f in p.files]
         # explicit schema => old files yield NULL for late-added columns
         # (additive evolution), and column pruning/pushdown still apply.
@@ -1144,13 +1173,17 @@ class LakeTable:
            types (``_conform_where_bounds`` / ``_conform_where_in``); a
            probe list left empty matches nothing, so no file survives;
         2. a key-covering probe picks the candidate buckets
-           (``_probe_buckets``, the only Spark job planning runs), and any
-           bucket pruning first checks the recorded bucket function;
+           (``_probe_buckets``, which hashes a local relation: planning
+           runs no Spark job), and any bucket pruning first checks the recorded
+           bucket function;
         3. files whose manifest bounds exclude every probe value or a range
-           are skipped (``_file_may_match_in`` / ``_file_may_match``), with
-           naive datetimes pinned the way the residual reads them, and
-           values on ``timestamp_ntz`` columns taken as wall clocks in
-           ``spark.sql.session.timeZone`` (``_ntz_walls``).
+           are skipped (``_file_may_match_in`` / ``_file_may_match``).
+
+        Probe values are hashed and compared with the stats in the one
+        stored form the residual can match (``_probe_stored``); range
+        bounds are pinned the same way, and on ``timestamp_ntz`` columns
+        taken as wall clocks in ``spark.sql.session.timeZone``
+        (``_ntz_walls``).
 
         The residual is the conformed predicate as one Column: ranges
         (``>=``/``<=``) AND ``isin`` lists.  NULL in a predicate column
@@ -1172,17 +1205,22 @@ class LakeTable:
         residual = functools.reduce(operator.and_, terms) if terms else None
         bounds = {c: (_pin_naive(lo), _pin_naive(hi)) for c, (lo, hi) in where.items()}
         # timestamp_ntz stats are wall clocks: predicate values on those
-        # columns are compared as session-zone wall clocks (``_ntz_walls``)
-        ntz = {f.name for f in snap.schema.fields
-               if isinstance(f.dataType, T.TimestampNTZType)} & (set(where) | set(where_in))
-        zone = _session_zone(self.spark.conf.get("spark.sql.session.timeZone")) if ntz else None
+        # columns are compared as session-zone wall clocks (``_ntz_walls``);
+        # a date column meets a datetime probe at session-zone midnight
+        types = {f.name: f.dataType for f in snap.schema.fields}
+        ntz = {c for c in set(where) | set(where_in)
+               if isinstance(types.get(c), T.TimestampNTZType)}
+        zoned = ntz | {c for c in where_in if isinstance(types.get(c), T.DateType)}
+        zone = _session_zone(self.spark.conf.get("spark.sql.session.timeZone")) if zoned else None
         walls = {c: (_ntz_wall(lo, zone), _ntz_wall(hi, zone)) if c in ntz else (lo, hi)
                  for c, (lo, hi) in bounds.items()}
         if any(len(v) == 0 for v in where_in.values()):
             # empty, or emptied by conformance: skip the scan entirely
             return ScanPlan(snap, [], residual, walls)
+        stored = {c: [_probe_stored(v, types.get(c), zone) for v in vals]
+                  for c, vals in where_in.items()}
         if where_in and buckets is None:
-            buckets = self._probe_buckets(snap, where_in)
+            buckets = self._probe_buckets(snap, stored)
         if buckets is not None:
             # pruning correctness depends on the bucket hash matching
             self.check_bucket_fn(snap)
@@ -1190,15 +1228,11 @@ class LakeTable:
         if where_in:
             # encoded once per plan, not per file (a snapshot can list 10^5
             # files): sorted for the bisect; [] marks a column unprunable
-            # when any probe value is NULL, unencodable or unorderable, or
-            # an NTZ probe has no single wall clock
+            # when any probe value has no single stored form or is
+            # unencodable or unorderable
             enc_in: dict[str, list] = {}
-            for col, vals in where_in.items():
-                if col in ntz:
-                    walls = [_ntz_walls(v, zone) for v in vals]
-                    ev = [_stats_encode(lo) if lo == hi else None for lo, hi in walls]
-                else:
-                    ev = [_stats_encode(_pin_naive(v)) for v in vals]
+            for col, vals in stored.items():
+                ev = [_stats_encode(v) for v in vals]
                 try:
                     enc_in[col] = sorted(ev) if None not in ev else []
                 except TypeError:
@@ -1219,42 +1253,39 @@ class LakeTable:
         self, snap: Snapshot, where_in: dict[str, list]
     ) -> list[int] | None:
         """Candidate buckets for a key-covering point lookup, or None when
-        bucket pruning cannot apply (probe misses a key column, or the key
-        cross-product is too large to enumerate).  The probe keys are hashed
-        through the SAME Spark expression that routed writes (``bucket_of``
-        over the snapshot's key schema — a Python reimplementation of
-        murmur3 would be a silent-corruption risk), as one local-relation
-        job over at most ``_PROBE_BUCKET_MAX_COMBOS`` rows."""
+        bucket pruning cannot apply: the probe misses a key column, a key
+        value is None (no single stored form, see ``_probe_stored``) or
+        one the key type cannot hold, or the key cross-product exceeds
+        ``_PROBE_BUCKET_MAX_COMBOS``.  ``where_in`` holds stored-form
+        values.  The combinations are hashed through the SAME Spark
+        expression that routed writes (``bucket_of`` over the snapshot's
+        key schema — a Python reimplementation of murmur3 would be a
+        silent-corruption risk) over one Arrow-built local frame
+        (``_local_frame``), so collecting the bucket ids runs no Spark job;
+        they are deduplicated here."""
         import itertools
 
         if not set(snap.key_cols) <= set(where_in):
             return None
-        sizes = [len(where_in[k]) for k in snap.key_cols]
-        n_combos = 1
-        for s in sizes:
-            n_combos *= s
-        if n_combos == 0 or n_combos > self._PROBE_BUCKET_MAX_COMBOS:
+        lists = [where_in[k] for k in snap.key_cols]
+        n_combos = functools.reduce(operator.mul, map(len, lists), 1)
+        if (n_combos == 0 or n_combos > self._PROBE_BUCKET_MAX_COMBOS
+                or any(None in vals for vals in lists)):
             return None
         self.check_bucket_fn(snap)
-        key_fields = T.StructType(
-            [snap.schema[k] for k in snap.key_cols]  # exact key types: the
-            # murmur3 of int32 and int64 differ, so probe literals must be
-            # cast to the stored key schema before hashing
-        )
-        combos = list(itertools.product(*(where_in[k] for k in snap.key_cols)))
+        # exact key types: the murmur3 of int32 and int64 differ, so probe
+        # values take the stored key schema before hashing
+        key_fields = T.StructType([snap.schema[k] for k in snap.key_cols])
         try:
-            kdf = self.spark.createDataFrame(combos, key_fields)
-            expr = bucket_of(snap.key_cols, snap.n_buckets)
-            return sorted(
-                {r[0] for r in kdf.select(expr.alias("b")).distinct().collect()}
+            kdf = _local_frame(
+                self.spark, key_fields, list(zip(*itertools.product(*lists)))
             )
-        except (TypeError, ValueError):
-            # a probe value that mismatches the key schema (wrong Python
-            # type, NULL against a non-nullable key field) cannot be hashed
-            # — fall back to the unpruned path rather than crashing the
-            # read/delete; the residual isin filter stays the truth, same
-            # as a probe on a non-key column
+        except (TypeError, ValueError, OverflowError):
+            # a value the key type cannot hold falls back to the unpruned
+            # path; the residual isin filter stays the truth
             return None
+        expr = bucket_of(snap.key_cols, snap.n_buckets)
+        return sorted({r[0] for r in kdf.select(expr).collect()})
 
     def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Incremental changelog between two snapshots (Iceberg
@@ -1308,8 +1339,9 @@ class LakeTable:
             parts = {INSERT: ins.exceptAll(dele), DELETE: dele.exceptAll(ins)}
         tagged = [df.withColumn(CHANGE_COL, F.lit(c)) for c, df in parts.items()]
         if not tagged:
-            return self.spark.createDataFrame(
-                [], T.StructType(schema.fields + [T.StructField(CHANGE_COL, T.StringType())])
+            return _local_frame(
+                self.spark,
+                T.StructType(schema.fields + [T.StructField(CHANGE_COL, T.StringType())]),
             )
         return functools.reduce(DataFrame.unionByName, tagged)
 
@@ -1737,3 +1769,26 @@ def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols)
+
+
+def _local_frame(
+    spark: SparkSession, schema: T.StructType, columns: list[list] | None = None
+) -> DataFrame:
+    """A DataFrame over in-process values: ``columns`` holds one value
+    list per field of ``schema`` (None: zero rows).  The values become one
+    Arrow table typed by ``to_arrow_type``, which Spark takes as a local
+    relation: building it runs no Spark job and no Python worker, and a
+    projection or filter over it folds into the relation, so collecting
+    one runs no job either (``createDataFrame(list)`` runs two jobs
+    through a Python worker).  A ``timestamp`` value must be an aware
+    datetime (Arrow reads a naive one as UTC); a ``timestamp_ntz`` value
+    is a wall clock.  A value the Arrow type cannot hold raises
+    ``TypeError``, ``ValueError`` or ``OverflowError``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if columns is None:
+        columns = [[] for _ in schema.fields]
+    arrays = [pa.array(list(vals), type=to_arrow_type(f.dataType))
+              for f, vals in zip(schema.fields, columns)]
+    return spark.createDataFrame(pa.table(arrays, names=schema.fieldNames()), schema)
