@@ -223,3 +223,43 @@ def test_ntz_skipping_agrees_with_residual_in_any_session_zone(spark, tmp_path):
             assert len(t.plan(where={"ts": span}).files) == 2, tz
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def test_date_skipping_with_datetime_bounds_agrees_with_residual(spark, tmp_path):
+    """Spark compares a ``date`` column with a datetime bound at the date's
+    session-zone midnight, while the footer stats hold ISO dates.  20
+    daily rows in 4 files: ``read(where=)`` with datetime bounds must
+    return what the residual returns over every file, in a UTC and a Tokyo
+    session, and still skip."""
+    from zoneinfo import ZoneInfo
+
+    utc, tokyo = dt.timezone.utc, ZoneInfo("Asia/Tokyo")
+    day0 = dt.date(2026, 1, 1)
+    schema = spark.createDataFrame([], "k long, d date").schema
+    t = LakeTable.create(spark, str(tmp_path / "dates"), schema=schema, key_cols=["k"],
+                         n_buckets=1, stats_cols=["d"], sort_cols=["d"], target_file_rows=5)
+    t.append(spark.createDataFrame(
+        [(i, day0 + dt.timedelta(days=i)) for i in range(20)], schema), commit_key="seed")
+    assert len(t.current().files) == 4
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for tz, zone in (("UTC", utc), ("Asia/Tokyo", tokyo)):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            midnight = dt.datetime(2026, 1, 5, tzinfo=zone)  # this session's 2026-01-05
+            cases = [
+                (dt.datetime(2026, 1, 5), dt.datetime(2026, 1, 5)),  # naive
+                (midnight, midnight),
+                (midnight - dt.timedelta(hours=1), midnight + dt.timedelta(hours=1)),
+                (midnight + dt.timedelta(hours=1), None),
+                (None, midnight - dt.timedelta(seconds=1)),
+                (dt.datetime(2026, 1, 12, 12, tzinfo=utc), dt.datetime(2026, 1, 14, tzinfo=utc)),
+            ]
+            for lo, hi in cases:
+                p = t.plan(where={"d": (lo, hi)})
+                want = {r["k"] for r in t.read().where(p.residual).collect()}
+                got = {r["k"] for r in t.read(where={"d": (lo, hi)}).collect()}
+                assert got == want, (tz, lo, hi)
+            assert {r["k"] for r in t.read(where={"d": (midnight, midnight)}).collect()} == {4}
+            assert len(t.plan(where={"d": (midnight, midnight)}).files) == 1, tz
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)

@@ -11,10 +11,13 @@ duplicate + schema-evolving delivery.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ton_etl_spark.cdc.schema import (
@@ -25,7 +28,7 @@ from ton_etl_spark.cdc.schema import (
     op_priority_expr,
 )
 from ton_etl_spark.functions.tokens import with_token_validation
-from ton_etl_spark.lake.table import LakeTable
+from ton_etl_spark.lake.table import LakeTable, arrow_rows, bucket_of
 from ton_etl_spark.lake.merge import merge_lww
 
 
@@ -123,44 +126,46 @@ def apply_cdc_batch(
     lineage: LakeTable | None = None,
 ) -> dict:
     """Apply one delivery micro-batch: record per-partition lineage of the
-    delivered rows, validate tokens (vectorized pandas UDF), then MERGE
-    (``merge_lww``).  Idempotent on ``epoch`` (the commit manifest key), so
-    a re-executed foreachBatch or a crash-restart replaying the same epoch
-    is a no-op."""
+    delivered rows (committed from the driver: no Spark write), validate
+    tokens (vectorized pandas UDF), then MERGE (``merge_lww``).
+    Idempotent on ``epoch`` (the commit manifest key), so a re-executed
+    foreachBatch or a crash-restart replaying the same epoch is a
+    no-op."""
     commit_key = f"epoch={epoch}"
-    if table.has_commit(commit_key):
+    snap = table.current()
+    if snap.has_commit_key(commit_key):
         return {"applied": False, "epoch": epoch}
+    table.check_bucket_fn(snap)
     # Deliberately NOT persisted: at bench scale (1.4M rows/batch) caching
     # the full payload measured 6-20% SLOWER than paying the second,
     # column-pruned scan below (A/B 2026-08-17: persist 472-540k ev/s vs
     # two-scan 564-571k, persist-first ordering).  The STREAMING wrapper
     # persists its micro-batches anyway — there the win is progress-counter
     # exactness and (envelope path) from_json decode reuse.
-    # bucket probe on the RAW batch: a column-pruned scan of the key only
-    # (the validation UDF below would otherwise run twice — once for
-    # the probe, once for the merge; measured ~2× epoch cost)
-    buckets = table.buckets_of(batch, table.current())
-
-    # Lineage is computed on the RAW batch, before validation: (a) the audit
+    # One aggregate over the RAW batch, grouped by (partition, bucket) when
+    # lineage is on and by bucket otherwise, gives the touched buckets (the
+    # validation UDF below would otherwise run twice — once for the probe,
+    # once for the merge; measured ~2× epoch cost) and the lineage rows.
+    # Lineage describes the RAW batch, before validation: (a) the audit
     # record should describe what was DELIVERED, not what survived repair —
     # exactly the reference's per-batch consumer counters
     # (parser/main.py:70,136-137); (b) it keeps the validation UDF out of
     # this scan, so the Arrow bridge runs once per epoch, not twice.
+    by = [bucket_of(snap.key_cols, snap.n_buckets).alias("bucket")]
+    aggs = [F.count(F.lit(1)).alias("event_count")]
     if lineage is not None:
-        lin = (
-            batch.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.min(LSN_COL).alias("min_lsn"),
-                F.max(LSN_COL).alias("max_lsn"),
-                F.count(F.lit(1)).alias("event_count"),
-                # order-insensitive content hash of the partition (XOR never
-                # overflows under ANSI mode, unlike SUM of 64-bit hashes)
-                F.bit_xor(F.xxhash64(*[F.col(c) for c in batch.columns])).alias("commit_hash"),
-            )
-            .withColumn("checkpoint_epoch", F.lit(epoch).cast("long"))
-            .select("checkpoint_epoch", "partition_id", "min_lsn", "max_lsn", "event_count", "commit_hash")
-        )
-        lineage.append(lin, commit_key=commit_key)
+        by.insert(0, F.spark_partition_id().alias("partition_id"))
+        aggs += [
+            F.min(LSN_COL).alias("min_lsn"),
+            F.max(LSN_COL).alias("max_lsn"),
+            # order-insensitive content hash (XOR never overflows under
+            # ANSI mode, unlike SUM of 64-bit hashes)
+            F.bit_xor(F.xxhash64(*[F.col(c) for c in batch.columns])).alias("commit_hash"),
+        ]
+    groups = batch.groupBy(*by).agg(*aggs).collect()  # ≤ partitions × n_buckets rows
+    buckets = sorted({r["bucket"] for r in groups})
+    if lineage is not None:
+        lineage.append(_lineage_rows(groups, epoch), commit_key=commit_key)
 
     # a batch carrying token payloads is validated; other schemas pass
     # through (heterogeneous multi-table sinks do their own domain
@@ -197,12 +202,31 @@ def replay_log_batched(
 LINEAGE_SCHEMA = "checkpoint_epoch long, partition_id int, min_lsn long, max_lsn long, event_count long, commit_hash long"
 
 
-def make_lineage_table(spark: SparkSession, root: str) -> LakeTable:
-    from pyspark.sql.types import StructType
+def _lineage_rows(groups: list, epoch: int):
+    """The lineage rows of one epoch, one per delivered partition, from the
+    batch's (partition, bucket) groups: min, max, count and XOR all compose
+    across a partition's bucket sub-groups.  An Arrow table, so
+    ``append`` commits it through the driver writer."""
+    parts: dict[int, list] = {}
+    for r in groups:
+        parts.setdefault(r["partition_id"], []).append(r)
+    rows = [
+        (epoch, pid,
+         min((r["min_lsn"] for r in rs if r["min_lsn"] is not None), default=None),
+         max((r["max_lsn"] for r in rs if r["max_lsn"] is not None), default=None),
+         sum(r["event_count"] for r in rs),
+         functools.reduce(operator.xor, (r["commit_hash"] for r in rs)))
+        for pid, rs in sorted(parts.items())
+    ]
+    return arrow_rows(
+        T.StructType.fromDDL(LINEAGE_SCHEMA), [list(c) for c in zip(*rows)] if rows else None
+    )
 
-    schema = spark.createDataFrame([], LINEAGE_SCHEMA).schema
+
+def make_lineage_table(spark: SparkSession, root: str) -> LakeTable:
     return LakeTable.get_or_create(
-        spark, root, schema=schema, key_cols=["checkpoint_epoch", "partition_id"], n_buckets=4
+        spark, root, schema=T.StructType.fromDDL(LINEAGE_SCHEMA),
+        key_cols=["checkpoint_epoch", "partition_id"], n_buckets=4,
     )
 
 

@@ -18,7 +18,10 @@ only its per-group signed delta — ``refresh_agg_mart`` the interval's
 changelog, ``rebuild_agg_mart`` the full recompute minus the stored rows —
 and the fold rewrites the touched mart buckets under one feed rule: a
 group with no delta keeps its row, a group that moved has its old row
-deleted and its new row inserted while its count stays above 0.
+deleted and its new row inserted while its count stays above 0.  The
+fold holds the delta and the touched mart rows on the driver, so a
+refresh runs one Spark job (the delta's collect).  It assumes one row per
+group and few groups: every caller groups by the corpus ``source``.
 
 Scale shape: one refresh costs O(changed rows) on the source side (the
 feed holds only the rows the interval's commits changed) and O(touched
@@ -35,9 +38,7 @@ state at vN, and re-running a refresh interval is a commit-key no-op.
 
 from __future__ import annotations
 
-import functools
 import json
-import operator
 import os
 import time
 from collections.abc import Callable
@@ -48,14 +49,17 @@ from pyspark.sql import types as T
 
 from ton_etl_spark.cdc.apply import live_state
 from ton_etl_spark.lake.table import (
+    BUCKET_COL,
     DELETE,
+    FEED_COL,
     INSERT,
     ROW,
     LakeTable,
     Snapshot,
-    _local_frame,
-    feed_frame,
-    outputs,
+    _conform,
+    arrow_rows,
+    bucket_of,
+    scan,
 )
 
 MART_SCHEMA_SUFFIX = [
@@ -113,10 +117,6 @@ def last_synced_version(mart: LakeTable) -> int | None:
     return best
 
 
-# prefix of the stored mart row's columns next to the delta's
-_OLD = "__old_"
-
-
 def _fold(
     mart: LakeTable, msnap: Snapshot, delta: DataFrame, commit_key: str
 ) -> tuple[bool, list[int]]:
@@ -124,49 +124,43 @@ def _fold(
     ``d_docs``/``d_tok``; a row marks its group as moved) into the stored
     rows of the buckets it touches, read at ``msnap``.
 
-    One feed rule: a group with no delta row keeps its row; a moved
-    group's old row (when there was one) is deleted, and its new row is
-    written and inserted while its count stays above 0.  The join is
-    NULL-safe on the group key: a NULL group value (nullable in the CDC
-    schema) must match its own row, or the mart accumulates duplicate
-    NULL-group rows.  A delta touching no bucket records only
-    ``commit_key``.  Returns ``(applied, touched buckets)``."""
-    names = msnap.schema.fieldNames()
-    # the delta is consumed twice — the bucket probe, then the join — so
-    # it is cached for the fold; only the ≤ n_buckets touched bucket ids
-    # reach the driver (the double-execution trap the CDC bucket probe
-    # documents in cdc/apply.py)
-    delta = delta.persist()
-    try:
-        buckets = sorted(mart.buckets_of(delta, msnap))
-        if not buckets:
-            mart.append(_local_frame(mart.spark, msnap.schema), commit_key=commit_key)
-            return True, []
-        stored = mart.read(buckets=buckets, version=msnap.version).select(
-            *[F.col(c).alias(_OLD + c) for c in names]
-        )
-        old = {c: F.col(_OLD + c) for c in names}
-        on = functools.reduce(
-            operator.and_, [old[c].eqNullSafe(delta[c]) for c in msnap.key_cols]
-        )
-        n_docs = F.coalesce(old["n_docs"], F.lit(0)) + F.coalesce(delta["d_docs"], F.lit(0))
-        n_tok = F.coalesce(old["n_tok_sum"], F.lit(0)) + F.coalesce(delta["d_tok"], F.lit(0))
-        out = F.when(delta["d_docs"].isNull(), outputs(ROW)).otherwise(F.concat(
-            F.when(n_docs > 0, outputs(ROW, INSERT)).otherwise(outputs()),
-            F.when(old["n_docs"].isNotNull(), outputs(DELETE)).otherwise(outputs()),
-        ))
-        new = {c: F.coalesce(old[c], delta[c]) for c in msnap.key_cols}
-        applied = mart.overwrite_buckets(
-            feed_frame(
-                stored.join(delta, on, "full"), msnap.schema, out,
-                new={**new, "n_docs": n_docs.cast("long"), "n_tok_sum": n_tok.cast("long")},
-                old=old,
-            ),
-            buckets, commit_key=commit_key, schema=msnap.schema,
-            base_version=msnap.version, feed=True,
-        )
-    finally:
-        delta.unpersist()
+    The delta is collected with each group's bucket (one Spark job), the
+    stored rows are read with one ``scan``, and the result goes to
+    ``overwrite_buckets`` as Arrow rows (the driver writer).  One feed
+    rule: a group with no delta row keeps its row; a moved group's old
+    row (when there was one) is deleted, and its new row is written and
+    inserted while its count stays above 0.  Groups match NULL-safely (a
+    NULL group must meet its own row).  A delta touching no bucket
+    commits only ``commit_key``.  Returns ``(applied, touched buckets)``."""
+    keys, names = msnap.key_cols, msnap.schema.fieldNames()
+    spec = T.StructType([msnap.schema[k] for k in keys] + MART_SCHEMA_SUFFIX)
+    d = (
+        _conform(delta.toDF(*keys, "n_docs", "n_tok_sum"), spec)
+        .withColumn(BUCKET_COL, bucket_of(keys, msnap.n_buckets))
+        .toArrow()
+    )
+    buckets = sorted(set(d.column(BUCKET_COL).to_pylist()))
+    paths = [os.path.join(mart.root, f.path) for f in msnap.files_for(buckets)]
+    stored = scan(paths, msnap.schema).to_table().to_pylist() if paths else []
+    old = {tuple(r[k] for k in keys): r for r in stored}
+    moved = {tuple(r[k] for k in keys): r for r in d.to_pylist()}
+    out = [(r, ROW) for k, r in old.items() if k not in moved]
+    for k, r in moved.items():
+        o = old.get(k)
+        new = {**(o or {}), **{c: r[c] for c in keys}}
+        for c in ("n_docs", "n_tok_sum"):
+            new[c] = ((o or {}).get(c) or 0) + (r[c] or 0)
+        if new["n_docs"] > 0:
+            out += [(new, ROW), (new, INSERT)]
+        if o is not None:
+            out.append((o, DELETE))
+    wschema = T.StructType(msnap.schema.fields + [T.StructField(FEED_COL, T.StringType())])
+    rows = arrow_rows(wschema, [[r.get(c) for r, _ in out] for c in names]
+                      + [[kind for _, kind in out]])
+    applied = mart.overwrite_buckets(
+        rows, buckets, commit_key=commit_key, schema=msnap.schema,
+        base_version=msnap.version, feed=True,
+    )
     return applied, buckets
 
 

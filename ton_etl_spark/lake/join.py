@@ -11,7 +11,8 @@ operating point that shuffle of two full tables IS the query cost.
 ``colocated_join`` is the Iceberg storage-partitioned-join role for this
 format: the driver pairs up the two manifests' per-bucket file lists
 (metadata only), and one ``mapInArrow`` task per bucket reads each
-side's files with one ``pyarrow.dataset`` scan and hash-joins them in
+side's files with one ``pyarrow.dataset`` scan (``lake.table.scan``,
+shared with the mart fold) and hash-joins them in
 Arrow — ZERO Exchange in the physical plan (plan-locked in tests), data
 moves only filesystem -> task.  The write side of the same idea is ``bucket_of``
 == ``HashPartitioning`` (lake/table.py:128-137); this is the read side.
@@ -273,27 +274,25 @@ def _make_kernel(
         import pyarrow.dataset as ds
         from pyspark.sql.pandas.types import to_arrow_type
 
+        from ton_etl_spark.lake.table import scan as scan_files
+
         def scan(paths: list[str], st: T.StructType, live: bool, filters: list):
             """One dataset scan of a side's bucket files under the side's
-            schema.  The scan conforms every file (absent column -> typed
-            NULLs, narrow type -> cast up), prunes columns at the reader,
-            and applies the residual filter pre-join (ON-clause placement):
-            null comparisons drop the row, matching the Spark residual in
-            LakeTable.read."""
-            schema = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in st.fields])
+            schema (``lake.table.scan``), with the residual filter applied
+            pre-join (ON-clause placement): null comparisons drop the row,
+            matching the Spark residual in LakeTable.read."""
             # the ONE live-state rule (cdc/apply.live_state): op != 'd'
             # keeps every live row (op is never NULL in a CDC frame)
             conds = [ds.field(OP_COL) != "d"] if live else []
             for col, lo, hi in filters:
-                typ = schema.field(col).type
+                typ = to_arrow_type(st[col].dataType)
                 if lo is not None:
                     conds.append(ds.field(col) >= pa.scalar(lo, typ))
                 if hi is not None:
                     conds.append(ds.field(col) <= pa.scalar(hi, typ))
-            return ds.dataset(paths, schema=schema, format="parquet").scanner(
-                columns=schema.names,
-                filter=functools.reduce(operator.and_, conds) if conds else None,
-                batch_size=batch_rows,
+            return scan_files(
+                paths, st, functools.reduce(operator.and_, conds) if conds else None,
+                batch_rows,
             )
 
         def gather(table: "pa.Table", cols: list[str], idx) -> list:

@@ -61,10 +61,15 @@ filesystem APIs.  Design goals, in order:
    commit inserted and deleted (``Snapshot.feed``, Delta's Change Data
    Feed role; reference analog: each parser upsert is itself re-published
    as a ``ton.parsed.*`` CDC topic).  Feed files are written by the same
-   Spark job as the commit's data files and registered in the same
+   write as the commit's data files and registered in the same
    published snapshot, so there is no second commit point; they never
    appear in ``Snapshot.files``, reads or lookups.  ``changes(v0, v1)``
    reads the feeds of ``(v0, v1]`` instead of diffing two snapshots.
+
+A commit's files come from one of two file writers, picked by what the
+caller holds: a DataFrame (a plan) is written by Spark, a
+``pyarrow.Table`` (rows already on the driver) by ``pyarrow.parquet``
+from the driver, in the same layout (``LakeTable._write_commit_files``).
 
 Concurrency contract: every data commit writes its files, then goes
 through ONE commit step, ``LakeTable._commit``, whose ``_publish`` is a
@@ -87,11 +92,15 @@ import shutil
 import uuid
 from collections.abc import Iterable
 from dataclasses import dataclass, field
-from typing import Any
+from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+if TYPE_CHECKING:
+    import pyarrow as pa
+    import pyarrow.dataset as ds
 
 _LOG = logging.getLogger(__name__)
 
@@ -1091,9 +1100,10 @@ class LakeTable:
 
     def buckets_of(self, df: DataFrame, snap: Snapshot) -> list[int]:
         """The distinct storage buckets ``df``'s rows hash to under
-        ``snap``'s layout — the touched set a MERGE or a mart refresh
-        rewrites.  One small job: a column-pruned scan of the key columns
-        and a distinct of at most ``n_buckets`` ints."""
+        ``snap``'s layout — the touched set of a ``merge_lww`` called
+        without ``buckets=`` (the preload and direct merges).  One small
+        job: a column-pruned scan of the key columns and a distinct of at
+        most ``n_buckets`` ints."""
         self.check_bucket_fn(snap)
         expr = bucket_of(snap.key_cols, snap.n_buckets)
         return [r[0] for r in df.select(expr.alias("__b")).distinct().collect()]
@@ -1181,9 +1191,10 @@ class LakeTable:
 
         Probe values are hashed and compared with the stats in the one
         stored form the residual can match (``_probe_stored``); range
-        bounds are pinned the same way, and on ``timestamp_ntz`` columns
+        bounds are pinned the same way, on ``timestamp_ntz`` columns
         taken as wall clocks in ``spark.sql.session.timeZone``
-        (``_ntz_walls``).
+        (``_ntz_walls``), and a datetime bound on a ``date`` column as its
+        session-zone date.
 
         The residual is the conformed predicate as one Column: ranges
         (``>=``/``<=``) AND ``isin`` lists.  NULL in a predicate column
@@ -1206,11 +1217,13 @@ class LakeTable:
         bounds = {c: (_pin_naive(lo), _pin_naive(hi)) for c, (lo, hi) in where.items()}
         # timestamp_ntz stats are wall clocks: predicate values on those
         # columns are compared as session-zone wall clocks (``_ntz_walls``);
-        # a date column meets a datetime probe at session-zone midnight
+        # a date column meets a datetime probe or bound at session-zone
+        # midnight
         types = {f.name: f.dataType for f in snap.schema.fields}
         ntz = {c for c in set(where) | set(where_in)
                if isinstance(types.get(c), T.TimestampNTZType)}
-        zoned = ntz | {c for c in where_in if isinstance(types.get(c), T.DateType)}
+        zoned = ntz | {c for c in set(where) | set(where_in)
+                       if isinstance(types.get(c), T.DateType)}
         zone = _session_zone(self.spark.conf.get("spark.sql.session.timeZone")) if zoned else None
         walls = {c: (_ntz_wall(lo, zone), _ntz_wall(hi, zone)) if c in ntz else (lo, hi)
                  for c, (lo, hi) in bounds.items()}
@@ -1243,6 +1256,11 @@ class LakeTable:
             for c, (lo, hi) in bounds.items():
                 if c in ntz:
                     lo, hi = _ntz_walls(lo, zone)[0], _ntz_walls(hi, zone)[1]
+                elif isinstance(types.get(c), T.DateType):
+                    # a datetime bound compares with the date's session-zone
+                    # midnight: its session-zone date is exact as the upper
+                    # bound and at most one day low as the lower one
+                    lo, hi = (_probe_stored(v, types[c], zone) for v in (lo, hi))
                 enc[c] = (_stats_encode(lo), _stats_encode(hi))
             files = [f for f in files if _file_may_match(f, enc)]
         return ScanPlan(snap, files, residual, walls)
@@ -1348,7 +1366,7 @@ class LakeTable:
     # ------------------------------------------------------------------ write
     def _write_commit_files(
         self,
-        df: DataFrame,
+        df: "DataFrame | pa.Table",
         commit_id: str,
         n_buckets: int,
         key_cols: list[str],
@@ -1358,77 +1376,32 @@ class LakeTable:
     ) -> tuple[list[DataFile], list[ChangeFile]]:
         """Write ``df`` as one directory tree partitioned by bucket; return the
         produced data files tagged with their bucket, and the change-feed
-        files.  A ``df`` carrying ``FEED_COL`` (see ``overwrite_buckets``)
-        holds both in one frame, and one Spark job writes both: the tag
-        becomes an outer partition directory, so feed rows never land in a
-        data file.  ``props`` (the properties
-        the commit will publish) give ``target_file_rows``, ``stats_cols``,
-        ``sort_cols`` and ``bloom_cols``.  One output file per bucket
-        by default (a MERGE batch touches a bounded set of buckets, so files
-        stay coarse); with ``target_file_rows`` set (the table property, see
-        ``create``) each bucket's output is split at that row count via
-        ``maxRecordsPerFile`` — an intra-task split, so the pre-partitioned
-        merge path keeps its zero-exchange plan while a hot or freshly
-        compacted bucket still lands as N bounded files in the per-bucket
-        manifest instead of one multi-GB straggler.
+        files.  ``df`` is in the commit's write schema.  A ``df`` carrying
+        ``FEED_COL`` (see ``overwrite_buckets``) holds both in one frame,
+        and one write produces both: the tag becomes an outer partition
+        directory (``__change=<kind>/__bucket=<b>/``), so feed rows never
+        land in a data file.  ``props`` (the properties the commit will
+        publish) give ``target_file_rows``, ``stats_cols``, ``sort_cols``
+        and ``bloom_cols``.
 
-        ``pre_partitioned=True``: caller guarantees ``df`` is already
-        hash-partitioned on the key columns with numPartitions==n_buckets
-        (e.g. it is the output of a groupBy(key) run with
-        ``spark.sql.shuffle.partitions = n_buckets``).  Because
-        ``bucket_of`` equals Spark's partition-id expression, each task then
-        holds whole buckets and the dynamic-partition write needs NO
-        repartition exchange (write parallelism is n_buckets by design —
-        the zero-exchange trade; size n_buckets to the cluster).  Otherwise
-        an explicit repartition keeps the snapshot's file count
-        O(n_buckets) — skipping it would fan out to n_partitions ×
-        n_buckets files (measured 2× end-to-end regression from distributed
-        listing on every read)."""
-        target_file_rows = self._target_file_rows(props)
+        Two file writers, picked by what ``df`` is: a DataFrame (a plan)
+        goes through the Spark writer (``_spark_write``), a
+        ``pyarrow.Table`` (rows already on the driver) through the driver
+        writer (``_driver_write``), which runs no Spark job.  Both write
+        the same layout — one file per bucket, split at
+        ``target_file_rows``, rows clustered by ``sort_cols`` — so the
+        listing and the footer stats below, and ``_commit``'s CAS and
+        rebase, do not know which writer ran."""
         stats_cols = self._prop_cols(props, "stats_cols")
-        sort_cols = self._prop_cols(props, "sort_cols")
         commit_rel = os.path.join(DATA_DIR, commit_id)
         commit_abs = os.path.join(self.root, commit_rel)
-        bucket = bucket_of(key_cols, n_buckets)
-        if FEED_COL in df.columns:
-            # feed rows are not bucketed (bucket -1): each write task emits
-            # at most one file per change type, not one per bucket it holds
-            row = F.col(FEED_COL).isNull()
-            out = df.select(
-                *[c for c in df.columns if c != FEED_COL],
-                F.when(row, bucket).otherwise(F.lit(-1)).alias(BUCKET_COL),
-                F.coalesce(F.col(FEED_COL), F.lit(_TABLE_ROW)).alias(FEED_COL),
-            )
-            parts = [FEED_COL, BUCKET_COL]
+        if isinstance(df, DataFrame):
+            feed = FEED_COL in df.columns
+            self._spark_write(df, commit_abs, n_buckets, key_cols, props,
+                              pre_partitioned, sort_exprs)
         else:
-            out, parts = df.withColumn(BUCKET_COL, bucket), [BUCKET_COL]
-        if not pre_partitioned:
-            out = out.repartition(n_buckets, F.col(BUCKET_COL))
-        if sort_exprs is not None:
-            # caller-supplied clustering expressions (e.g. a z-order value)
-            # replace the table's declared sort_cols for THIS commit; an
-            # expression sorts without materializing a physical column
-            out = out.sortWithinPartitions(*parts, *sort_exprs)
-        elif sort_cols:
-            # per-task sort, no exchange: leading partition columns keep
-            # each bucket's rows contiguous (the dynamic-partition writer
-            # needs that sort anyway — pre-sorting folds both into one), and
-            # the trailing sort_cols cluster rows so maxRecordsPerFile
-            # splits land with tight, near-disjoint stats ranges
-            out = out.sortWithinPartitions(*parts, *sort_cols)
-        writer = out.write.mode("overwrite")
-        if target_file_rows is not None:
-            writer = writer.option("maxRecordsPerFile", int(target_file_rows))
-        for c in self._prop_cols(props, "bloom_cols"):
-            # per-column parquet-mr bloom; NDV bounded by the file row cap
-            # when known, so the filter is sized instead of defaulting to
-            # the max-bytes cap
-            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-            if target_file_rows is not None:
-                writer = writer.option(
-                    f"parquet.bloom.filter.expected.ndv#{c}", int(target_file_rows)
-                )
-        writer.partitionBy(*parts).parquet(commit_abs)
+            feed = FEED_COL in df.column_names
+            self._driver_write(df, commit_abs, n_buckets, key_cols, props)
         # stat the produced files with a thread pool: footer opens are
         # ~ms each but serial over n_buckets files they add up to a fixed
         # driver-side cost per commit that hurts scaling (Amdahl)
@@ -1437,7 +1410,7 @@ class LakeTable:
         todo: list[tuple[str, int]] = []
         changes: list[ChangeFile] = []
         tops = [(commit_rel, _TABLE_ROW)]
-        if len(parts) == 2:
+        if feed:
             tops = [
                 (os.path.join(commit_rel, e), e.split("=", 1)[1])
                 for e in os.listdir(commit_abs) if e.startswith(f"{FEED_COL}=")
@@ -1496,6 +1469,147 @@ class LakeTable:
         with ThreadPoolExecutor(max_workers=16) as pool:
             files = list(pool.map(_stat, todo))
         return files, changes
+
+    def _spark_write(
+        self,
+        df: DataFrame,
+        commit_abs: str,
+        n_buckets: int,
+        key_cols: list[str],
+        props: dict[str, str],
+        pre_partitioned: bool,
+        sort_exprs: list | None,
+    ) -> None:
+        """The Spark writer: one dynamic-partition write of ``df`` under
+        ``commit_abs``.  One output file per bucket by default (a MERGE
+        batch touches a bounded set of buckets, so files stay coarse); with
+        ``target_file_rows`` set (the table property, see ``create``) each
+        bucket's output is split at that row count via
+        ``maxRecordsPerFile`` — an intra-task split, so the pre-partitioned
+        merge path keeps its zero-exchange plan while a hot or freshly
+        compacted bucket still lands as N bounded files in the per-bucket
+        manifest instead of one multi-GB straggler.
+
+        ``pre_partitioned=True``: caller guarantees ``df`` is already
+        hash-partitioned on the key columns with numPartitions==n_buckets
+        (e.g. it is the output of a groupBy(key) run with
+        ``spark.sql.shuffle.partitions = n_buckets``).  Because
+        ``bucket_of`` equals Spark's partition-id expression, each task then
+        holds whole buckets and the dynamic-partition write needs NO
+        repartition exchange (write parallelism is n_buckets by design —
+        the zero-exchange trade; size n_buckets to the cluster).  Otherwise
+        an explicit repartition keeps the snapshot's file count
+        O(n_buckets) — skipping it would fan out to n_partitions ×
+        n_buckets files (measured 2× end-to-end regression from distributed
+        listing on every read)."""
+        target_file_rows = self._target_file_rows(props)
+        sort_cols = self._prop_cols(props, "sort_cols")
+        bucket = bucket_of(key_cols, n_buckets)
+        if FEED_COL in df.columns:
+            # feed rows are not bucketed (bucket -1): each write task emits
+            # at most one file per change type, not one per bucket it holds
+            row = F.col(FEED_COL).isNull()
+            out = df.select(
+                *[c for c in df.columns if c != FEED_COL],
+                F.when(row, bucket).otherwise(F.lit(-1)).alias(BUCKET_COL),
+                F.coalesce(F.col(FEED_COL), F.lit(_TABLE_ROW)).alias(FEED_COL),
+            )
+            parts = [FEED_COL, BUCKET_COL]
+        else:
+            out, parts = df.withColumn(BUCKET_COL, bucket), [BUCKET_COL]
+        if not pre_partitioned:
+            out = out.repartition(n_buckets, F.col(BUCKET_COL))
+        if sort_exprs is not None:
+            # caller-supplied clustering expressions (e.g. a z-order value)
+            # replace the table's declared sort_cols for THIS commit; an
+            # expression sorts without materializing a physical column
+            out = out.sortWithinPartitions(*parts, *sort_exprs)
+        elif sort_cols:
+            # per-task sort, no exchange: leading partition columns keep
+            # each bucket's rows contiguous (the dynamic-partition writer
+            # needs that sort anyway — pre-sorting folds both into one), and
+            # the trailing sort_cols cluster rows so maxRecordsPerFile
+            # splits land with tight, near-disjoint stats ranges
+            out = out.sortWithinPartitions(*parts, *sort_cols)
+        writer = out.write.mode("overwrite")
+        if target_file_rows is not None:
+            writer = writer.option("maxRecordsPerFile", int(target_file_rows))
+        for c in self._prop_cols(props, "bloom_cols"):
+            # per-column parquet-mr bloom; NDV bounded by the file row cap
+            # when known, so the filter is sized instead of defaulting to
+            # the max-bytes cap
+            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
+            if target_file_rows is not None:
+                writer = writer.option(
+                    f"parquet.bloom.filter.expected.ndv#{c}", int(target_file_rows)
+                )
+        writer.partitionBy(*parts).parquet(commit_abs)
+
+    def _driver_write(
+        self,
+        rows: "pa.Table",
+        commit_abs: str,
+        n_buckets: int,
+        key_cols: list[str],
+        props: dict[str, str],
+    ) -> None:
+        """The driver writer: ``rows`` (a ``pyarrow.Table`` in the commit's
+        write schema) written with ``pyarrow.parquet`` into the Spark
+        writer's layout, with no Spark job.  Bucket ids come from the
+        unchanged ``bucket_of`` over an Arrow-built local frame of the key
+        columns (``_local_frame``: no job, and no second hash to keep in
+        step with Spark's).  Each (feed kind, bucket) run is sorted by
+        ``sort_cols`` (ascending, NULLs first, as Spark sorts) and split at
+        ``target_file_rows``.  A table with ``bloom_cols`` is refused:
+        pyarrow writes no bloom filters, and a file without one would only
+        be slower to probe, so the caller must hold a plan instead."""
+        import itertools
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        if self._prop_cols(props, "bloom_cols"):
+            raise ValueError(
+                f"table {self.root} declares bloom_cols, which the driver "
+                "writer cannot write; commit a DataFrame instead"
+            )
+        os.makedirs(commit_abs, exist_ok=True)
+        n = rows.num_rows
+        if n == 0:
+            return
+        feed = FEED_COL in rows.column_names
+        keys = rows.select(key_cols)
+        kdf = _local_frame(self.spark, _schema_of(keys), keys)
+        ids = [r[0] for r in kdf.select(bucket_of(key_cols, n_buckets)).collect()]
+        kinds = ([k or _TABLE_ROW for k in rows.column(FEED_COL).to_pylist()]
+                 if feed else [_TABLE_ROW] * n)
+        data = rows.drop_columns([FEED_COL]) if feed else rows
+        data = data.append_column(FEED_COL, pa.array(kinds, pa.string())).append_column(
+            # feed rows are not bucketed (bucket -1), as in the Spark writer
+            BUCKET_COL, pa.array([b if k == _TABLE_ROW else -1 for k, b in zip(kinds, ids)],
+                                 pa.int32()),
+        )
+        order = [FEED_COL, BUCKET_COL, *self._prop_cols(props, "sort_cols")]
+        data = data.take(pc.sort_indices(
+            data, sort_keys=[(c, "ascending") for c in order], null_placement="at_start"))
+        step = self._target_file_rows(props) or n
+        run_keys = zip(data.column(FEED_COL).to_pylist(), data.column(BUCKET_COL).to_pylist())
+        data = data.drop_columns([FEED_COL, BUCKET_COL])
+        start = 0
+        for (kind, bucket), run in itertools.groupby(run_keys):
+            size = sum(1 for _ in run)
+            bdir = os.path.join(
+                commit_abs, *([f"{FEED_COL}={kind}"] if feed else []), f"{BUCKET_COL}={bucket}"
+            )
+            os.makedirs(bdir, exist_ok=True)
+            for off in range(0, size, step):
+                pq.write_table(
+                    data.slice(start + off, min(step, size - off)),
+                    os.path.join(bdir, f"part-{off // step:05d}-{uuid.uuid4().hex}.parquet"),
+                    compression="snappy",
+                )
+            start += size
 
     def _write_manifest(self, bucket: int, files: list[DataFile], commit_id: str) -> str:
         """Write one immutable per-bucket manifest; return its rel path."""
@@ -1598,10 +1712,17 @@ class LakeTable:
                     raise
         raise AssertionError("unreachable")
 
-    def append(self, df: DataFrame, commit_key: str | None = None) -> bool:
+    def append(self, df: "DataFrame | pa.Table", commit_key: str | None = None) -> bool:
         """Append rows (no key dedup).  Returns False if commit_key already
         applied.  Metadata cost: one new manifest per TOUCHED bucket; the
         rest of the table re-points to its existing manifests.
+
+        ``df`` is a plan (a DataFrame, written by the Spark writer) or rows
+        already on the driver (a ``pyarrow.Table``, e.g. from
+        ``arrow_rows``, written by the driver writer with no Spark job —
+        see ``_write_commit_files``).  Either may be in an older or
+        narrower schema: it is conformed to the merged one.  Zero rows
+        commit only ``commit_key`` (and any new columns).
 
         Concurrency: an append's data files are valid against any base
         version, so losing the CAS to a concurrent writer rebases metadata
@@ -1613,7 +1734,7 @@ class LakeTable:
         if commit_key is not None and snap.has_commit_key(commit_key):
             return False
         self.check_bucket_fn(snap)
-        schema = _merge_schemas(snap.schema, df.schema, self._widening(snap))
+        schema = _merge_schemas(snap.schema, _schema_of(df), self._widening(snap))
         commit_id = f"c{snap.version + 1}-{uuid.uuid4().hex[:8]}"
         new_files, _ = self._write_commit_files(
             _conform(df, schema), commit_id, snap.n_buckets, snap.key_cols,
@@ -1624,7 +1745,7 @@ class LakeTable:
 
     def overwrite_buckets(
         self,
-        df: DataFrame,
+        df: "DataFrame | pa.Table",
         buckets: list[int],
         commit_key: str | None = None,
         schema: T.StructType | None = None,
@@ -1640,7 +1761,14 @@ class LakeTable:
         """Copy-on-write commit: replace all files of ``buckets`` with ``df``
         (which must contain exactly the surviving rows for those buckets).
         This is the write half of MERGE.  Returns False on duplicate
-        commit_key (idempotent replay).
+        commit_key (idempotent replay).  ``buckets=[]`` replaces nothing:
+        the commit records only ``commit_key``.
+
+        ``df`` is a plan (the merge, the maintenance rewrites: the Spark
+        writer) or rows already on the driver (a ``pyarrow.Table`` in
+        ``schema``, plus ``FEED_COL`` when ``feed``: the driver writer,
+        no Spark job — the mart fold).  ``pre_partitioned`` and
+        ``sort_exprs`` apply to a plan only.
 
         ``base_version`` is the snapshot version the caller DERIVED ``df``
         from (merge read the bucket contents there; compaction listed its
@@ -1692,7 +1820,7 @@ class LakeTable:
             return False
         self.check_bucket_fn(snap)
         if schema is None:
-            schema = _merge_schemas(snap.schema, df.schema, self._widening(snap))
+            schema = _merge_schemas(snap.schema, _schema_of(df), self._widening(snap))
         commit_id = f"c{snap.version + 1}-{uuid.uuid4().hex[:8]}"
         wschema = schema
         if feed:
@@ -1754,8 +1882,34 @@ def feed_frame(
     return df.withColumn(FEED_COL, F.explode(out)).select(*cols)
 
 
-def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Project df onto schema column order, adding NULLs for missing cols."""
+def _schema_of(df: "DataFrame | pa.Table") -> T.StructType:
+    """The Spark schema of a plan or of driver rows.  An Arrow table's
+    types map back the way ``to_arrow_type`` maps them out: a zoned
+    timestamp is ``timestamp``, a naive one ``timestamp_ntz``."""
+    if isinstance(df, DataFrame):
+        return df.schema
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(df.schema, prefer_timestamp_ntz=True)
+
+
+def _conform(df: "DataFrame | pa.Table", schema: T.StructType) -> "DataFrame | pa.Table":
+    """Project ``df`` onto ``schema``'s column order, adding NULLs for
+    missing columns and casting widened ones up — a plan as a plan, driver
+    rows (a ``pyarrow.Table``) as an Arrow table."""
+    if not isinstance(df, DataFrame):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        cols = []
+        for f in schema.fields:
+            typ = to_arrow_type(f.dataType)
+            if f.name not in df.column_names:
+                cols.append(pa.nulls(df.num_rows, typ))
+            else:
+                c = df.column(f.name)
+                cols.append(c if c.type == typ else c.cast(typ))
+        return pa.table(cols, names=schema.fieldNames())
     have = {f.name: f.dataType for f in df.schema.fields}
     cols = []
     for f in schema.fields:
@@ -1771,19 +1925,15 @@ def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(*cols)
 
 
-def _local_frame(
-    spark: SparkSession, schema: T.StructType, columns: list[list] | None = None
-) -> DataFrame:
-    """A DataFrame over in-process values: ``columns`` holds one value
-    list per field of ``schema`` (None: zero rows).  The values become one
-    Arrow table typed by ``to_arrow_type``, which Spark takes as a local
-    relation: building it runs no Spark job and no Python worker, and a
-    projection or filter over it folds into the relation, so collecting
-    one runs no job either (``createDataFrame(list)`` runs two jobs
-    through a Python worker).  A ``timestamp`` value must be an aware
-    datetime (Arrow reads a naive one as UTC); a ``timestamp_ntz`` value
-    is a wall clock.  A value the Arrow type cannot hold raises
-    ``TypeError``, ``ValueError`` or ``OverflowError``."""
+def arrow_rows(schema: T.StructType, columns: list[list] | None = None) -> "pa.Table":
+    """In-process values as one Arrow table: ``columns`` holds one value
+    list per field of ``schema`` (None: zero rows), typed by
+    ``to_arrow_type``.  This is the form ``append`` and
+    ``overwrite_buckets`` take rows already on the driver in.  A
+    ``timestamp`` value must be an aware datetime (Arrow reads a naive one
+    as UTC); a ``timestamp_ntz`` value is a wall clock.  A value the Arrow
+    type cannot hold raises ``TypeError``, ``ValueError`` or
+    ``OverflowError``."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
@@ -1791,4 +1941,38 @@ def _local_frame(
         columns = [[] for _ in schema.fields]
     arrays = [pa.array(list(vals), type=to_arrow_type(f.dataType))
               for f, vals in zip(schema.fields, columns)]
-    return spark.createDataFrame(pa.table(arrays, names=schema.fieldNames()), schema)
+    return pa.table(arrays, names=schema.fieldNames())
+
+
+def _local_frame(
+    spark: SparkSession, schema: T.StructType, columns: "list[list] | pa.Table | None" = None
+) -> DataFrame:
+    """A DataFrame over in-process values: ``columns`` is an Arrow table
+    in ``schema``, or value lists for ``arrow_rows``.  Spark takes the
+    Arrow table as a local relation: building it runs no Spark job and no
+    Python worker, and a projection or filter over it folds into the
+    relation, so collecting one runs no job either
+    (``createDataFrame(list)`` runs two jobs through a Python worker)."""
+    import pyarrow as pa
+
+    rows = columns if isinstance(columns, pa.Table) else arrow_rows(schema, columns)
+    return spark.createDataFrame(rows, schema)
+
+
+def scan(
+    paths: list[str], schema: T.StructType, filter=None, batch_size: int = 1 << 17
+) -> "ds.Scanner":
+    """One ``pyarrow.dataset`` scan of stored files under ``schema`` — the
+    driver- and task-side twin of ``spark.read.schema(...)``: every file
+    is conformed by the scan (absent column -> typed NULLs, narrow type
+    -> cast up), columns are pruned at the reader, and ``filter`` (a
+    ``pyarrow.dataset`` expression) is applied to the rows.  The
+    co-located join's kernel and the mart fold read through it."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    aschema = pa.schema([(f.name, to_arrow_type(f.dataType)) for f in schema.fields])
+    return ds.dataset(paths, schema=aschema, format="parquet").scanner(
+        columns=aschema.names, filter=filter, batch_size=batch_size,
+    )

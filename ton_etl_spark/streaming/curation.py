@@ -56,6 +56,7 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ton_etl_spark.cdc.stream import _run, _source
 from ton_etl_spark.functions import text as TXT
@@ -75,14 +76,14 @@ _META = "_minhash_meta.json"
 
 
 def make_curated_table(spark: SparkSession, root: str, n_buckets: int = 8) -> LakeTable:
-    schema = spark.createDataFrame([], CURATED_SCHEMA).schema
+    schema = T.StructType.fromDDL(CURATED_SCHEMA)
     return LakeTable.get_or_create(
         spark, root, schema=schema, key_cols=["doc_id"], n_buckets=n_buckets
     )
 
 
 def make_decision_table(spark: SparkSession, root: str, n_buckets: int = 4) -> LakeTable:
-    schema = spark.createDataFrame([], DECISION_SCHEMA).schema
+    schema = T.StructType.fromDDL(DECISION_SCHEMA)
     # epoch bounds in the manifests: the retention sweep's horizon delete
     # prunes to the buckets/files actually holding expired epochs
     return LakeTable.get_or_create(

@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQueryListener
 
 from ton_etl_spark.cdc.schema import DELIVERY_OBSERVATION
-from ton_etl_spark.lake.table import CommitConflictError, LakeTable
+from ton_etl_spark.lake.table import CommitConflictError, LakeTable, arrow_rows
 
 METRICS_SCHEMA = T.StructType(
     [
@@ -142,14 +142,16 @@ class MetricsRecorder(StreamingQueryListener):
             _long(obs.get("max_lsn")),
         )
         key = f"qp-{row[1][:8]}={row[2]}"  # (run, batch): replays dedupe
-        df = self.spark.createDataFrame([row], METRICS_SCHEMA)
+        # one Arrow row: append() commits it through the driver writer,
+        # with no Spark job and no Python worker
+        rows = arrow_rows(METRICS_SCHEMA, [[v] for v in row])
         # the lock serializes this process's recorders; cross-process CAS
         # losses are absorbed inside append() itself as metadata-only
         # rebases (lake/table.py MAX_REBASES) — no outer retry, which
-        # would re-run the whole Spark write per attempt
+        # would rewrite the row's file per attempt
         with self._lock:
             try:
-                if self.table.append(df, commit_key=key):
+                if self.table.append(rows, commit_key=key):
                     self.rows_written += 1
             except CommitConflictError:
                 self.errors.append(RuntimeError(f"metrics commit starved for {key}"))
@@ -210,8 +212,8 @@ class MetricsRecorder(StreamingQueryListener):
         later batches' progress events may still sit in Spark's async
         listener queue; quiescence is the only observable completion signal.
         An append in flight (the recorder lock is held) defers the idle
-        verdict: a single metrics write is a full Spark job and can
-        outlast the idle window on a loaded driver.  Returns the number of
+        verdict: a metrics write (or a retention sweep, which runs Spark
+        jobs) can outlast the idle window on a loaded driver.  Returns the number of
         rows written."""
         deadline = time.time() + timeout
         last = self.rows_written
