@@ -419,3 +419,46 @@ def test_colocated_join_ntz_range_in_non_utc_session_zone(spark, tmp_path):
         assert len(_rows(colocated_join(l, r, left_where={"ts": (bound, None)}))) == 90
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def test_colocated_join_datetime_bounds_on_date_column(spark, tmp_path):
+    """Datetime range bounds on a ``date`` column, in a UTC and a Tokyo
+    session: the Arrow kernel must keep exactly the rows Spark's residual
+    keeps, which compares each date at its session-zone midnight (a lower
+    bound of 03:00 on the 5th excludes the 5th), not the bound truncated
+    to its date."""
+    import datetime as dt
+    from zoneinfo import ZoneInfo
+
+    day0 = dt.date(2026, 1, 1)
+    lt = spark.createDataFrame([(i, day0 + dt.timedelta(days=i)) for i in range(10)],
+                               "k long, d date")
+    rt = spark.createDataFrame([(i, i * 10) for i in range(10)], "k long, v long")
+    l = LakeTable.create(spark, str(tmp_path / "l"), schema=lt.schema, key_cols=["k"],
+                         n_buckets=2, stats_cols=["d"])
+    r = LakeTable.create(spark, str(tmp_path / "r"), schema=rt.schema, key_cols=["k"],
+                         n_buckets=2)
+    l.append(lt, commit_key="seed")
+    r.append(rt, commit_key="seed")
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for tz in ("UTC", "Asia/Tokyo"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            midnight = dt.datetime(2026, 1, 5, tzinfo=ZoneInfo(tz))
+            cases = [
+                (dt.datetime(2026, 1, 5, 3, 0), None),  # naive
+                (None, dt.datetime(2026, 1, 5, 3, 0)),
+                (midnight, midnight),
+                (midnight + dt.timedelta(hours=1), None),
+                (midnight - dt.timedelta(seconds=1), midnight + dt.timedelta(days=2, hours=23)),
+                (None, midnight - dt.timedelta(seconds=1)),
+            ]
+            for lo, hi in cases:
+                where = {"d": (lo, hi)}
+                want = l.read(where=where).join(r.read(), "k").select("k", "d", "v")
+                got = colocated_join(l, r, left_where=where)
+                assert _rows(got) == _rows(want), (tz, lo, hi)
+            got = colocated_join(l, r, left_where={"d": (midnight + dt.timedelta(hours=3), None)})
+            assert sorted(row["k"] for row in got.collect()) == list(range(5, 10)), tz
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)

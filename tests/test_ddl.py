@@ -93,6 +93,21 @@ def test_duckdb_state_view_matches_read_state_with_evolution(spark, tmp_path):
     assert not (got["op"] == "d").any()
 
 
+def test_state_exports_keep_op_column_of_non_cdc_table(spark, tmp_path):
+    """A table with an ``op`` column but no ``lsn`` is not CDC state (the
+    engine's one rule, ``is_cdc_schema``): ``state=True`` exports add no
+    tombstone filter, so the DuckDB view keeps its ``op='d'`` rows and the
+    Hive DDL declares no state view."""
+    schema = spark.createDataFrame([], "k string, op string").schema
+    t = LakeTable.create(spark, str(tmp_path / "ops"), schema=schema,
+                         key_cols=["k"], n_buckets=2)
+    t.append(spark.createDataFrame([("a", "d"), ("b", "add"), ("c", "d")], schema))
+    got = _duck_pdf(duckdb_view_sql(t, "vops", state=True), "vops", ["k"])
+    assert list(got["op"]) == ["d", "add", "d"]
+    ddl = hive_ddl(t, "ops", "s3://bucket/exports/ops", state=True)
+    assert "CREATE VIEW" not in ddl and "<> 'd'" not in ddl
+
+
 def test_symlink_manifest_and_hive_ddl(spark, tmp_path):
     log = generate_cdc_log(spark, 400, seed=5)
     t = make_sequences_table(spark, str(tmp_path / "m"), n_buckets=2)

@@ -256,6 +256,60 @@ def test_route_without_rows_commits_nothing(spark, tmp_path):
     assert _rows(read_state(tb)) == _rows(final_state_oracle(log_b))
 
 
+def test_sparse_route_is_maintained_on_its_next_trigger(spark, tmp_path):
+    """With ``maintenance_every=2`` over four triggers, seq_b has rows only
+    in triggers 0 and 2, so no maintenance epoch (1, 3) sees it.  Its sink
+    and lineage table are maintained for epoch 1 on trigger 2, the first
+    trigger with rows after it; seq_a, with rows every trigger, is
+    maintained on epochs 1 and 3 exactly as before.  Both equal their
+    oracles."""
+    log_dir_a, log_dir_b = str(tmp_path / "log_a"), str(tmp_path / "log_b")
+    dirs_a = write_cdc_log(
+        generate_cdc_log(spark, 800, seed=43), log_dir_a, n_batches=4, dup_pct=10, seed=43
+    )
+    dirs_b = write_cdc_log(
+        generate_cdc_log(spark, 400, seed=44), log_dir_b, n_batches=2, dup_pct=10, seed=44
+    )
+    frames_dir = str(tmp_path / "frames")
+    for i, da in enumerate(dirs_a):
+        f = to_kafka_frames(spark.read.parquet(da), table="seq_a")
+        if i % 2 == 0:
+            f = f.unionByName(to_kafka_frames(spark.read.parquet(dirs_b[i // 2]), table="seq_b"))
+        f.coalesce(1).write.parquet(os.path.join(frames_dir, f"b{i}"))
+
+    roots = {"seq_a": str(tmp_path / "ta"), "seq_b": str(tmp_path / "tb")}
+    lineage_roots = {"seq_a": str(tmp_path / "la"), "seq_b": str(tmp_path / "lb")}
+    q = start_cdc_multi_table_stream(
+        spark,
+        frames_glob=os.path.join(frames_dir, "*"),
+        table_roots=roots,
+        checkpoint_dir=str(tmp_path / "ck"),
+        lineage_roots=lineage_roots,
+        max_files_per_trigger=1,
+        maintenance_every=2,
+    )
+    q.awaitTermination()
+
+    def rolls(root):
+        keys = LakeTable.load(spark, root).current().recent_commit_keys
+        return sorted(k for k in keys if k.startswith("roll="))
+
+    assert rolls(roots["seq_a"]) == ["roll=1-g0", "roll=3-g1"]
+    assert rolls(lineage_roots["seq_a"]) == ["roll=1-g0", "roll=3-g0"]
+    assert rolls(roots["seq_b"]) == ["roll=1-g0"]
+    assert rolls(lineage_roots["seq_b"]) == ["roll=1-g0"]
+    lin_b = LakeTable.load(spark, lineage_roots["seq_b"])
+    assert {r["checkpoint_epoch"] for r in lin_b.read().collect()} == {0, 2}
+    per_bucket: dict[int, int] = {}
+    for f in lin_b.current().files:
+        per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
+    assert per_bucket and set(per_bucket.values()) == {1}, per_bucket
+    ta = LakeTable.load(spark, roots["seq_a"])
+    assert _rows(read_state(ta)) == _rows(final_state_oracle(read_full_log(spark, log_dir_a)))
+    tb = LakeTable.load(spark, roots["seq_b"])
+    assert _rows(read_state(tb)) == _rows(final_state_oracle(read_full_log(spark, log_dir_b)))
+
+
 def test_multi_table_rejects_unknown_route_keys(spark, tmp_path):
     """A payload_schemas or lineage_roots key that names no route is a
     typo: rejected before any sink, lineage table or stream is created."""

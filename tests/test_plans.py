@@ -30,11 +30,13 @@ def _optimized_scan_line(df) -> str:
 
 def test_merge_is_single_exchange(spark, tmp_path, monkeypatch):
     """The frame ``merge_lww`` commits must shuffle the payload exactly
-    once, hash-partitioned on the key into n_buckets partitions even when
-    the caller's session has a different ``shuffle.partitions``
-    (lake/merge.py design).  ``REPARTITION_BY_COL`` locks the conf-pinned
-    child session: a ``repartition(n_buckets, *keys)`` in the caller's
-    session plans ``REPARTITION_BY_NUM``, which AQE cannot coalesce."""
+    once, by the storage-bucket column, into the session's
+    ``shuffle.partitions`` (lake/merge.py design): a 16-bucket table merged
+    from a session with 8 shuffle partitions plans one
+    ``hashpartitioning(__bucket, 8), REPARTITION_BY_COL``, which AQE may
+    coalesce (a ``repartition(n_buckets, *keys)`` would plan
+    ``REPARTITION_BY_NUM``, which it never coalesces), and still writes one
+    data file per touched bucket."""
     from ton_etl_spark.lake.merge import merge_lww
 
     table = make_sequences_table(spark, str(tmp_path / "t"), n_buckets=16)
@@ -50,14 +52,21 @@ def test_merge_is_single_exchange(spark, tmp_path, monkeypatch):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        assert merge_lww(table, batch, commit_key="epoch=0")["applied"]
+        res = merge_lww(table, batch, commit_key="epoch=0")
+        # planned lazily: read it under the merge's session settings
+        plan = _executed_plan(frames[0])
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert res["applied"]
     assert len(frames) == 1
-    plan = _executed_plan(frames[0])
     exchanges = re.findall(r"Exchange (\w+.*)", plan)
     assert len(exchanges) == 1, plan
-    assert re.match(r"hashpartitioning\(doc_id#\d+, 16\), REPARTITION_BY_COL", exchanges[0]), plan
+    assert re.match(r"hashpartitioning\(__bucket#\d+, 8\), REPARTITION_BY_COL", exchanges[0]), plan
+    per_bucket: dict[int, int] = {}
+    for f in table.current().files:
+        per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
+    assert sorted(per_bucket) == res["buckets"] and len(per_bucket) > 8
+    assert set(per_bucket.values()) == {1}, per_bucket
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -191,9 +200,9 @@ def test_lsh_indexed_probe_is_partition_pruned(spark, sf_dir, tmp_path):
 
 
 def test_merge_does_not_mutate_session_conf(spark, tmp_path):
-    """merge_lww runs its agg in a throwaway child session: the caller's
-    shuffle.partitions must be untouched and the bucket layout (one file per
-    touched bucket) preserved."""
+    """merge_lww plans in its table's session without setting anything
+    on it: the caller's shuffle.partitions must be untouched and the bucket
+    layout (one file per touched bucket) preserved."""
     from ton_etl_spark.lake.merge import merge_lww
 
     table = make_sequences_table(spark, str(tmp_path / "conf"), n_buckets=16)
@@ -208,17 +217,33 @@ def test_merge_does_not_mutate_session_conf(spark, tmp_path):
     assert per_bucket and all(n == 1 for n in per_bucket.values())
 
 
-def test_merge_reuses_child_session_across_epochs(spark, tmp_path):
-    """The conf-pinned child session is cached per (context, n_buckets):
-    a long-running stream must not pile up one new session per epoch."""
-    from ton_etl_spark.lake import merge as mmod
+def test_merge_writes_with_the_session_parquet_codec(spark, tmp_path):
+    """A runtime ``spark.sql.parquet.compression.codec`` reaches the merge's
+    data and change-feed files, as it reaches an append's: the merge runs
+    in its table's session, not in a child session whose conf would come
+    from the SparkContext (which writes SNAPPY)."""
+    import pyarrow.parquet as pq
 
-    table = make_sequences_table(spark, str(tmp_path / "reuse"), n_buckets=8)
-    mmod.merge_lww(table, generate_cdc_log(spark, 2_000, seed=31), commit_key="epoch=0")
-    first = mmod._CHILD_SESSIONS[(id(spark.sparkContext), 8)]
-    mmod.merge_lww(table, generate_cdc_log(spark, 2_000, seed=32), commit_key="epoch=1")
-    assert mmod._CHILD_SESSIONS[(id(spark.sparkContext), 8)] is first
-    assert first.conf.get("spark.sql.shuffle.partitions") == "8"
+    from ton_etl_spark.lake.merge import merge_lww
+
+    table = make_sequences_table(spark, str(tmp_path / "codec"), n_buckets=4)
+    log = generate_cdc_log(spark, 1_000, seed=37)
+    prev = spark.conf.get("spark.sql.parquet.compression.codec")
+    spark.conf.set("spark.sql.parquet.compression.codec", "gzip")
+    try:
+        assert merge_lww(table, log.where("lsn % 2 = 0"), commit_key="epoch=0")["applied"]
+        assert merge_lww(table, log.where("lsn % 2 = 1"), commit_key="epoch=1")["applied"]
+    finally:
+        spark.conf.set("spark.sql.parquet.compression.codec", prev)
+    snap = table.current()
+    paths = [f.path for f in snap.files] + [c.path for c in snap.feed]
+    assert snap.feed and any("__change=" in p for p in paths), paths
+    codecs = set()
+    for rel in paths:
+        md = pq.ParquetFile(os.path.join(table.root, rel)).metadata
+        codecs |= {md.row_group(g).column(j).compression
+                   for g in range(md.num_row_groups) for j in range(md.num_columns)}
+    assert codecs == {"GZIP"}, codecs
 
 
 def test_where_read_residual_filter_is_pushed_down(spark, tmp_path):

@@ -97,36 +97,50 @@ def _run_rolling_maintenance(
     groups: int,
     tombstone_retain_lsn: int | None,
 ) -> None:
-    """Invoke the rolling maintenance policy on a maintenance epoch: one
-    bucket group of the sink, collapsed by ``rewrite_buckets`` or, with a
-    retain window, rewritten by ``gc_tombstones`` below max applied LSN −
+    """Run the rolling maintenance policy for the latest maintenance epoch
+    at or before ``batch_id`` (``k * every - 1``) on each of the sink and
+    its lineage table that does not yet hold that epoch's ``roll=`` commit:
+    one bucket group of the sink, collapsed by ``rewrite_buckets`` or, with
+    a retain window, rewritten by ``gc_tombstones`` below max applied LSN −
     ``tombstone_retain_lsn``; plus a whole-table compaction of the small
-    append-only lineage table.
+    append-only lineage table.  A single-sink stream is thus maintained on
+    its maintenance epochs; a routed sink with no rows on one is maintained
+    on its next trigger.  The commit keys are checked first, so an ordinary
+    trigger runs no Spark job.
 
     With lineage, the max applied LSN is the LINEAGE table's recorded
     ``max_lsn``, because it covers every epoch applied so far, not only
     this micro-batch; without lineage it is this batch's max."""
-    if not every or (batch_id + 1) % every != 0:
+    if not every or batch_id + 1 < every:
         return
     from ton_etl_spark.lake.maintenance import (
         gc_tombstones,
         rewrite_buckets,
         rolling_maintenance,
+        rolling_slot,
     )
 
-    rewrite = rewrite_buckets
-    if tombstone_retain_lsn is not None:
-        if lineage is not None:
-            mx = lineage.read().agg(F.max("max_lsn")).first()[0]
-        else:
-            mx = batch_df.agg(F.max("lsn")).first()[0]
-        if mx is not None:
-            rewrite = partial(gc_tombstones, horizon_lsn=mx - tombstone_retain_lsn)
-    rolling_maintenance(table, batch_id, every=every, groups=groups, rewrite=rewrite)
-    if lineage is not None:
+    epoch = (batch_id + 1) // every * every - 1
+
+    def due(t: LakeTable | None, n_groups: int) -> bool:
+        return t is not None and not t.current().has_commit_key(
+            rolling_slot(epoch, every, n_groups)[1]
+        )
+
+    if due(table, groups):
+        rewrite = rewrite_buckets
+        if tombstone_retain_lsn is not None:
+            if lineage is not None:
+                mx = lineage.read().agg(F.max("max_lsn")).first()[0]
+            else:
+                mx = batch_df.agg(F.max("lsn")).first()[0]
+            if mx is not None:
+                rewrite = partial(gc_tombstones, horizon_lsn=mx - tombstone_retain_lsn)
+        rolling_maintenance(table, epoch, every=every, groups=groups, rewrite=rewrite)
+    if due(lineage, 1):
         # append-only, one file per bucket per epoch — compact it whole;
         # it is small by construction
-        rolling_maintenance(lineage, batch_id, every=every, groups=1)
+        rolling_maintenance(lineage, epoch, every=every, groups=1)
 
 
 def _sink_epoch(
@@ -326,8 +340,8 @@ def start_cdc_multi_table_stream(
     no maintenance.  ``maintenance_every``/``maintenance_groups``/
     ``tombstone_retain_lsn``: the same rolling maintenance policy as
     ``start_cdc_stream``, applied to each sink (and its lineage table) on
-    the maintenance epochs in which it receives rows — without it a
-    long-running multi-table stream's lineage tables grow one file per
+    its first trigger with rows at or after each maintenance epoch — without
+    it a long-running multi-table stream's lineage tables grow one file per
     bucket per epoch without bound.
 
     Exactly-once is PER SINK: every table records ``epoch=<batch_id>`` in

@@ -137,10 +137,12 @@ def hive_ddl(
 
 
 def _op_col(snap) -> str | None:
-    from ton_etl_spark.cdc.schema import OP_COL
+    """The tombstone column of a CDC table (``is_cdc_schema``, the engine's
+    one CDC rule: ``op`` AND ``lsn``); None for any other table, even one
+    with an ``op`` column."""
+    from ton_etl_spark.cdc.schema import OP_COL, is_cdc_schema
 
-    names = {f.name for f in snap.schema.fields}
-    return OP_COL if OP_COL in names else None
+    return OP_COL if is_cdc_schema(snap.schema) else None
 
 
 def duckdb_view_sql(

@@ -14,8 +14,9 @@ format: the driver pairs up the two manifests' per-bucket file lists
 side's files with one ``pyarrow.dataset`` scan (``lake.table.scan``,
 shared with the mart fold) and hash-joins them in
 Arrow — ZERO Exchange in the physical plan (plan-locked in tests), data
-moves only filesystem -> task.  The write side of the same idea is ``bucket_of``
-== ``HashPartitioning`` (lake/table.py:128-137); this is the read side.
+moves only filesystem -> task.  The write side of the same idea is the
+MERGE's one shuffle by ``bucket_of`` (lake/merge.py), after which every
+task holds whole buckets; this is the read side.
 
 Semantics match Spark/ANSI SQL joins: NULL keys never match (Arrow's
 hash join implements SQL null semantics; verified in tests against a

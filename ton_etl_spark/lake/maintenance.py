@@ -263,11 +263,18 @@ def rolling_maintenance(
     retry doesn't rewrite twice)."""
     if every <= 0 or (epoch + 1) % every != 0:
         return None
-    g = ((epoch + 1) // every - 1) % groups
+    g, key = rolling_slot(epoch, every, groups)
     buckets = [b for b in sorted(table.current().manifests) if b % groups == g]
     if not buckets:
         return None
-    return rewrite(table, buckets=buckets, commit_key=f"roll={epoch}-g{g}")
+    return rewrite(table, buckets=buckets, commit_key=key)
+
+
+def rolling_slot(epoch: int, every: int, groups: int) -> tuple[int, str]:
+    """The bucket group that maintenance epoch ``epoch`` rewrites under
+    ``rolling_maintenance``, and the ``roll=`` commit key it records."""
+    g = ((epoch + 1) // every - 1) % groups
+    return g, f"roll={epoch}-g{g}"
 
 
 def rebucket(

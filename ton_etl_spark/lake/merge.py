@@ -16,17 +16,20 @@ Semantics mirror the reference's guarded upserts and delete handling:
 
 Scale design (the part the reference outsources to Postgres indexes):
 
-1. **One shuffle per MERGE.** The merge is ``union(current-state
-   buckets, incoming events) → repartition(key) → rank by ord within each
-   key``.  Because the table's bucket function equals Spark's
-   HashPartitioning id expression (``lake/table.py bucket_of``), the
-   repartition on the child session's ``n_buckets`` partitions leaves the
-   rows already partitioned by storage bucket (AQE may coalesce whole
-   partitions, which keeps each bucket in one task) — the write needs NO
-   further exchange and still emits one file per bucket.  An earlier
-   4-exchange variant (salted two-stage reduce → full-outer join with
-   current state → repartition by bucket) moved the full token payload
-   through four shuffles; this moves it through one.
+1. **One shuffle per MERGE, by storage bucket.**  The merge is
+   ``union(current-state buckets, incoming events) → repartition(bucket)
+   → rank by ord within each (bucket, key)``.  The bucket column
+   (``bucket_of``) is computed once; the repartition on it plans
+   ``REPARTITION_BY_COL``, so AQE may coalesce partitions, and every task
+   holds whole buckets either way.  That partitioning also satisfies the
+   ranking window, so the rank adds no exchange, and the write
+   (``pre_partitioned``) adds none either: it still emits one file per
+   bucket.  The merge plans in its table's session, so its parallelism is
+   that session's ``spark.sql.shuffle.partitions``, as for every other
+   shuffle, and the scan and the write read the session's settings.  An
+   earlier 4-exchange variant (salted two-stage reduce → full-outer join
+   with current state → repartition by bucket) moved the full token
+   payload through four shuffles; this moves it through one.
 2. **Hot keys meet in one task.** A doc_id with millions of churn events
    in one batch ranks inside one task, whose external sort spills instead
    of failing.  The previous ``groupBy(key) → max_by`` plan pre-reduced
@@ -50,14 +53,13 @@ Scale design (the part the reference outsources to Postgres indexes):
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ton_etl_spark.cdc.schema import OP_COL, LSN_COL, TS_COL, op_priority_expr
 from ton_etl_spark.lake.table import (
+    BUCKET_COL,
     DELETE,
     INSERT,
     ROW,
@@ -68,26 +70,6 @@ from ton_etl_spark.lake.table import (
     feed_frame,
     outputs,
 )
-
-# One conf-pinned child session per (SparkContext, n_buckets), reused across
-# merges: a multi-day stream used to create a session per epoch per table.
-# Sessions are lightweight (shared context, private SQLConf) but not free,
-# and the registry stays tiny because n_buckets takes few distinct values.
-_CHILD_SESSIONS: dict = {}
-
-
-def _child_session(spark, n_buckets: int):
-    """The cached child session whose ``shuffle.partitions`` is pinned to
-    ``n_buckets``.  Keyed by context identity so a stopped-and-recreated
-    SparkContext never serves a stale child (the ``is not`` check catches
-    id() reuse)."""
-    key = (id(spark.sparkContext), n_buckets)
-    child = _CHILD_SESSIONS.get(key)
-    if child is None or child.sparkContext is not spark.sparkContext:
-        child = spark.newSession()
-        child.conf.set("spark.sql.shuffle.partitions", str(n_buckets))
-        _CHILD_SESSIONS[key] = child
-    return child
 
 
 def _ord_expr() -> F.Column:
@@ -151,51 +133,41 @@ def merge_lww(
     # side); tables that opted into type_widening also take lossless
     # promotions here (e.g. tokens array<int> -> array<bigint> mid-stream)
     target_schema = _merge_schemas(snap.schema, batch.schema, table._widening(snap))
-    src = F.col("__src")
+    src, bucket = F.col("__src"), F.col(BUCKET_COL)
     rows = (
         _conform(current, target_schema).withColumn("__src", F.lit(0))
         .unionByName(_conform(batch, target_schema).withColumn("__src", F.lit(1)))
+        .withColumn(BUCKET_COL, bucket_of(key_cols, snap.n_buckets))
     )
-
-    # The repartition must land on n_buckets hash partitions (AQE may then
-    # coalesce whole partitions, which keeps every bucket inside one task).
-    # Setting shuffle.partitions on the session would race with concurrent queries, so the plan is re-bound into a
-    # conf-pinned CHILD session (shared SparkContext, private SQLConf —
-    # cached per (context, n_buckets)) via a uniquely-named global temp
-    # view: the child's conf applies only to this plan, and no other
-    # session is perturbed.
-    spark = batch.sparkSession
-    child = _child_session(spark, snap.n_buckets)
-    view = f"__merge_{uuid.uuid4().hex}"
-    rows.createOrReplaceGlobalTempView(view)
-    try:
-        # rank 1 is the key's winner; on an order tie the stored row wins,
-        # so a redelivered duplicate changes nothing
-        ranked = child.table(f"global_temp.{view}").repartition(*key_cols).withColumn(
-            "__rank",
-            F.row_number().over(W.partitionBy(*key_cols).orderBy(_ord_expr().desc(), src)),
-        )
-        first, stored = F.col("__rank") == 1, src == 0
-        if empty:
-            # a winner in an empty bucket is no feed row: the commit
-            # references that bucket's new data files as its inserts
-            stored = stored | bucket_of(key_cols, snap.n_buckets).isin(empty)
-        out = (
-            F.when(first & stored, outputs(ROW))
-            .when(first, outputs(ROW, INSERT))
-            .when(src == 0, outputs(DELETE))
-            .otherwise(outputs())  # a stale batch row
-        )
-        ok = table.overwrite_buckets(
-            feed_frame(ranked, target_schema, out),
-            buckets,
-            commit_key=commit_key,
-            schema=target_schema,
-            pre_partitioned=True,
-            base_version=snap.version,
-            feed=True,
-            inserted_buckets=empty,
-        )
-    finally:
-        spark.catalog.dropGlobalTempView(view)
+    # one shuffle by bucket: every task holds whole buckets, and the
+    # window's (bucket, key) partitioning needs no second exchange.  Rank
+    # 1 is the key's winner; on an order tie the stored row wins, so a
+    # redelivered duplicate changes nothing
+    ranked = rows.repartition(bucket).withColumn(
+        "__rank",
+        F.row_number().over(
+            W.partitionBy(bucket, *key_cols).orderBy(_ord_expr().desc(), src)
+        ),
+    )
+    first, stored = F.col("__rank") == 1, src == 0
+    if empty:
+        # a winner in an empty bucket is no feed row: the commit
+        # references that bucket's new data files as its inserts
+        stored = stored | bucket.isin(empty)
+    out = (
+        F.when(first & stored, outputs(ROW))
+        .when(first, outputs(ROW, INSERT))
+        .when(src == 0, outputs(DELETE))
+        .otherwise(outputs())  # a stale batch row
+    )
+    ok = table.overwrite_buckets(
+        feed_frame(ranked, target_schema, out),
+        buckets,
+        commit_key=commit_key,
+        schema=target_schema,
+        pre_partitioned=True,
+        base_version=snap.version,
+        feed=True,
+        inserted_buckets=empty,
+    )
     return {"applied": ok, "buckets": sorted(buckets)}

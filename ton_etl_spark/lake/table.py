@@ -158,14 +158,11 @@ def _numeric_epoch(commit_key: str) -> tuple[str, int] | None:
 
 
 def bucket_of(key_cols: list[str], n_buckets: int):
-    """Bucket id of a key — ``pmod(murmur3(key), n)``, DELIBERATELY identical
-    to Spark's ``HashPartitioning.partitionIdExpression`` (``F.hash`` is
-    murmur3 with the same seed 42).  Consequence: any shuffle hashed on the
-    key columns with ``numPartitions == n_buckets`` (a plain ``groupBy`` with
-    ``spark.sql.shuffle.partitions = n_buckets``) yields output partitions
-    that ARE the storage buckets — the MERGE write needs no further
-    repartition, saving a full-payload shuffle per commit.  This is the
-    local-format analog of Iceberg's storage-partitioned join/write."""
+    """Bucket id of a key — ``pmod(murmur3(key), n)`` (``F.hash`` is
+    murmur3 with seed 42), the one bucket function every writer, the
+    lookup probe and the co-located join use.  A frame shuffled on this
+    column holds whole buckets in each partition, so the MERGE ranks and
+    writes its rows with no further exchange (``lake/merge.py``)."""
     return F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
@@ -511,6 +508,25 @@ def _ntz_wall(v: Any, zone) -> Any:
     return _pin_naive(v).astimezone(zone).replace(tzinfo=None)
 
 
+def _date_bound(v: Any, zone, lower: bool) -> Any:
+    """The exact ``date`` bound equal to the datetime range bound ``v`` on
+    a ``date`` column.  Spark compares a date with a datetime at the
+    date's session-zone midnight, so a lower bound is the next date unless
+    ``v`` is exactly that midnight, and an upper bound is its floor date.
+    ``v`` as given when it is no datetime or the zone is unknown."""
+    import datetime as _dt
+
+    if zone is None or not isinstance(v, _dt.datetime):
+        return v
+    d = _ntz_wall(v, zone).date()
+    if lower:
+        utc = _dt.timezone.utc
+        midnight = _dt.datetime.combine(d, _dt.time(), zone)
+        if midnight.astimezone(utc) != _pin_naive(v).astimezone(utc):
+            d += _dt.timedelta(days=1)
+    return d
+
+
 def _probe_stored(v: Any, dt: T.DataType | None, zone) -> Any:
     """The one stored value a conformed ``where_in`` probe ``v`` can equal
     under the residual ``isin``, in the form the bucket hash and the footer
@@ -694,9 +710,10 @@ class ScanPlan:
     files were skipped.  ``bounds`` are the conformed ``where`` ranges in
     the form an evaluator outside Spark (the co-located join's Arrow
     kernel) compares stored values against: naive datetimes pinned
-    (``_pin_naive``), and on ``timestamp_ntz`` columns the session-zone
+    (``_pin_naive``), on ``timestamp_ntz`` columns the session-zone
     wall clock (``_ntz_wall``), since NTZ values are stored as wall
-    clocks."""
+    clocks, and a datetime bound on a ``date`` column the exact date bound
+    it equals in the session zone (``_date_bound``)."""
 
     snapshot: Snapshot
     files: list[DataFile]
@@ -1193,12 +1210,14 @@ class LakeTable:
         stored form the residual can match (``_probe_stored``); range
         bounds are pinned the same way, on ``timestamp_ntz`` columns
         taken as wall clocks in ``spark.sql.session.timeZone``
-        (``_ntz_walls``), and a datetime bound on a ``date`` column as its
-        session-zone date.
+        (``_ntz_walls``), and a datetime bound on a ``date`` column as the
+        exact date bound it equals (``_date_bound``).
 
         The residual is the conformed predicate as one Column: ranges
         (``>=``/``<=``) AND ``isin`` lists.  NULL in a predicate column
         never satisfies it."""
+        import datetime as _dt
+
         if tag is not None:
             if version is not None:
                 raise ValueError("pass version OR tag, not both")
@@ -1225,8 +1244,12 @@ class LakeTable:
         zoned = ntz | {c for c in set(where) | set(where_in)
                        if isinstance(types.get(c), T.DateType)}
         zone = _session_zone(self.spark.conf.get("spark.sql.session.timeZone")) if zoned else None
-        walls = {c: (_ntz_wall(lo, zone), _ntz_wall(hi, zone)) if c in ntz else (lo, hi)
-                 for c, (lo, hi) in bounds.items()}
+        walls = {
+            c: (_ntz_wall(lo, zone), _ntz_wall(hi, zone)) if c in ntz
+            else (_date_bound(lo, zone, True), _date_bound(hi, zone, False))
+            if isinstance(types.get(c), T.DateType) else (lo, hi)
+            for c, (lo, hi) in bounds.items()
+        }
         if any(len(v) == 0 for v in where_in.values()):
             # empty, or emptied by conformance: skip the scan entirely
             return ScanPlan(snap, [], residual, walls)
@@ -1257,10 +1280,9 @@ class LakeTable:
                 if c in ntz:
                     lo, hi = _ntz_walls(lo, zone)[0], _ntz_walls(hi, zone)[1]
                 elif isinstance(types.get(c), T.DateType):
-                    # a datetime bound compares with the date's session-zone
-                    # midnight: its session-zone date is exact as the upper
-                    # bound and at most one day low as the lower one
-                    lo, hi = (_probe_stored(v, types[c], zone) for v in (lo, hi))
+                    # a datetime left on a date column has no known session
+                    # zone, hence no exact date: it skips nothing
+                    lo, hi = (None if isinstance(v, _dt.datetime) else v for v in walls[c])
                 enc[c] = (_stats_encode(lo), _stats_encode(hi))
             files = [f for f in files if _file_may_match(f, enc)]
         return ScanPlan(snap, files, residual, walls)
@@ -1490,15 +1512,11 @@ class LakeTable:
         compacted bucket still lands as N bounded files in the per-bucket
         manifest instead of one multi-GB straggler.
 
-        ``pre_partitioned=True``: caller guarantees ``df`` is already
-        hash-partitioned on the key columns with numPartitions==n_buckets
-        (e.g. it is the output of a groupBy(key) run with
-        ``spark.sql.shuffle.partitions = n_buckets``).  Because
-        ``bucket_of`` equals Spark's partition-id expression, each task then
-        holds whole buckets and the dynamic-partition write needs NO
-        repartition exchange (write parallelism is n_buckets by design —
-        the zero-exchange trade; size n_buckets to the cluster).  Otherwise
-        an explicit repartition keeps the snapshot's file count
+        ``pre_partitioned=True``: the caller guarantees that every
+        partition of ``df`` holds whole buckets (the merge shuffles on the
+        ``bucket_of`` column), so the dynamic-partition write needs NO
+        repartition exchange and still writes one file per bucket.
+        Otherwise an explicit repartition keeps the snapshot's file count
         O(n_buckets) — skipping it would fan out to n_partitions ×
         n_buckets files (measured 2× end-to-end regression from distributed
         listing on every read)."""
