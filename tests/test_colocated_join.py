@@ -462,3 +462,85 @@ def test_colocated_join_datetime_bounds_on_date_column(spark, tmp_path):
             assert sorted(row["k"] for row in got.collect()) == list(range(5, 10)), tz
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def _ntz_dst_pair(spark, tmp_path):
+    """Left: NTZ wall clocks every 15 minutes from midnight of the New York
+    DST fold (keys 0-15) and gap (keys 16-31) days; right: one value per
+    key."""
+    import datetime as dt
+
+    walls = [dt.datetime(2026, 11, 1) + dt.timedelta(minutes=15 * i) for i in range(16)]
+    walls += [dt.datetime(2026, 3, 8) + dt.timedelta(minutes=15 * i) for i in range(16)]
+    lt = spark.createDataFrame(list(enumerate(walls)), "k long, ts timestamp_ntz")
+    rt = spark.createDataFrame([(i, i * 10) for i in range(32)], "k long, v long")
+    l = LakeTable.create(spark, str(tmp_path / "l"), schema=lt.schema, key_cols=["k"],
+                         n_buckets=4, stats_cols=["ts"], sort_cols=["ts"],
+                         target_file_rows=4)
+    r = LakeTable.create(spark, str(tmp_path / "r"), schema=rt.schema, key_cols=["k"],
+                         n_buckets=4)
+    l.append(lt, commit_key="seed")
+    r.append(rt, commit_key="seed")
+    return l, r
+
+
+def test_colocated_join_ntz_bounds_agree_with_read_across_dst(spark, tmp_path):
+    """NTZ bounds at the New York fold (2026-11-01) and gap (2026-03-08) in
+    a New York and a ``PST`` (a short zone id) session: the Arrow kernel
+    keeps exactly the rows ``read(where=)`` keeps, both comparing the
+    bound's session-zone wall clock with the stored wall clock (06:30Z is
+    01:30 EST, so the first 01:30 row, written before the fold, is kept).
+    ``tests/test_scan_plan.py`` runs the same surfaces in UTC and Tokyo
+    sessions too."""
+    import datetime as dt
+
+    utc = dt.timezone.utc
+    l, r = _ntz_dst_pair(spark, tmp_path)
+    cases = [
+        (dt.datetime(2026, 11, 1, 6, 30, tzinfo=utc), None),  # 01:30 EST
+        (dt.datetime(2026, 11, 1, 6, tzinfo=utc), None),  # 01:00 EST
+        (dt.datetime(2026, 11, 1, 5, 30, tzinfo=utc), dt.datetime(2026, 11, 1, 6, 30, tzinfo=utc)),
+        (dt.datetime(2026, 3, 8, 7, 10, tzinfo=utc), None),  # 03:10 EDT
+        (dt.datetime(2026, 3, 8, 1), dt.datetime(2026, 3, 8, 6, 50, tzinfo=utc)),  # naive lo
+    ]
+    got = {}
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for tz in ("America/New_York", "PST"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            for lo, hi in cases:
+                where = {"ts": (lo, hi)}
+                want = l.read(where=where).join(r.read(), "k").select("k", "ts", "v")
+                got[tz, lo, hi] = _rows(colocated_join(l, r, left_where=where))
+                assert got[tz, lo, hi] == _rows(want), (tz, lo, hi)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    ny = "America/New_York"
+    assert sorted(row[0] for row in got[(ny, *cases[0])]) == list(range(6, 16))
+    assert sorted(row[0] for row in got[(ny, *cases[1])]) == list(range(4, 16))
+    assert sorted(row[0] for row in got[(ny, *cases[3])]) == [*range(16), 29, 30, 31]
+    assert len(got["PST", *cases[0]]) == 16  # 06:30Z is 22:30 PDT the day before
+
+
+def test_colocated_join_refuses_datetime_bounds_without_session_zone(
+    spark, tmp_path, monkeypatch
+):
+    """When Python cannot resolve the session zone, a datetime bound on an
+    NTZ column has no stored form: ``read`` keeps Spark's own comparison
+    and skips no file, and the join, whose kernel has no other rule,
+    raises instead of comparing the raw bound."""
+    import datetime as dt
+
+    import ton_etl_spark.lake.table as table_mod
+
+    l, r = _ntz_dst_pair(spark, tmp_path)
+    monkeypatch.setattr(table_mod, "_session_zone", lambda zone_id: None)
+    where = {"ts": (dt.datetime(2026, 11, 1, 6, 30, tzinfo=dt.timezone.utc), None)}
+    assert len(l.plan(where=where).files) == len(l.current().files)
+    want = l.read().where(F.col("ts") >= F.lit(where["ts"][0]))
+    assert _rows(l.read(where=where)) == _rows(want)
+    with pytest.raises(ValueError, match="session time zone"):
+        colocated_join(l, r, left_where=where)
+    # a bound on a column that stores no wall clock needs no zone
+    assert _rows(colocated_join(l, r, left_where={"k": (30, None)})) == [
+        (30, dt.datetime(2026, 3, 8, 3, 30), 300), (31, dt.datetime(2026, 3, 8, 3, 45), 310)]

@@ -152,9 +152,9 @@ def test_probe_agrees_with_residual_on_dates_and_timestamps(spark, tmp_path, pro
 
 
 def test_probe_agrees_with_residual_on_ntz_across_dst(spark, tmp_path, probes):
-    """NTZ keys compare at the session-zone wall clock (``_ntz_wall``).  A
-    probe whose wall clock ``_ntz_walls`` cannot pin to one value (near the
-    2026-11-01 fold or the 2026-03-08 gap in New York) is not pruned."""
+    """NTZ keys compare at the session-zone wall clock (``_stored``), and
+    the residual compares the same wall clock, so a probe at the
+    2026-11-01 fold or the 2026-03-08 gap in New York is pruned too."""
     jan = dt.datetime(2026, 1, 10)
     fold = dt.datetime(2026, 11, 1)
     gap = dt.datetime(2026, 3, 8)
@@ -169,11 +169,11 @@ def test_probe_agrees_with_residual_on_ntz_across_dst(spark, tmp_path, probes):
         cases.append(({"k": [wall]}, True))  # naive: process-zone instant
         cases.append(({"k": [wall.replace(tzinfo=UTC)]}, True))
     cases += [
-        ({"k": [dt.datetime(2026, 11, 1, 5, 30, tzinfo=UTC)]}, False),  # 01:30 EDT
-        ({"k": [dt.datetime(2026, 11, 1, 6, 30, tzinfo=UTC)]}, False),  # 01:30 EST
-        ({"k": [dt.datetime(2026, 3, 8, 6, 30, tzinfo=UTC)]}, False),  # 01:30 EST
-        ({"k": [dt.datetime(2026, 3, 8, 7, 30, tzinfo=UTC)]}, False),  # 03:30 EDT
-        ({"k": [fold + dt.timedelta(minutes=90), gap + dt.timedelta(minutes=150)]}, False),
+        ({"k": [dt.datetime(2026, 11, 1, 5, 30, tzinfo=UTC)]}, True),  # 01:30 EDT
+        ({"k": [dt.datetime(2026, 11, 1, 6, 30, tzinfo=UTC)]}, True),  # 01:30 EST
+        ({"k": [dt.datetime(2026, 3, 8, 6, 30, tzinfo=UTC)]}, True),  # 01:30 EST
+        ({"k": [dt.datetime(2026, 3, 8, 7, 30, tzinfo=UTC)]}, True),  # 03:30 EDT
+        ({"k": [fold + dt.timedelta(minutes=90), gap + dt.timedelta(minutes=150)]}, True),
     ]
     _check(spark, t, probes, cases, zone="America/New_York")
 

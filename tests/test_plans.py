@@ -218,32 +218,44 @@ def test_merge_does_not_mutate_session_conf(spark, tmp_path):
 
 
 def test_merge_writes_with_the_session_parquet_codec(spark, tmp_path):
-    """A runtime ``spark.sql.parquet.compression.codec`` reaches the merge's
-    data and change-feed files, as it reaches an append's: the merge runs
-    in its table's session, not in a child session whose conf would come
-    from the SparkContext (which writes SNAPPY)."""
+    """A runtime ``spark.sql.parquet.compression.codec`` reaches the
+    merge's data and change-feed files, as it reaches an append's (the
+    merge runs in its table's session, not in a child session whose conf
+    would come from the SparkContext), and the files the driver writer
+    writes: the lineage rows and the mart fold.  A codec pyarrow cannot
+    write is refused by the driver writer."""
     import pyarrow.parquet as pq
 
-    from ton_etl_spark.lake.merge import merge_lww
+    from ton_etl_spark.cdc.apply import apply_cdc_batch, make_lineage_table
+    from ton_etl_spark.lake.incremental import make_agg_mart, refresh_agg_mart
 
     table = make_sequences_table(spark, str(tmp_path / "codec"), n_buckets=4)
+    lineage = make_lineage_table(spark, str(tmp_path / "lin"))
+    mart = make_agg_mart(spark, str(tmp_path / "mart"), group_cols=["source"])
     log = generate_cdc_log(spark, 1_000, seed=37)
     prev = spark.conf.get("spark.sql.parquet.compression.codec")
     spark.conf.set("spark.sql.parquet.compression.codec", "gzip")
     try:
-        assert merge_lww(table, log.where("lsn % 2 = 0"), commit_key="epoch=0")["applied"]
-        assert merge_lww(table, log.where("lsn % 2 = 1"), commit_key="epoch=1")["applied"]
+        assert apply_cdc_batch(table, log.where("lsn % 2 = 0"), epoch=0, lineage=lineage)["applied"]
+        v0 = table.current_version()
+        assert refresh_agg_mart(mart, table, None)["applied"]
+        assert apply_cdc_batch(table, log.where("lsn % 2 = 1"), epoch=1, lineage=lineage)["applied"]
+        assert refresh_agg_mart(mart, table, v0)["applied"]
+        spark.conf.set("spark.sql.parquet.compression.codec", "lzo")
+        with pytest.raises(ValueError, match="lzo"):
+            lineage.append(lineage.read().toArrow(), commit_key="lzo")
     finally:
         spark.conf.set("spark.sql.parquet.compression.codec", prev)
-    snap = table.current()
-    paths = [f.path for f in snap.files] + [c.path for c in snap.feed]
-    assert snap.feed and any("__change=" in p for p in paths), paths
-    codecs = set()
-    for rel in paths:
-        md = pq.ParquetFile(os.path.join(table.root, rel)).metadata
-        codecs |= {md.row_group(g).column(j).compression
-                   for g in range(md.num_row_groups) for j in range(md.num_columns)}
-    assert codecs == {"GZIP"}, codecs
+    for t in (table, lineage, mart):
+        snap = t.current()
+        paths = [f.path for f in snap.files] + [c.path for c in snap.feed]
+        assert t is lineage or any("__change=" in p for p in paths), (t.root, paths)
+        codecs = set()
+        for rel in paths:
+            md = pq.ParquetFile(os.path.join(t.root, rel)).metadata
+            codecs |= {md.row_group(g).column(j).compression
+                       for g in range(md.num_row_groups) for j in range(md.num_columns)}
+        assert codecs == {"GZIP"}, (t.root, codecs)
 
 
 def test_where_read_residual_filter_is_pushed_down(spark, tmp_path):
@@ -262,6 +274,42 @@ def test_where_read_residual_filter_is_pushed_down(spark, tmp_path):
     txt = _optimized_scan_line(t.read(where={"lsn": (100, 200)}))
     assert "GreaterThanOrEqual(lsn,100)" in txt, txt
     assert "LessThanOrEqual(lsn,200)" in txt, txt
+
+
+def test_ntz_residual_casts_no_column_and_is_pushed_down(spark, tmp_path):
+    """An NTZ range and an NTZ ``where_in`` compare the column, uncast,
+    with ``timestamp_ntz`` literals (the bounds' session-zone wall
+    clocks), so both reach the Parquet scan as pushed filters; comparing
+    with a ``timestamp`` literal would cast the column and push only
+    ``IsNotNull``."""
+    import datetime as dt
+
+    from ton_etl_spark.lake.table import LakeTable
+
+    schema = spark.createDataFrame([], "k long, ts timestamp_ntz").schema
+    t = LakeTable.create(spark, str(tmp_path / "ntz"), schema=schema,
+                         key_cols=["k"], n_buckets=2, stats_cols=["ts"])
+    t.append(spark.createDataFrame(
+        [(i, dt.datetime(2026, 11, 1) + dt.timedelta(minutes=15 * i)) for i in range(16)],
+        schema), commit_key="seed")
+    utc = dt.timezone.utc
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        rng = t.read(where={"ts": (dt.datetime(2026, 11, 1, 6, 30, tzinfo=utc),
+                                   dt.datetime(2026, 11, 1, 7, 15, tzinfo=utc))})
+        probe = t.read(where_in={"ts": [dt.datetime(2026, 11, 1, 6, 30, tzinfo=utc),
+                                        dt.datetime(2026, 11, 1, 8, tzinfo=utc)]})
+        txts = [_optimized_scan_line(df) for df in (rng, probe)]
+        assert sorted(r["k"] for r in rng.collect()) == [6, 7, 8, 9]
+        assert sorted(r["k"] for r in probe.collect()) == [6, 12]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    for txt in txts:
+        assert "cast(ts" not in txt.lower(), txt
+    assert "GreaterThanOrEqual(ts,2026-11-01T01:30)" in txts[0], txts[0]
+    assert "LessThanOrEqual(ts,2026-11-01T02:15)" in txts[0], txts[0]
+    assert "In(ts, [2026-11-01T01:30,2026-11-01T03:00]" in txts[1], txts[1]
 
 
 def test_ivf_centroid_init_is_top_n_not_full_sort(spark, sf_dir):

@@ -263,3 +263,84 @@ def test_date_skipping_with_datetime_bounds_agrees_with_residual(spark, tmp_path
             assert len(t.plan(where={"d": (midnight, midnight)}).files) == 1, tz
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def test_ntz_and_date_predicates_agree_across_surfaces(spark, tmp_path):
+    """One NTZ or date predicate, one answer: ``read``,
+    ``read_state(where_in=)``, ``colocated_join(left_where=)``,
+    ``update_where`` and ``delete_where`` return the rows Spark selects
+    when it compares the stored values with the predicate's session-zone
+    wall clock (``F.lit(v).cast("timestamp_ntz")``) or, on the date
+    column, at each date's session-zone midnight.  Bounds and probes sit
+    at the New York DST fold (2026-11-01) and gap (2026-03-08), in UTC,
+    New York, Tokyo and ``PST`` (a short zone id) sessions."""
+    from ton_etl_spark.cdc.apply import read_state
+    from ton_etl_spark.lake.join import colocated_join
+
+    utc = dt.timezone.utc
+    walls = [dt.datetime(2026, 11, 1) + dt.timedelta(minutes=15 * i) for i in range(16)]
+    walls += [dt.datetime(2026, 3, 8) + dt.timedelta(minutes=15 * i) for i in range(16)]
+    rows = [(k, "d" if k % 7 == 3 else "u", k, w, dt.date(2026, 3, 5) + dt.timedelta(days=k // 4))
+            for k, w in enumerate(walls)]
+    schema = spark.createDataFrame([], "k long, op string, lsn long, ts timestamp_ntz, d date").schema
+    base = LakeTable.create(spark, str(tmp_path / "base"), schema=schema, key_cols=["k"],
+                            n_buckets=4, stats_cols=["ts", "d"], sort_cols=["ts"],
+                            target_file_rows=4)
+    base.append(spark.createDataFrame(rows, schema), commit_key="seed")
+    right = LakeTable.create(spark, str(tmp_path / "right"),
+                             schema=spark.createDataFrame([], "k long, v long").schema,
+                             key_cols=["k"], n_buckets=4)
+    right.append(spark.createDataFrame([(k, k) for k in range(32)], "k long, v long"))
+    fold1, fold2 = (dt.datetime(2026, 11, 1, h, 30, tzinfo=utc) for h in (5, 6))
+    gap_lo, gap_hi = dt.datetime(2026, 3, 8, 6, 50, tzinfo=utc), dt.datetime(2026, 3, 8, 7, 10, tzinfo=utc)
+    ny_midnight = dt.datetime(2026, 3, 8, 5, tzinfo=utc)
+    cases = [
+        ({"ts": (fold2, None)}, {}),
+        ({"ts": (None, gap_lo)}, {}),
+        ({"ts": (gap_hi, fold1)}, {}),
+        ({"d": (ny_midnight, dt.datetime(2026, 3, 10, 12, tzinfo=utc))}, {}),
+        ({}, {"ts": [fold1, fold2, dt.datetime(2026, 3, 8, 7, 30, tzinfo=utc)]}),
+        ({}, {"d": [ny_midnight, dt.datetime(2026, 3, 9, 12, tzinfo=utc)]}),
+    ]
+
+    def spark_rule(where, where_in):
+        """Spark's own comparison, with NTZ values cast by Spark."""
+        def lit(c, v):
+            return F.lit(v).cast("timestamp_ntz") if c == "ts" else F.lit(v)
+        terms = [t for c, (lo, hi) in where.items()
+                 for t in ([F.col(c) >= lit(c, lo)] if lo else [])
+                 + ([F.col(c) <= lit(c, hi)] if hi else [])]
+        terms += [F.col(c).isin([lit(c, v) for v in vals]) for c, vals in where_in.items()]
+        return functools.reduce(lambda a, b: a & b, terms)
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for i, tz in enumerate(("UTC", "America/New_York", "Asia/Tokyo", "PST")):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            flags = base.read().select(
+                "k", "op", *[spark_rule(w, wi).alias(f"m{j}") for j, (w, wi) in enumerate(cases)]
+            ).collect()
+            want = [{r["k"] for r in flags if r[f"m{j}"]} for j in range(len(cases))]
+            live = [{r["k"] for r in flags if r[f"m{j}"] and r["op"] != "d"}
+                    for j in range(len(cases))]
+            got = functools.reduce(DataFrame.unionByName, [
+                base.read(where=w, where_in=wi).select("k", F.lit(j).alias("case"))
+                for j, (w, wi) in enumerate(cases)
+            ]).collect()
+            for j, (w, wi) in enumerate(cases):
+                assert {r["k"] for r in got if r["case"] == j} == want[j], (tz, w, wi)
+                if wi:
+                    assert {r["k"] for r in read_state(base, where_in=wi).collect()} == live[j], (tz, wi)
+                else:
+                    joined = colocated_join(base, right, left_where=w)
+                    assert {r["k"] for r in joined.collect()} == live[j], (tz, w)
+            t = LakeTable.load(spark, shutil.copytree(base.root, str(tmp_path / f"c{i}")))
+            u = update_where(t, {"lsn": F.lit(-1)}, where=cases[0][0])
+            assert u["updated_rows"] == len(want[0]), tz
+            d = delete_where(t, where_in=cases[4][1], protect_tombstones=False)
+            assert d["deleted_rows"] == len(want[4]), tz
+            left = {r["k"]: r["lsn"] for r in t.read().collect()}
+            assert set(range(32)) - set(left) == want[4], tz
+            assert {k for k, lsn in left.items() if lsn == -1} == want[0] - want[4], tz
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)

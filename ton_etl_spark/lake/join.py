@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ton_etl_spark.cdc.schema import OP_COL, is_cdc_schema
-from ton_etl_spark.lake.table import LakeTable, _local_frame
+from ton_etl_spark.lake.table import LakeTable, _local_frame, _Unzoned
 
 __all__ = ["colocated_join"]
 
@@ -113,7 +113,12 @@ def colocated_join(
     one day's / one LSN-span's slice of two co-bucketed tables therefore
     reads O(matching files) of each and shuffles nothing.  Unknown
     predicate columns raise (a silently ignored filter would return
-    wrong rows, unlike ``read`` where the residual covers it).
+    wrong rows, unlike ``read`` where the residual covers it).  Bounds
+    compare as ``read`` compares them (``LakeTable.plan``'s stored
+    form): a datetime bound on a ``timestamp_ntz`` column is its
+    session-zone wall clock, on a ``date`` column the exact date; when
+    Python cannot resolve ``spark.sql.session.timeZone``, such a bound
+    raises ValueError.
     """
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
@@ -196,11 +201,21 @@ def colocated_join(
 
     def plan_side(table, snap, where, side):
         """The side's surviving files per bucket and its kernel filters
-        ``[(col, lo, hi)]``, from ``table.plan``."""
+        ``[(col, lo, hi)]``, from ``table.plan``: its ``bounds`` are the
+        stored-form values its residual compares (an NTZ bound a
+        session-zone wall clock), so the kernel keeps the rows ``read``
+        keeps."""
         unknown = sorted(set(where or ()) - set(snap.schema.fieldNames()))
         if unknown:
             raise ValueError(f"{side}_where: not in schema: {unknown}")
         p = table.plan(version=snap.version, where=where)
+        for c, (lo, hi) in p.bounds.items():
+            if isinstance(lo, _Unzoned) or isinstance(hi, _Unzoned):
+                raise ValueError(
+                    f"{side}_where: a datetime bound on {c!r} needs the session "
+                    "time zone, which Python cannot resolve: "
+                    f"{table.spark.conf.get('spark.sql.session.timeZone')!r}"
+                )
         by_bucket: dict[int, list[str]] = {}
         for f in p.files:
             by_bucket.setdefault(f.bucket, []).append(os.path.join(table.root, f.path))

@@ -82,6 +82,7 @@ lock-free.
 
 from __future__ import annotations
 
+import datetime as _dt
 import functools
 import json
 import logging
@@ -217,8 +218,6 @@ def _stats_encode(v: Any) -> Any:
     returns naive UTC for Spark-written timestamps).  Anything else
     (binary, nested, decimal) returns None => no stats recorded => never
     skipped."""
-    import datetime as _dt
-
     if isinstance(v, bool) or v is None:
         return None  # bool bounds are useless; NULL has no order
     if isinstance(v, (int, float, str)):
@@ -280,6 +279,27 @@ def _file_may_match_in(f: DataFile, enc_in: dict[str, list]) -> bool:
     return True
 
 
+_TEMPORAL = (T.TimestampType, T.TimestampNTZType, T.DateType)
+# the column types whose stored form of a datetime is session-zone local
+_ZONED = (T.TimestampNTZType, T.DateType)
+
+
+def _conform_temporal(v: Any, dt: T.DataType) -> Any:
+    """A predicate value for a ``timestamp``/``timestamp_ntz`` column (a
+    datetime) or a ``date`` column (a date, or a datetime, which ``plan``
+    turns into one): an ISO-8601 string is parsed, a value of that kind
+    is kept and anything else raises ValueError.  Epoch numbers are
+    refused: guessing the unit (s/ms/us)
+    risks a silent wrong match, and passing one raw is an ANSI analysis
+    error."""
+    want = _dt.date if isinstance(dt, T.DateType) else _dt.datetime
+    if isinstance(v, str):
+        return want.fromisoformat(v)
+    if isinstance(v, want):
+        return v
+    raise ValueError(v)
+
+
 def _conform_where_in(
     schema: T.StructType, where_in: dict[str, list]
 ) -> dict[str, list]:
@@ -293,12 +313,14 @@ def _conform_where_in(
     and throws CAST_INVALID_INPUT on the first non-numeric row, and the
     coerced comparison ('07' = 7) would disagree with the bucket hash of
     the stringified probe, silently missing rows in pruned reads.  After
-    conformance every comparison is same-type: no column cast, no ANSI
-    crash, hash and filter agree.  NULLs are dropped too: they never
-    satisfy ``isin``, so keeping one would only turn off the column's
-    pruning.  Unknown columns pass through so the filter raises Spark's
-    own unresolved-column error."""
-    import datetime as _dt
+    conformance and the plan's conversion to the stored form
+    (``_stored``: a ``timestamp_ntz`` probe becomes a wall clock and its
+    literal an NTZ one, a datetime probe on a ``date`` column a date)
+    every comparison is same-type: no column cast, no ANSI crash, hash
+    and filter agree.  NULLs are dropped too: they never satisfy
+    ``isin``, so keeping one would only turn off the column's pruning.
+    Unknown columns pass through so the filter raises Spark's own
+    unresolved-column error."""
     from decimal import Context, Decimal, InvalidOperation
 
     names = set(schema.fieldNames())
@@ -337,20 +359,8 @@ def _conform_where_in(
                     q = d.quantize(Decimal(1).scaleb(-dt.scale), context=Context(prec=80))
                     if q == d and len(q.as_tuple().digits) <= dt.precision:
                         conv.append(d)  # else: more digits than the type holds
-                elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-                    if isinstance(v, str):
-                        conv.append(_dt.datetime.fromisoformat(v))
-                    elif isinstance(v, _dt.datetime):
-                        conv.append(v)
-                    # anything else (epoch int/float) is dropped: guessing
-                    # the unit (s/ms/us) risks a silent wrong match, and
-                    # passing it raw is an ANSI analysis error — the
-                    # contract is "unrepresentable matches nothing"
-                elif isinstance(dt, T.DateType):
-                    if isinstance(v, str):
-                        conv.append(_dt.date.fromisoformat(v))
-                    elif isinstance(v, _dt.date):
-                        conv.append(v)  # datetime is a date subclass: ok
+                elif isinstance(dt, _TEMPORAL):
+                    conv.append(_conform_temporal(v, dt))
                 elif isinstance(dt, T.BooleanType):
                     if not isinstance(v, bool):
                         continue
@@ -382,7 +392,6 @@ def _conform_where_bounds(
       a JSON surface like ``maintain --delete-where`` can express.
 
     NULL bounds (open-ended) and unknown columns pass through."""
-    import datetime as _dt
     import math
     from decimal import Decimal, InvalidOperation
 
@@ -416,18 +425,8 @@ def _conform_where_bounds(
                 return v
             if isinstance(dt, T.DecimalType):
                 return v if isinstance(v, Decimal) else Decimal(str(v))
-            if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-                if isinstance(v, str):
-                    return _dt.datetime.fromisoformat(v)
-                if isinstance(v, _dt.datetime):
-                    return v
-                raise ValueError  # epoch ints: unit guess = silent wrong range
-            if isinstance(dt, T.DateType):
-                if isinstance(v, str):
-                    return _dt.date.fromisoformat(v)
-                if isinstance(v, _dt.date):
-                    return v
-                raise ValueError
+            if isinstance(dt, _TEMPORAL):
+                return _conform_temporal(v, dt)
             return v
         except (TypeError, ValueError, InvalidOperation):
             raise ValueError(
@@ -451,19 +450,34 @@ def _pin_naive(v: Any) -> Any:
     value before ``_stats_encode`` canonicalizes it — comparing the raw
     wall clock against UTC bounds would skip matching files whenever the
     local zone is not UTC.  Other values pass through."""
-    import datetime as _dt
-
     if isinstance(v, _dt.datetime) and v.tzinfo is None:
         return v.astimezone()
     return v
 
 
+# java.time.ZoneId.SHORT_IDS, which Spark applies to the session time zone
+# and the IANA database behind ``zoneinfo`` mostly lacks
+_SHORT_IDS = {
+    "ACT": "Australia/Darwin", "AET": "Australia/Sydney",
+    "AGT": "America/Argentina/Buenos_Aires", "ART": "Africa/Cairo",
+    "AST": "America/Anchorage", "BET": "America/Sao_Paulo", "BST": "Asia/Dhaka",
+    "CAT": "Africa/Harare", "CNT": "America/St_Johns", "CST": "America/Chicago",
+    "CTT": "Asia/Shanghai", "EAT": "Africa/Addis_Ababa", "ECT": "Europe/Paris",
+    "IET": "America/Indiana/Indianapolis", "IST": "Asia/Kolkata", "JST": "Asia/Tokyo",
+    "MIT": "Pacific/Apia", "NET": "Asia/Yerevan", "NST": "Pacific/Auckland",
+    "PLT": "Asia/Karachi", "PNT": "America/Phoenix", "PRT": "America/Puerto_Rico",
+    "PST": "America/Los_Angeles", "SST": "Pacific/Guadalcanal",
+    "VST": "Asia/Ho_Chi_Minh", "EST": "-05:00", "MST": "-07:00", "HST": "-10:00",
+}
+
+
 def _session_zone(zone_id: str):
-    """``spark.sql.session.timeZone`` as a tzinfo: a fixed offset ('UTC',
+    """``spark.sql.session.timeZone`` as a tzinfo, resolved as Spark
+    resolves it: a short id (``_SHORT_IDS``), a fixed offset ('UTC',
     '+09:00', 'GMT-5') or a region; None when Python cannot resolve it."""
-    import datetime as _dt
     from zoneinfo import ZoneInfo
 
+    zone_id = _SHORT_IDS.get(zone_id, zone_id)
     m = re.fullmatch(r"(?:Z|UTC|GMT|UT)?([+-]\d{1,2})?(?::?(\d{2}))?", zone_id)
     if zone_id and m:
         off = _dt.timedelta(hours=abs(int(m.group(1) or 0)), minutes=int(m.group(2) or 0))
@@ -474,78 +488,58 @@ def _session_zone(zone_id: str):
         return None
 
 
-def _ntz_walls(v: Any, zone) -> tuple[Any, Any]:
-    """(lowest, highest) wall clock a ``timestamp_ntz`` row equal to the
-    datetime ``v`` can hold — the form NTZ footer stats are in.  Spark
-    compares at ``v``'s wall clock in the session ``zone``, or, when that
-    wall clock is ambiguous (DST fold), reads each row as an instant; the
-    two differ by the offset change, so the range spans every offset the
-    zone uses within two days, and a bound never skips a matching file.
-    (None, None) when the zone is unknown: nothing is skipped."""
-    import datetime as _dt
+@dataclass(frozen=True)
+class _Unzoned:
+    """A datetime predicate value on a ``timestamp_ntz`` or ``date`` column
+    when ``_session_zone`` is None: it has no stored form, so it skips no
+    file or bucket (``_stats_encode`` gives it no bound), the residual
+    compares ``value`` by Spark's own rule, and the join kernel refuses it."""
 
-    if zone is None:
-        return None, None
+    value: Any
+
+
+def _stored(v: Any, dt: T.DataType | None, zone, lower: bool | None = None) -> Any:
+    """The conformed predicate value ``v`` in the form a column of type
+    ``dt`` stores: the one value the residual, the skip test, the bucket
+    probe and ``ScanPlan.bounds`` all compare.  Only a datetime changes:
+
+    - on ``timestamp``, the instant (``_pin_naive``);
+    - on ``timestamp_ntz``, its wall clock in the session ``zone`` (DST
+      fold and gap rows included: the stored wall clock decides);
+    - on ``date``, the exact date: a range bound (``lower`` True/False)
+      rounds inward to the dates whose session-zone midnight it admits,
+      and a probe (``lower`` None) is the date of which it is exactly the
+      midnight, or None (it can equal no date).
+
+    An ``_Unzoned`` value when the zone is needed and unknown."""
     if not isinstance(v, _dt.datetime):
-        return v, v
-    inst = _pin_naive(v).astimezone(_dt.timezone.utc)
-    offs = [(inst + _dt.timedelta(hours=h)).astimezone(zone).utcoffset()
-            for h in range(-48, 49, 3)]
-    wall = inst.replace(tzinfo=None)
-    return wall + min(offs), wall + max(offs)
-
-
-def _ntz_wall(v: Any, zone) -> Any:
-    """The wall clock in the session ``zone`` at which Spark compares a
-    ``timestamp_ntz`` column with the datetime ``v`` — the exact value
-    inside ``_ntz_walls``' range, for an evaluator outside Spark that
-    filters NTZ rows.  ``v`` as given when it is no datetime or the zone
-    is unknown."""
-    import datetime as _dt
-
-    if zone is None or not isinstance(v, _dt.datetime):
         return v
-    return _pin_naive(v).astimezone(zone).replace(tzinfo=None)
-
-
-def _date_bound(v: Any, zone, lower: bool) -> Any:
-    """The exact ``date`` bound equal to the datetime range bound ``v`` on
-    a ``date`` column.  Spark compares a date with a datetime at the
-    date's session-zone midnight, so a lower bound is the next date unless
-    ``v`` is exactly that midnight, and an upper bound is its floor date.
-    ``v`` as given when it is no datetime or the zone is unknown."""
-    import datetime as _dt
-
-    if zone is None or not isinstance(v, _dt.datetime):
-        return v
-    d = _ntz_wall(v, zone).date()
-    if lower:
-        utc = _dt.timezone.utc
-        midnight = _dt.datetime.combine(d, _dt.time(), zone)
-        if midnight.astimezone(utc) != _pin_naive(v).astimezone(utc):
-            d += _dt.timedelta(days=1)
-    return d
-
-
-def _probe_stored(v: Any, dt: T.DataType | None, zone) -> Any:
-    """The one stored value a conformed ``where_in`` probe ``v`` can equal
-    under the residual ``isin``, in the form the bucket hash and the footer
-    stats both take; None when there is no single one, which keeps the
-    column unprunable.  A ``timestamp`` probe is the instant
-    (``_pin_naive``).  A ``timestamp_ntz`` probe is its session-zone wall
-    clock, when ``_ntz_walls`` pins it to one (an unknown zone, or a DST
-    gap or fold within reach, does not).  A datetime probe on a ``date``
-    column matches the date whose session-zone midnight it is, so it is
-    that instant's session-zone date (Spark compares a date with a
-    datetime as timestamps)."""
-    import datetime as _dt
-
+    inst = _pin_naive(v)
+    if not isinstance(dt, _ZONED):
+        return inst
+    if zone is None:
+        return _Unzoned(v)
+    wall = inst.astimezone(zone).replace(tzinfo=None)
     if isinstance(dt, T.TimestampNTZType):
-        lo, hi = _ntz_walls(v, zone)
-        return lo if lo == hi else None
-    if isinstance(v, _dt.datetime) and isinstance(dt, T.DateType):
-        return None if zone is None else _ntz_wall(v, zone).date()
-    return _pin_naive(v)
+        return wall
+    d, utc = wall.date(), _dt.timezone.utc
+    if _dt.datetime.combine(d, _dt.time(), zone).astimezone(utc) == inst.astimezone(utc):
+        return d
+    if lower is None:
+        return None
+    return d + _dt.timedelta(days=1) if lower else d
+
+
+def _literal(v: Any, dt: T.DataType | None) -> Any:
+    """The residual's literal for the stored-form value ``v``: an NTZ wall
+    clock as a ``timestamp_ntz`` literal (Spark folds the cast, so the
+    column is compared uncast and the filter reaches Parquet), any other
+    value as given (an ``_Unzoned`` one unwrapped)."""
+    if isinstance(v, _Unzoned):
+        return v.value
+    if isinstance(dt, T.TimestampNTZType):
+        return F.lit(v.isoformat()).cast("timestamp_ntz")
+    return v
 
 
 def _file_may_match(f: DataFile, enc_where: dict[str, tuple[Any, Any]]) -> bool:
@@ -707,13 +701,13 @@ class ScanPlan:
     the exact ``residual`` filter (None when there is no predicate).
     Skipping is an optimization and the residual is the truth: a consumer
     that filters ``files`` by ``residual`` gets the same rows however many
-    files were skipped.  ``bounds`` are the conformed ``where`` ranges in
-    the form an evaluator outside Spark (the co-located join's Arrow
-    kernel) compares stored values against: naive datetimes pinned
-    (``_pin_naive``), on ``timestamp_ntz`` columns the session-zone
-    wall clock (``_ntz_wall``), since NTZ values are stored as wall
-    clocks, and a datetime bound on a ``date`` column the exact date bound
-    it equals in the session zone (``_date_bound``)."""
+    files were skipped.  ``bounds`` are the ``where`` ranges in the one
+    stored form (``_stored``) that the residual, the skip test and an
+    evaluator outside Spark (the co-located join's Arrow kernel) all
+    compare: a ``timestamp`` bound is its instant, a ``timestamp_ntz``
+    bound its session-zone wall clock and a datetime bound on a ``date``
+    column the exact date.  A bound with no stored form (``_Unzoned``:
+    the session zone is unknown) is only the residual's to evaluate."""
 
     snapshot: Snapshot
     files: list[DataFile]
@@ -800,6 +794,12 @@ def _layout_properties(stats_cols=None, sort_cols=None, bloom_cols=None,
     if type_widening:
         props["type_widening"] = "true"
     return props
+
+
+# Spark's Parquet codec names -> pyarrow's, for the driver writer; Spark's
+# others (lzo, lz4_raw) pyarrow cannot write
+_PARQUET_CODECS = {"none": "none", "uncompressed": "none", "snappy": "snappy",
+                   "gzip": "gzip", "zstd": "zstd", "brotli": "brotli", "lz4": "lz4"}
 
 
 class LakeTable:
@@ -1197,27 +1197,29 @@ class LakeTable:
         ``read``'s.  In order:
 
         1. conform ``where`` bounds and ``where_in`` probes to the column
-           types (``_conform_where_bounds`` / ``_conform_where_in``); a
-           probe list left empty matches nothing, so no file survives;
-        2. a key-covering probe picks the candidate buckets
+           types (``_conform_where_bounds`` / ``_conform_where_in``);
+        2. convert each value once, to the form its column stores
+           (``_stored``): a datetime on a ``timestamp`` column is its
+           instant, on a ``timestamp_ntz`` column its wall clock in
+           ``spark.sql.session.timeZone`` and on a ``date`` column the
+           exact date; a probe list left empty matches nothing, so no
+           file survives;
+        3. a key-covering probe picks the candidate buckets
            (``_probe_buckets``, which hashes a local relation: planning
-           runs no Spark job), and any bucket pruning first checks the recorded
-           bucket function;
-        3. files whose manifest bounds exclude every probe value or a range
+           runs no Spark job), and any bucket pruning first checks the
+           recorded bucket function;
+        4. files whose manifest bounds exclude every probe value or a range
            are skipped (``_file_may_match_in`` / ``_file_may_match``).
 
-        Probe values are hashed and compared with the stats in the one
-        stored form the residual can match (``_probe_stored``); range
-        bounds are pinned the same way, on ``timestamp_ntz`` columns
-        taken as wall clocks in ``spark.sql.session.timeZone``
-        (``_ntz_walls``), and a datetime bound on a ``date`` column as the
-        exact date bound it equals (``_date_bound``).
-
-        The residual is the conformed predicate as one Column: ranges
-        (``>=``/``<=``) AND ``isin`` lists.  NULL in a predicate column
-        never satisfies it."""
-        import datetime as _dt
-
+        The residual is the converted predicate as one Column: ranges
+        (``>=``/``<=``) AND ``isin`` lists, NTZ values as ``timestamp_ntz``
+        literals (``_literal``: no column cast).  It, the probe, the skip
+        test and ``ScanPlan.bounds`` compare the one converted value, so
+        they agree across DST folds and gaps.  The session zone is looked
+        up only when a datetime meets a ``timestamp_ntz`` or ``date``
+        column; if Python cannot resolve it, those values skip nothing and
+        the residual keeps Spark's own comparison (``_Unzoned``).  NULL in
+        a predicate column never satisfies it."""
         if tag is not None:
             if version is not None:
                 raise ValueError("pass version OR tag, not both")
@@ -1225,47 +1227,40 @@ class LakeTable:
         snap = self.snapshot(version) if version is not None else self.current()
         where = _conform_where_bounds(snap.schema, where) if where else {}
         where_in = _conform_where_in(snap.schema, where_in) if where_in else {}
-        terms = []
-        for col, (lo, hi) in where.items():
-            if lo is not None:
-                terms.append(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                terms.append(F.col(col) <= F.lit(hi))
-        terms += [F.col(col).isin(list(vals)) for col, vals in where_in.items()]
-        residual = functools.reduce(operator.and_, terms) if terms else None
-        bounds = {c: (_pin_naive(lo), _pin_naive(hi)) for c, (lo, hi) in where.items()}
-        # timestamp_ntz stats are wall clocks: predicate values on those
-        # columns are compared as session-zone wall clocks (``_ntz_walls``);
-        # a date column meets a datetime probe or bound at session-zone
-        # midnight
         types = {f.name: f.dataType for f in snap.schema.fields}
-        ntz = {c for c in set(where) | set(where_in)
-               if isinstance(types.get(c), T.TimestampNTZType)}
-        zoned = ntz | {c for c in set(where) | set(where_in)
-                       if isinstance(types.get(c), T.DateType)}
-        zone = _session_zone(self.spark.conf.get("spark.sql.session.timeZone")) if zoned else None
-        walls = {
-            c: (_ntz_wall(lo, zone), _ntz_wall(hi, zone)) if c in ntz
-            else (_date_bound(lo, zone, True), _date_bound(hi, zone, False))
-            if isinstance(types.get(c), T.DateType) else (lo, hi)
-            for c, (lo, hi) in bounds.items()
-        }
-        if any(len(v) == 0 for v in where_in.values()):
-            # empty, or emptied by conformance: skip the scan entirely
-            return ScanPlan(snap, [], residual, walls)
-        stored = {c: [_probe_stored(v, types.get(c), zone) for v in vals]
+        zone = None
+        if any(isinstance(v, _dt.datetime) and isinstance(types.get(c), _ZONED)
+               for c, vals in (*where.items(), *where_in.items()) for v in vals):
+            zone = _session_zone(self.spark.conf.get("spark.sql.session.timeZone"))
+        bounds = {c: (_stored(lo, types.get(c), zone, True),
+                      _stored(hi, types.get(c), zone, False))
+                  for c, (lo, hi) in where.items()}
+        # a datetime probe on a date column off its midnight equals no row
+        stored = {c: [s for s in (_stored(v, types.get(c), zone) for v in vals) if s is not None]
                   for c, vals in where_in.items()}
-        if where_in and buckets is None:
+        terms = []
+        for c, (lo, hi) in bounds.items():
+            if lo is not None:
+                terms.append(F.col(c) >= _literal(lo, types.get(c)))
+            if hi is not None:
+                terms.append(F.col(c) <= _literal(hi, types.get(c)))
+        terms += [F.col(c).isin([_literal(v, types.get(c)) for v in vals])
+                  for c, vals in stored.items()]
+        residual = functools.reduce(operator.and_, terms) if terms else None
+        if any(len(v) == 0 for v in stored.values()):
+            # empty, or emptied by conformance: skip the scan entirely
+            return ScanPlan(snap, [], residual, bounds)
+        if stored and buckets is None:
             buckets = self._probe_buckets(snap, stored)
         if buckets is not None:
             # pruning correctness depends on the bucket hash matching
             self.check_bucket_fn(snap)
         files = snap.files_for(buckets)
-        if where_in:
+        if stored:
             # encoded once per plan, not per file (a snapshot can list 10^5
             # files): sorted for the bisect; [] marks a column unprunable
-            # when any probe value has no single stored form or is
-            # unencodable or unorderable
+            # when any probe value is unencodable (``_Unzoned`` included)
+            # or unorderable
             enc_in: dict[str, list] = {}
             for col, vals in stored.items():
                 ev = [_stats_encode(v) for v in vals]
@@ -1274,18 +1269,10 @@ class LakeTable:
                 except TypeError:
                     enc_in[col] = []
             files = [f for f in files if _file_may_match_in(f, enc_in)]
-        if where:
-            enc = {}
-            for c, (lo, hi) in bounds.items():
-                if c in ntz:
-                    lo, hi = _ntz_walls(lo, zone)[0], _ntz_walls(hi, zone)[1]
-                elif isinstance(types.get(c), T.DateType):
-                    # a datetime left on a date column has no known session
-                    # zone, hence no exact date: it skips nothing
-                    lo, hi = (None if isinstance(v, _dt.datetime) else v for v in walls[c])
-                enc[c] = (_stats_encode(lo), _stats_encode(hi))
+        if bounds:
+            enc = {c: (_stats_encode(lo), _stats_encode(hi)) for c, (lo, hi) in bounds.items()}
             files = [f for f in files if _file_may_match(f, enc)]
-        return ScanPlan(snap, files, residual, walls)
+        return ScanPlan(snap, files, residual, bounds)
 
     _PROBE_BUCKET_MAX_COMBOS = 4096
 
@@ -1294,10 +1281,12 @@ class LakeTable:
     ) -> list[int] | None:
         """Candidate buckets for a key-covering point lookup, or None when
         bucket pruning cannot apply: the probe misses a key column, a key
-        value is None (no single stored form, see ``_probe_stored``) or
-        one the key type cannot hold, or the key cross-product exceeds
-        ``_PROBE_BUCKET_MAX_COMBOS``.  ``where_in`` holds stored-form
-        values.  The combinations are hashed through the SAME Spark
+        value has no stored form (``_Unzoned``) or is one the key type
+        cannot hold, or the key cross-product exceeds
+        ``_PROBE_BUCKET_MAX_COMBOS``.  ``where_in`` holds the plan's
+        stored-form values (``_stored``), the ones its residual compares:
+        an NTZ key hashes as its session-zone wall clock, a fold or gap
+        wall clock included.  The combinations are hashed through the SAME Spark
         expression that routed writes (``bucket_of`` over the snapshot's
         key schema — a Python reimplementation of murmur3 would be a
         silent-corruption risk) over one Arrow-built local frame
@@ -1310,7 +1299,7 @@ class LakeTable:
         lists = [where_in[k] for k in snap.key_cols]
         n_combos = functools.reduce(operator.mul, map(len, lists), 1)
         if (n_combos == 0 or n_combos > self._PROBE_BUCKET_MAX_COMBOS
-                or any(None in vals for vals in lists)):
+                or any(isinstance(v, _Unzoned) for vals in lists for v in vals)):
             return None
         self.check_bucket_fn(snap)
         # exact key types: the murmur3 of int32 and int64 differ, so probe
@@ -1578,9 +1567,12 @@ class LakeTable:
         columns (``_local_frame``: no job, and no second hash to keep in
         step with Spark's).  Each (feed kind, bucket) run is sorted by
         ``sort_cols`` (ascending, NULLs first, as Spark sorts) and split at
-        ``target_file_rows``.  A table with ``bloom_cols`` is refused:
+        ``target_file_rows``.  Files take the session's
+        ``spark.sql.parquet.compression.codec``, as the Spark writer's do
+        (``_PARQUET_CODECS``).  A table with ``bloom_cols`` is refused:
         pyarrow writes no bloom filters, and a file without one would only
-        be slower to probe, so the caller must hold a plan instead."""
+        be slower to probe, so the caller must hold a plan instead; so is
+        a codec pyarrow cannot write."""
         import itertools
 
         import pyarrow as pa
@@ -1591,6 +1583,12 @@ class LakeTable:
             raise ValueError(
                 f"table {self.root} declares bloom_cols, which the driver "
                 "writer cannot write; commit a DataFrame instead"
+            )
+        codec = self.spark.conf.get("spark.sql.parquet.compression.codec").lower()
+        if codec not in _PARQUET_CODECS:
+            raise ValueError(
+                f"spark.sql.parquet.compression.codec={codec!r} is not one the "
+                "driver writer can write; commit a DataFrame instead"
             )
         os.makedirs(commit_abs, exist_ok=True)
         n = rows.num_rows
@@ -1625,7 +1623,7 @@ class LakeTable:
                 pq.write_table(
                     data.slice(start + off, min(step, size - off)),
                     os.path.join(bdir, f"part-{off // step:05d}-{uuid.uuid4().hex}.parquet"),
-                    compression="snappy",
+                    compression=_PARQUET_CODECS[codec],
                 )
             start += size
 

@@ -101,10 +101,11 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
     prewarm: bool | None = None,
 ) -> SparkSession:
-    """Return the already-active SparkSession unchanged, or build one
-    with engine defaults.  The defaults apply only to a session built
-    here: an in-process caller (a CLI command run inside a job or a test
-    suite) never rewrites the settings of the session it joins.
+    """Return the running SparkSession unchanged, or build one with
+    engine defaults.  The defaults apply only to a session built here: an
+    in-process caller (a CLI command run inside a job or a test suite,
+    from any thread) never rewrites the settings of the session it
+    joins.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
     On a real cluster callers pass ``master=None`` via spark-submit and the
@@ -114,6 +115,13 @@ def get_spark(
     (default) follows ``SPARK_GRAFT_PY_PREWARM`` (on unless it is "0").
     """
     active = SparkSession.getActiveSession()
+    if active is None:
+        # the active session is per thread: a thread that did not build the
+        # running session joins it here, where the builder would apply its
+        # options to it
+        active = SparkSession._instantiatedSession
+        if active is not None and active._sc._jsc is None:
+            active = None  # its SparkContext was stopped
     if active is not None:
         return active
     if master is None:
