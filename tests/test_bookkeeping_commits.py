@@ -28,7 +28,8 @@ from ton_etl_spark.lake.incremental import (
     recompute_agg_mart,
     refresh_agg_mart,
 )
-from ton_etl_spark.lake.table import LakeTable
+from ton_etl_spark.lake.catalog import sync_table_from_catalog
+from ton_etl_spark.lake.table import LakeTable, arrow_rows
 from tests.test_change_feed import _bag, snapshot_diff
 
 
@@ -148,6 +149,40 @@ def test_refresh_runs_only_its_delta_collect(spark, tmp_path, monkeypatch):
     got = sorted((tuple(r) for r in mart.read().collect()), key=repr)
     assert got == sorted((tuple(r) for r in recompute_agg_mart(t, ["source"]).collect()),
                          key=repr)
+
+
+@pytest.mark.parametrize("bloom", [False, True])
+def test_zero_row_commits_run_no_job_and_write_no_file(spark, tmp_path, bloom):
+    """A zero-row Arrow append and a catalog sync's schema-only evolution
+    commit on the driver: no Spark job, no data file, also on a table
+    with ``bloom_cols`` (whose rows the driver writer refuses)."""
+    cols = [{"column_name": "k", "data_type": "text", "ordinal_position": 1},
+            {"column_name": "v", "data_type": "bigint", "ordinal_position": 2}]
+    kw = {"bloom_cols": ["k"]} if bloom else {}
+    t, _ = sync_table_from_catalog(spark, str(tmp_path / "t"), cols, key_cols=["k"],
+                                   n_buckets=4, **kw)
+    t.append(spark.createDataFrame([("a", 1), ("b", 2)], t.current().schema))
+
+    def parquet_files():
+        return sorted(glob.glob(os.path.join(t.root, "data", "**", "*.parquet"),
+                                recursive=True))
+
+    files, v = parquet_files(), t.current_version()
+    grown = cols + [{"column_name": "w", "data_type": "integer", "ordinal_position": 3}]
+    jobs = _Jobs(spark)
+    jobs.use("zero")
+    try:
+        assert t.append(arrow_rows(t.current().schema), commit_key="empty")
+        _, rep = sync_table_from_catalog(spark, t.root, grown, key_cols=["k"])
+    finally:
+        jobs.use(None)
+    assert jobs.count("zero") == 0
+    assert rep["action"] == "evolved" and rep["added"] == ["w"]
+    snap = t.current()
+    assert snap.version == v + 2 and snap.feed == []
+    assert snap.schema.fieldNames() == ["k", "v", "w"]
+    assert parquet_files() == files
+    assert sorted(tuple(r) for r in t.read().collect()) == [("a", 1, None), ("b", 2, None)]
 
 
 def test_mart_feed_equals_snapshot_diff(spark, tmp_path):

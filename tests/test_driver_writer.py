@@ -11,6 +11,7 @@ from collections import Counter
 
 import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ton_etl_spark.lake.table import (
@@ -176,3 +177,41 @@ def test_arrow_conform_widens_and_fills(spark, tmp_path):
     assert sorted((tuple(r) for r in t.read().collect()), key=repr) == [
         ("a", 1, None), (None, 2, None)]
     assert t.current().schema == s
+
+
+@pytest.mark.parametrize("name", ["__bucket", "__change"])
+def test_reserved_column_names_are_refused(spark, tmp_path, name):
+    """The writer's own columns (``__bucket``, ``__change``) can be no
+    data column: a ``__bucket`` column would read back NULL and a
+    ``__change`` column would turn every appended row into a feed row.
+    ``create`` refuses them, and so does every schema evolution — an
+    append (plan or Arrow rows), a merge and a catalog sync — before
+    anything is written."""
+    from ton_etl_spark.cdc.apply import make_sequences_table
+    from ton_etl_spark.cdc.generator import generate_cdc_log
+    from ton_etl_spark.lake.catalog import sync_table_from_catalog
+    from ton_etl_spark.lake.merge import merge_lww
+
+    s = T.StructType.fromDDL("k string, v long")
+    wide = T.StructType(s.fields + [T.StructField(name, T.IntegerType())])
+    with pytest.raises(ValueError, match="reserved"):
+        LakeTable.create(spark, str(tmp_path / "c"), schema=wide, key_cols=["k"])
+    assert not (tmp_path / "c").exists()
+    t = LakeTable.create(spark, str(tmp_path / "t"), schema=s, key_cols=["k"], n_buckets=4)
+    with pytest.raises(ValueError, match="reserved"):
+        t.append(_local_frame(spark, wide, [["a"], [1], [0]]))
+    with pytest.raises(ValueError, match="reserved"):
+        t.append(arrow_rows(wide, [["a"], [1], [0]]))
+    assert t.current_version() == 0
+
+    m = make_sequences_table(spark, str(tmp_path / "m"), n_buckets=4)
+    with pytest.raises(ValueError, match="reserved"):
+        merge_lww(m, generate_cdc_log(spark, 20, seed=3).withColumn(name, F.lit(1)))
+    assert m.current_version() == 0
+
+    cols = [{"column_name": "k", "data_type": "text", "ordinal_position": 1}]
+    c, _ = sync_table_from_catalog(spark, str(tmp_path / "s"), cols, key_cols=["k"])
+    grown = cols + [{"column_name": name, "data_type": "integer", "ordinal_position": 2}]
+    with pytest.raises(ValueError, match="reserved"):
+        sync_table_from_catalog(spark, c.root, grown, key_cols=["k"])
+    assert c.current_version() == 0

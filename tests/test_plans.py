@@ -8,10 +8,12 @@ import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.readwriter import DataFrameWriter
 
 from ton_etl_spark.cdc.generator import generate_cdc_log
 from ton_etl_spark.functions.tokens import with_token_validation
-from ton_etl_spark.lake.table import LakeTable
+from ton_etl_spark.lake.table import LakeTable, _conform
 from ton_etl_spark.cdc.apply import make_sequences_table
 from ton_etl_spark.plans.queries import QUERIES, load_table
 
@@ -36,37 +38,65 @@ def test_merge_is_single_exchange(spark, tmp_path, monkeypatch):
     ``hashpartitioning(__bucket, 8), REPARTITION_BY_COL``, which AQE may
     coalesce (a ``repartition(n_buckets, *keys)`` would plan
     ``REPARTITION_BY_NUM``, which it never coalesces), and still writes one
-    data file per touched bucket."""
+    data file per touched bucket.  The ranked frame reaches the writer in
+    its write schema (data columns, then ``__change``, then ``__bucket``):
+    no per-column ``CASE WHEN (__change = delete)`` image, and the frame
+    the writer writes hashes the key once."""
     from ton_etl_spark.lake.merge import merge_lww
 
     table = make_sequences_table(spark, str(tmp_path / "t"), n_buckets=16)
-    frames = []
+    frames, written = [], []
     real = LakeTable.overwrite_buckets
+    real_parquet = DataFrameWriter.parquet
 
     def spy(self, df, *args, **kwargs):
         frames.append(df)
         return real(self, df, *args, **kwargs)
 
+    def spy_parquet(self, *args, **kwargs):
+        written.append(self._df)
+        return real_parquet(self, *args, **kwargs)
+
     monkeypatch.setattr(LakeTable, "overwrite_buckets", spy)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
     batch = with_token_validation(generate_cdc_log(spark, 2_000, seed=13))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         res = merge_lww(table, batch, commit_key="epoch=0")
-        # planned lazily: read it under the merge's session settings
+        # planned lazily: read them under the merge's session settings
         plan = _executed_plan(frames[0])
+        written_plan = _executed_plan(written[0])
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert res["applied"]
-    assert len(frames) == 1
-    exchanges = re.findall(r"Exchange (\w+.*)", plan)
-    assert len(exchanges) == 1, plan
-    assert re.match(r"hashpartitioning\(__bucket#\d+, 8\), REPARTITION_BY_COL", exchanges[0]), plan
+    assert len(frames) == 1 and len(written) == 1
+    for p in (plan, written_plan):
+        exchanges = re.findall(r"Exchange (\w+.*)", p)
+        assert len(exchanges) == 1, p
+        assert re.match(r"hashpartitioning\(__bucket#\d+, 8\), REPARTITION_BY_COL",
+                        exchanges[0]), p
+    assert len(re.findall(r"\bhash\(", written_plan)) == 1, written_plan
+    assert frames[0].columns[-2:] == ["__change", "__bucket"]
+    analyzed = frames[0]._jdf.queryExecution().analyzed().toString()
+    assert not re.search(r"CASE WHEN \(__change#\d+ = delete\)", analyzed), analyzed
     per_bucket: dict[int, int] = {}
     for f in table.current().files:
         per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
     assert sorted(per_bucket) == res["buckets"] and len(per_bucket) > 8
     assert set(per_bucket.values()) == {1}, per_bucket
+
+
+def test_conform_returns_a_plan_in_its_schema_unchanged(spark):
+    """``_conform`` adds no projection to a plan whose column names and
+    types already equal the schema's; any difference is projected."""
+    df = spark.range(3).select(F.col("id").alias("k"), F.array(F.col("id")).alias("a"))
+    assert _conform(df, df.schema) is df
+    swapped = T.StructType(df.schema.fields[::-1])
+    assert _conform(df, swapped).columns == ["a", "k"]
+    wider = T.StructType([T.StructField("k", T.LongType()), T.StructField("x", T.IntegerType())])
+    out = _conform(df, wider)
+    assert out is not df and out.columns == ["k", "x"]
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):

@@ -9,7 +9,8 @@ several files per bucket — and checks each surface, in both
 The predicates cover the conformance edges: a NULL probe (never
 matches), unrepresentable probes ('abc' and 7.5 on a long key: dropped),
 string probes on the long key (parsed), a range on a column holding
-NULLs (never match), tombstone rows (deleted when
+NULLs (never match), int and bigint bounds beyond the column's range
+(±2**40, ±2**70), tombstone rows (deleted when
 ``protect_tombstones=False``), and naive-datetime bounds in a session
 whose ``spark.sql.session.timeZone`` differs from the process-local zone.
 The oracle takes a naive bound's instant from Spark's own reading of the
@@ -45,7 +46,8 @@ def _rows(rng):
 
 def _predicates(rng):
     """Four seeded predicates, each forced to carry conformance edges,
-    plus random extra terms."""
+    plus random extra terms, then six with integral bounds beyond their
+    column's range."""
 
     def keys(n):
         return rng.sample(range(_N + 20), n)  # some never-seen keys
@@ -74,7 +76,17 @@ def _predicates(rng):
             where["ts"] = ts_range()
         elif extra == "s":
             where_in["s"] = [f"s{rng.randint(0, 5)}", rng.randint(0, 3)]
-    return preds
+    # integral bounds beyond the column's range: on the excluding side
+    # they match no row, on the other side they are open (NULL still
+    # never matches); ``v`` is an int column, ``lsn`` and ``k`` bigint
+    return preds + [
+        ({"v": (2**40, None)}, {}),
+        ({"v": (-2**40, rng.randint(-20, 20))}, {}),
+        ({"v": (rng.randint(-20, 20), 2**40)}, {"k": keys(40)}),
+        ({"lsn": (2**70, None)}, {}),
+        ({"lsn": (-2**70, 2**70)}, {"k": keys(40)}),
+        ({"k": (None, -2**70)}, {}),
+    ]
 
 
 def _as_long(v):

@@ -24,9 +24,10 @@ JDBC read, a test fixture — no live database required):
   catalog lost columns — the same additive-only contract the merge path
   enforces (``lake/table.py _merge_schemas``).
 
-Everything is driver-side metadata work on O(columns) rows; no data moves
-except the empty-DataFrame commit that publishes an evolved schema, so the
-sync is as cheap at 100 TB as at 100 KB.
+Everything is driver-side metadata work on O(columns) rows; no data moves,
+and the commit that publishes an evolved schema appends zero Arrow rows
+(the driver writer: no Spark job, no file), so the sync is as cheap at
+100 TB as at 100 KB.
 """
 
 from __future__ import annotations
@@ -39,7 +40,7 @@ from typing import Any, Iterable, Mapping
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from ton_etl_spark.lake.table import LakeTable, _local_frame, _merge_schemas, _widen_type
+from ton_etl_spark.lake.table import LakeTable, _merge_schemas, _widen_type, arrow_rows
 
 _LOG = logging.getLogger(__name__)
 
@@ -210,8 +211,8 @@ def sync_table_from_catalog(
     "missing_in_catalog": [...]}``.
 
     - absent table  -> created with the derived schema.
-    - catalog grew  -> one metadata-only commit (empty-DataFrame append
-      through the normal CAS/rebase path) publishes the additively merged
+    - catalog grew  -> one metadata-only commit (a zero-row ``arrow_rows``
+      append through the normal CAS/rebase path) publishes the additively merged
       schema; existing files are untouched and read back null-filled.
     - catalog shrank-> warning only; the lake keeps history the source
       dropped (additive-only, same as ``_merge_schemas``).
@@ -255,6 +256,6 @@ def sync_table_from_catalog(
     if commit_key is None:
         cols_sig = json.dumps([(f.name, f.dataType.simpleString()) for f in merged.fields])
         commit_key = "catalog-sync-" + hashlib.md5(cols_sig.encode()).hexdigest()[:16]
-    t.append(_local_frame(spark, merged), commit_key=commit_key)
+    t.append(arrow_rows(merged), commit_key=commit_key)
     return t, {"action": "evolved", "added": added, "missing_in_catalog": removed,
                "widened": widened}

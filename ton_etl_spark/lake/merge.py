@@ -22,11 +22,15 @@ Scale design (the part the reference outsources to Postgres indexes):
    (``bucket_of``) is computed once; the repartition on it plans
    ``REPARTITION_BY_COL``, so AQE may coalesce partitions, and every task
    holds whole buckets either way.  That partitioning also satisfies the
-   ranking window, so the rank adds no exchange, and the write
-   (``pre_partitioned``) adds none either: it still emits one file per
-   bucket.  The merge plans in its table's session, so its parallelism is
-   that session's ``spark.sql.shuffle.partitions``, as for every other
-   shuffle, and the scan and the write read the session's settings.  An
+   ranking window, so the rank adds no exchange.  ``feed_frame`` builds
+   the ranked frame once in its write schema (the data columns, the feed
+   tag, the bucket column), and ``overwrite_buckets`` takes it as is: the
+   writer neither re-projects it nor hashes the key again, and writes on
+   the bucket column it carries with no further exchange, still one file
+   per bucket.  The merge plans in its table's session, so its
+   parallelism is that session's ``spark.sql.shuffle.partitions``, as for
+   every other shuffle, and the scan and the write read the session's
+   settings.  An
    earlier 4-exchange variant (salted two-stage reduce → full-outer join
    with current state → repartition by bucket) moved the full token
    payload through four shuffles; this moves it through one.
@@ -103,6 +107,10 @@ def merge_lww(
     op != 'd'; a compaction pass may GC tombstones older than the
     redelivery horizon (the reference's maturity window analog).
 
+    The ranked frame, bucket column included, is the committed frame:
+    ``overwrite_buckets`` writes it without a second projection, hash or
+    exchange (module point 1).
+
     Returns stats {applied, buckets} (applied=False when the commit_key
     was already committed).
     """
@@ -165,7 +173,6 @@ def merge_lww(
         buckets,
         commit_key=commit_key,
         schema=target_schema,
-        pre_partitioned=True,
         base_version=snap.version,
         feed=True,
         inserted_buckets=empty,

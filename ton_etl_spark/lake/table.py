@@ -116,6 +116,9 @@ CHANGE_COL = "_change_type"
 # marks a row of the new bucket contents, INSERT/DELETE a change-feed row.
 # Written as a partition directory (``__change=row|insert|delete``).
 FEED_COL = "__change"
+# the writer's own columns: a data column of either name would be read as
+# the bucket or the feed tag, so no table schema may hold one
+_RESERVED = (BUCKET_COL, FEED_COL)
 INSERT, DELETE = "insert", "delete"
 _TABLE_ROW = "row"
 
@@ -375,7 +378,7 @@ def _conform_where_in(
 
 def _conform_where_bounds(
     schema: T.StructType, where: dict[str, tuple]
-) -> dict[str, tuple]:
+) -> dict[str, tuple] | None:
     """Cast ``where`` range bounds to their column's Spark type, for the
     same two reasons as ``_conform_where_in``: under ANSI a mistyped bound
     CASTS THE COLUMN (a string column with an int bound throws
@@ -388,6 +391,10 @@ def _conform_where_bounds(
       which can simply match nothing);
     - a fractional bound on an integral column rounds INWARD (lo: ceil,
       hi: floor), which is exactly equivalent;
+    - an integral bound beyond its column's range is exact too: a lower
+      bound above the type's max or an upper bound below its min matches
+      no row (the result is None); one on the other side becomes the
+      type's min or max, which every non-NULL value satisfies;
     - ISO-8601 strings conform to date/timestamp columns — the only form
       a JSON surface like ``maintain --delete-where`` can express.
 
@@ -396,6 +403,7 @@ def _conform_where_bounds(
     from decimal import Decimal, InvalidOperation
 
     names = set(schema.fieldNames())
+    empty = object()  # a bound no value of the column satisfies
 
     def one(col, v, is_lo: bool):
         if v is None or col not in names:
@@ -409,10 +417,14 @@ def _conform_where_bounds(
                     raise ValueError
                 if isinstance(v, str):
                     v = float(v) if ("." in v or "e" in v.lower()) else int(v)
-                if isinstance(v, int):
-                    return v
-                v = float(v)  # Decimal and friends round inward too
-                return math.ceil(v) if is_lo else math.floor(v)
+                if not isinstance(v, int):
+                    v = float(v)  # Decimal and friends round inward too
+                    if not math.isinf(v):
+                        v = math.ceil(v) if is_lo else math.floor(v)
+                half = 1 << ((8 << _INT_RANK[dt.simpleString()]) - 1)
+                if is_lo == (v > 0) and not -half <= v < half:
+                    return empty
+                return min(max(v, -half), half - 1)
             if isinstance(dt, (T.FloatType, T.DoubleType)):
                 if isinstance(v, bool):
                     raise ValueError
@@ -434,10 +446,8 @@ def _conform_where_bounds(
                 f"{col!r} of type {dt.simpleString()}"
             ) from None
 
-    return {
-        col: (one(col, lo, True), one(col, hi, False))
-        for col, (lo, hi) in where.items()
-    }
+    out = {col: (one(col, lo, True), one(col, hi, False)) for col, (lo, hi) in where.items()}
+    return None if any(v is empty for b in out.values() for v in b) else out
 
 
 def _pin_naive(v: Any) -> Any:
@@ -757,7 +767,8 @@ def _merge_schemas(
     merged schema takes the wider side regardless of which side is new
     (a narrower incoming batch is simply cast up by ``_conform``).
     Lossy changes (string→int, bigint→int as the *merged* result, scale
-    changes) still fail loudly."""
+    changes) still fail loudly, and so does a new column named after one
+    of the writer's own columns (``_RESERVED``)."""
     base_names = {f.name: f for f in base.fields}
     out = list(base.fields)
     for f in incoming.fields:
@@ -774,6 +785,8 @@ def _merge_schemas(
                     )
                 if wide.simpleString() != bf.dataType.simpleString():
                     out[out.index(bf)] = T.StructField(f.name, wide, True)
+        elif f.name in _RESERVED:
+            raise ValueError(f"column name {f.name!r} is reserved for the table writer")
         else:
             out.append(T.StructField(f.name, f.dataType, True))
     return T.StructType(out)
@@ -874,7 +887,11 @@ class LakeTable:
         reference evolves additively only, and the per-row token-array
         equality contract is easiest to audit when types are frozen.  No
         file rewrite on widen — Spark 4's Parquet readers upcast old
-        narrow files under the widened read schema in place."""
+        narrow files under the widened read schema in place.
+
+        ``__bucket`` and ``__change`` are the writer's own columns
+        (``_RESERVED``): a schema holding either raises ValueError."""
+        _merge_schemas(T.StructType(), schema)  # refuses the reserved names
         t = cls(spark, root)
         os.makedirs(t._meta, exist_ok=True)
         os.makedirs(os.path.join(t.root, MANIFEST_DIR), exist_ok=True)
@@ -1197,7 +1214,8 @@ class LakeTable:
         ``read``'s.  In order:
 
         1. conform ``where`` bounds and ``where_in`` probes to the column
-           types (``_conform_where_bounds`` / ``_conform_where_in``);
+           types (``_conform_where_bounds`` / ``_conform_where_in``); an
+           integral range no value of its type satisfies keeps no file;
         2. convert each value once, to the form its column stores
            (``_stored``): a datetime on a ``timestamp`` column is its
            instant, on a ``timestamp_ntz`` column its wall clock in
@@ -1226,6 +1244,8 @@ class LakeTable:
             version = self.resolve_tag(tag)
         snap = self.snapshot(version) if version is not None else self.current()
         where = _conform_where_bounds(snap.schema, where) if where else {}
+        if where is None:
+            return ScanPlan(snap, [], F.lit(False), {})
         where_in = _conform_where_in(snap.schema, where_in) if where_in else {}
         types = {f.name: f.dataType for f in snap.schema.fields}
         zone = None
@@ -1382,7 +1402,6 @@ class LakeTable:
         n_buckets: int,
         key_cols: list[str],
         props: dict[str, str],
-        pre_partitioned: bool = False,
         sort_exprs: list | None = None,
     ) -> tuple[list[DataFile], list[ChangeFile]]:
         """Write ``df`` as one directory tree partitioned by bucket; return the
@@ -1407,11 +1426,8 @@ class LakeTable:
         commit_rel = os.path.join(DATA_DIR, commit_id)
         commit_abs = os.path.join(self.root, commit_rel)
         if isinstance(df, DataFrame):
-            feed = FEED_COL in df.columns
-            self._spark_write(df, commit_abs, n_buckets, key_cols, props,
-                              pre_partitioned, sort_exprs)
+            self._spark_write(df, commit_abs, n_buckets, key_cols, props, sort_exprs)
         else:
-            feed = FEED_COL in df.column_names
             self._driver_write(df, commit_abs, n_buckets, key_cols, props)
         # stat the produced files with a thread pool: footer opens are
         # ~ms each but serial over n_buckets files they add up to a fixed
@@ -1420,12 +1436,12 @@ class LakeTable:
 
         todo: list[tuple[str, int]] = []
         changes: list[ChangeFile] = []
-        tops = [(commit_rel, _TABLE_ROW)]
-        if feed:
-            tops = [
-                (os.path.join(commit_rel, e), e.split("=", 1)[1])
-                for e in os.listdir(commit_abs) if e.startswith(f"{FEED_COL}=")
-            ]
+        # a feed-carrying write has only ``__change=<kind>`` directories on
+        # top (no data column may take the name: ``_RESERVED``)
+        tops = [
+            (os.path.join(commit_rel, e), e.split("=", 1)[1])
+            for e in os.listdir(commit_abs) if e.startswith(f"{FEED_COL}=")
+        ] or [(commit_rel, _TABLE_ROW)]
         for top, change in tops:
             for entry in os.listdir(os.path.join(self.root, top)):
                 if not entry.startswith(f"{BUCKET_COL}="):
@@ -1488,7 +1504,6 @@ class LakeTable:
         n_buckets: int,
         key_cols: list[str],
         props: dict[str, str],
-        pre_partitioned: bool,
         sort_exprs: list | None,
     ) -> None:
         """The Spark writer: one dynamic-partition write of ``df`` under
@@ -1496,35 +1511,36 @@ class LakeTable:
         batch touches a bounded set of buckets, so files stay coarse); with
         ``target_file_rows`` set (the table property, see ``create``) each
         bucket's output is split at that row count via
-        ``maxRecordsPerFile`` — an intra-task split, so the pre-partitioned
-        merge path keeps its zero-exchange plan while a hot or freshly
-        compacted bucket still lands as N bounded files in the per-bucket
-        manifest instead of one multi-GB straggler.
+        ``maxRecordsPerFile`` — an intra-task split, so the merge keeps
+        its one-exchange plan while a hot or freshly compacted bucket
+        still lands as N bounded files in the per-bucket manifest instead
+        of one multi-GB straggler.
 
-        ``pre_partitioned=True``: the caller guarantees that every
-        partition of ``df`` holds whole buckets (the merge shuffles on the
-        ``bucket_of`` column), so the dynamic-partition write needs NO
-        repartition exchange and still writes one file per bucket.
-        Otherwise an explicit repartition keeps the snapshot's file count
-        O(n_buckets) — skipping it would fan out to n_partitions ×
-        n_buckets files (measured 2× end-to-end regression from distributed
-        listing on every read)."""
+        A ``df`` that carries ``BUCKET_COL`` (only the merge's frame can:
+        the name is reserved) is shuffled on it, so every partition holds
+        whole buckets: it is written on that column with NO further
+        exchange and still one file per bucket.  Any other ``df`` gets the
+        column from ``bucket_of`` and an explicit repartition, which keeps
+        the snapshot's file count O(n_buckets) — skipping it would fan out
+        to n_partitions × n_buckets files (measured 2× end-to-end
+        regression from distributed listing on every read)."""
         target_file_rows = self._target_file_rows(props)
         sort_cols = self._prop_cols(props, "sort_cols")
-        bucket = bucket_of(key_cols, n_buckets)
-        if FEED_COL in df.columns:
+        cols = df.columns
+        bucket = F.col(BUCKET_COL) if BUCKET_COL in cols else bucket_of(key_cols, n_buckets)
+        if FEED_COL in cols:
             # feed rows are not bucketed (bucket -1): each write task emits
             # at most one file per change type, not one per bucket it holds
             row = F.col(FEED_COL).isNull()
             out = df.select(
-                *[c for c in df.columns if c != FEED_COL],
+                *[c for c in cols if c not in _RESERVED],
                 F.when(row, bucket).otherwise(F.lit(-1)).alias(BUCKET_COL),
                 F.coalesce(F.col(FEED_COL), F.lit(_TABLE_ROW)).alias(FEED_COL),
             )
             parts = [FEED_COL, BUCKET_COL]
         else:
             out, parts = df.withColumn(BUCKET_COL, bucket), [BUCKET_COL]
-        if not pre_partitioned:
+        if BUCKET_COL not in cols:
             out = out.repartition(n_buckets, F.col(BUCKET_COL))
         if sort_exprs is not None:
             # caller-supplied clustering expressions (e.g. a z-order value)
@@ -1569,16 +1585,21 @@ class LakeTable:
         ``sort_cols`` (ascending, NULLs first, as Spark sorts) and split at
         ``target_file_rows``.  Files take the session's
         ``spark.sql.parquet.compression.codec``, as the Spark writer's do
-        (``_PARQUET_CODECS``).  A table with ``bloom_cols`` is refused:
-        pyarrow writes no bloom filters, and a file without one would only
-        be slower to probe, so the caller must hold a plan instead; so is
-        a codec pyarrow cannot write."""
+        (``_PARQUET_CODECS``).  Rows for a table with ``bloom_cols`` are
+        refused: pyarrow writes no bloom filters, and a file without one
+        would only be slower to probe, so the caller must hold a plan
+        instead; so are rows under a codec pyarrow cannot write.  Zero
+        rows write no file, so they are never refused."""
         import itertools
 
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        os.makedirs(commit_abs, exist_ok=True)
+        n = rows.num_rows
+        if n == 0:
+            return
         if self._prop_cols(props, "bloom_cols"):
             raise ValueError(
                 f"table {self.root} declares bloom_cols, which the driver "
@@ -1590,10 +1611,6 @@ class LakeTable:
                 f"spark.sql.parquet.compression.codec={codec!r} is not one the "
                 "driver writer can write; commit a DataFrame instead"
             )
-        os.makedirs(commit_abs, exist_ok=True)
-        n = rows.num_rows
-        if n == 0:
-            return
         feed = FEED_COL in rows.column_names
         keys = rows.select(key_cols)
         kdf = _local_frame(self.spark, _schema_of(keys), keys)
@@ -1765,7 +1782,6 @@ class LakeTable:
         buckets: list[int],
         commit_key: str | None = None,
         schema: T.StructType | None = None,
-        pre_partitioned: bool = False,
         base_version: int | None = None,
         sort_exprs: list | None = None,
         keep_files: dict[int, list["DataFile"]] | None = None,
@@ -1783,8 +1799,11 @@ class LakeTable:
         ``df`` is a plan (the merge, the maintenance rewrites: the Spark
         writer) or rows already on the driver (a ``pyarrow.Table`` in
         ``schema``, plus ``FEED_COL`` when ``feed``: the driver writer,
-        no Spark job — the mart fold).  ``pre_partitioned`` and
-        ``sort_exprs`` apply to a plan only.
+        no Spark job — the mart fold).  A plan already in its write schema
+        (``schema``, then ``FEED_COL`` when ``feed``, then ``BUCKET_COL``
+        when it carries one — the merge's ``feed_frame``) goes to the
+        writer as is: no projection, and no second bucket hash or
+        exchange.  ``sort_exprs`` applies to a plan only.
 
         ``base_version`` is the snapshot version the caller DERIVED ``df``
         from (merge read the bucket contents there; compaction listed its
@@ -1838,13 +1857,12 @@ class LakeTable:
         if schema is None:
             schema = _merge_schemas(snap.schema, _schema_of(df), self._widening(snap))
         commit_id = f"c{snap.version + 1}-{uuid.uuid4().hex[:8]}"
-        wschema = schema
-        if feed:
-            wschema = T.StructType(schema.fields + [T.StructField(FEED_COL, T.StringType())])
+        wcols = schema.fields + ([T.StructField(FEED_COL, T.StringType())] if feed else [])
+        if isinstance(df, DataFrame) and BUCKET_COL in df.columns:
+            wcols.append(T.StructField(BUCKET_COL, T.IntegerType()))
         new_files, changes = self._write_commit_files(
-            _conform(df, wschema), commit_id, snap.n_buckets, snap.key_cols,
-            {**snap.properties, **(properties_update or {})},
-            pre_partitioned=pre_partitioned, sort_exprs=sort_exprs,
+            _conform(df, T.StructType(wcols)), commit_id, snap.n_buckets, snap.key_cols,
+            {**snap.properties, **(properties_update or {})}, sort_exprs=sort_exprs,
         )
         ins = set(inserted_buckets)
         changes += [ChangeFile(f.path, INSERT) for f in new_files
@@ -1879,22 +1897,24 @@ def feed_frame(
     schema: T.StructType,
     out: Column,
     new: dict[str, Column] | None = None,
-    old: dict[str, Column] | None = None,
 ) -> DataFrame:
     """The ``overwrite_buckets(feed=True)`` frame: each row of ``df`` is
     exploded into the kinds listed in ``out`` (an ``outputs`` array): ROW
     (a row of the new bucket contents), INSERT and DELETE (change-feed
-    rows).  ROW and INSERT take the post-image ``new``, DELETE the
-    pre-image ``old``; both map ``schema`` columns to expressions over
-    ``df`` and default to the column itself.  The images are picked per
-    column, never built as structs, so a row that is only kept costs one
-    one-element array."""
-    new, old = new or {}, old or {}
+    rows).  ``new`` maps ``schema`` columns to post-image expressions
+    over ``df``: ROW and INSERT take them, DELETE the stored column.  Only
+    those columns are projected per kind; every other ``schema`` column
+    is selected by name, so a row that is only kept costs one
+    one-element array.  The frame is in its write schema: ``schema``'s
+    columns, then ``FEED_COL``, then ``BUCKET_COL`` when ``df`` carries
+    it (the merge's ranked rows), which the writer then writes on."""
+    new = new or {}
     x = F.col(FEED_COL)
-    cols = [x]
-    for f in schema.fields:
-        post, pre = new.get(f.name, F.col(f.name)), old.get(f.name, F.col(f.name))
-        cols.append(F.when(x == DELETE, pre).otherwise(post).alias(f.name))
+    cols = [F.when(x == DELETE, F.col(c)).otherwise(new[c]).alias(c) if c in new else c
+            for c in schema.fieldNames()]
+    cols.append(FEED_COL)
+    if BUCKET_COL in df.columns:
+        cols.append(BUCKET_COL)
     return df.withColumn(FEED_COL, F.explode(out)).select(*cols)
 
 
@@ -1912,7 +1932,9 @@ def _schema_of(df: "DataFrame | pa.Table") -> T.StructType:
 def _conform(df: "DataFrame | pa.Table", schema: T.StructType) -> "DataFrame | pa.Table":
     """Project ``df`` onto ``schema``'s column order, adding NULLs for
     missing columns and casting widened ones up — a plan as a plan, driver
-    rows (a ``pyarrow.Table``) as an Arrow table."""
+    rows (a ``pyarrow.Table``) as an Arrow table.  A plan whose column
+    names and types already equal ``schema``'s is returned unchanged (a
+    frame built in its write schema, e.g. by ``feed_frame``)."""
     if not isinstance(df, DataFrame):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
@@ -1926,19 +1948,17 @@ def _conform(df: "DataFrame | pa.Table", schema: T.StructType) -> "DataFrame | p
                 c = df.column(f.name)
                 cols.append(c if c.type == typ else c.cast(typ))
         return pa.table(cols, names=schema.fieldNames())
-    have = {f.name: f.dataType for f in df.schema.fields}
-    cols = []
-    for f in schema.fields:
-        if f.name in have:
-            # cast only on real type mismatch; Spark 4 rejects casts between
-            # array types differing only in containsNull
-            if have[f.name].simpleString() == f.dataType.simpleString():
-                cols.append(F.col(f.name))
-            else:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+    have = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+    if have == [(f.name, f.dataType.simpleString()) for f in schema.fields]:
+        return df
+    types = dict(have)
+    # cast only on real type mismatch; Spark 4 rejects casts between array
+    # types differing only in containsNull
+    return df.select(*[
+        F.col(f.name) if types.get(f.name) == f.dataType.simpleString()
+        else (F.col(f.name) if f.name in types else F.lit(None)).cast(f.dataType).alias(f.name)
+        for f in schema.fields
+    ])
 
 
 def arrow_rows(schema: T.StructType, columns: list[list] | None = None) -> "pa.Table":
